@@ -105,8 +105,11 @@ DEFAULT_SPLIT_SIZE = 1 << 20  # legacy fixed default; see _adaptive_split_size
 
 
 def _adaptive_split_size(paths: list[str]) -> int:
-    """Adaptive default split: total input / (4 tasks per local core),
-    clamped to [4 MiB, 64 MiB].  Measured (tools/run_ds_ceiling.py): a
+    """The Python fallback source's own default split: total input /
+    (4 tasks per local core), clamped to [4 MiB, 64 MiB].  The JVM scans
+    plan whole waves of the session's parallelism instead
+    (bamjvm.SplitPlanner); this policy goes when the Python source does
+    (ROADMAP direction 3).  Measured (tools/run_ds_ceiling.py): a
     fixed 1 MiB split ran 3.8x slower than 16 MiB on a 2.6 GB file
     (2,676 tasks of window setup + scheduling), while 4 MiB beat 16 MiB
     on a 133 MB file (under-parallelization) — the optimum tracks tasks

@@ -465,17 +465,9 @@ public class BamDataSource implements TableProvider {
             long maxReadSize = optLong("max_read_size", Checker.DEFAULT_MAX_READ_SIZE);
             boolean permissive = "permissive".equals(options.getOrDefault("mode", "failfast"));
             try {
-                long splitSize = optLong("split_size", -1);
-                if (splitSize <= 0) {
-                    // adaptive default, same policy as the Python source:
-                    // total / (4 tasks per core), clamped to [4 MiB, 64 MiB]
-                    long total = 0;
-                    for (FileStatus f : files) {
-                        total += f.getLen();
-                    }
-                    int cores = Runtime.getRuntime().availableProcessors();
-                    splitSize = Math.max(4L << 20, Math.min(64L << 20, total / (4L * cores)));
-                }
+                // whole waves of the session's parallelism, or the fixed
+                // split_size stride (SplitPlanner has the rule)
+                SplitPlanner planner = SplitPlanner.of(files, optLong("split_size", -1));
                 double ratio = Double.parseDouble(options.getOrDefault("compression_ratio", "3.0"));
                 String rangesOpt = options.get("ranges");
                 List<long[]> byteRanges = rangesOpt == null ? null : parseByteRanges(rangesOpt);
@@ -486,9 +478,8 @@ public class BamDataSource implements TableProvider {
                 // of files on an object store.  Results are flattened in
                 // file order, so the split list is byte-identical to the
                 // sequential plan.
-                final long splitSizeF = splitSize;
                 List<List<InputPartition>> perFile =
-                        mapFiles(files, f -> planFile(fs, f, splitSizeF, ratio, byteRanges,
+                        mapFiles(files, f -> planFile(fs, f, planner, ratio, byteRanges,
                                 readsToCheck, maxReadSize, permissive));
                 List<InputPartition> splits = new ArrayList<>();
                 for (List<InputPartition> fileSplits : perFile) {
@@ -500,7 +491,7 @@ public class BamDataSource implements TableProvider {
             }
         }
 
-        private List<InputPartition> planFile(FileSystem fs, FileStatus f, long splitSize,
+        private List<InputPartition> planFile(FileSystem fs, FileStatus f, SplitPlanner planner,
                 double ratio, List<long[]> byteRanges, int readsToCheck, long maxReadSize,
                 boolean permissive) throws IOException {
             List<InputPartition> splits = new ArrayList<>();
@@ -546,7 +537,7 @@ public class BamDataSource implements TableProvider {
                         }
                     }
                 }
-                for (List<long[]> group : packRanges(clipped, splitSize, ratio)) {
+                for (List<long[]> group : packRanges(clipped, planner.target, ratio)) {
                     long[] lows = new long[group.size()];
                     long[] highs = new long[group.size()];
                     for (int i = 0; i < group.size(); i++) {
@@ -559,8 +550,9 @@ public class BamDataSource implements TableProvider {
                 }
                 return splits;
             }
-            for (long s = 0; s < size; s += splitSize) {
-                long e = Math.min(s + splitSize, size);
+            for (long[] r : planner.ranges(f)) {
+                long s = r[0];
+                long e = r[1];
                 if (byteRanges != null) {
                     boolean hit = false;
                     for (long[] br : byteRanges) {
@@ -885,6 +877,11 @@ public class BamDataSource implements TableProvider {
         @Override
         public String[] preferredLocations() {
             return hosts;
+        }
+
+        @Override
+        public String toString() {
+            return "BamSplit(" + path + " [" + start + ", " + end + "))";
         }
     }
 

@@ -4,7 +4,6 @@ import java.io.IOException;
 import java.io.Serializable;
 import java.io.UncheckedIOException;
 import java.util.ArrayList;
-import java.util.Arrays;
 import java.util.HashMap;
 import java.util.HashSet;
 import java.util.List;
@@ -44,8 +43,10 @@ import org.apache.spark.unsafe.types.UTF8String;
  * record reader: a split emits the blocks whose header starts in
  * [start, end), re-syncing on the first block boundary at/after start.
  *
- * Shares the record reader's planning conventions: adaptive split size,
- * byte-ranges option, locality hints, session Hadoop conf propagation.
+ * Shares the record reader's planning conventions: {@link SplitPlanner}'s
+ * split sizing (whole waves of the session's parallelism, or the fixed
+ * split_size stride), byte-ranges option, locality hints, session Hadoop
+ * conf propagation.
  */
 public class BlocksSource implements TableProvider {
 
@@ -147,38 +148,16 @@ public class BlocksSource implements TableProvider {
             try {
                 Path root = new Path(pathOpt);
                 FileSystem fs = root.getFileSystem(sconf.conf);
-                List<FileStatus> files = new ArrayList<>();
-                FileStatus rootStatus = fs.getFileStatus(root);
-                if (rootStatus.isDirectory()) {
-                    FileStatus[] children = fs.listStatus(root);
-                    Arrays.sort(children, (a, b) -> a.getPath().getName().compareTo(b.getPath().getName()));
-                    for (FileStatus c : children) {
-                        if (c.isFile() && c.getPath().getName().endsWith(".bam")) {
-                            files.add(c);
-                        }
-                    }
-                } else {
-                    files.add(rootStatus);
-                }
-                long splitSize;
+                List<FileStatus> files = BamDataSource.BamScan.listBamFiles(fs, root);
                 String sizeOpt = options.get("split_size");
-                if (sizeOpt != null) {
-                    splitSize = Long.parseLong(sizeOpt);
-                } else {
-                    long total = 0;
-                    for (FileStatus f : files) {
-                        total += f.getLen();
-                    }
-                    int cores = Runtime.getRuntime().availableProcessors();
-                    splitSize = Math.max(4L << 20, Math.min(64L << 20, total / (4L * cores)));
-                }
+                SplitPlanner planner =
+                        SplitPlanner.of(files, sizeOpt == null ? -1 : Long.parseLong(sizeOpt));
                 String rangesOpt = options.get("ranges");
                 List<long[]> byteRanges =
                         rangesOpt == null ? null : BamDataSource.BamScan.parseByteRanges(rangesOpt);
                 // per-file locality RPC on a bounded pool (see
                 // BamScan.mapFiles): file-order output keeps the plan
                 // byte-identical to the sequential one
-                final long splitSizeF = splitSize;
                 List<List<InputPartition>> perFile = BamDataSource.BamScan.mapFiles(files, f -> {
                     BlockLocation[] blockLocs;
                     try {
@@ -186,7 +165,6 @@ public class BlocksSource implements TableProvider {
                     } catch (IOException e) {
                         blockLocs = new BlockLocation[0];
                     }
-                    long size = f.getLen();
                     // the path COLUMN must match the Python twin's value
                     // (downstream QA pipelines open it directly): raw
                     // filesystem path for the local scheme, full URI for
@@ -195,10 +173,9 @@ public class BlocksSource implements TableProvider {
                             ? f.getPath().toUri().getPath()
                             : f.getPath().toString();
                     List<InputPartition> out = new ArrayList<>();
-                    for (long s = 0; s < size; s += splitSizeF) {
-                        long e = Math.min(s + splitSizeF, size);
-                        out.add(new BlockSplit(emitted, s, e, byteRanges,
-                                BamDataSource.BamScan.hostsFor(blockLocs, s, e)));
+                    for (long[] r : planner.ranges(f)) {
+                        out.add(new BlockSplit(emitted, r[0], r[1], byteRanges,
+                                BamDataSource.BamScan.hostsFor(blockLocs, r[0], r[1])));
                     }
                     return out;
                 });
@@ -238,6 +215,11 @@ public class BlocksSource implements TableProvider {
         @Override
         public String[] preferredLocations() {
             return hosts;
+        }
+
+        @Override
+        public String toString() {
+            return "BlockSplit(" + path + " [" + start + ", " + end + "))";
         }
     }
 

@@ -12,18 +12,31 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+def _cpus() -> str:
+    """``SPARK_GRAFT_CPUS``, else the CPUs this process may use.  Scans
+    plan splits in waves of the session's ``defaultParallelism``, so a
+    ``local[N]`` wider than the CPUs would oversubscribe every wave."""
+    if os.environ.get("SPARK_GRAFT_CPUS"):
+        return os.environ["SPARK_GRAFT_CPUS"]
+    if hasattr(os, "sched_getaffinity"):
+        return str(len(os.sched_getaffinity(0)))
+    return str(os.cpu_count() or 1)
+
+
+DEFAULT_SHUFFLE_PARTITIONS = _cpus()
 
 
 def get_spark(app_name: str = "spark_bam_spark", shuffle_partitions: str | None = None) -> SparkSession:
     """Build (or fetch) the session.
 
     On a real cluster ``master`` comes from spark-submit; here we default to
-    local[$SPARK_GRAFT_CPUS]. shuffle partitions default to core count —
+    local[$SPARK_GRAFT_CPUS], or local[<CPUs this process may use>] when
+    that is unset. shuffle partitions default to core count —
     the right size for local mode; at 100 TB scale this is overridden per
     job (AQE coalescing makes over-provisioning cheap).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = _cpus()
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS)

@@ -47,7 +47,7 @@ def test_full_width_equality(spark, fixture_path, py_rows):
     assert len(got) == 2500
 
 
-@pytest.mark.parametrize("split_size", [1024, 4096, 7777, 65536, 1 << 22])
+@pytest.mark.parametrize("split_size", [1024, 4096, 7777, 65536, 1 << 22, None])
 def test_split_invariance(spark, fixture_path, py_rows, split_size):
     """The record set must be independent of split geometry — every split
     boundary exercises find_block_start + the eager record checker."""

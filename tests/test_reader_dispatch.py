@@ -9,9 +9,6 @@ corrupt-record-layout salvage parity between both readers.
 
 from __future__ import annotations
 
-import os
-import subprocess
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -112,25 +109,18 @@ def test_ensure_session_keys_on_application_id(spark):
 
 
 @pytest.mark.skipif(not _HAS_JDK, reason="no JDK compiler on this machine")
-def test_preferred_locations_populated(fixture_path):
+def test_preferred_locations_populated(spark, fixture_path):
     """BamSplit.preferredLocations (the reference's
     SplitRDD.getPreferredLocations, check/.../spark/SplitRDD.scala:27-30)
     must surface the filesystem's block hosts — 'localhost' on the local
     FS; empty would mean the hint is lost and every 100 TB scan task
-    schedules rack-remote.  Asserted through the real DSv2 planning
-    pipeline in a bare JVM (bamjvm.PlanDebug)."""
-    java = os.path.join(os.environ["JAVA_HOME"], "bin", "java")
-    cp = jvmreader.jar_path() + os.pathsep + jvmreader._pyspark_jars_glob()
-    out = subprocess.run(
-        [java, "-cp", cp, "bamjvm.PlanDebug", fixture_path, "65536"],
-        capture_output=True,
-        text=True,
-        timeout=120,
-    )
-    assert out.returncode == 0, out.stderr[-2000:]
-    lines = [ln for ln in out.stdout.splitlines() if ln.startswith("split ")]
-    assert len(lines) >= 2
-    assert all("hosts=localhost" in ln for ln in lines), out.stdout
+    schedules rack-remote.  Asserted on the scan RDD that Spark plans."""
+    from tests.test_split_planner import scan_rdd
+
+    rdd = scan_rdd(read_bam(spark, fixture_path, split_size=65536, reader="jvm"))
+    hosts = [rdd.preferredLocations(p).mkString(",") for p in rdd.partitions()]
+    assert len(hosts) >= 2
+    assert all(h == "localhost" for h in hosts), hosts
 
 
 # ------------------------------- per-file contig dictionary resolution
