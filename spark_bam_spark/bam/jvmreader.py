@@ -18,15 +18,23 @@ under the user cache dir.  The jar is attached to a LIVE session with
 ``ADD JAR`` (driver + executor classloaders), so no session-construction
 flags are needed — any SparkSession, including the correctness driver's,
 can use the source via its fully-qualified class name.
+
+When gcc and the JDK's ``jni.h`` are present, the build also compiles
+``jvmsrc/bamjvm/BgzfCodec.c`` (a JNI shim over libdeflate) into the jar.
+``bamjvm.BgzfCodec`` then inflates and deflates BGZF blocks with
+libdeflate wherever ``libdeflate.so.0`` loads at run time, and with
+``java.util.zip`` everywhere else.
 """
 
 from __future__ import annotations
 
+import glob
 import hashlib
 import os
 import shutil
 import subprocess
 import tempfile
+import warnings
 import zipfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -35,6 +43,7 @@ FORMAT = "bamjvm.BamDataSource"
 FORMAT_BLOCKS = "bamjvm.BlocksSource"
 
 _SRC_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvmsrc")
+_SHIM_SRC = os.path.join(_SRC_DIR, "bamjvm", "BgzfCodec.c")
 _CACHE_DIR = os.path.join(tempfile.gettempdir(), "spark_bam_jvm")
 # SparkContexts (by applicationId) that already ran ADD JAR.  ADD JAR
 # attaches to the shared context, so the applicationId — unique per
@@ -55,10 +64,41 @@ def _sources() -> list[str]:
 
 def _source_hash() -> str:
     h = hashlib.sha256(b"bamjvm-v1")
-    for p in _sources():
+    for p in [*_sources(), _SHIM_SRC]:
         with open(p, "rb") as f:
             h.update(f.read())
+    h.update(b"shim" if _shim_toolchain() else b"no-shim")
     return h.hexdigest()[:16]
+
+
+def _shim_toolchain() -> tuple[str, list[str]] | None:
+    """(gcc, JNI include dirs) when the libdeflate shim can be built."""
+    gcc = shutil.which("gcc")
+    javac = javac_path()
+    homes = [os.environ.get("JAVA_HOME"),
+             javac and os.path.dirname(os.path.dirname(os.path.realpath(javac)))]
+    for home in filter(None, homes):
+        inc = os.path.join(home, "include")
+        if gcc and os.path.exists(os.path.join(inc, "jni.h")):
+            md = [os.path.dirname(p) for p in glob.glob(os.path.join(inc, "*", "jni_md.h"))]
+            return gcc, [inc, *md]
+    return None
+
+
+def _build_shim(out_dir: str) -> None:
+    """Compile the libdeflate JNI shim into ``out_dir/bamjvm`` (a jar
+    resource).  A failed build only warns: BgzfCodec then falls back to
+    java.util.zip."""
+    toolchain = _shim_toolchain()
+    if toolchain is None:
+        return
+    gcc, includes = toolchain
+    out = os.path.join(out_dir, "bamjvm", "libbgzfcodec.so")
+    cmd = [gcc, "-O2", "-shared", "-fPIC", *(f"-I{d}" for d in includes),
+           "-o", out, _SHIM_SRC, "-ldl"]
+    proc = subprocess.run(cmd, capture_output=True, text=True)
+    if proc.returncode != 0:
+        warnings.warn(f"libdeflate shim not built, BGZF uses java.util.zip:\n{proc.stderr[-2000:]}")
 
 
 def javac_path() -> str | None:
@@ -95,6 +135,7 @@ def jar_path() -> str:
         proc = subprocess.run(cmd, capture_output=True, text=True)
         if proc.returncode != 0:
             raise RuntimeError(f"javac failed:\n{proc.stderr[-4000:]}")
+        _build_shim(classes)
         tmp_jar = os.path.join(tmp, "out.jar")
         with zipfile.ZipFile(tmp_jar, "w", zipfile.ZIP_STORED) as zf:
             for root, _dirs, files in os.walk(classes):

@@ -1,7 +1,6 @@
 package bamjvm;
 
 import java.io.IOException;
-import java.util.zip.Inflater;
 import org.apache.hadoop.fs.FSDataInputStream;
 
 /**
@@ -25,17 +24,30 @@ final class BamWindow {
 
     private long nextCpos;
     private boolean exhausted = false;
-    private final Inflater inflater = new Inflater(true);
+    private final BgzfCodec inflater;
+    private final boolean ownsInflater;
     private final byte[] cbuf = new byte[Bgzf.MAX_BLOCK_SIZE];
 
     /**
      * Open at the first BGZF block at/after {@code start} ({@code start
      * == 0} trusts the offset; otherwise a bounded forward scan finds the
      * next block boundary, and no boundary within 64 KiB means the range
-     * is empty).
+     * is empty).  The window inflates with its own decompressor, freed by
+     * {@link #release}.
      */
     BamWindow(FSDataInputStream in, long start) throws IOException {
+        this(in, start, null);
+    }
+
+    /**
+     * As above, inflating with {@code inflater} when it is non-null; the
+     * caller keeps ownership of a borrowed decompressor, so one can serve
+     * many windows in turn.
+     */
+    BamWindow(FSDataInputStream in, long start, BgzfCodec inflater) throws IOException {
         this.in = in;
+        this.ownsInflater = inflater == null;
+        this.inflater = ownsInflater ? BgzfCodec.decompressor() : inflater;
         if (start == 0) {
             nextCpos = 0;
         } else {
@@ -164,15 +176,15 @@ final class BamWindow {
     }
 
     /**
-     * Release the inflater's native zlib buffers eagerly.  RecordWalker
-     * builds a fresh window per byte range (an indexed scan walks many
-     * ranges per split), so waiting for GC to run the inflater's cleaner
-     * would accumulate native memory proportional to ranges walked.
-     * Idempotent; the window must not be used afterwards.
+     * Free the window's own decompressor (native memory the GC does not
+     * see); a borrowed one stays with its owner.  Idempotent; the window
+     * must not be used afterwards.
      */
     void release() {
         exhausted = true;
-        inflater.end();
+        if (ownsInflater) {
+            inflater.close();
+        }
     }
 
     /**

@@ -5,7 +5,6 @@ import java.io.Serializable;
 import java.util.Map;
 import java.util.TreeMap;
 import java.util.zip.CRC32;
-import java.util.zip.Deflater;
 import org.apache.hadoop.fs.FSDataOutputStream;
 import org.apache.hadoop.fs.FileSystem;
 import org.apache.hadoop.fs.Path;
@@ -58,10 +57,14 @@ import org.apache.spark.unsafe.types.UTF8String;
  * schema's logical columns by NAME; missing columns or NULL values take
  * the spec defaults (qname "", flag 0, ref_idx from rname via the
  * {@code contigs} option else -1, pos/mate_pos -1, mapq/tlen 0, cigar "*",
- * seq/qual "", tags empty).  Output framing is byte-compatible with the
- * Python writer given the same options: same header bytes, same record
+ * seq/qual "", tags empty).  Given the same options the output matches
+ * the Python writer block for block: same header bytes, same record
  * encoding (tags sorted, type 'Z'), same exact {@code block_payload}
- * slicing of the uncompressed stream, deflate level 6.
+ * slicing of the uncompressed stream, same CRC32 and ISIZE footers.
+ * The deflate payloads (level 6 by default) come from {@link BgzfCodec}:
+ * libdeflate when its JNI shim loads, whose payloads differ from zlib's,
+ * else {@code java.util.zip}, whose payloads and therefore compressed
+ * bytes and BAI virtual offsets equal the Python writer's.
  */
 final class BamWriteSupport {
     private BamWriteSupport() {}
@@ -363,7 +366,7 @@ final class BamWriteSupport {
         private final byte[] block; // uncompressed staging, flushed at blockPayload
         private int fill;
         private final byte[] deflated = new byte[Bgzf.MAX_BLOCK_SIZE];
-        private final Deflater deflater;
+        private final BgzfCodec deflater;
         private final CRC32 crc = new CRC32();
         private final Grow rec = new Grow(512);
         private long nRecords;
@@ -391,7 +394,6 @@ final class BamWriteSupport {
                       int partitionId, long taskId, String jobToken) throws IOException {
             this.blockPayload = blockPayload;
             this.bai = bai;
-            this.deflater = new Deflater(deflateLevel, true);
             this.nRefs = names.length;
             this.cols = cols;
             this.block = new byte[blockPayload];
@@ -403,11 +405,13 @@ final class BamWriteSupport {
             this.tmpPath = new Path(base,
                     String.format(".part-%05d-%d.bam.inprogress", partitionId, taskId));
             this.out = fs.create(tmpPath, true);
+            this.deflater = BgzfCodec.compressor(deflateLevel); // freed in close()
             byte[] header = encodeHeader(names, lengths);
             append(header, 0, header.length);
         }
 
-        // ---- BGZF block framing (byte-parity with bgzf.py compress_block)
+        // ---- BGZF block framing (bgzf.py compress_block's header and
+        // footer; the payload is byte-identical only on the zip fallback)
 
         private void append(byte[] src, int off, int n) throws IOException {
             while (n > 0) {
@@ -422,19 +426,9 @@ final class BamWriteSupport {
 
         private void flushBlock() throws IOException {
             if (fill == 0) return;
-            deflater.reset();
-            deflater.setInput(block, 0, fill);
-            deflater.finish();
-            int n = 0;
-            while (!deflater.finished()) {
-                int got = deflater.deflate(deflated, n, deflated.length - n);
-                if (got == 0 && !deflater.finished()) {
-                    throw new IOException("BGZF deflate stalled (block exceeds 64 KiB?)");
-                }
-                n += got;
-            }
+            int n = deflater.deflate(block, 0, fill, deflated);
             int bsize = Bgzf.HEADER_LEN + n + Bgzf.FOOTER_LEN;
-            if (bsize > Bgzf.MAX_BLOCK_SIZE) {
+            if (n < 0 || bsize > Bgzf.MAX_BLOCK_SIZE) {
                 throw new IOException("compressed BGZF block exceeds 64 KiB");
             }
             byte[] head = {
@@ -773,7 +767,7 @@ final class BamWriteSupport {
 
         @Override
         public void close() {
-            deflater.end();
+            deflater.close();
             if (!closed) {
                 try { out.close(); } catch (IOException ignored) { }
                 closed = true;

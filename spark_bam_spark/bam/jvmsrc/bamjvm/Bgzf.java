@@ -2,14 +2,16 @@ package bamjvm;
 
 import java.io.IOException;
 import java.util.zip.DataFormatException;
-import java.util.zip.Inflater;
 
 /**
  * BGZF block layer, JVM side — same behavior contract as the engine's
  * Python implementation (spark_bam_spark/bam/bgzf.py) and the public
  * SAM/BAM spec §4.1: gzip members carrying a BC extra subfield with the
- * compressed block size.  Reference behavior parity (cited, not copied):
- * header parse bgzf/.../block/Header.scala:48-83, block-start search
+ * compressed block size.  The payloads are inflated by {@link BgzfCodec}:
+ * libdeflate when its JNI shim loads, else {@code java.util.zip}.  The
+ * Python module stays on zlib and serves as the independent decoder.
+ * Reference behavior parity (cited, not copied): header parse
+ * bgzf/.../block/Header.scala:48-83, block-start search
  * FindBlockStart.scala:8-37.
  */
 final class Bgzf {
@@ -115,25 +117,19 @@ final class Bgzf {
      * payload bit that still inflates to the right length would
      * otherwise decode silently; htslib validates the same way, and the
      * JDK CRC32 is hardware-accelerated, far cheaper than the inflate).
+     * The checks and their messages are the same on the libdeflate and
+     * the {@code java.util.zip} path of {@code codec}.
      */
-    static int inflateBlock(Inflater inflater, byte[] block, int bsize, byte[] out, int outOff)
+    static int inflateBlock(BgzfCodec codec, byte[] block, int bsize, byte[] out, int outOff)
             throws IOException {
         int xlen = u16(block, 10);
         int payloadOff = 12 + xlen;
         int payloadLen = bsize - FOOTER_LEN - payloadOff;
         long crc = i32(block, bsize - 8) & 0xFFFFFFFFL;
         long isize = i32(block, bsize - 4) & 0xFFFFFFFFL;
-        inflater.reset();
-        inflater.setInput(block, payloadOff, payloadLen);
-        int produced = 0;
+        int produced;
         try {
-            while (!inflater.finished() && produced < out.length - outOff) {
-                int got = inflater.inflate(out, outOff + produced, out.length - outOff - produced);
-                if (got == 0 && inflater.needsInput()) {
-                    break;
-                }
-                produced += got;
-            }
+            produced = codec.inflate(block, payloadOff, payloadLen, out, outOff, out.length - outOff);
         } catch (DataFormatException e) {
             throw new IOException("corrupt BGZF deflate payload", e);
         }

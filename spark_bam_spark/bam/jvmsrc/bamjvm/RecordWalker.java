@@ -24,6 +24,8 @@ final class RecordWalker {
 
     FSDataInputStream in;
     BamWindow win;
+    // one decompressor for every range's window, freed in close()
+    private final BgzfCodec inflater = BgzfCodec.decompressor();
     private int rangeIdx = 0;
     private boolean opened = false;
     private boolean rangeDone = false;
@@ -68,10 +70,7 @@ final class RecordWalker {
             FileSystem fs = p.getFileSystem(conf);
             in = fs.open(p);
         }
-        if (win != null) {
-            win.release(); // free the previous range's native zlib state
-        }
-        win = new BamWindow(in, lo);
+        win = new BamWindow(in, lo, inflater);
         if (win.empty) {
             rangeDone = true;
             return;
@@ -191,10 +190,8 @@ final class RecordWalker {
     }
 
     void close() throws IOException {
-        if (win != null) {
-            win.release();
-            win = null;
-        }
+        win = null;
+        inflater.close();
         if (in != null) {
             in.close();
         }

@@ -25,6 +25,7 @@ public final class WalkBench {
         try (FSDataInputStream in = fs.open(p)) {
             BamWindow win = new BamWindow(in, 0);
             hdr = HeaderData.parse(win);
+            win.release();
         }
         // phase 0: block loads + inflate only (no record walk) — the
         // window floor; the delta to the full walk is record-walk cost
@@ -42,6 +43,7 @@ public final class WalkBench {
                     blocks += 1;
                     bytes += win.len - win.blockUstarts[win.nBlocks - 1];
                 }
+                win.release();
             }
             double sec = (System.nanoTime() - t0) / 1e9;
             System.out.printf(

@@ -99,12 +99,26 @@ def test_tiny_blocks_sub_record_slicing(spark_bam, tmp_path):
         assert names == sorted(r.qname for r in recs)
 
 
-def test_corrupt_block_crc_fails_loudly_both_readers(spark_bam, tmp_path):
-    """A block whose payload inflates cleanly but fails the footer CRC32
-    (bit rot) must fail the scan loudly in BOTH readers — never decode
-    silently.  The stored CRC of a mid-file block is flipped, so ISIZE
-    and the deflate stream stay valid and only the CRC check can
-    object."""
+# how each corruption of the third block is made, and what the readers
+# must raise: a flipped stored CRC leaves ISIZE and the deflate stream
+# valid, so only the CRC32 check can object; a wrong stored ISIZE only
+# the ISIZE check; a flipped payload byte may trip any of the three
+# checks, depending on where the deflate stream goes wrong
+_CORRUPTIONS = {
+    "crc": (lambda start, bsize: start + bsize - 8, "CRC32 mismatch"),
+    "isize": (lambda start, bsize: start + bsize - 4, "ISIZE mismatch"),
+    "payload": (lambda start, bsize: start + (18 + bsize - 8) // 2,
+                "CRC32 mismatch|ISIZE mismatch|corrupt BGZF deflate payload"
+                "|while decompressing data"),
+}
+
+
+@pytest.mark.parametrize("corruption", sorted(_CORRUPTIONS))
+def test_corrupt_block_fails_loudly_both_readers(spark_bam, tmp_path, corruption):
+    """A mid-file block with a corrupt footer field or deflate payload
+    must fail the scan loudly in BOTH readers — never decode silently.
+    The JVM reader inflates through libdeflate where it loads, so this
+    also pins that codec's error paths to the zlib ones' messages."""
     from spark_bam_spark.bam import bgzf, jvmreader
     from spark_bam_spark.bam.reader import read_bam
 
@@ -113,18 +127,18 @@ def test_corrupt_block_crc_fails_loudly_both_readers(spark_bam, tmp_path):
               block_payload=4096)
     with open(path, "rb") as f:
         data = bytearray(f.read())
-    # find the third block's footer and flip its stored CRC
-    off = 0
-    for _ in range(3):
-        bsize = bgzf.parse_block_header(data[off : off + bgzf.BGZF_HEADER_LEN])
-        off += bsize
-    data[off - 8] ^= 0xFF  # third block's CRC byte
+    start = 0
+    for _ in range(2):
+        start += bgzf.parse_block_header(data[start : start + bgzf.BGZF_HEADER_LEN])
+    bsize = bgzf.parse_block_header(data[start : start + bgzf.BGZF_HEADER_LEN])
+    where, message = _CORRUPTIONS[corruption]
+    data[where(start, bsize)] ^= 0xFF
     bad = str(tmp_path / "rot_flipped.bam")
     with open(bad, "wb") as f:
         f.write(bytes(data))
     readers = ["py"] + (["jvm"] if jvmreader.javac_path() else [])
     for reader in readers:
-        with pytest.raises(Exception, match="CRC32"):
+        with pytest.raises(Exception, match=message):
             read_bam(spark_bam, bad, split_size=1 << 30, reader=reader).count()
 
 

@@ -11,7 +11,8 @@ writers:
 - readers promote the CG array into 'cigar'/'n_cigar_ops'/'end_pos' and
   keep CG out of the tags map (samtools transparency);
 - writers emit the placeholder + CG (appended after the Z tags) whenever
-  the cigar overflows uint16, byte-identically in both languages;
+  the cigar overflows uint16, with identical uncompressed bytes in both
+  languages;
 - a user-supplied CG tag alongside an overflowing cigar is ambiguous and
   rejected loudly by both writers.
 """
@@ -147,16 +148,17 @@ def test_writer_roundtrips_long_cigar(spark, long_bam, tmp_path, writer):
 @pytest.mark.skipif(not _HAS_JDK, reason="no JDK")
 def test_writers_byte_identical_on_long_cigar(spark, long_bam, tmp_path):
     """The §4.2.2 placeholder + CG emission is part of the writers'
-    byte-parity contract."""
+    content contract: identical uncompressed bytes in identically framed
+    blocks (the deflate payloads differ when the JVM runs libdeflate)."""
+    from tests.test_jvm_writer import _assert_same_blocks
+
     src = read_bam(spark, long_bam, split_size=1 << 30, reader="py").coalesce(1)
-    outs = {}
+    parts = {}
     for writer in ("jvm", "py"):
         out = str(tmp_path / writer)
         write_bam_df(src, out, contigs=_CONTIGS, block_payload=4096, writer=writer)
-        (part,) = glob.glob(out + "/part-*.bam")
-        with open(part, "rb") as f:
-            outs[writer] = f.read()
-    assert outs["jvm"] == outs["py"]
+        (parts[writer],) = glob.glob(out + "/part-*.bam")
+    _assert_same_blocks(parts["jvm"], parts["py"])
 
 
 @pytest.mark.parametrize(
