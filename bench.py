@@ -107,7 +107,7 @@ def main() -> None:
 
     # warm whole-stage codegen per query at the smallest SF so the timed
     # runs measure data-proportional work, not first-run JIT compilation.
-    # Two passes: the Python-datasource scans also need their executor-side
+    # Two passes: the Python-worker queries also need their executor-side
     # worker pool (fork + numpy/pyarrow import x cores) fully spun up, which
     # one pass doesn't finish — measured ramp 12.9s/4.8s/2.4s/2.2s for the
     # 1M-record scan.
@@ -163,9 +163,8 @@ def main() -> None:
                 "queries_median": {**med, **med2},
                 "machine_load_before": load_before,
                 "machine_load_after": load_after,
-                # which BAM implementation the bam_* rows executed (r9
-                # flipped the default to the JVM DSv2 reader; 'py' here
-                # means no JDK or SPARK_GRAFT_BAM_READER=py)
+                # which BAM implementation the bam_* rows executed (the
+                # JVM DSv2 reader is the only one)
                 "bam_reader": _bam_reader(),
                 "repeat": repeat,
                 "sf": sf,

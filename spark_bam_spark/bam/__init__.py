@@ -2,26 +2,22 @@
 
 Re-expresses the reference's product core (spark-bam: parallel split
 computation + record-boundary validity checking, docs/motivation.md:3-52)
-twice, behind one dispatching entry point (``reader.read_bam``):
+as a JVM DataSourceV2 (``jvmsrc/bamjvm/``, built on demand by
+``jvmreader``) behind ``reader.read_bam``: decode, the BGZF codec and the
+part-BAM writer run compiled in the executor JVM, the reference's own
+execution shape.  Split computation happens on executors.
 
-- a JVM DataSourceV2 reader (``jvmsrc/bamjvm/``, built on demand by
-  ``jvmreader``) — the DEFAULT since r9: decode runs compiled in the
-  executor JVM, the reference's own execution shape;
-- a PySpark Python DataSource (``datasource``,
-  ``spark.read.format("bam")``) — the no-JDK fallback and the
-  differential oracle the JVM twin is pinned against row-for-row.
-
-Both return the same plain DataFrame of reads; split computation happens
-on executors; the boundary checker is a pure function shared by spec.
+The pure-Python modules are the independent oracle the JVM code is
+tested against, and the fixture and benchmark-input generator; no Spark
+path runs them.
 
 Modules:
     bgzf        — BGZF block layer (public BGZF spec, SAM/BAM spec §4.1)
     records     — BAM record binary encode/decode (spec §4.2)
     checker     — record-boundary validity predicates (eager + full)
     writer      — BAM writer + sidecar ground truth + fixture generator
-    datasource  — Python DataSource/Reader/Writer classes + registration
-    jvmreader   — on-demand javac build + ADD JAR wiring for the JVM twin
-    reader      — the default-path dispatch (read_bam / read_blocks)
+    jvmreader   — on-demand javac build + ADD JAR wiring for bamjvm
+    reader      — the entry points (read_bam / read_blocks / write_bam_df)
 """
 
 from spark_bam_spark.bam.bgzf import Pos  # noqa: F401

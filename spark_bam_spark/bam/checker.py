@@ -16,8 +16,11 @@ Parity targets (cited, not copied):
 
 from __future__ import annotations
 
+import bisect
 import struct
 from dataclasses import dataclass
+
+from spark_bam_spark.bam import bgzf
 
 DEFAULT_READS_TO_CHECK = 10
 DEFAULT_MAX_READ_SIZE = 100_000_000
@@ -287,6 +290,72 @@ def find_record_start(
             return cand
         cand += 1
     return None
+
+
+class _Window:
+    """Lazily-extended uncompressed window over the block stream, starting
+    at the first BGZF block at/after byte offset ``start`` of the open
+    file ``f`` — the engine's SeekableUncompressedBytes
+    (bgzf/.../block/UncompressedBytes.scala:13-81).  ``ensure`` is the
+    callback :func:`find_record_start` threads to the checker, so a
+    candidate record spanning the window edge grows the window."""
+
+    def __init__(self, f, start: int) -> None:
+        self.f = f
+        self.buf = bytearray()
+        self.block_starts: list[int] = []
+        self.block_ustarts: list[int] = []
+        self.empty = False
+        self._exhausted = False
+        if start == 0:
+            self._next_cpos = 0
+        else:
+            f.seek(start)
+            rel = bgzf.find_block_start(f.read(bgzf.MAX_BLOCK_SIZE * 2), 0)
+            if rel is None:
+                self.empty = True
+                return
+            self._next_cpos = start + rel
+        self._load_block()
+        if not self.block_starts:
+            self.empty = True
+
+    def _load_block(self) -> bool:
+        if self._exhausted:
+            return False
+        self.f.seek(self._next_cpos)
+        head = self.f.read(bgzf.MAX_BLOCK_SIZE)
+        if len(head) < bgzf.BGZF_HEADER_LEN:
+            self._exhausted = True
+            return False
+        bsize = bgzf.parse_block_header(head)
+        if bsize is None:
+            self._exhausted = True
+            return False
+        while len(head) < bsize:
+            more = self.f.read(bsize - len(head))
+            if not more:
+                self._exhausted = True
+                return False
+            head += more
+        data = bgzf.decompress_block(head, 0, bsize)
+        if not data:
+            self._exhausted = True
+            return False
+        self.block_starts.append(self._next_cpos)
+        self.block_ustarts.append(len(self.buf))
+        self.buf.extend(data)
+        self._next_cpos += bsize
+        return True
+
+    def ensure(self, nbytes: int) -> None:
+        while len(self.buf) < nbytes and self._load_block():
+            pass
+
+    def to_pos(self, u: int) -> bgzf.Pos:
+        """Virtual position of window offset ``u``."""
+        i = bisect.bisect_right(self.block_ustarts, u) - 1
+        return bgzf.Pos(self.block_starts[i], u - self.block_ustarts[i])
 
 
 def _check_one_upstream(buf: bytes, o: int, hdr: HeaderInfo, max_read_size: int, anchor: bool) -> int | None:

@@ -26,7 +26,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from spark_bam_spark.bam.datasource import READS_DDL
+from spark_bam_spark.bam.reader import READS_DDL
 
 _BATCH_ROWS = 8192
 

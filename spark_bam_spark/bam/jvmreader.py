@@ -1,15 +1,12 @@
 """On-demand build + session wiring for the JVM-native BAM DataSourceV2.
 
-This is the engine's DEFAULT BAM scan since r9 (bam/reader.py routes
-here whenever a JDK is present).  The Python Data Source
-(bam/datasource.py) remains the no-JDK fallback and the differential
-oracle; its measured end-to-end ceiling is ~100k reads/s per core
-(VERIFICATION_r7 §DS-ceiling) because every decoded batch crosses the
-Python-worker/Arrow boundary.  The Java implementation under
-``jvmsrc/bamjvm/`` keeps the identical schema, split-ownership rule, and
-record-boundary checker, but decodes inside the executor JVM — the same
-execution shape the reference uses (load/.../CanLoadBam.scala runs its
-codec JVM-side; cited as behavior, not copied).
+The Java implementation under ``jvmsrc/bamjvm/`` is the engine's only BAM
+reader, writer, blocks source and stream (``bam/reader.py`` is the public
+entry point).  It decodes inside the executor JVM — the same execution
+shape the reference uses (load/.../CanLoadBam.scala runs its codec
+JVM-side; cited as behavior, not copied).  The pure-Python codec in
+``bam/`` (``records``, ``checker``, ``writer``, ...) is its independent
+test oracle, not a fallback.
 
 Build strategy: the container prohibits package installs, but a full JDK
 ships with Spark's Java runtime, so the .java sources are compiled once
@@ -119,8 +116,8 @@ def _pyspark_jars_glob() -> str:
 
 def jar_path() -> str:
     """Compile the Java sources (once per content hash) and return the
-    jar path.  Raises RuntimeError when no JDK compiler is available —
-    callers treat that as 'JVM reader unavailable'."""
+    jar path.  Raises RuntimeError when no JDK compiler is available:
+    without one the engine has no BAM reader or writer."""
     out = os.path.join(_CACHE_DIR, f"bamjvm-{_source_hash()}.jar")
     if os.path.exists(out):
         return out
@@ -166,8 +163,8 @@ def read_bam_jvm(
     ranges: str | None = None,
     compression_ratio: float | None = None,
 ) -> DataFrame:
-    """DataFrame over a BAM file/directory via the JVM reader — same
-    schema and row semantics as ``spark.read.format('bam')``."""
+    """DataFrame over a BAM file/directory via bamjvm.BamDataSource
+    (schema: ``reader.READS_DDL``)."""
     ensure_session(spark)
     reader = spark.read.format(FORMAT)
     if split_size is not None:
@@ -244,9 +241,9 @@ def read_blocks_jvm(
     split_size: int | None = None,
     ranges: str | None = None,
 ) -> DataFrame:
-    """BGZF blocks-metadata DataFrame via the JVM source (S9 twin of the
-    Python ``bgzf_blocks`` format): header-only parallel block discovery,
-    no inflater, no Python worker boundary."""
+    """BGZF blocks-metadata DataFrame via bamjvm.BlocksSource (S9):
+    header-only parallel block discovery, no inflater, no Python worker
+    boundary."""
     ensure_session(spark)
     reader = spark.read.format(FORMAT_BLOCKS)
     if split_size is not None:
@@ -254,11 +251,3 @@ def read_blocks_jvm(
     if ranges is not None:
         reader = reader.option("ranges", ranges)
     return reader.load(path)
-
-
-def available() -> bool:
-    """True when the JVM reader can be built on this machine."""
-    try:
-        return javac_path() is not None and bool(jar_path())
-    except RuntimeError:
-        return False

@@ -16,8 +16,8 @@ import org.apache.spark.unsafe.types.UTF8String;
  * but batches of 4096 records land directly in OnHeapColumnVectors — no
  * per-record row allocation, and downstream operators consume the batch
  * vectorized.  This is the default read path; rows remain available via
- * the `columnar=false` option (and are what the differential tests pin
- * the Python source against).
+ * the `columnar=false` option; the differential tests pin both against
+ * the pure-Python decoder.
  */
 final class BamColumnarReader implements PartitionReader<ColumnarBatch> {
     private static final int CAPACITY = 4096;

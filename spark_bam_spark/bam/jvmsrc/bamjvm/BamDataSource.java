@@ -46,11 +46,11 @@ import org.apache.spark.sql.types.StructType;
 import org.apache.spark.sql.util.CaseInsensitiveStringMap;
 
 /**
- * JVM-native splittable BAM DataSourceV2 — the fast-scan twin of the
- * engine's Python data source (spark_bam_spark/bam/datasource.py: same
- * schema, same split-ownership rule, same record-boundary checker), built
- * so the decode hot path runs compiled inside the executor JVM instead of
- * crossing the Python/Arrow worker boundary.  Reference behavior parity:
+ * JVM-native splittable BAM DataSourceV2 — the engine's BAM scan and
+ * sink ({@code spark_bam_spark.bam.reader}).  The decode hot path runs
+ * compiled inside the executor JVM; the pure-Python codec
+ * (spark_bam_spark/bam/records.py, checker.py) is the independent oracle
+ * the tests compare its rows with.  Reference behavior parity:
  * load/.../CanLoadBam.scala (loadBam), SplitRDD per-range re-sync (cited,
  * not copied — this is an original implementation against the public
  * SAM/BAM spec and the Spark DataSourceV2 API).
@@ -97,7 +97,7 @@ public class BamDataSource implements TableProvider {
      * of calling {@link #inferSchema} (DataFrameWriter passes
      * {@code df.schema} when this is true), so {@code df.write} with any
      * SUBSET of the logical columns passes AppendData's by-position
-     * validation — the same any-subset contract as the Python writer.
+     * validation (the any-subset column contract of BamWriteSupport).
      * Reads are unaffected: without a user-specified schema the inferred
      * schema is {@link #fullSchema()} either way.
      */
@@ -192,7 +192,7 @@ public class BamDataSource implements TableProvider {
             // Collect rname/ref_idx equality and pos bounds for zone-map
             // block pruning, but keep EVERY filter residual (return all):
             // pruning can only skip byte ranges, never substitute for the
-            // predicate — the same contract as the Python source.  Contig
+            // predicate.  Contig
             // NAMES are absorbed as names and resolved against EACH file's
             // own reference dictionary at planInputPartitions time (the
             // per-file header is already parsed there), so a directory of
@@ -226,8 +226,7 @@ public class BamDataSource implements TableProvider {
     /**
      * Pushed predicate state: rname equality NAMES + raw ref_idx set +
      * pos bounds — drives .zones sidecar block pruning at planning time.
-     * Mirrors the Python source's pushFilters (bam/datasource.py):
-     * absorbing a filter never relaxes anything.  Names are stored
+     * Absorbing a filter never relaxes anything.  Names are stored
      * unresolved and mapped to ref indices per FILE ({@link #effectiveRefIdxs})
      * against that file's own dictionary; a pushed name absent from a
      * file's dictionary contributes no candidate refs for that file,
@@ -386,8 +385,7 @@ public class BamDataSource implements TableProvider {
 
         /**
          * '0-10m,1g-' → {{0, 10 MiB}, {1 GiB, 2^62}} — the CLI's
-         * ByteRanges argument (P3), same grammar as the Python source's
-         * parse_byte_ranges (k/m/g suffixes, open ends).
+         * ByteRanges argument (P3): k/m/g suffixes, open ends.
          */
         static List<long[]> parseByteRanges(String spec) {
             List<long[]> out = new ArrayList<>();
@@ -668,8 +666,8 @@ public class BamDataSource implements TableProvider {
         /**
          * Compressed-byte ranges surviving the index, or null = no
          * pruning info.  Prefers the BAI (spec-standard bin/chunk lookup)
-         * and falls back to the engine's .zones block zone map — the same
-         * precedence as the Python source.  A split is planned iff it
+         * and falls back to the engine's .zones block zone map.  A split
+         * is planned iff it
          * intersects a surviving range; pruning can only skip, never
          * corrupt, because Spark re-applies every filter.
          */
@@ -746,7 +744,7 @@ public class BamDataSource implements TableProvider {
          * answered by chunk lookup, so BAI pruning is disabled for it and
          * the zone-map / full-scan path preserves "pruning can only
          * skip" (unplaced reads live in the tail, which the BAI has no
-         * chunks for) — same rule as the Python source.
+         * chunks for).
          */
         private List<long[]> candidateRangesBai(FileSystem fs, Path bam, HeaderData hdr,
                 Set<Integer> refIdxs) throws IOException {
@@ -781,12 +779,13 @@ public class BamDataSource implements TableProvider {
     /**
      * Greedy cost-capped grouping of candidate compressed-byte ranges —
      * the reference's cappedCostGroups with an estimated compression
-     * ratio (Intervals.scala:110-117; default ratio 3.0), mirroring the
-     * Python source's pack_ranges: each group's estimated uncompressed
-     * cost <= splitSize; oversized ranges are cut at the cap, so skewed
-     * interval queries get partitions proportional to data volume.
+     * ratio (Intervals.scala:110-117; default ratio 3.0): each group's
+     * estimated uncompressed cost <= splitSize; oversized ranges are cut
+     * at the cap, so skewed interval queries get partitions proportional
+     * to data volume.  Public so that the bam_pack_ranges registry query
+     * can run this packer from the driver through py4j.
      */
-    static List<List<long[]>> packRanges(List<long[]> ranges, long splitSize, double ratio) {
+    public static List<List<long[]>> packRanges(List<long[]> ranges, long splitSize, double ratio) {
         long cap = Math.max(1, (long) (splitSize / ratio));
         List<long[]> merged = new ArrayList<>();
         List<long[]> sorted = new ArrayList<>(ranges);

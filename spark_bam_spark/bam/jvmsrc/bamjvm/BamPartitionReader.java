@@ -14,9 +14,9 @@ import org.apache.spark.unsafe.types.UTF8String;
 /**
  * Row-based per-split BAM reader: RecordWalker supplies record
  * positions; only the requested columns are decoded.  Value semantics
- * are byte-identical to the engine's Python vectorized decoder
- * (spark_bam_spark/bam/vectordecode.py) — the differential test suite
- * compares the two row-for-row.  The columnar twin (BamColumnarReader)
+ * equal the pure-Python decoder's (spark_bam_spark/bam/records.py
+ * decode_record) — the differential test suite compares the two
+ * row-for-row.  The columnar twin (BamColumnarReader)
  * shares the walker and the static decode tables below.
  */
 final class BamPartitionReader implements PartitionReader<InternalRow> {
@@ -49,8 +49,8 @@ final class BamPartitionReader implements PartitionReader<InternalRow> {
      * Advance past one auxiliary field starting at {@code p} (tag byte 0).
      * Z/H skip to their NUL terminator, B skips subtype+count+payload,
      * fixed-size types skip their width; -1 on unknown type or corrupt
-     * layout (the scanners stop there — same contract as the Python
-     * decoders' _walk_tags).
+     * layout (the scanners stop there — same contract as records.py
+     * _walk_tags).
      */
     static int skipTag(byte[] b, int p, int end) {
         int typ = b[p + 2] & 0xFF;
@@ -330,7 +330,7 @@ final class BamPartitionReader implements PartitionReader<InternalRow> {
      * Z-typed auxiliary fields as a string map; A/c/C/s/S/i/I/f fixed-size
      * tags, H hex strings and B arrays are skipped structurally and the
      * scan stops at an unknown type or corrupt layout — the same contract
-     * as the Python decoders' _walk_tags.  A CG:B,I long-cigar carrier is
+     * as records.py _walk_tags.  A CG:B,I long-cigar carrier is
      * B-typed, so it never enters the map (it is promoted into 'cigar').
      */
     private ArrayBasedMapData decodeTags(byte[] b, int p, int end) {

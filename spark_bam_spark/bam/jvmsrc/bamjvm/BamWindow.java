@@ -5,9 +5,8 @@ import org.apache.hadoop.fs.FSDataInputStream;
 
 /**
  * Lazily-extended uncompressed window over the BGZF block stream
- * starting at the first block at/after a byte offset — the JVM twin of
- * the engine's Python {@code _Window} (spark_bam_spark/bam/datasource.py)
- * and, behaviorally, the reference's SeekableUncompressedBytes
+ * starting at the first block at/after a byte offset — behaviorally the
+ * reference's SeekableUncompressedBytes
  * (bgzf/.../block/UncompressedBytes.scala:13-81; cited, not copied).
  *
  * All reads are positioned reads on the Hadoop stream, so the window is

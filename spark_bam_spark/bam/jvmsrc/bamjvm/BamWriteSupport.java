@@ -27,8 +27,7 @@ import org.apache.spark.sql.types.StructType;
 import org.apache.spark.unsafe.types.UTF8String;
 
 /**
- * JVM-native distributed BAM sink (S18 twin of the Python Data Source
- * writer, spark_bam_spark/bam/datasource.py BamWriter): one part-BAM per
+ * JVM-native distributed BAM sink (S18): one part-BAM per
  * partition under the target directory, records encoded per the public
  * SAM/BAM spec and sliced into BGZF blocks of {@code block_payload}
  * uncompressed bytes.  Reference behavior parity:
@@ -36,35 +35,32 @@ import org.apache.spark.unsafe.types.UTF8String;
  * JVM-side via htsjdk; cited as behavior, not copied — this is an
  * original implementation against the spec and the Spark DSv2 write API).
  *
- * Scale properties (shared with the Python writer since its r11
- * streaming rework — the remaining JVM advantage is the absence of the
- * per-row Python boundary):
+ * Scale properties:
  * <ul>
  *   <li><b>O(block) memory</b>: records stream into a fixed
  *       {@code block_payload}-byte buffer that is deflated and flushed as
- *       it fills (the Python twin streams through
- *       writer.py StreamingBamEncoder).</li>
+ *       it fills.</li>
  *   <li><b>Task-retry safe</b>: each task writes
  *       {@code .part-NNNNN-taskid.bam.inprogress} and renames into place
  *       at {@code DataWriter.commit()}, so a speculative or retried task
- *       never leaves a torn part file (the Python writer writes the final
- *       name directly).</li>
+ *       never leaves a torn part file.</li>
  *   <li><b>No Python/Arrow boundary</b>: rows are encoded in the executor
- *       JVM (the Python writer crosses per-row with {@code row.asDict()}).</li>
+ *       JVM.</li>
  * </ul>
  *
- * Input column contract matches the Python writer: any subset of the read
+ * Input column contract: any subset of the read
  * schema's logical columns by NAME; missing columns or NULL values take
  * the spec defaults (qname "", flag 0, ref_idx from rname via the
  * {@code contigs} option else -1, pos/mate_pos -1, mapq/tlen 0, cigar "*",
- * seq/qual "", tags empty).  Given the same options the output matches
- * the Python writer block for block: same header bytes, same record
+ * seq/qual "", tags empty).  Given the same records and options the
+ * output matches the pure-Python oracle encoder (writer.py
+ * StreamingBamEncoder) block for block: same header bytes, same record
  * encoding (tags sorted, type 'Z'), same exact {@code block_payload}
  * slicing of the uncompressed stream, same CRC32 and ISIZE footers.
  * The deflate payloads (level 6 by default) come from {@link BgzfCodec}:
  * libdeflate when its JNI shim loads, whose payloads differ from zlib's,
  * else {@code java.util.zip}, whose payloads and therefore compressed
- * bytes and BAI virtual offsets equal the Python writer's.
+ * bytes and BAI virtual offsets equal the oracle's.
  */
 final class BamWriteSupport {
     private BamWriteSupport() {}
@@ -161,8 +157,7 @@ final class BamWriteSupport {
     /**
      * Name→index map of the logical writer columns present in the input
      * schema, with just enough type info to read them off InternalRow.
-     * Unknown columns (block_pos, offset, path, end_pos, ...) are ignored,
-     * matching the Python writer.
+     * Unknown columns (block_pos, offset, path, end_pos, ...) are ignored.
      */
     static final class ColMap implements Serializable {
         private static final long serialVersionUID = 1L;
@@ -196,7 +191,7 @@ final class BamWriteSupport {
                         }
                         tags = i;
                         break;
-                    default: // ignored, like the Python writer's row.asDict() defaults
+                    default: // not a writer column: ignored
                 }
             }
         }
@@ -450,7 +445,7 @@ final class BamWriteSupport {
             fill = 0;
         }
 
-        // ---- row access helpers (defaults match the Python writer's val())
+        // ---- row access helpers (NULL or absent -> the spec default)
 
         private String str(InternalRow row, int idx, String dflt) {
             if (idx < 0 || row.isNullAt(idx)) return dflt;
@@ -463,8 +458,8 @@ final class BamWriteSupport {
         }
 
         /** Long-typed numeric columns must fit the spec's int32 fields —
-         *  throw like the Python writer's struct.pack does instead of
-         *  silently truncating (the twins must fail identically). */
+         *  throw, like records.py's struct.pack, instead of silently
+         *  truncating. */
         private static int i32(long v, String name) throws IOException {
             if (v < Integer.MIN_VALUE || v > Integer.MAX_VALUE) {
                 throw new IOException(
@@ -510,12 +505,12 @@ final class BamWriteSupport {
             // spec §4.2.2 long-cigar fallback (n_cigar_op is uint16): the
             // placeholder kSmN goes in the cigar field, the real ops into
             // a CG:B,I tag appended AFTER the Z tags — identical bytes to
-            // the Python writer's encode_record
+            // records.py encode_record
             int[] cgWords = null;
             if (nCigar > 0xFFFF) {
-                // placeholder op lengths are 28-bit fields; the Python
-                // writer's struct.pack raises at the same bound — the
-                // twins must fail identically, never wrap the shift
+                // placeholder op lengths are 28-bit fields; records.py's
+                // struct.pack raises at the same bound — fail, never wrap
+                // the shift
                 if (lSeq > 0xFFFFFFF || refConsumed > 0xFFFFFFF) {
                     throw new IOException(
                             "bam write: long-cigar placeholder op length out of 28-bit"

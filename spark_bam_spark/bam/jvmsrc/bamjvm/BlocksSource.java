@@ -35,9 +35,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap;
 import org.apache.spark.unsafe.types.UTF8String;
 
 /**
- * JVM twin of the engine's BGZF blocks-metadata source (S9, the
- * reference's Blocks.scala:47-208 as behavior; Python twin:
- * bam/datasource.py BgzfBlocksDataSource): parallel in-file block
+ * The engine's BGZF blocks-metadata source (S9, the reference's
+ * Blocks.scala:47-208 as behavior; oracle: bgzf.py metadata_stream):
+ * parallel in-file block
  * discovery — one partition per byte split, header-only walk (payloads
  * skipped), no sidecar required.  Same split-ownership rule as the
  * record reader: a split emits the blocks whose header starts in
@@ -77,7 +77,7 @@ public class BlocksSource implements TableProvider {
 
         @Override
         public String name() {
-            return "bgzf_blocks_jvm(" + properties.getOrDefault("path", "?") + ")";
+            return "bamjvm_blocks(" + properties.getOrDefault("path", "?") + ")";
         }
 
         @Override
@@ -143,7 +143,7 @@ public class BlocksSource implements TableProvider {
         public InputPartition[] planInputPartitions() {
             String pathOpt = options.get("path");
             if (pathOpt == null) {
-                throw new IllegalArgumentException("bgzf_blocks_jvm source requires a path");
+                throw new IllegalArgumentException("bamjvm blocks source requires a path");
             }
             try {
                 Path root = new Path(pathOpt);
@@ -165,8 +165,8 @@ public class BlocksSource implements TableProvider {
                     } catch (IOException e) {
                         blockLocs = new BlockLocation[0];
                     }
-                    // the path COLUMN must match the Python twin's value
-                    // (downstream QA pipelines open it directly): raw
+                    // the path COLUMN is opened directly by the
+                    // downstream QA pipelines: raw
                     // filesystem path for the local scheme, full URI for
                     // remote stores
                     String emitted = "file".equals(f.getPath().toUri().getScheme())
@@ -245,7 +245,7 @@ public class BlocksSource implements TableProvider {
      * header plus the 4-byte ISIZE footer per block — no payload bytes
      * touched, no inflater.  Stops at split end (next split owns the
      * block starting there), at the standard ISIZE=0 EOF block, or at a
-     * non-BGZF header (trailing garbage tolerated like the Python twin).
+     * non-BGZF header (trailing garbage tolerated).
      */
     static final class BlocksPartitionReader implements PartitionReader<InternalRow> {
         private final BlockSplit split;

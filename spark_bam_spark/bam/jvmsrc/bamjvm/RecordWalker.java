@@ -12,9 +12,8 @@ import org.apache.hadoop.fs.Path;
  * (several for an indexed scan, one contiguous range otherwise), open
  * the window at the range's first block, re-sync on the first record
  * start (eager checker), then hop record starts via block_size under the
- * block-ownership rule.  Identical walk semantics to the Python source's
- * read()/_read_range/_decode_from (bam/datasource.py); see
- * BamPartitionReader for the decode contract.
+ * block-ownership rule.  See BamPartitionReader for the decode
+ * contract.
  */
 final class RecordWalker {
     private final BamDataSource.BamSplit split;
@@ -98,7 +97,7 @@ final class RecordWalker {
      * Position on the next owned record; false at split end.  Throws on
      * corrupt data in failfast mode; permissive mode salvages the records
      * already served, drops the rest of the CURRENT range, and moves on
-     * to the split's next range — the Python source's contract.
+     * to the split's next range.
      */
     boolean advance() throws IOException {
         while (true) {

@@ -9,7 +9,7 @@ lines into a tiny DataFrame and broadcast-joined to resolve
 ``rname -> ref_idx`` (the reference broadcasts its parsed header the same
 way, CanLoadBam.scala:59-66).
 
-Output schema matches the BAM DataSource (datasource.READS_DDL) minus the
+Output schema matches the BAM scan (reader.READS_DDL) minus the
 virtual-position columns (text files have no BGZF coordinates):
 ``block_pos``/``offset`` are NULL.
 """
@@ -160,8 +160,6 @@ def load_reads(spark: SparkSession, path: str, **options) -> DataFrame:
     if path.endswith(".sam"):
         return load_sam(spark, path)
     if path.endswith(".bam"):
-        # default read path (bam/reader.py): JVM DSv2 when buildable,
-        # Python source otherwise or on SPARK_GRAFT_BAM_READER=py
         from spark_bam_spark.bam.reader import read_bam
 
         return read_bam(spark, path, **options)

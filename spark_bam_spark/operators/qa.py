@@ -25,24 +25,9 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from spark_bam_spark.bam.bgzf import MAX_BLOCK_SIZE
+from spark_bam_spark.bam.reader import read_blocks
 
 _LOOKAHEAD_BLOCKS = 4
-
-# planned-DataFrame cache for Python DataSource reads (planning costs ~1s
-# of driver-side round-trips; the immutable plan is reusable per session)
-_BLOCKS_PLAN_CACHE: dict[tuple, DataFrame] = {}
-
-
-def _blocks_df(spark: SparkSession, bam_path: str, reader: str | None = None) -> DataFrame:
-    from spark_bam_spark.bam.reader import read_blocks, reader_choice
-
-    choice = reader or reader_choice()
-    key = (id(spark), bam_path, choice)
-    df = _BLOCKS_PLAN_CACHE.get(key)
-    if df is None:
-        df = read_blocks(spark, bam_path, reader=choice)
-        _BLOCKS_PLAN_CACHE[key] = df
-    return df
 
 
 # per-worker LRU of decompressed blocks — the engine's S14 (Stream.scala:
@@ -97,7 +82,7 @@ def calls(spark: SparkSession, bam_path: str, stride: int = 1) -> DataFrame:
     windows; output is hash-partitionable on (block_pos, offset)."""
     import numpy as np
 
-    blocks = _blocks_df(spark, bam_path)
+    blocks = read_blocks(spark, bam_path)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from spark_bam_spark.bam.header import parse_header
@@ -159,7 +144,7 @@ def flags_sweep(spark: SparkSession, bam_path: str, limit_blocks: int | None = N
 
     from spark_bam_spark.bam.checker import FLAG_NAMES
 
-    blocks = _blocks_df(spark, bam_path)
+    blocks = read_blocks(spark, bam_path)
     if limit_blocks:
         blocks = blocks.orderBy("start").limit(limit_blocks)
 
@@ -249,7 +234,7 @@ def block_first_reads(spark: SparkSession, bam_path: str) -> DataFrame:
         .groupBy("block_pos")
         .agg(F.min("offset").alias("first_read_offset"))
     )
-    blocks = _blocks_df(spark, bam_path)
+    blocks = read_blocks(spark, bam_path)
     w = W.orderBy("start")
     blocks_prev = blocks.select(
         "start",
@@ -303,12 +288,8 @@ def index_blocks(spark: SparkSession, bam_path: str, out_dir: str) -> None:
     """index-blocks sink: BGZF block metadata → CSV sidecar rows via the
     distributed writer (IndexBlocks.scala:10-50 S16; one part per
     partition — at scale you don't single-thread this)."""
-    from spark_bam_spark.bam.datasource import register
-
-    register(spark)
     (
-        spark.read.format("bgzf_blocks")
-        .load(bam_path)
+        read_blocks(spark, bam_path)
         .select("start", "compressed_size", "uncompressed_size")
         .sortWithinPartitions("start")
         .write.mode("overwrite")
@@ -350,8 +331,7 @@ def find_starts(spark: SparkSession, bam_path: str, probes: list[int]) -> DataFr
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from spark_bam_spark.bam import bgzf
-        from spark_bam_spark.bam.checker import find_record_start
-        from spark_bam_spark.bam.datasource import _Window
+        from spark_bam_spark.bam.checker import _Window, find_record_start
         from spark_bam_spark.bam.header import parse_header
 
         with open(bam_path, "rb") as f:
@@ -368,18 +348,18 @@ def find_starts(spark: SparkSession, bam_path: str, probes: list[int]) -> DataFr
                     if rel is None:
                         continue  # no block at/after probe (past EOF window)
                     bstart = p + rel
-                    # record sync exactly as the scan path does it
-                    # (datasource.py BamReader.read): a lazily-extended
+                    # record sync as the scan does it (bamjvm
+                    # RecordWalker over BamWindow): a lazily-extended
                     # uncompressed window with the ensure callback, so a
                     # presumptive record spanning the window edge grows
                     # the window instead of being blindly accepted, and
                     # mid-record EOF is rejected
-                    win = _Window(f, bstart, hdr)
+                    win = _Window(f, bstart)
                     if win.empty:
                         continue
                     win.ensure(4 * MAX_BLOCK_SIZE)
                     u = find_record_start(win.buf, 0, info, ensure=win.ensure)
-                    if u is None or u >= win.base_len():
+                    if u is None or u >= len(win.buf):
                         continue  # no record at/after this block (file tail)
                     pos = win.to_pos(u)
                     out["probe"].append(p)
@@ -531,7 +511,7 @@ def blocks_with_ustart(spark: SparkSession, bam_path: str) -> DataFrame:
     (block_pos, offset) virtual position to a total uncompressed
     coordinate — what the reference's SeekableUncompressedBytes positions
     are measured in."""
-    blocks = _blocks_df(spark, bam_path)
+    blocks = read_blocks(spark, bam_path)
     w = W.orderBy("start").rowsBetween(W.unboundedPreceding, -1)
     return blocks.select(
         F.col("start").alias("block_pos"),
@@ -580,9 +560,6 @@ def annotate_positions(
     Spark-first: one union + window sort instead of per-position seeks —
     the record stream is scanned once regardless of how many positions
     are annotated."""
-    from spark_bam_spark.bam.datasource import register as reg
-
-    reg(spark)
     ublocks = blocks_with_ustart(spark, bam_path)
     recs = (
         spark.read.csv(bam_path + ".records", schema="block_pos long, offset int")

@@ -53,7 +53,6 @@ def ensure_session_ready(spark: SparkSession) -> None:
         return
     for key, val in (
         ("spark.sql.legacy.parquet.nanosAsLong", "true"),
-        ("spark.sql.python.filterPushdown.enabled", "true"),
         ("spark.sql.session.timeZone", "UTC"),
         # Pin the unqualified `timestamp` type to LTZ so casts used for
         # epoch arithmetic (unix_micros) resolve the same way regardless

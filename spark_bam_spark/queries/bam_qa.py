@@ -82,34 +82,11 @@ def _sam_fixture_path() -> str:
     return _SAM_FIXTURE
 
 
-# planned-DataFrame cache: planning a fresh Python DataSource read costs
-# ~1s of driver-side python round-trips (schema/reader/partitions), while
-# executing the cached immutable plan costs ~35ms. Same session + same
-# options => identical plan, so reuse is sound.
-_PLAN_CACHE: dict[tuple, DataFrame] = {}
+def _reads(spark: SparkSession, split_size: int = 65536, columns: str | None = None) -> DataFrame:
+    """Fixture reads through the engine's read path (bam/reader.py)."""
+    from spark_bam_spark.bam.reader import read_bam
 
-
-def _reads(
-    spark: SparkSession,
-    split_size: int = 65536,
-    columns: str | None = None,
-    reader: str | None = None,
-) -> DataFrame:
-    """Fixture reads through the engine's DEFAULT read path (JVM DSv2
-    when buildable, Python source otherwise — bam/reader.py dispatch;
-    SPARK_GRAFT_BAM_READER overrides).  ``reader`` pins a path for the
-    queries that keep per-path driver evidence alive."""
-    from spark_bam_spark.bam.reader import read_bam, reader_choice
-
-    path = _fixture_path()
-    choice = reader or reader_choice()
-    key = (id(spark), path, split_size, columns, choice)
-    cached = _PLAN_CACHE.get(key)
-    if cached is not None:
-        return cached
-    df = read_bam(spark, path, split_size=split_size, columns=columns, reader=choice)
-    _PLAN_CACHE[key] = df
-    return df
+    return read_bam(spark, _fixture_path(), split_size=split_size, columns=columns)
 
 
 @register(
@@ -445,6 +422,23 @@ def bam_metadata_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PACK_CAP = 16384  # split_size 49152 / EstimatedCompressionRatio 3.0
 
 
+def _jvm_pack_ranges(
+    spark: SparkSession, ranges: list[tuple[int, int]], split_size: int, compression_ratio: float
+) -> list[list[tuple[int, int]]]:
+    """bamjvm.BamDataSource.packRanges over ``ranges``, through py4j."""
+    from spark_bam_spark.bam import jvmreader
+
+    jvmreader.ensure_session(spark)
+    gw = spark.sparkContext._gateway
+    jranges = gw.jvm.java.util.ArrayList()
+    for lo, hi in ranges:
+        r = gw.new_array(gw.jvm.long, 2)
+        r[0], r[1] = lo, hi
+        jranges.add(r)
+    groups = gw.jvm.bamjvm.BamDataSource.packRanges(jranges, split_size, float(compression_ratio))
+    return [[(int(r[0]), int(r[1])) for r in g] for g in groups]
+
+
 @register(
     "bam_pack_ranges",
     doc="O4 cappedCostGroups: cost-capped bin-packing incl. merge + oversize-cut branches",
@@ -546,10 +540,10 @@ def bam_pack_ranges(spark: SparkSession, sf_dir: str) -> DataFrame:
     totals, extents, and the global merge/cut event counts must all
     agree.  The n_merges/n_cuts columns ride on every row so the driver
     hash itself proves both branches executed (>=1 each); the query also
-    asserts engine-side that pack_ranges emitted exactly n_cuts solo
-    cap-sized groups."""
+    asserts engine-side that the packer emitted exactly n_cuts solo
+    cap-sized groups.  The packer is the one the indexed scan runs,
+    bamjvm.BamDataSource.packRanges, called on the driver through py4j."""
     from spark_bam_spark.bam import bgzf
-    from spark_bam_spark.bam.datasource import pack_ranges
 
     with open(_fixture_path(), "rb") as f:
         metas = list(bgzf.metadata_stream(f))
@@ -561,10 +555,10 @@ def bam_pack_ranges(spark: SparkSession, sf_dir: str) -> DataFrame:
         (lo[i] + cs[i] // 2, hi[i + 1]) for i in range(0, len(metas) - 1, 21)
     ]
     ranges.append((lo[60], hi[79]))
-    groups = pack_ranges(ranges, split_size=49152, compression_ratio=3.0)
+    groups = _jvm_pack_ranges(spark, ranges, split_size=49152, compression_ratio=3.0)
     # Branch-coverage accounting (hashed as constant columns): replay the
     # documented merge spec to count islands, derive the cut count from
-    # island spans, and REQUIRE that pack_ranges' own output contains
+    # island spans, and REQUIRE that the packer's own output contains
     # exactly that many solo cap-sized groups — if either branch were
     # skipped, the assert (and the driver hash) fails.  Frozen-fixture
     # constraint: `cut_groups == n_cuts` assumes no merged island's span
@@ -586,7 +580,7 @@ def bam_pack_ranges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     if not (n_merges >= 1 and n_cuts >= 1 and cut_groups == n_cuts):
         raise AssertionError(
-            f"pack_ranges branch coverage broken: merges={n_merges}, "
+            f"packRanges branch coverage broken: merges={n_merges}, "
             f"cuts={n_cuts}, solo cap groups={cut_groups}"
         )
     rows = [(gid, lo_, hi_) for gid, grp in enumerate(groups, 1) for lo_, hi_ in grp]
@@ -720,49 +714,22 @@ def bam_sorted_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "bam_scan_reads_jvm",
-    doc="S3 loadBam via the JVM DataSourceV2 twin: split-parallel scan, no Python boundary",
+    doc="S3 loadBam at a 16 KiB split size: every split boundary re-syncs through the JVM checker",
     oracle=f"""
     SELECT qname, flag, rname, pos, end_pos, mapq, cigar, tlen, block_pos, "offset" AS offset
     FROM read_parquet('{_TRUTH_PQ}')
     """,
 )
 def bam_scan_reads_jvm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The same scan contract as bam_scan_reads, executed by the
-    JVM-native DataSourceV2 reader (bam/jvmsrc/bamjvm/) instead of the
-    Python Data Source: identical schema, split-ownership rule, and
-    record-boundary checker, but the BGZF inflate + record decode run
-    compiled inside the executor JVM — the execution shape the reference
-    uses (load/.../CanLoadBam.scala runs its codec JVM-side).  Measured
-    at 20M records on local[32]: 9.1M reads/s full-width vs 3.4M for the
-    Python source (tools/run_jvm_ab.py).  The 16 KiB split size forces
-    ~23 cross-block re-syncs on the 2500-record fixture, so the checker
-    path is part of what the oracle hash pins; the projection covers the
-    cigar-derived end_pos and both virtual-position columns."""
-    from spark_bam_spark.bam.jvmreader import read_bam_jvm
-
-    return read_bam_jvm(spark, _fixture_path(), split_size=16384).select(
+    """The scan contract of bam_scan_reads at a 16 KiB split size, which
+    forces ~23 cross-block re-syncs on the 2500-record fixture, so the
+    JVM record-boundary checker is part of what the oracle hash pins
+    (bam_scan_reads plans whole waves of the session's parallelism and
+    re-syncs far less).  The projection also covers the cigar-derived
+    end_pos and tlen."""
+    return _reads(spark, split_size=16384).select(
         "qname", "flag", "rname", "pos", "end_pos", "mapq", "cigar", "tlen",
         "block_pos", "offset",
-    )
-
-
-@register(
-    "bam_scan_reads_py",
-    doc="S3 loadBam via the Python Data Source (pinned): the fallback/differential-oracle path",
-    oracle=f"""
-    SELECT qname, flag, rname, pos, mapq, cigar, block_pos, "offset" AS offset
-    FROM read_parquet('{_TRUTH_PQ}')
-    """,
-)
-def bam_scan_reads_py(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same contract as bam_scan_reads, with the reader PINNED to the
-    Python Data Source.  Since r9 the default read path is the JVM DSv2
-    reader (bam/reader.py), so bam_scan_reads now exercises the JVM path
-    on machines with a JDK; this twin keeps the Python source — the
-    no-JDK fallback and the differential oracle for the JVM decoder —
-    under driver-grade hash evidence every round."""
-    return _reads(
-        spark, columns="qname,flag,rname,pos,mapq,cigar,block_pos,offset", reader="py"
     )
 
 
@@ -782,83 +749,19 @@ def bam_interval_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "bam_interval_pushdown_jvm",
-    doc="S7 loadBamIntervals on the JVM twin: BAI-pruned indexed scan",
-    oracle=f"""
-    SELECT qname, rname, pos, end_pos FROM read_parquet('{_TRUTH_PQ}')
-    WHERE rname = '1' AND pos >= 13000 AND pos < 1000000
-    """,
-)
-def bam_interval_pushdown_jvm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The same indexed-interval contract as bam_interval_pushdown,
-    planned by the JVM reader: SupportsPushDownFilters absorbs the
-    rname/pos predicate, the BAI chunk lookup (Bai.java, preferred over
-    the .zones fallback) prunes candidate blocks, and surviving ranges
-    are cost-packed into multi-range splits.  The driver hash pins the
-    whole JVM indexed path — pushdown, BAI parse, chunk query, range
-    walk — against the committed truth parquet; with this plus
-    bam_scan_reads_jvm, both read paths of the r9 default flip carry
-    driver-grade evidence."""
-    from spark_bam_spark.bam.jvmreader import read_bam_jvm
-
-    df = read_bam_jvm(spark, _fixture_path(), split_size=16384)
-    return df.filter(
-        (F.col("rname") == "1") & (F.col("pos") >= 13000) & (F.col("pos") < 1_000_000)
-    ).select("qname", "rname", "pos", "end_pos")
-
-
-@register(
-    "bam_interval_pushdown_py",
-    doc="S7 loadBamIntervals on the pinned Python source: zone-map/BAI pushdown fallback path",
-    oracle=f"""
-    SELECT qname, rname, pos, end_pos FROM read_parquet('{_TRUTH_PQ}')
-    WHERE rname = '1' AND pos >= 13000 AND pos < 1000000
-    """,
-)
-def bam_interval_pushdown_py(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """bam_interval_pushdown with the reader PINNED to the Python Data
-    Source (see bam_scan_reads_py): keeps the Python pushdown → BAI/zone
-    pruning → packed-range walk under driver hash evidence now that the
-    default path is the JVM reader."""
-    return (
-        _reads(spark, split_size=16384, columns="qname,rname,pos,end_pos", reader="py")
-        .filter((F.col("rname") == "1") & (F.col("pos") >= 13000) & (F.col("pos") < 1_000_000))
-    )
-
-
-@register(
     "bam_blocks_metadata",
     doc="S9 Blocks(): parallel BGZF block discovery",
     oracle=f"SELECT start, compressed_size, uncompressed_size FROM read_parquet('{_BLOCKS_PQ}')",
 )
 def bam_blocks_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pinned to the PYTHON blocks source: since r9 the QA pipelines'
-    default block discovery is the JVM BlocksSource (bam_blocks_metadata_jvm
-    pins that path), so this query keeps the fallback implementation
-    under driver hash evidence — same pattern as bam_scan_reads_py."""
-    from spark_bam_spark.operators.qa import _blocks_df
-
-    return _blocks_df(spark, _fixture_path(), reader="py").select(
-        "start", "compressed_size", "uncompressed_size"
-    )
-
-
-@register(
-    "bam_blocks_metadata_jvm",
-    doc="S9 Blocks() on the JVM BlocksSource: header-only parallel block discovery",
-    oracle=f"SELECT start, compressed_size, uncompressed_size FROM read_parquet('{_BLOCKS_PQ}')",
-)
-def bam_blocks_metadata_jvm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S9 via bamjvm.BlocksSource (Blocks.scala:47-208 as behavior):
     positioned header reads only — 18-byte BGZF header + 4-byte ISIZE
-    footer per block, no inflater, no Python worker boundary — with the
-    record reader's planning conventions (adaptive splits, byte-ranges,
-    locality hints, session Hadoop conf).  Since r9 this is the DEFAULT
-    block-discovery path for every QA pipeline via operators/qa._blocks_df;
-    the sidecar oracle hash pins it block-for-block."""
-    from spark_bam_spark.operators.qa import _blocks_df
+    footer per block, no inflater, no Python worker boundary.  This is
+    the block discovery every QA pipeline plans over; the sidecar oracle
+    hash pins it block-for-block."""
+    from spark_bam_spark.bam.reader import read_blocks
 
-    return _blocks_df(spark, _fixture_path(), reader="jvm").select(
+    return read_blocks(spark, _fixture_path()).select(
         "start", "compressed_size", "uncompressed_size"
     )
 
@@ -912,7 +815,7 @@ def bam_compute_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The oracle re-derives the planner's split choice from the
     generator sidecars alone: for each split_size (16384) boundary, the
     first block at-or-after it, then the first record starting at-or-
-    after that block — the same arithmetic the datasource planner and
+    after that block — the same arithmetic the bamjvm planner and
     FindRecordStart implement over the actual BGZF bytes."""
     from spark_bam_spark.operators import qa
 
@@ -1040,7 +943,7 @@ def _fresh_rewrite_dir() -> str:
 )
 def bam_rewrite_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-visible round-trip for the S18 writer sink: scan the 2500-
-    record fixture, write it back through the default (JVM-first) write
+    record fixture, write it back through the JVM write
     path (different block_payload so the BGZF framing genuinely changes),
     rescan the part-BAMs, and full-outer-join on qname comparing every
     logical field (flag/rname/pos/mapq/cigar/tlen/seq/qual).  The oracle
@@ -1048,24 +951,18 @@ def bam_rewrite_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     both counts equal the truth count, zero mismatches.  Any writer or
     reader regression shows up as a mismatch/missing row and breaks the
     hash.  (HTSJDKRewrite.scala:21-93 parity: rewrite-then-compare.)"""
-    return _rewrite_roundtrip(spark, sf_dir, writer=None)
-
-
-def _rewrite_roundtrip(spark: SparkSession, sf_dir: str, writer: str | None) -> DataFrame:
     from spark_bam_spark.bam.reader import read_bam, write_bam_df
     from spark_bam_spark.bam.writer import CONTIG_LENGTHS, CONTIG_NAMES
 
     src = _reads(spark, split_size=65536)
     rewrite_dir = _fresh_rewrite_dir()
     contigs = ",".join(f"{n}:{ln}" for n, ln in zip(CONTIG_NAMES, CONTIG_LENGTHS))
-    write_bam_df(
-        src.repartition(4), rewrite_dir, contigs=contigs, block_payload=4096, writer=writer
-    )
-    # fresh plan on purpose (no _PLAN_CACHE): each call writes to a fresh
-    # scratch dir, so the reader must re-list and re-scan it.  The write
-    # is necessarily eager (the rescan needs the part-BAMs on disk) —
-    # this is the one registry fn that runs a job at build time, which is
-    # safe now that the target is per-call unique.
+    write_bam_df(src.repartition(4), rewrite_dir, contigs=contigs, block_payload=4096)
+    # each call writes to a fresh scratch dir, which the reader then
+    # re-lists and re-scans.  The write is necessarily eager (the rescan
+    # needs the part-BAMs on disk) — this is the one registry fn that runs
+    # a job at build time, which is safe now that the target is per-call
+    # unique.
     back = read_bam(spark, rewrite_dir, split_size=16384)
     fields = ["flag", "rname", "pos", "mapq", "cigar", "tlen", "seq", "qual"]
     a = src.select("qname", *fields).alias("a")
@@ -1080,25 +977,6 @@ def _rewrite_roundtrip(spark: SparkSession, sf_dir: str, writer: str | None) -> 
         F.sum(mismatch.cast("int")).cast("bigint").alias("n_mismatch"),
         (F.sum(mismatch.cast("int")) == 0).alias("all_match"),
     )
-
-
-@register(
-    "bam_rewrite_roundtrip_jvm",
-    doc="S18 writer sink, JVM DSv2 implementation pinned (BamWriteSupport.java)",
-    oracle=f"""
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_source,
-           CAST(COUNT(*) AS BIGINT) AS n_rewritten,
-           CAST(0 AS BIGINT) AS n_mismatch,
-           TRUE AS all_match
-    FROM read_parquet('{_TRUTH_PQ}')
-    """,
-)
-def bam_rewrite_roundtrip_jvm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-trip with the JVM DSv2 writer PINNED (errors surface instead
-    of being masked by fallback) — keeps the executor-JVM write path under
-    driver-grade evidence every round, independent of the default
-    dispatch.  Same comparison and oracle as ``bam_rewrite_roundtrip``."""
-    return _rewrite_roundtrip(spark, sf_dir, writer="jvm")
 
 
 @register(
@@ -1276,56 +1154,6 @@ def bam_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "bam_stream_ingest_py",
-    doc="Streaming landing-dir ingest via the PYTHON stream reader (no-JDK fallback path pinned)",
-    oracle=f"""
-    SELECT flag, CAST(COUNT(*) * 2 AS BIGINT) AS n_reads
-    FROM read_parquet('{_TRUTH_PQ}')
-    GROUP BY flag
-    """,
-)
-def bam_stream_ingest_py(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same landing-dir drain as ``bam_stream_ingest`` with the Python
-    streaming source PINNED (datasource.BamStreamReader) — keeps the
-    no-JDK fallback's streaming path under driver-grade hash evidence
-    every round, the ``bam_scan_reads_py`` / ``bam_rewrite_roundtrip_py``
-    pattern applied to §2.9.  Two fixture copies land, the stream drains
-    them into parquet, and the per-flag histogram must hash-match 2× the
-    truth parquet — pinning that the twin planned both files through the
-    same BamReader splitter/decoder with no row lost or duplicated.
-    (The Python DS API lacks SupportsTriggerAvailableNow, so the
-    availableNow trigger falls back to single-batch execution — same
-    drain for a quiescent dir; see BamStreamReader for the documented
-    offset-format asymmetry vs the JVM source.)"""
-    import os
-    import shutil
-
-    from spark_bam_spark.bam.reader import read_bam_stream_py
-
-    land = _fresh_rewrite_dir()
-    os.makedirs(land, exist_ok=True)
-    ckpt = os.path.join(land, "_ckpt")
-    out = os.path.join(land, "_out")
-    fx = _fixture_path()
-    shutil.copy(fx, os.path.join(land, "a.bam"))
-    shutil.copy(fx, os.path.join(land, "b.bam"))
-    q = (
-        read_bam_stream_py(spark, land, split_size=16384, columns="flag")
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return (
-        spark.read.parquet(out)
-        .groupBy("flag")
-        .agg(F.count("*").cast("bigint").alias("n_reads"))
-    )
-
-
-@register(
     "bam_idxstats_from_index",
     doc="samtools idxstats from the BAI metadata pseudo-bin alone — O(index), no data scan",
     oracle=f"""
@@ -1483,26 +1311,6 @@ def bam_flagstat(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "bam_rewrite_roundtrip_py",
-    doc="S18 writer sink, Python Data Source implementation pinned (datasource.py BamWriter)",
-    oracle=f"""
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_source,
-           CAST(COUNT(*) AS BIGINT) AS n_rewritten,
-           CAST(0 AS BIGINT) AS n_mismatch,
-           TRUE AS all_match
-    FROM read_parquet('{_TRUTH_PQ}')
-    """,
-)
-def bam_rewrite_roundtrip_py(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-trip with the Python Data Source writer PINNED — keeps the
-    no-JDK fallback write path under driver-grade evidence every round now
-    that the default routes to the JVM sink (same convention as
-    ``bam_scan_reads_py``).  Same comparison and oracle as
-    ``bam_rewrite_roundtrip``."""
-    return _rewrite_roundtrip(spark, sf_dir, writer="py")
-
-
-@register(
     "bam_time_load",
     doc="time-load: first read per partition at two split sizes + name anti-joins",
     oracle="SELECT CAST(0 AS BIGINT) AS b_firsts_missing_from_a",
@@ -1551,10 +1359,9 @@ def bam_check_three_way(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def bam_compression_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from spark_bam_spark.operators.qa import _blocks_df
+    from spark_bam_spark.bam.reader import read_blocks
 
-    blocks = _blocks_df(spark, _fixture_path())
-    return blocks.agg(
+    return read_blocks(spark, _fixture_path()).agg(
         F.count("*").alias("n_blocks"),
         F.round(
             F.sum("uncompressed_size").cast("double") / F.sum("compressed_size"), 4
@@ -1590,14 +1397,9 @@ def bam_scan_50k(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Format-layer throughput probe: enough records that decode (not
     task overhead) dominates; counts every field decoded."""
     _big_fixture_path()
-    from spark_bam_spark.bam.reader import read_bam, reader_choice
+    from spark_bam_spark.bam.reader import read_bam
 
-    key = (id(spark), _BIG_FIXTURE, 262144, None, reader_choice())
-    reads = _PLAN_CACHE.get(key)
-    if reads is None:
-        reads = read_bam(spark, _BIG_FIXTURE, split_size=262144)
-        _PLAN_CACHE[key] = reads
-    return reads.agg(
+    return read_bam(spark, _BIG_FIXTURE, split_size=262144).agg(
         F.count("*").alias("n_reads"),
         F.sum("seq_len").cast("bigint").alias("total_bases"),
         F.count_distinct("rname").alias("n_contigs"),
@@ -1636,37 +1438,23 @@ def _tile_bam(src: str, dst: str, tiles: int) -> None:
 
 @register(
     "bam_scan_1m",
-    doc="S3 at decode-bound scale: 1M-record full-width scan (vectorized decoder probe)",
+    doc="S3 at decode-bound scale: 1M-record full-width scan",
     headline=True,
     oracle=f"SELECT n_reads, total_bases, total_quals, n_contigs FROM read_parquet('{_SCAN_AGGS_PQ}') WHERE fixture = '1m'",
 )
 def bam_scan_1m(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Throughput probe sized so record decode (not task overhead)
-    dominates: ~1M records, full schema incl. seq/qual/tags. The r1
-    verdict flagged per-record Python decode as the one 100× scale
-    killer; this query is the regression guard for the numpy→Arrow batch
-    decoder (vectordecode.py).
-
-    Measured r3 (this machine): decode_batch alone runs 328k records/s
-    per core full-width; single-thread BGZF inflate of the 140 MB
-    fixture is 1.5 s — so the whole scan is ~4.5 core-seconds of real
-    work, and the ~0.9 s wall on local[32] is dominated by fixed Spark
-    task/Arrow overhead, not decode. At cluster scale (reused workers,
-    bigger files) the per-core decode rate is the binding constant."""
+    dominates: ~1M records, full schema incl. seq/qual/tags — the
+    regression guard for the bamjvm decoder at scale."""
     marker = f"{_HUGE_FIXTURE}.genv{_FIXTURE_GEN_VERSION}"
     if not (os.path.exists(_HUGE_FIXTURE) and os.path.exists(marker)):
         # reuse the 50k fixture as the tile source
         _tile_bam(_big_fixture_path(), _HUGE_FIXTURE, tiles=20)
         with open(marker, "w"):
             pass
-    from spark_bam_spark.bam.reader import read_bam, reader_choice
+    from spark_bam_spark.bam.reader import read_bam
 
-    key = (id(spark), _HUGE_FIXTURE, 1 << 22, None, reader_choice())
-    reads = _PLAN_CACHE.get(key)
-    if reads is None:
-        reads = read_bam(spark, _HUGE_FIXTURE, split_size=1 << 22)
-        _PLAN_CACHE[key] = reads
-    return reads.agg(
+    return read_bam(spark, _HUGE_FIXTURE, split_size=1 << 22).agg(
         F.count("*").alias("n_reads"),
         F.sum("seq_len").cast("bigint").alias("total_bases"),
         F.sum(F.length("qual")).cast("bigint").alias("total_quals"),

@@ -52,8 +52,6 @@ def get_spark(app_name: str = "spark_bam_spark", shuffle_partitions: str | None 
         # events.parquet carries TIMESTAMP(NANOS) which the vectorized reader
         # rejects; read as long and convert in tables.table()
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # allow Python DataSource pushFilters (bam zone-map pruning)
-        .config("spark.sql.python.filterPushdown.enabled", "true")
         # UI off by default (headless harness); SPARK_GRAFT_UI=1 turns it
         # on so measurement tools can read per-job timings from the REST
         # API (tools/r18_ivf_jobs.py) — no effect on any query

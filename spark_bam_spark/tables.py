@@ -26,8 +26,7 @@ TABLE_NAMES = (
 # driver-side schema inference per call (measured r17, idle box), and a
 # bench pass re-reads the same handful of tables dozens of times.  The
 # cached object is a lazy DataFrame — every action against it still scans
-# the parquet files; nothing is persisted or precomputed (same pattern as
-# bam_qa._PLAN_CACHE, in-tree since r3).  The value keeps the owning
+# the parquet files; nothing is persisted or precomputed.  The value keeps the owning
 # session so a recycled id() after GC, or a stopped-and-recreated session,
 # can never serve a stale frame (identity check on hit).
 _TABLE_CACHE: dict[tuple[int, str, str], tuple[SparkSession, DataFrame]] = {}

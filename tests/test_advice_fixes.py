@@ -52,12 +52,11 @@ def test_bai_pushdown_keeps_unplaced_reads(spark, tmp_path):
     must return the unplaced tail, not silently zero rows."""
     import os
 
-    from spark_bam_spark.bam.datasource import register
+    from spark_bam_spark.bam.reader import read_bam
 
     path = _unplaced_fixture(tmp_path)
     assert os.path.exists(path + ".bai")  # the sidecar that triggered the bug
-    register(spark)
-    df = spark.read.format("bam").option("split_size", 2048).load(path)
+    df = read_bam(spark, path, split_size=2048)
     got = df.filter(df.ref_idx == -1).count()
     assert got == 12
     # placed-ref pruning must still work alongside
@@ -67,11 +66,10 @@ def test_bai_pushdown_keeps_unplaced_reads(spark, tmp_path):
 def test_bai_pushdown_out_of_dictionary_ref(spark, tmp_path):
     """A pushed ref beyond the BAI's reference count disables pruning
     rather than returning wrong (empty-by-pruning) results."""
-    from spark_bam_spark.bam.datasource import register
+    from spark_bam_spark.bam.reader import read_bam
 
     path = _unplaced_fixture(tmp_path)
-    register(spark)
-    df = spark.read.format("bam").option("split_size", 2048).load(path)
+    df = read_bam(spark, path, split_size=2048)
     assert df.filter(df.ref_idx == 99).count() == 0  # still correct: residual filter
 
 
@@ -176,9 +174,8 @@ def test_sam_tag_value_with_colons(spark, tmp_path):
 
 def test_bam_writer_null_tolerance(spark, tmp_path):
     """ADVICE: NULL mapq/mate_*/tlen/qual values must not crash the sink."""
-    from spark_bam_spark.bam.datasource import register
+    from spark_bam_spark.bam.reader import read_bam, write_bam_df
 
-    register(spark)
     rows = [
         ("r1", 1, "1", 100, None, "4M", None, None, None, "ACGT", None, None),
         ("r2", 4, None, -1, 0, None, -1, -1, 0, "AC", "!!", None),
@@ -191,20 +188,22 @@ def test_bam_writer_null_tolerance(spark, tmp_path):
     )
     out = str(tmp_path / "out_bam")
     contigs = ",".join(f"{n}:{l}" for n, l in zip(CONTIG_NAMES, CONTIG_LENGTHS))
-    df.repartition(1).write.format("bam").option("contigs", contigs).mode("append").save(out)
-    back = spark.read.format("bam").load(out)
+    write_bam_df(df.repartition(1), out, contigs=contigs)
+    back = read_bam(spark, out)
     assert back.count() == 2
     r1 = back.filter(back.qname == "r1").first()
     assert r1.mapq == 0 and r1.mate_ref_idx == -1 and r1.tlen == 0
 
 
 def test_bam_writer_bad_cigar_clear_error(spark, tmp_path):
-    from spark_bam_spark.bam.datasource import _parse_cigar
+    from spark_bam_spark.bam.reader import write_bam_df
 
-    with pytest.raises(ValueError, match="invalid cigar"):
-        _parse_cigar("4Q")
-    with pytest.raises(ValueError, match="invalid cigar"):
-        _parse_cigar("M4")
+    contigs = ",".join(f"{n}:{l}" for n, l in zip(CONTIG_NAMES, CONTIG_LENGTHS))
+    for i, cigar in enumerate(("4Q", "M4")):
+        df = spark.createDataFrame([("r", "1", 1, cigar, "ACGT")],
+                                   "qname string, rname string, pos long, cigar string, seq string")
+        with pytest.raises(Exception, match="invalid cigar"):
+            write_bam_df(df, str(tmp_path / f"bad{i}"), contigs=contigs)
 
 
 def test_classifier_score_empty_document_contract(spark, tmp_path):

@@ -1,11 +1,10 @@
 """Regression tests for the round-11 ADVICE findings (fixed in r12).
 
 1. A ``B`` aux array with subtype 'A' is malformed (spec §4.2.4.2:
-   legal subtypes are cCsSiIf — 'A' is a standalone type only).  All
-   THREE tag scanners — scalar ``_walk_tags``, the vectorized decoder,
-   and the JVM ``skipTag`` — must STOP there identically instead of
-   one path structurally skipping it and surfacing later tags the
-   others never reach.
+   legal subtypes are cCsSiIf — 'A' is a standalone type only).  Both
+   tag scanners — scalar ``_walk_tags`` and the JVM ``skipTag`` — must
+   STOP there identically instead of one path structurally skipping it
+   and surfacing later tags the other never reaches.
 2. ``write_bam``'s BAI voffsets and ``StreamingBamEncoder``'s agree on
    the corner where the last record ends exactly on a block boundary:
    both report the next-block form ((EOF-marker coffset) << 16 | 0).
@@ -67,16 +66,6 @@ def test_scalar_walk_tags_stops_on_b_subtype_a():
 def _read_tags(df):
     (row,) = df.select("qname", "tags").collect()
     return dict(row["tags"] or {})
-
-
-def test_vector_decoder_stops_on_b_subtype_a(spark, tmp_path):
-    from spark_bam_spark.bam.datasource import register
-
-    path = str(tmp_path / "badb.bam")
-    _write_bad_b_bam(path)
-    register(spark)
-    df = spark.read.format("bam").load(path)
-    assert _read_tags(df) == {}  # no XZ: vector scan stops like scalar
 
 
 def test_jvm_decoder_stops_on_b_subtype_a(spark, tmp_path):

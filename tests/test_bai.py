@@ -1,5 +1,6 @@
 """BAI index (S11/S8): write/parse round-trip, query planning vs brute
-force, and DataSource pushdown equivalence with the spec index."""
+force, the streaming encoder's incremental index, and the scan's
+pushdown equivalence with the spec index."""
 
 import os
 
@@ -7,8 +8,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from spark_bam_spark.bam.bai import build_bai, parse_bai, query_chunks, reg2bin, reg2bins
-from spark_bam_spark.bam.datasource import register
-from spark_bam_spark.bam.writer import make_fixture
+from spark_bam_spark.bam.reader import read_bam
+from spark_bam_spark.bam.writer import CONTIG_LENGTHS, CONTIG_NAMES, make_fixture
 
 N = 600
 
@@ -86,9 +87,8 @@ def test_query_chunks_randomized_coverage(tmp_path):
 
 
 def test_bai_pushdown_matches_full_scan(spark, bam):
-    register(spark)
     full = (
-        spark.read.format("bam").option("split_size", 4096).load(bam.path)
+        read_bam(spark, bam.path, split_size=4096)
         .filter((F.col("rname") == "1") & (F.col("pos") >= 100_000) & (F.col("pos") <= 500_000))
     )
     want = sorted((r["qname"], r["pos"]) for r in full.select("qname", "pos").collect())
@@ -101,7 +101,7 @@ def test_bai_pushdown_matches_full_scan(spark, bam):
         os.remove(zones)
     try:
         pruned = (
-            spark.read.format("bam").option("split_size", 4096).load(bam.path)
+            read_bam(spark, bam.path, split_size=4096)
             .filter((F.col("rname") == "1") & (F.col("pos") >= 100_000) & (F.col("pos") <= 500_000))
         )
         got = sorted((r["qname"], r["pos"]) for r in pruned.select("qname", "pos").collect())
@@ -113,15 +113,43 @@ def test_bai_pushdown_matches_full_scan(spark, bam):
 
 
 def test_bai_pushdown_prunes_partitions(spark, bam):
-    register(spark)
-    unfiltered = spark.read.format("bam").option("split_size", 4096).load(bam.path)
-    filtered = unfiltered.filter((F.col("rname") == "1") & (F.col("pos").between(100_000, 120_000)))
-    # trigger planning through an action and compare scan task counts
-    n_all = unfiltered.rdd.getNumPartitions()
-    n_pruned = filtered.count()  # correctness side effect
-    from spark_bam_spark.bam.datasource import BamReader
+    from tests.test_split_planner import scan_splits
 
-    r = BamReader({"path": bam.path, "split_size": "4096"})
-    r._ref_idxs_raw = {0}
-    r._pos_lo, r._pos_hi = 100_000, 120_000
-    assert len(r.partitions()) < n_all
+    unfiltered = read_bam(spark, bam.path, split_size=4096)
+    filtered = unfiltered.filter((F.col("rname") == "1") & (F.col("pos").between(100_000, 120_000)))
+    assert 0 < len(scan_splits(filtered)) < len(scan_splits(unfiltered))
+    assert filtered.count() > 0
+
+
+def test_streaming_encoder_byte_identical_to_write_bam(tmp_path):
+    """The streaming encoder (writer.StreamingBamEncoder, the writer-side
+    oracle the JVM sink is compared with) passes records through an
+    O(block_payload) staging buffer instead of buffering them all.  For
+    the same records and options its output must equal write_bam's
+    byte-for-byte — including at tiny block payloads where every record
+    straddles block boundaries — and with bai=True the incremental
+    BaiAccumulator must reproduce the one-shot build_bai index exactly."""
+    import io
+
+    from spark_bam_spark.bam.bai import write_bai
+    from spark_bam_spark.bam.writer import StreamingBamEncoder, synth_records, write_bam
+
+    recs = synth_records(400, seed=21)
+    for bp in (96, 4096, 0xFF00):
+        ref = str(tmp_path / f"ref_{bp}.bam")
+        write_bam(ref, CONTIG_NAMES, CONTIG_LENGTHS, recs, block_payload=bp)
+        buf = io.BytesIO()
+        enc = StreamingBamEncoder(
+            buf, CONTIG_NAMES, CONTIG_LENGTHS, block_payload=bp, bai=True
+        )
+        for r in recs:
+            enc.add(r)
+        enc.finish()
+        with open(ref, "rb") as f:
+            assert buf.getvalue() == f.read(), f"block_payload={bp}"
+        bai_path = str(tmp_path / f"enc_{bp}.bai")
+        write_bai(bai_path, enc.bai.index())
+        with open(ref + ".bai", "rb") as f:
+            ref_bai = f.read()
+        with open(bai_path, "rb") as f:
+            assert f.read() == ref_bai, f"bai block_payload={bp}"

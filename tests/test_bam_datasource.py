@@ -1,14 +1,25 @@
-"""End-to-end DataSource tests — the reference's loader invariants
+"""End-to-end tests of the BAM scan and sink (bamjvm.BamDataSource,
+reached through ``bam.reader``) — the reference's loader invariants
 (LoadBAMTest.scala:23-122): total count, split-size invariance, first
-read names, interval predicate pushdown, write round-trip."""
+read names, interval predicate pushdown, write round-trip — and the
+indexed scan's range packer (BamDataSource.packRanges)."""
 
 from __future__ import annotations
+
+import os
+import random
+import subprocess
 
 import pytest
 from pyspark.sql import functions as F
 
-from spark_bam_spark.bam.datasource import register
+from spark_bam_spark.bam import jvmreader
+from spark_bam_spark.bam.reader import read_bam, read_blocks, write_bam_df
 from spark_bam_spark.bam.writer import CONTIG_LENGTHS, CONTIG_NAMES, make_fixture
+
+pytestmark = pytest.mark.skipif(
+    jvmreader.javac_path() is None, reason="no JDK compiler on this machine"
+)
 
 N = 2500
 
@@ -21,26 +32,19 @@ def bam(tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def spark_bam(spark):
-    register(spark)
+    jvmreader.ensure_session(spark)
     return spark
 
 
-def _reads(spark, path, **opts):
-    r = spark.read.format("bam")
-    for k, v in opts.items():
-        r = r.option(k, v)
-    return r.load(path)
-
-
 def test_count_and_schema(spark_bam, bam):
-    df = _reads(spark_bam, bam.path, split_size=65536)
+    df = read_bam(spark_bam, bam.path, split_size=65536)
     assert df.count() == N
     assert df.schema["pos"].dataType.simpleString() == "bigint"
     assert df.schema["tags"].dataType.simpleString() == "map<string,string>"
 
 
 def test_positions_match_ground_truth(spark_bam, bam):
-    df = _reads(spark_bam, bam.path, split_size=65536)
+    df = read_bam(spark_bam, bam.path, split_size=65536)
     got = sorted((r.block_pos, r.offset) for r in df.select("block_pos", "offset").collect())
     expected = sorted((p.block_pos, p.offset) for p in bam.record_positions)
     assert got == expected
@@ -50,21 +54,21 @@ def test_positions_match_ground_truth(spark_bam, bam):
 def test_split_size_invariance(spark_bam, bam, split_size):
     """The spark-bam property: any split size yields the same records
     exactly once (docs/motivation.md:36-52)."""
-    df = _reads(spark_bam, bam.path, split_size=split_size)
+    df = read_bam(spark_bam, bam.path, split_size=split_size)
     rows = df.select("qname").collect()
     assert len(rows) == N
     assert len({r.qname for r in rows}) == N
 
 
 def test_multiple_partitions_actually_planned(spark_bam, bam):
-    df = _reads(spark_bam, bam.path, split_size=16384)
+    df = read_bam(spark_bam, bam.path, split_size=16384)
     assert df.rdd.getNumPartitions() > 4
 
 
 def test_interval_filter_with_pushdown_matches_full_scan(spark_bam, bam):
-    full = _reads(spark_bam, bam.path, split_size=65536)
+    full = read_bam(spark_bam, bam.path, split_size=65536)
     expected = full.filter((F.col("rname") == "1") & (F.col("pos") >= 13000) & (F.col("pos") < 500000)).count()
-    pruned = _reads(spark_bam, bam.path, split_size=16384).filter(
+    pruned = read_bam(spark_bam, bam.path, split_size=16384).filter(
         (F.col("rname") == "1") & (F.col("pos") >= 13000) & (F.col("pos") < 500000)
     )
     assert pruned.count() == expected
@@ -72,25 +76,18 @@ def test_interval_filter_with_pushdown_matches_full_scan(spark_bam, bam):
 
 
 def test_blocks_source_matches_sidecar(spark_bam, bam):
-    df = spark_bam.read.format("bgzf_blocks").option("split_size", 16384).load(bam.path)
+    df = read_blocks(spark_bam, bam.path, split_size=16384)
     got = sorted((r.start, r.compressed_size, r.uncompressed_size) for r in df.collect())
     expected = sorted((b.start, b.compressed_size, b.uncompressed_size) for b in bam.blocks)
     assert got == expected
 
 
 def test_write_roundtrip(spark_bam, bam, tmp_path):
-    df = _reads(spark_bam, bam.path, split_size=1 << 20)
+    df = read_bam(spark_bam, bam.path, split_size=1 << 20)
     out = str(tmp_path / "rewritten")
     contigs = ",".join(f"{n}:{ln}" for n, ln in zip(CONTIG_NAMES, CONTIG_LENGTHS))
-    (
-        df.repartition(3)
-        .write.format("bam")
-        .option("contigs", contigs)
-        .option("block_payload", 4096)
-        .mode("append")
-        .save(out)
-    )
-    back = _reads(spark_bam, out, split_size=16384)
+    write_bam_df(df.repartition(3), out, contigs=contigs, block_payload=4096)
+    back = read_bam(spark_bam, out, split_size=16384)
     assert back.count() == N
     a = sorted(r.qname for r in df.select("qname").collect())
     b = sorted(r.qname for r in back.select("qname").collect())
@@ -98,12 +95,8 @@ def test_write_roundtrip(spark_bam, bam, tmp_path):
 
 
 def test_column_pruning_option(spark_bam, bam):
-    full = spark_bam.read.format("bam").load(bam.path)
-    pruned = (
-        spark_bam.read.format("bam")
-        .option("columns", "rname,pos,seq_len,block_pos,offset")
-        .load(bam.path)
-    )
+    full = read_bam(spark_bam, bam.path)
+    pruned = read_bam(spark_bam, bam.path, columns="rname,pos,seq_len,block_pos,offset")
     assert pruned.columns == ["rname", "pos", "seq_len", "block_pos", "offset"]
     key = lambda r: (r[0] or "", r[1], r[3], r[4])
     got = sorted((tuple(r) for r in pruned.collect()), key=key)
@@ -115,29 +108,21 @@ def test_column_pruning_option(spark_bam, bam):
 
 
 def test_column_pruning_rejects_unknown(spark_bam, bam):
-    import pytest as _pytest
-    from pyspark.errors.exceptions.captured import AnalysisException
-
-    with _pytest.raises(Exception):
-        spark_bam.read.format("bam").option("columns", "nope").load(bam.path).collect()
+    with pytest.raises(Exception, match="nope"):
+        read_bam(spark_bam, bam.path, columns="nope").collect()
 
 
 def test_byte_ranges_option(spark_bam, bam):
-    blocks = spark_bam.read.format("bgzf_blocks").load(bam.path)
+    blocks = read_blocks(spark_bam, bam.path)
     all_starts = sorted(r["start"] for r in blocks.collect())
     assert len(all_starts) > 4
     cut = all_starts[len(all_starts) // 2]
-    ranged = (
-        spark_bam.read.format("bgzf_blocks").option("ranges", f"0-{cut}").load(bam.path)
-    )
+    ranged = read_blocks(spark_bam, bam.path, ranges=f"0-{cut}")
     got = sorted(r["start"] for r in ranged.collect())
     assert got == [s for s in all_starts if s < cut]
     # reads source: ranges prune splits; full-file range == full scan
-    full = spark_bam.read.format("bam").load(bam.path).count()
-    ranged_reads = (
-        spark_bam.read.format("bam").option("ranges", "0-").load(bam.path).count()
-    )
-    assert ranged_reads == full
+    full = read_bam(spark_bam, bam.path).count()
+    assert read_bam(spark_bam, bam.path, ranges="0-").count() == full
 
 
 def test_multi_file_directory_scan(spark_bam, tmp_path):
@@ -147,7 +132,7 @@ def test_multi_file_directory_scan(spark_bam, tmp_path):
     d.mkdir()
     a = mk(str(d / "a.bam"), n=150, block_payload=2048, seed=1)
     b = mk(str(d / "b.bam"), n=250, block_payload=2048, seed=2)
-    df = spark_bam.read.format("bam").load(str(d))
+    df = read_bam(spark_bam, str(d))
     assert df.count() == 400
     # qnames are read{i} per file, so the two files overlap on the first 150
     assert df.select("qname").distinct().count() == 250
@@ -167,59 +152,110 @@ def test_permissive_mode_salvages_corrupt_file(spark_bam, bam, tmp_path):
         f.seek(victim + 20)
         f.write(b"\xde\xad\xbe\xef" * 8)
 
-    full = spark_bam.read.format("bam").option("split_size", 4096).load(bam.path).count()
-    salvaged = (
-        spark_bam.read.format("bam")
-        .option("split_size", 4096)
-        .option("mode", "permissive")
-        .load(corrupt)
-    )
-    got = salvaged.collect()
+    full = read_bam(spark_bam, bam.path, split_size=4096).count()
+    got = read_bam(spark_bam, corrupt, split_size=4096, mode="permissive").collect()
     assert 0 < len(got) < full
     # salvaged records are real records (names match the fixture pattern)
     assert all(r["qname"].startswith("read") for r in got)
 
-    import pytest as _p
-
-    with _p.raises(Exception):
-        spark_bam.read.format("bam").option("split_size", 4096).load(corrupt).count()
+    with pytest.raises(Exception):
+        read_bam(spark_bam, corrupt, split_size=4096).count()
 
 
-def test_pack_ranges_merge_and_cut_branches():
+_HARNESS = r"""
+package bamjvm;
+
+import java.io.*;
+import java.util.*;
+
+/** stdin: one case per line, "splitSize ratio lo hi lo hi ...".
+ *  stdout: one line per case, groups separated by '|', each group's
+ *  ranges as "lo-hi" joined by ','. */
+public final class PackHarness {
+    public static void main(String[] args) throws Exception {
+        BufferedReader in = new BufferedReader(new InputStreamReader(System.in));
+        PrintStream out = new PrintStream(new BufferedOutputStream(System.out));
+        for (String line; (line = in.readLine()) != null; ) {
+            String[] t = line.trim().split(" ");
+            List<long[]> ranges = new ArrayList<>();
+            for (int i = 2; i + 1 < t.length; i += 2) {
+                ranges.add(new long[] {Long.parseLong(t[i]), Long.parseLong(t[i + 1])});
+            }
+            StringJoiner groups = new StringJoiner("|");
+            for (List<long[]> g : BamDataSource.packRanges(
+                    ranges, Long.parseLong(t[0]), Double.parseDouble(t[1]))) {
+                StringJoiner rs = new StringJoiner(",");
+                for (long[] r : g) rs.add(r[0] + "-" + r[1]);
+                groups.add(rs.toString());
+            }
+            out.println(groups);
+        }
+        out.flush();
+    }
+}
+"""
+
+
+@pytest.fixture(scope="module")
+def pack_ranges(tmp_path_factory):
+    """``pack_ranges(cases)`` → packRanges' groups for each
+    ``(ranges, split_size, ratio)``, from one ``java`` run of a harness
+    in package ``bamjvm`` compiled against the reader jar."""
+    jar = jvmreader.jar_path()
+    d = tmp_path_factory.mktemp("pack_harness")
+    src = d / "bamjvm" / "PackHarness.java"
+    src.parent.mkdir()
+    src.write_text(_HARNESS)
+    javac = jvmreader.javac_path()
+    cp = f"{jar}:{jvmreader._pyspark_jars_glob()}"  # BamDataSource links against Spark
+    subprocess.run([javac, "-cp", cp, "-d", str(d), str(src)], check=True)
+    java = os.path.join(os.path.dirname(os.path.realpath(javac)), "java")
+
+    def run(cases):
+        lines = [" ".join([str(split), str(ratio), *(str(v) for r in ranges for v in r)])
+                 for ranges, split, ratio in cases]
+        proc = subprocess.run([java, "-cp", f"{cp}:{d}", "bamjvm.PackHarness"],
+                              input="\n".join(lines) + "\n", capture_output=True,
+                              text=True, check=True)
+        return [
+            [[tuple(int(v) for v in r.split("-")) for r in g.split(",")] for g in ln.split("|")]
+            if ln else []
+            for ln in proc.stdout.split("\n")[: len(cases)]
+        ]
+
+    return run
+
+
+def test_pack_ranges_merge_and_cut_branches(pack_ranges):
     """O4 cappedCostGroups unit pins for the merge and cut branches
-    (since r14 ALSO driver-hashed end-to-end by bam_pack_ranges, whose
-    fixture forces 13 merges and 3 cuts): overlapping/adjacent candidate
-    ranges merge before packing, and a range larger than the cap is cut
-    into cap-sized pieces that each ride alone."""
-    from spark_bam_spark.bam.datasource import pack_ranges
-
+    (also driver-hashed end-to-end by bam_pack_ranges, whose fixture
+    forces 13 merges and 3 cuts): overlapping/adjacent candidate ranges
+    merge before packing, and a range larger than the cap is cut into
+    cap-sized pieces that each ride alone."""
     # cap = 300/3.0 = 100 compressed bytes
     # overlap (0,50)+(40,90) and adjacency (90,120) merge into (0,120),
     # which exceeds the cap and is cut at it; the 20-byte remainder then
     # packs with (200,260) under the cap, and (300,340) overflows out
-    groups = pack_ranges([(0, 50), (40, 90), (90, 120), (200, 260), (300, 340)], 300)
-    assert groups == [[(0, 100)], [(100, 120), (200, 260)], [(300, 340)]]
+    got = pack_ranges([
+        ([(0, 50), (40, 90), (90, 120), (200, 260), (300, 340)], 300, 3.0),
+        # an oversize range mid-stream flushes the open group first
+        ([(0, 60), (100, 350), (400, 430)], 300, 3.0),
+    ])
+    assert got[0] == [[(0, 100)], [(100, 120), (200, 260)], [(300, 340)]]
+    assert got[1] == [[(0, 60)], [(100, 200)], [(200, 300)], [(300, 350), (400, 430)]]
 
-    # an oversize range mid-stream flushes the open group first
-    groups = pack_ranges([(0, 60), (100, 350), (400, 430)], 300)
-    assert groups == [[(0, 60)], [(100, 200)], [(200, 300)], [(300, 350), (400, 430)]]
 
-
-def test_pack_ranges_randomized_invariants():
-    """O4 property sweep (same spirit as the r13 BAI-coverage and
-    find_starts randomized sweeps): on arbitrary inputs — overlapping,
-    adjacent, empty, oversize, unsorted — pack_ranges must preserve BYTE
-    COVERAGE exactly (the scan reads every candidate byte once and none
-    twice), emit disjoint strictly-increasing ranges, keep every group's
+def test_pack_ranges_randomized_invariants(pack_ranges):
+    """O4 property sweep: on arbitrary inputs — overlapping, adjacent,
+    empty, oversize, unsorted — packRanges must preserve BYTE COVERAGE
+    exactly (the scan reads every candidate byte once and none twice),
+    emit disjoint strictly-increasing ranges, keep every group's
     compressed span within the cap, and stay greedy-tight (a group is
     only closed when its successor's first range genuinely overflows the
     cap; solo cut pieces exempt)."""
-    import random
-
-    from spark_bam_spark.bam.datasource import pack_ranges
-
     rng = random.Random(0xC0FFEE)
-    for trial in range(300):
+    cases = []
+    for _ in range(300):
         n = rng.randint(0, 40)
         ranges = []
         for _ in range(n):
@@ -227,11 +263,10 @@ def test_pack_ranges_randomized_invariants():
             span = rng.choice([0, rng.randint(1, 120), rng.randint(1, 2_500)])
             ranges.append((lo, lo + span))
         rng.shuffle(ranges)
-        split_size = rng.randint(3, 900)
-        ratio = rng.choice([1.0, 3.0, 7.5])
-        cap = max(1, int(split_size / ratio))
+        cases.append((ranges, rng.randint(3, 900), rng.choice([1.0, 3.0, 7.5])))
 
-        groups = pack_ranges(ranges, split_size, compression_ratio=ratio)
+    for trial, ((ranges, split_size, ratio), groups) in enumerate(zip(cases, pack_ranges(cases))):
+        cap = max(1, int(split_size / ratio))
         flat = [r for g in groups for r in g]
 
         # coverage: exact byte-set equality with an independent interval
@@ -271,12 +306,12 @@ def test_pack_ranges_randomized_invariants():
 def test_cost_packed_indexed_partitions_balanced(spark_bam, tmp_path):
     """O4 cappedCostGroups: on a SKEWED interval query (all matching data
     clustered in one region of the file), packed partitions must track
-    data volume — no partition's candidate byte volume may exceed the
-    cap, and the plan must not degenerate to one fat partition plus
-    empties."""
-    from spark_bam_spark.bam.datasource import BamReader
+    data volume — no partition's candidate byte span may exceed the cap,
+    the plan must not degenerate to one fat partition plus empties, and
+    the pruned region must stay unplanned."""
     from spark_bam_spark.bam.records import BamRecord
-    from spark_bam_spark.bam.writer import CONTIG_LENGTHS, CONTIG_NAMES, write_bam
+    from spark_bam_spark.bam.writer import write_bam
+    from tests.test_split_planner import scan_splits
 
     # skew: 5000 reads on contig 1 in [0, 50k) (dense), 200 reads on
     # contig 2 spread wide — a rname='1' query hits a dense cluster
@@ -293,59 +328,16 @@ def test_cost_packed_indexed_partitions_balanced(spark_bam, tmp_path):
             seq="C" * 50, qual=bytes([30] * 50)))
     recs.sort(key=lambda r: (r.ref_idx, r.pos))
     path = str(tmp_path / "skew.bam")
-    write_bam(path, CONTIG_NAMES, CONTIG_LENGTHS, recs, block_payload=4096)
+    res = write_bam(path, CONTIG_NAMES, CONTIG_LENGTHS, recs, block_payload=4096)
 
     split_size = 32768
-    r = BamReader({"path": path, "split_size": str(split_size)})
-    # push the skewed predicate the way Spark would
-    from pyspark.sql.datasource import EqualTo
-
-    r.pushFilters([EqualTo(("rname",), "1")])
-    splits = r.partitions()
-    assert all(s.ranges for s in splits), "indexed scan must use packed ranges"
-    vols = [sum(hi - lo for lo, hi in s.ranges) for s in splits]
+    df = read_bam(spark_bam, path, split_size=split_size).filter("rname = '1'")
+    spans = [(lo, hi) for _, lo, hi in scan_splits(df)]
     cap = split_size / 3.0  # compressed cap = split_size / est ratio
-    assert max(vols) <= cap * 1.5 + 65536 / 4, (vols, cap)  # cut at cap (+1 block slack)
-    assert len(vols) >= 3, f"dense region should spread over partitions: {vols}"
+    assert max(hi - lo for lo, hi in spans) <= cap * 1.5 + 65536 / 4, (spans, cap)
+    assert len(spans) >= 3, f"dense region should spread over partitions: {spans}"
+    # indexed: the contig-2 tail is never planned
+    first_contig2 = min(p.block_pos for p, r in zip(res.record_positions, recs) if r.ref_idx == 1)
+    assert max(hi for _, hi in spans) <= first_contig2 + 65536, (spans, first_contig2)
     # and correctness: the packed scan returns exactly the dense reads
-    spark_bam.dataSource  # session fixture already registered 'bam'
-    df = (
-        spark_bam.read.format("bam").option("split_size", split_size).load(path)
-        .filter("rname = '1'")
-    )
     assert df.count() == 5000
-
-
-def test_streaming_encoder_byte_identical_to_write_bam(tmp_path):
-    """r11: the distributed Python writer streams records through an
-    O(block_payload) staging buffer (StreamingBamEncoder) instead of
-    buffering the partition.  For the same records and options its
-    output must equal write_bam's byte-for-byte — including at tiny
-    block payloads where every record straddles block boundaries — and
-    with bai=True the incremental BaiAccumulator must reproduce the
-    one-shot build_bai index exactly."""
-    import io
-
-    from spark_bam_spark.bam.writer import StreamingBamEncoder, synth_records, write_bam
-
-    recs = synth_records(400, seed=21)
-    for bp in (96, 4096, 0xFF00):
-        ref = str(tmp_path / f"ref_{bp}.bam")
-        write_bam(ref, CONTIG_NAMES, CONTIG_LENGTHS, recs, block_payload=bp)
-        buf = io.BytesIO()
-        enc = StreamingBamEncoder(
-            buf, CONTIG_NAMES, CONTIG_LENGTHS, block_payload=bp, bai=True
-        )
-        for r in recs:
-            enc.add(r)
-        enc.finish()
-        with open(ref, "rb") as f:
-            assert buf.getvalue() == f.read(), f"block_payload={bp}"
-        from spark_bam_spark.bam.bai import write_bai
-
-        bai_path = str(tmp_path / f"enc_{bp}.bai")
-        write_bai(bai_path, enc.bai.index())
-        with open(ref + ".bai", "rb") as f:
-            ref_bai = f.read()
-        with open(bai_path, "rb") as f:
-            assert f.read() == ref_bai, f"bai block_payload={bp}"

@@ -589,12 +589,25 @@ def test_max_bytes_per_batch_rejects_bad_values(spark, tmp_path):
         _drain(spark, land, ckpt, out, max_bytes_per_batch="lots")
 
 
-def _drain_py(spark, land: str, ckpt: str, out: str, **opts) -> None:
-    from spark_bam_spark.bam.reader import read_bam_stream_py
+@needs_jdk
+def test_read_bam_stream_dispatch(spark, tmp_path):
+    """reader.read_bam_stream plans the JVM stream with its
+    admission-control options; the argument that once selected the
+    Python stream reader is unknown."""
+    from spark_bam_spark.bam import reader as reader_mod
 
+    land = str(tmp_path / "landing")
+    os.makedirs(land)
+    make_fixture(os.path.join(land, "a.bam"), n=25, block_payload=4096, seed=1)
+
+    with pytest.raises(TypeError, match="reader"):
+        reader_mod.read_bam_stream(spark, land, **{"reader": "py"})
+
+    df = reader_mod.read_bam_stream(spark, land, max_files_per_batch=2)
+    assert df.isStreaming
+    ckpt, out = str(tmp_path / "ckpt"), str(tmp_path / "out")
     q = (
-        read_bam_stream_py(spark, land, **opts)
-        .select("qname", "flag", "rname", "pos")
+        df.select("qname", "flag", "rname", "pos")
         .writeStream.format("parquet")
         .option("path", out)
         .option("checkpointLocation", ckpt)
@@ -602,159 +615,25 @@ def _drain_py(spark, land: str, ckpt: str, out: str, **opts) -> None:
         .start()
     )
     q.awaitTermination(180)
-
-
-def test_python_stream_twin_incremental_and_matches_batch(spark, tmp_path):
-    """The Python streaming twin (datasource.BamStreamReader, the no-JDK
-    fallback): a drain ingests every file present, a second drain with
-    the same checkpoint ingests ONLY the file that landed in between
-    (name-set offsets restored from the checkpoint), and the final rows
-    are identical to a batch read of the directory."""
-    land = str(tmp_path / "landing")
-    os.makedirs(land)
-    make_fixture(os.path.join(land, "a.bam"), n=400, block_payload=4096, seed=1)
-    make_fixture(os.path.join(land, "b.bam"), n=300, block_payload=2048, seed=2)
-    ckpt, out = str(tmp_path / "ckpt"), str(tmp_path / "out")
-    _drain_py(spark, land, ckpt, out, split_size=8192)
-    assert spark.read.parquet(out).count() == 700
-    make_fixture(os.path.join(land, "c.bam"), n=200, block_payload=4096, seed=3)
-    _drain_py(spark, land, ckpt, out, split_size=8192)
-    assert spark.read.parquet(out).count() == 900  # +200, not +900
-
-    from spark_bam_spark.bam.reader import read_bam
-
-    got = sorted(map(tuple, spark.read.parquet(out).collect()))
-    want = sorted(
-        map(tuple, read_bam(spark, land).select("qname", "flag", "rname", "pos").collect())
-    )
-    assert got == want
-
-
-def test_read_bam_stream_dispatch(spark, tmp_path):
-    """reader.read_bam_stream mirrors read_bam's jvm/py dispatch for
-    streams: default follows reader_choice(), reader='py' pins the twin,
-    and admission-control options on the Python path raise instead of
-    being silently ignored."""
-    from spark_bam_spark.bam import reader as reader_mod
-
-    land = str(tmp_path / "landing")
-    os.makedirs(land)
-    make_fixture(os.path.join(land, "a.bam"), n=25, block_payload=4096, seed=1)
-
-    with pytest.raises(ValueError, match="max_files_per_batch.*JVM streaming source"):
-        reader_mod.read_bam_stream(spark, land, reader="py", max_files_per_batch=2)
-
-    df_py = reader_mod.read_bam_stream(spark, land, reader="py")
-    assert df_py.isStreaming
-    if _HAS_JDK:
-        df_jvm = reader_mod.read_bam_stream(spark, land, max_files_per_batch=2)
-        assert df_jvm.isStreaming
-        ckpt, out = str(tmp_path / "ckpt"), str(tmp_path / "out")
-        q = (
-            df_jvm.select("qname", "flag", "rname", "pos")
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-        assert spark.read.parquet(out).count() == 25
-
-
-def test_python_stream_twin_restart_replay_reseeds_known(spark, tmp_path):
-    """Review r13 fix: partitions(start, end) reseeds the monotonic
-    name set from the checkpointed offsets, so a restart that replays an
-    uncommitted batch keeps previously-admitted names in every later
-    offset even if their files were deleted since — no re-ingest of a
-    same-named late arrival after the replay."""
-    from spark_bam_spark.bam.datasource import BamStreamReader
-
-    land = str(tmp_path / "landing")
-    os.makedirs(land)
-    make_fixture(os.path.join(land, "a.bam"), n=20, block_payload=4096, seed=1)
-    make_fixture(os.path.join(land, "b.bam"), n=20, block_payload=4096, seed=2)
-    r = BamStreamReader({"path": land, "split_size": "65536"})
-    # fresh instance = restart; replay the checkpointed uncommitted batch
-    parts = r.partitions({"files": []}, {"files": ["a.bam"]})
-    assert parts and all(p.path.endswith("a.bam") for p in parts)
-    os.remove(os.path.join(land, "a.bam"))  # deleted after the old run
-    off = r.latestOffset()
-    assert off["files"] == ["a.bam", "b.bam"]  # monotonic across replay
-
-
-def test_python_stream_twin_partitions_tolerates_vanished_files(spark, tmp_path):
-    """Review r13 fix: a batch whose files vanished between listing and
-    planning yields an empty batch instead of failing the query (the JVM
-    source's planInputPartitions behavior)."""
-    from spark_bam_spark.bam.datasource import BamStreamReader
-
-    land = str(tmp_path / "landing")
-    os.makedirs(land)
-    r = BamStreamReader({"path": land})
-    assert r.partitions({"files": []}, {"files": ["ghost.bam"]}) == []
-
-
-def test_streaming_runner_includes_mirrored(spark):
-    """register() mirrors addPyFile'd includes into the
-    ``<SparkFiles root>/streaming_job`` subdir — the dir pyspark 4.1's
-    PythonStreamingSourceRunner (hardcoded jobArtifactUUID) announces to
-    its worker as the spark-files root.  Without the mirror, a driver
-    whose cwd doesn't make spark_bam_spark importable (the external
-    verification driver) dies unpickling the DataSource with
-    ModuleNotFoundError on every Python streaming read; pytest's
-    repo-root cwd masks the failure, hence this structural pin."""
-    from pyspark.core.files import SparkFiles
-
-    from spark_bam_spark.bam.datasource import register
-
-    register(spark)
-    includes = list(getattr(spark.sparkContext, "_python_includes", None) or [])
-    assert includes, "session factory should have shipped the package zip"
-    root = SparkFiles.getRootDirectory()
-    mirrored = [
-        name
-        for name in includes
-        if os.path.exists(os.path.join(root, name))
-        and os.path.exists(os.path.join(root, "streaming_job", name))
-    ]
-    assert mirrored, f"no includes mirrored into streaming_job/ (includes: {includes})"
-
-
-def test_python_stream_twin_offsets_are_self_describing(spark, tmp_path):
-    """The documented asymmetry pin (COVERAGE.md §2.9): the Python twin's
-    checkpointed offsets carry the admitted file NAMES (replay is a pure
-    set difference, no side log), unlike the JVM source's O(1) batch id —
-    deliberate, because the twin's job is row parity, not scale parity."""
-    import glob as _glob
-
-    land = str(tmp_path / "landing")
-    os.makedirs(land)
-    make_fixture(os.path.join(land, "a.bam"), n=50, block_payload=4096, seed=1)
-    ckpt, out = str(tmp_path / "ckpt"), str(tmp_path / "out")
-    _drain_py(spark, land, ckpt, out)
-    offset_files = _glob.glob(os.path.join(ckpt, "offsets", "*"))
-    assert offset_files
-    assert any("a.bam" in open(p).read() for p in offset_files)
+    assert spark.read.parquet(out).count() == 25
 
 
 @needs_jdk
-def test_python_stream_twin_matches_jvm_stream(spark, tmp_path):
-    """Differential oracle: the SAME landing dir drained by the JVM
-    streaming source and by the Python twin yields identical row sets —
-    the r11/r12 verdicts' missing cross-language check for the
-    streaming surface."""
+def test_jvm_stream_matches_python_decoder(spark, tmp_path):
+    """Differential oracle: a landing dir drained by the JVM streaming
+    source yields exactly the rows the pure-Python decoder reads from
+    its files."""
+    from tests.bam_oracle import oracle_rows
+
     land = str(tmp_path / "landing")
     os.makedirs(land)
     make_fixture(os.path.join(land, "a.bam"), n=350, block_payload=2048, seed=11)
     make_fixture(os.path.join(land, "b.bam"), n=150, block_payload=4096, seed=12)
-    jvm_ckpt, jvm_out = str(tmp_path / "jc"), str(tmp_path / "jo")
-    py_ckpt, py_out = str(tmp_path / "pc"), str(tmp_path / "po")
-    _drain(spark, land, jvm_ckpt, jvm_out, split_size=8192)
-    _drain_py(spark, land, py_ckpt, py_out, split_size=8192)
-    jv = sorted(map(tuple, spark.read.parquet(jvm_out).collect()))
-    py = sorted(map(tuple, spark.read.parquet(py_out).collect()))
-    assert jv == py
+    ckpt, out = str(tmp_path / "ckpt"), str(tmp_path / "out")
+    _drain(spark, land, ckpt, out, split_size=8192)
+    cols = ["qname", "flag", "rname", "pos"]
+    jv = sorted(map(tuple, spark.read.parquet(out).select(*cols).collect()), key=repr)
+    assert jv == oracle_rows(land, cols)
     assert len(jv) == 500
 
 

@@ -155,8 +155,7 @@ def test_spark_write_uses_native_codec(spark, tmp_path):
     write_bam(path, CONTIG_NAMES, CONTIG_LENGTHS, synth_records(600, seed=4), sidecars=False)
     out = str(tmp_path / "out")
     contigs = ",".join(f"{n}:{ln}" for n, ln in zip(CONTIG_NAMES, CONTIG_LENGTHS))
-    write_bam_df(read_bam(spark, path).coalesce(1), out, contigs=contigs,
-                 block_payload=4096, writer="jvm")
+    write_bam_df(read_bam(spark, path).coalesce(1), out, contigs=contigs, block_payload=4096)
     (part,) = glob.glob(out + "/part-*.bam")
     with open(part, "rb") as f:
         data = f.read()

@@ -180,21 +180,12 @@ def test_explain_prints_physical_plan(spark, capsys):
     assert "HashAggregate" in text and "Scan parquet" in text
 
 
-def test_reader_flag_forces_python_path(spark, bam_path, capsys, monkeypatch):
-    """--reader py must route the command through the Python source even
-    when the JVM reader is the default (the CLI analogue of
-    SPARK_GRAFT_BAM_READER; main() sets the env before run())."""
-    import os
-
-    monkeypatch.delenv("SPARK_GRAFT_BAM_READER", raising=False)
-    args = cli.build_parser().parse_args(["--reader", "py", "count-reads", bam_path])
-    assert args.reader == "py"
-    monkeypatch.setenv("SPARK_GRAFT_BAM_READER", args.reader)  # what main() does
-    from spark_bam_spark.bam.reader import reader_choice
-
-    assert reader_choice() == "py"
-    cli.run(args, spark)
-    assert capsys.readouterr().out.strip().splitlines() == ["n_reads", "2500"]
+def test_reader_and_writer_flags_removed(bam_path):
+    """There is one BAM reader and one writer, so the CLI has no switch
+    between implementations."""
+    for flag in ("--reader", "--writer"):
+        with pytest.raises(SystemExit):
+            cli.build_parser().parse_args([flag, "jvm", "count-reads", bam_path])
 
 
 def test_flagstat_counters(spark, bam_path, capsys):
@@ -249,29 +240,24 @@ def test_stream_ingest_cli_incremental(spark, tmp_path, capsys):
     assert "total rows now 170" in lines[-1]
 
 
-def test_stream_ingest_cli_python_fallback(spark, tmp_path, capsys, monkeypatch):
-    """Without a JDK the subcommand drains through the Python streaming
-    twin instead of refusing; admission-control flags (JVM-only knobs)
-    are rejected loudly rather than silently ignored."""
+def test_stream_ingest_cli_without_jdk_fails_loudly(spark, tmp_path, capsys, monkeypatch):
+    """Without a JDK compiler (and no jar built yet) the subcommand has
+    no BAM source to drain through: it raises jar_path's error instead
+    of falling back."""
     import os as _os
 
     from spark_bam_spark.bam import jvmreader
     from spark_bam_spark.bam.writer import make_fixture
 
     monkeypatch.setattr(jvmreader, "javac_path", lambda: None)
+    monkeypatch.setattr(jvmreader, "_CACHE_DIR", str(tmp_path / "jar_cache"))
+    monkeypatch.setattr(jvmreader, "_WIRED", set())
     land = str(tmp_path / "landing")
     _os.makedirs(land)
     make_fixture(_os.path.join(land, "a.bam"), n=60, block_payload=4096, seed=5)
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    lines = _run(spark, ["stream-ingest", land, "--out", out, "--checkpoint", ckpt], capsys)
-    assert "total rows now 60" in lines[-1]
-    with pytest.raises(SystemExit, match="max-files-per-batch.*JVM source"):
-        _run(
-            spark,
-            ["stream-ingest", land, "--out", out, "--checkpoint", ckpt,
-             "--max-files-per-batch", "2"],
-            capsys,
-        )
+    with pytest.raises(RuntimeError, match="javac not found"):
+        _run(spark, ["stream-ingest", land, "--out", out, "--checkpoint", ckpt], capsys)
 
 
 def test_flagstat_excludes_secondary_from_paired_metrics(spark, tmp_path, capsys):
@@ -323,8 +309,8 @@ def test_stream_ingest_empty_landing_dir_is_a_noop(spark, tmp_path, capsys):
 
 
 def test_write_rejects_zero_block_payload(spark, tmp_path):
-    """block_payload=0 must fail fast in the Python writer (it would
-    spin the streaming encoder forever), same bound as the JVM sink."""
+    """block_payload=0 must fail fast in the writer (a streaming encoder
+    would never flush)."""
     from pyspark.sql import Row
     from spark_bam_spark.bam.reader import write_bam_df
     from spark_bam_spark.bam.writer import CONTIG_LENGTHS, CONTIG_NAMES
@@ -332,8 +318,7 @@ def test_write_rejects_zero_block_payload(spark, tmp_path):
     contigs = ",".join(f"{n}:{ln}" for n, ln in zip(CONTIG_NAMES, CONTIG_LENGTHS))
     df = spark.createDataFrame([Row(qname="x", rname="1", pos=1, seq="AC")]).coalesce(1)
     with pytest.raises(Exception, match="block_payload must be in"):
-        write_bam_df(df, str(tmp_path / "z"), contigs=contigs,
-                     block_payload=0, writer="py")
+        write_bam_df(df, str(tmp_path / "z"), contigs=contigs, block_payload=0)
 
 
 def test_flagstat_cli_matches_registry_query(spark, capsys):

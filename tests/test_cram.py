@@ -15,7 +15,7 @@ import textwrap
 import pytest
 
 from spark_bam_spark.bam.cram import load_cram
-from spark_bam_spark.bam.datasource import READS_FIELDS
+from spark_bam_spark.bam.reader import READS_FIELDS
 from spark_bam_spark.bam.sam import load_reads
 
 FAKE_PYSAM = textwrap.dedent(

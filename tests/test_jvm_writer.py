@@ -1,17 +1,17 @@
-"""The r10 JVM DSv2 BAM writer (bamjvm/BamWriteSupport.java) and the
-write-path dispatch (``bam/reader.py::write_bam_df``,
-``SPARK_GRAFT_BAM_WRITER=py|jvm``).
+"""The JVM DSv2 BAM writer (bamjvm/BamWriteSupport.java), reached through
+``bam/reader.py::write_bam_df``.
 
-The two writers are differential twins on content: for the same options
-their part-BAMs have the same header bytes, the same record encoding,
-the same exact block_payload slicing, and so the same block count, the
-same per-block (ISIZE, CRC32) footers and the same uncompressed stream.
-The deflate payloads themselves are byte-identical only when the JVM
-codec falls back to java.util.zip; with libdeflate (an optional runtime
-dependency, used whenever its JNI shim loads) they differ, and every JVM
-block must still inflate through Python's zlib.  The JVM sink
-additionally streams with O(block) memory and renames into place at
-commit (task-retry safe), neither of which changes bytes.
+Its content contract is checked against the pure-Python oracle encoder
+(writer.StreamingBamEncoder, via tests/bam_oracle.py): for the same
+records and options a one-partition write has the same header bytes, the
+same record encoding, the same exact block_payload slicing, and so the
+same block count, the same per-block (ISIZE, CRC32) footers and the same
+uncompressed stream.  The deflate payloads themselves are byte-identical
+only when the JVM codec falls back to java.util.zip; with libdeflate (an
+optional runtime dependency, used whenever its JNI shim loads) they
+differ, and every JVM block must still inflate through Python's zlib.
+The sink streams with O(block) memory and renames into place at commit
+(task-retry safe), neither of which changes bytes.
 """
 
 from __future__ import annotations
@@ -25,8 +25,9 @@ import pytest
 from pyspark.sql import Row, functions as F
 
 from spark_bam_spark.bam import bgzf, jvmreader
-from spark_bam_spark.bam.reader import read_bam, write_bam_df, writer_choice
+from spark_bam_spark.bam.reader import read_bam, write_bam_df
 from spark_bam_spark.bam.writer import CONTIG_LENGTHS, CONTIG_NAMES
+from tests.bam_oracle import decode_file, encode_part, oracle_rows, scan_rows, to_row
 
 _HAS_JDK = jvmreader.javac_path() is not None
 _CONTIGS = ",".join(f"{n}:{ln}" for n, ln in zip(CONTIG_NAMES, CONTIG_LENGTHS))
@@ -64,39 +65,35 @@ def _uncompressed(path: str) -> bytes:
 
 
 def _assert_same_blocks(jvm_part: str, py_part: str) -> None:
-    """The writers' content contract: same block count, same per-block
-    (ISIZE, CRC32) sequence, same uncompressed stream, and every JVM
-    block inflates through Python's zlib."""
+    """The writer's content contract against the oracle encoder's file:
+    same block count, same per-block (ISIZE, CRC32) sequence, same
+    uncompressed stream, and every JVM block inflates through Python's
+    zlib."""
     j, p = _blocks(jvm_part), _blocks(py_part)
     assert len(j) == len(p)
     assert [b[1:3] for b in j] == [b[1:3] for b in p]
     assert b"".join(b[3] for b in j) == b"".join(b[3] for b in p)
 
 
-# --------------------------------------------------------------- dispatch
+def _records_by_qname(path: str) -> list:
+    """The decoder's records of ``path``, in qname order."""
+    _, recs = decode_file(path)
+    return sorted((r for _, r in recs), key=lambda r: r.qname)
 
 
-def test_writer_choice_env_override(monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_BAM_WRITER", "py")
-    assert writer_choice() == "py"
-    monkeypatch.setenv("SPARK_GRAFT_BAM_WRITER", "jvm")
-    assert writer_choice() == "jvm"
-    monkeypatch.delenv("SPARK_GRAFT_BAM_WRITER")
-    assert writer_choice() == ("jvm" if _HAS_JDK else "py")
+def _write_one_part(spark, records, out: str, **opts) -> str:
+    """``records`` through the JVM sink as one partition; the part path."""
+    write_bam_df(spark.createDataFrame([to_row(r) for r in records]).coalesce(1),
+                 out, contigs=_CONTIGS, **opts)
+    (part,) = glob.glob(out + "/part-*.bam")
+    return part
 
 
 def test_write_bam_df_rejects_bad_writer(spark, tmp_path):
+    """There is one writer: selecting one is an unknown argument."""
     df = spark.range(1).select(F.lit("q").alias("qname"))
-    with pytest.raises(ValueError, match="writer must be"):
-        write_bam_df(df, str(tmp_path / "x"), writer="scala")
-
-
-def test_env_py_forces_python_writer(spark, fixture_path, tmp_path, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_BAM_WRITER", "py")
-    src = read_bam(spark, fixture_path).limit(50)
-    impl = write_bam_df(src, str(tmp_path / "out"), contigs=_CONTIGS)
-    assert impl == "py"
-    assert read_bam(spark, str(tmp_path / "out")).count() == 50
+    with pytest.raises(TypeError, match="writer"):
+        write_bam_df(df, str(tmp_path / "x"), **{"writer": "scala"})
 
 
 # -------------------------------------------------------------- roundtrip
@@ -104,72 +101,57 @@ def test_env_py_forces_python_writer(spark, fixture_path, tmp_path, monkeypatch)
 
 @needs_jdk
 def test_jvm_writer_roundtrip_both_readers(spark, fixture_path, tmp_path):
+    """Rewrite the fixture in 4 partitions; the output read back by the
+    JVM scan and decoded by the Python oracle both carry the source's
+    logical fields record for record."""
     src = read_bam(spark, fixture_path, split_size=65536)
     out = str(tmp_path / "rw")
-    impl = write_bam_df(
-        src.repartition(4), out, contigs=_CONTIGS, block_payload=4096, writer="jvm"
-    )
-    assert impl == "jvm"
-    fields = ["flag", "rname", "pos", "mapq", "cigar", "tlen", "seq", "qual", "tags"]
-    a = src.select("qname", *fields)
-    for reader in ("jvm", "py"):
-        back = read_bam(spark, out, split_size=16384, reader=reader)
-        b = back.select("qname", *fields)
-        joined = a.alias("a").join(b.alias("b"), "qname", "full_outer")
-        mismatch = ~(F.col("a.flag").isNotNull() & F.col("b.flag").isNotNull())
-        for f in fields[:-1]:
-            mismatch = mismatch | ~F.col(f"a.{f}").eqNullSafe(F.col(f"b.{f}"))
-        mismatch = mismatch | ~F.map_entries("a.tags").eqNullSafe(F.map_entries("b.tags"))
-        assert joined.filter(mismatch).count() == 0, f"reader={reader}"
+    write_bam_df(src.repartition(4), out, contigs=_CONTIGS, block_payload=4096)
+    fields = ["qname", "flag", "rname", "pos", "mapq", "cigar", "tlen", "seq", "qual", "tags"]
+    want = oracle_rows(fixture_path, fields)
+    assert scan_rows(read_bam(spark, out, split_size=16384), fields) == want
+    assert oracle_rows(out, fields) == want
 
 
 @needs_jdk
 def test_jvm_and_python_writers_emit_identical_bytes(spark, fixture_path, tmp_path):
-    """Differential contract: one partition, same options → the part-BAMs
-    carry identical uncompressed bytes in identically framed blocks."""
-    src = read_bam(spark, fixture_path).repartition(1).sortWithinPartitions("qname")
-    dirs = {}
-    for w in ("jvm", "py"):
-        dirs[w] = str(tmp_path / w)
-        write_bam_df(src, dirs[w], contigs=_CONTIGS, block_payload=4096, writer=w)
-    jparts = sorted(glob.glob(dirs["jvm"] + "/part-*.bam"))
-    pparts = sorted(glob.glob(dirs["py"] + "/part-*.bam"))
-    assert len(jparts) == len(pparts) == 1
-    _assert_same_blocks(jparts[0], pparts[0])
+    """Differential contract: the fixture's records written as one
+    partition carry the same uncompressed bytes, in identically framed
+    blocks, as the oracle encoder's file of the same records."""
+    recs = _records_by_qname(fixture_path)
+    part = _write_one_part(spark, recs, str(tmp_path / "jvm"), block_payload=4096)
+    oracle = encode_part(str(tmp_path / "oracle.bam"), recs, CONTIG_NAMES, CONTIG_LENGTHS, 4096)
+    _assert_same_blocks(part, oracle)
 
 
 @needs_jdk
 def test_deflate_level_parity_and_size(spark, fixture_path, tmp_path):
-    """deflate_level is a throughput/size knob honored by both writers:
-    the same content contract holds at level 1 too, and level 1 output
-    is measurably larger than level 6."""
-    src = read_bam(spark, fixture_path).repartition(1).sortWithinPartitions("qname")
-    parts = {}
-    for w in ("jvm", "py"):
-        out = str(tmp_path / f"l1_{w}")
-        write_bam_df(src, out, contigs=_CONTIGS, block_payload=4096,
-                     deflate_level=1, writer=w)
-        (parts[w],) = glob.glob(out + "/part-*.bam")
-    _assert_same_blocks(parts["jvm"], parts["py"])
-    out6 = str(tmp_path / "l6")
-    write_bam_df(src, out6, contigs=_CONTIGS, block_payload=4096, writer="jvm")
-    (part6,) = glob.glob(out6 + "/part-*.bam")
-    assert os.path.getsize(parts["jvm"]) > os.path.getsize(part6)
-    assert read_bam(spark, str(tmp_path / "l1_jvm")).count() == src.count()
+    """deflate_level is a throughput/size knob: the same content contract
+    holds at level 1 too, and level 1 output is measurably larger than
+    level 6."""
+    recs = _records_by_qname(fixture_path)
+    part1 = _write_one_part(spark, recs, str(tmp_path / "l1"), block_payload=4096,
+                            deflate_level=1)
+    oracle = encode_part(str(tmp_path / "oracle.bam"), recs, CONTIG_NAMES, CONTIG_LENGTHS,
+                         4096, level=1)
+    _assert_same_blocks(part1, oracle)
+    part6 = _write_one_part(spark, recs, str(tmp_path / "l6"), block_payload=4096)
+    assert os.path.getsize(part1) > os.path.getsize(part6)
+    assert read_bam(spark, str(tmp_path / "l1")).count() == len(recs)
 
 
 @needs_jdk
 def test_jvm_writer_no_inprogress_leftovers(spark, fixture_path, tmp_path):
     out = str(tmp_path / "clean")
-    write_bam_df(read_bam(spark, fixture_path).limit(10), out, contigs=_CONTIGS, writer="jvm")
+    write_bam_df(read_bam(spark, fixture_path).limit(10), out, contigs=_CONTIGS)
     assert not glob.glob(out + "/*.inprogress") and not glob.glob(out + "/.*inprogress*")
 
 
 @needs_jdk
 def test_jvm_writer_block_payload_framing(spark, fixture_path, tmp_path):
     """Every BGZF block except the last carries exactly block_payload
-    uncompressed bytes (the exact-slicing contract shared with the
-    Python writer)."""
+    uncompressed bytes (the exact-slicing contract of the oracle
+    encoder)."""
     from spark_bam_spark.bam.reader import read_blocks
 
     out = str(tmp_path / "framed")
@@ -178,7 +160,6 @@ def test_jvm_writer_block_payload_framing(spark, fixture_path, tmp_path):
         out,
         contigs=_CONTIGS,
         block_payload=8192,
-        writer="jvm",
     )
     part = sorted(glob.glob(out + "/part-*.bam"))[0]
     rows = read_blocks(spark, part).orderBy("start").collect()
@@ -205,7 +186,7 @@ def test_jvm_writer_subset_schema_defaults(spark, tmp_path):
     ]
     df = spark.createDataFrame(rows)
     out = str(tmp_path / "subset")
-    write_bam_df(df.coalesce(1), out, contigs=_CONTIGS, writer="jvm")
+    write_bam_df(df.coalesce(1), out, contigs=_CONTIGS)
     back = {r["qname"]: r for r in read_bam(spark, out).collect()}
     assert len(back) == 3
     assert back["r0"]["ref_idx"] == 0 and back["r0"]["rname"] == "1"
@@ -220,7 +201,7 @@ def test_jvm_writer_subset_schema_defaults(spark, tmp_path):
 @needs_jdk
 def test_jvm_writer_null_values_take_defaults(spark, tmp_path):
     """NULL cell values coalesce to the same defaults as missing columns
-    (the Python writer's val() contract)."""
+    (NULL or absent → the spec default)."""
     from pyspark.sql.types import (
         IntegerType,
         LongType,
@@ -245,7 +226,7 @@ def test_jvm_writer_null_values_take_defaults(spark, tmp_path):
         [("rn", None, "2", None, None, None, None)], schema=schema
     )
     out = str(tmp_path / "nulls")
-    write_bam_df(df, out, contigs=_CONTIGS, writer="jvm")
+    write_bam_df(df, out, contigs=_CONTIGS)
     r = read_bam(spark, out).first()
     assert r["qname"] == "rn" and r["flag"] == 0
     assert r["pos"] == -1  # NULL pos → unplaced
@@ -254,17 +235,17 @@ def test_jvm_writer_null_values_take_defaults(spark, tmp_path):
 
 @needs_jdk
 def test_jvm_writer_empty_partitions_write_valid_headers(spark, tmp_path):
-    """Empty partitions still emit a header-only part-BAM (parity with the
-    Python writer) that both readers accept as 0 rows."""
+    """Empty partitions still emit a header-only part-BAM that both the
+    scan and the Python decoder read as 0 rows."""
     df = (
         spark.createDataFrame([Row(qname="solo", rname="1", pos=5, seq="A")])
         .repartition(3)
     )
     out = str(tmp_path / "sparse")
-    write_bam_df(df, out, contigs=_CONTIGS, writer="jvm")
+    write_bam_df(df, out, contigs=_CONTIGS)
     assert len(glob.glob(out + "/part-*.bam")) == 3
-    for reader in ("jvm", "py"):
-        assert read_bam(spark, out, reader=reader).count() == 1
+    assert read_bam(spark, out).count() == 1
+    assert len(oracle_rows(out)) == 1
 
 
 @needs_jdk
@@ -283,7 +264,7 @@ def test_jvm_writer_int_typed_numeric_columns(spark, tmp_path):
     )
     df = spark.createDataFrame([("i0", "2", 77, 99, "CCC")], schema=schema)
     out = str(tmp_path / "ints")
-    write_bam_df(df, out, contigs=_CONTIGS, writer="jvm")
+    write_bam_df(df, out, contigs=_CONTIGS)
     r = read_bam(spark, out).first()
     assert r["pos"] == 77 and r["mate_pos"] == 99 and r["rname"] == "2"
 
@@ -292,7 +273,7 @@ def test_jvm_writer_int_typed_numeric_columns(spark, tmp_path):
 def test_jvm_writer_rejects_bad_cigar(spark, tmp_path):
     df = spark.createDataFrame([Row(qname="x", rname="1", pos=1, cigar="4Q", seq="AC")])
     with pytest.raises(Exception, match="invalid cigar"):
-        write_bam_df(df, str(tmp_path / "bad"), contigs=_CONTIGS, writer="jvm")
+        write_bam_df(df, str(tmp_path / "bad"), contigs=_CONTIGS)
 
 
 @needs_jdk
@@ -300,7 +281,7 @@ def test_jvm_writer_rejects_bad_block_payload(spark, tmp_path):
     df = spark.createDataFrame([Row(qname="x", rname="1", pos=1, seq="AC")])
     with pytest.raises(Exception, match="block_payload"):
         write_bam_df(
-            df, str(tmp_path / "bp"), contigs=_CONTIGS, block_payload=1 << 20, writer="jvm"
+            df, str(tmp_path / "bp"), contigs=_CONTIGS, block_payload=1 << 20
         )
 
 
@@ -315,7 +296,7 @@ def test_jvm_writer_failed_write_leaves_no_inprogress(spark, tmp_path):
          Row(qname="boom", rname="1", pos=2, cigar="9Q", seq="GG")]  # invalid cigar op
     ).coalesce(1)
     with pytest.raises(Exception):
-        write_bam_df(bad, out, contigs=_CONTIGS, writer="jvm")
+        write_bam_df(bad, out, contigs=_CONTIGS)
     leftovers = [f for f in glob.glob(out + "/*") + glob.glob(out + "/.*")
                  if "inprogress" in f]
     assert leftovers == []
@@ -474,88 +455,44 @@ def test_parse_bai_without_stats_is_backward_compatible(tmp_path):
     assert back.stats == [None, None] and back.n_no_coor == 0
 
 
-def test_py_writer_bai_byte_identical_to_generator(spark, fixture_path, tmp_path):
-    """r11: BAI emission ported to the Python Data Source writer — the
-    dual-implementation symmetry the rest of the format layer has.  Same
-    differential oracle as the JVM test: a one-partition file-order
-    rewrite with the generator's block_payload reproduces the
-    generator's .bam byte-for-byte, so the emitted .bai must equal the
-    generator's build_bai sidecar byte-for-byte too."""
-    src = read_bam(spark, fixture_path, split_size=1 << 30, reader="py")
-    out = str(tmp_path / "rw")
-    impl = write_bam_df(
-        src.coalesce(1), out, contigs=_CONTIGS, block_payload=4096, bai=True, writer="py"
-    )
-    assert impl == "py"
-    part = sorted(glob.glob(out + "/part-*.bam"))[0]
-    with open(fixture_path, "rb") as f:
-        gen_bam = f.read()
-    with open(part, "rb") as f:
-        assert f.read() == gen_bam
-    with open(fixture_path + ".bai", "rb") as f:
-        gen_bai = f.read()
-    with open(part + ".bai", "rb") as f:
-        assert f.read() == gen_bai
-
-
-def test_py_writer_bai_rejects_unsorted_partitions(spark, tmp_path):
-    """Same contract as the JVM sink: unsorted partitions with bai=True
-    fail loudly (never a silently mispruning index), and the failed
-    task leaves no .inprogress or part files behind."""
-    rows = [Row(qname="a", rname="1", pos=500_000, cigar="2M", seq="AC"),
-            Row(qname="b", rname="1", pos=100, cigar="2M", seq="GG")]
-    df = spark.createDataFrame(rows).coalesce(1)
-    out = str(tmp_path / "u")
-    with pytest.raises(Exception, match="coordinate-sorted"):
-        write_bam_df(df, out, contigs=_CONTIGS, bai=True, writer="py")
-    assert glob.glob(out + "/part-*") == []
-    assert [f for f in glob.glob(out + "/.*") if "inprogress" in f] == []
-
-
-@pytest.mark.parametrize("writer", ["jvm", "py"])
-def test_append_mode_never_clobbers_earlier_parts(spark, fixture_path, tmp_path, writer):
+@needs_jdk
+def test_append_mode_never_clobbers_earlier_parts(spark, fixture_path, tmp_path):
     """ADVICE r10: part names carry a per-job unique token, so
     df.write.mode('append') into a directory that already holds output
     adds parts instead of silently replacing same-numbered ones."""
-    if writer == "jvm" and not _HAS_JDK:
-        pytest.skip("no JDK")
     out = str(tmp_path / "ap")
     first = read_bam(spark, fixture_path).limit(100).coalesce(1)
-    write_bam_df(first, out, contigs=_CONTIGS, writer=writer)
+    write_bam_df(first, out, contigs=_CONTIGS)
     second = read_bam(spark, fixture_path).limit(40).coalesce(1)
-    write_bam_df(second, out, contigs=_CONTIGS, writer=writer)
+    write_bam_df(second, out, contigs=_CONTIGS)
     assert len(glob.glob(out + "/part-*.bam")) == 2
     assert read_bam(spark, out).count() == 140
 
 
-@pytest.mark.parametrize("writer", ["jvm", "py"])
-def test_overwrite_mode_replaces_directory(spark, fixture_path, tmp_path, writer):
-    """mode='overwrite' replaces the target directory in BOTH writers
-    (SupportsTruncate on the JVM sink, driver-side rmtree in the Python
-    Data Source) — a stale part file from a wider earlier write must not
+@needs_jdk
+def test_overwrite_mode_replaces_directory(spark, fixture_path, tmp_path):
+    """mode='overwrite' replaces the target directory (SupportsTruncate on
+    the JVM sink) — a stale part file from a wider earlier write must not
     survive."""
-    if writer == "jvm" and not _HAS_JDK:
-        pytest.skip("no JDK")
     out = str(tmp_path / "ow")
     first = read_bam(spark, fixture_path).limit(100).repartition(4)
-    write_bam_df(first, out, contigs=_CONTIGS, writer=writer)
+    write_bam_df(first, out, contigs=_CONTIGS)
     assert len(glob.glob(out + "/part-*.bam")) == 4
     second = read_bam(spark, fixture_path).limit(30).coalesce(1)
-    write_bam_df(second, out, contigs=_CONTIGS, mode="overwrite", writer=writer)
+    write_bam_df(second, out, contigs=_CONTIGS, mode="overwrite")
     assert len(glob.glob(out + "/part-*.bam")) == 1
     assert read_bam(spark, out).count() == 30
 
 
-@pytest.mark.parametrize("writer", ["py", pytest.param("jvm", marks=pytest.mark.skipif(not _HAS_JDK, reason="no JDK"))])
-def test_out_of_int32_numeric_fails_loudly(spark, tmp_path, writer):
+@needs_jdk
+def test_out_of_int32_numeric_fails_loudly(spark, tmp_path):
     """ADVICE r10: long-typed numerics that exceed the spec's int32
-    fields must throw in BOTH writers (the JVM sink used to truncate
-    silently via (int) casts while the Python writer's struct.pack
-    raised — the differential twins must fail identically)."""
+    fields must throw (the JVM sink used to truncate silently via (int)
+    casts where the oracle encoder's struct.pack raises)."""
     rows = [Row(qname="x", rname="1", pos=2**31, cigar="2M", seq="AC")]
     df = spark.createDataFrame(rows).coalesce(1)
     with pytest.raises(Exception, match="int32|2147483647"):
-        write_bam_df(df, str(tmp_path / "ov"), contigs=_CONTIGS, writer=writer)
+        write_bam_df(df, str(tmp_path / "ov"), contigs=_CONTIGS)
 
 
 def test_write_bam_df_rejects_bad_mode(spark, tmp_path):
@@ -574,29 +511,17 @@ _FUZZ = os.environ.get("SPARK_GRAFT_JVM_FUZZ") == "1"
 def test_fuzz_writer_byte_parity(spark, tmp_path_factory):
     """Hypothesis sweep over the record space (count, block geometry,
     RNG seed): for the same single-partition input and options the JVM
-    and Python writers must emit part-BAMs with identical blocks'
+    writer and the oracle encoder must emit files with identical blocks'
     content (_assert_same_blocks) — the generalization of
-    test_jvm_and_python_writers_emit_identical_bytes' one fixed corner.  Env-gated: each example builds a DataFrame and
-    runs two write jobs."""
+    test_jvm_and_python_writers_emit_identical_bytes' one fixed corner.
+    Env-gated: each example builds a DataFrame and runs a write job."""
     import hypothesis.strategies as st
     from hypothesis import given, settings
 
-    from pyspark.sql import Row as R
-    from spark_bam_spark.bam.records import CIGAR_OPS
     from spark_bam_spark.bam.writer import synth_records
 
     base = tmp_path_factory.mktemp("writer_fuzz")
     counter = {"i": 0}
-
-    def to_row(r):
-        return R(
-            qname=r.qname, flag=r.flag, ref_idx=r.ref_idx, pos=r.pos,
-            mapq=r.mapq,
-            cigar="".join(f"{ln}{CIGAR_OPS[op]}" for op, ln in r.cigar) or "*",
-            mate_ref_idx=r.mate_ref_idx, mate_pos=r.mate_pos, tlen=r.tlen,
-            seq=r.seq, qual="".join(chr(min(q + 33, 255)) for q in r.qual),
-            tags=dict(r.tags),
-        )
 
     @settings(max_examples=15, deadline=None)
     @given(
@@ -610,7 +535,7 @@ def test_fuzz_writer_byte_parity(spark, tmp_path_factory):
         src = synth_records(n, seed=seed)
         if long_cigar:
             # §4.2.2 corner: one >uint16-op record exercises the
-            # placeholder + CG:B,I emission in both writers
+            # placeholder + CG:B,I emission on both sides
             from spark_bam_spark.bam.records import BamRecord
 
             n_ops = 65_536 + seed % 64
@@ -639,12 +564,12 @@ def test_fuzz_writer_byte_parity(spark, tmp_path_factory):
                 StructField("seq", StringType()), StructField("qual", StringType()),
                 StructField("tags", MapType(StringType(), StringType())),
             ])).coalesce(1)
-        parts = {}
-        for w in ("jvm", "py"):
-            out = str(base / f"e{counter['i']}_{w}")
-            write_bam_df(df, out, contigs=_CONTIGS, block_payload=block_payload, writer=w)
-            (parts[w],) = sorted(glob.glob(out + "/part-*.bam"))
-        _assert_same_blocks(parts["jvm"], parts["py"])
+        out = str(base / f"e{counter['i']}")
+        write_bam_df(df, out, contigs=_CONTIGS, block_payload=block_payload)
+        (part,) = sorted(glob.glob(out + "/part-*.bam"))
+        oracle = encode_part(out + ".oracle.bam", src, CONTIG_NAMES, CONTIG_LENGTHS,
+                             block_payload)
+        _assert_same_blocks(part, oracle)
 
     check()
 
@@ -664,13 +589,8 @@ def test_bam_sort_rewrite_query(spark):
 
 
 @needs_jdk
-def test_rewrite_roundtrip_queries_all_match(spark):
+def test_rewrite_roundtrip_queries_all_match(spark, sf_small):
     from spark_bam_spark.queries import REGISTRY
 
-    for name in (
-        "bam_rewrite_roundtrip",
-        "bam_rewrite_roundtrip_jvm",
-        "bam_rewrite_roundtrip_py",
-    ):
-        row = REGISTRY[name].fn(spark, "/root/testdata/sf0.001").first()
-        assert row["n_mismatch"] == 0 and row["all_match"], name
+    row = REGISTRY["bam_rewrite_roundtrip"].fn(spark, sf_small).first()
+    assert row["n_mismatch"] == 0 and row["all_match"]

@@ -4,9 +4,9 @@ GiaB PacBio class in BASELINE.md) store the placeholder kSmN in the cigar
 field (k = l_seq as S, m = reference-consumed as N) and the real ops in a
 CG:B,I tag, the htslib/samtools convention.
 
-The engine's contract, pinned identically across all four decode paths
-(Python scalar, Python vectorized, JVM row, JVM columnar) and both
-writers:
+The engine's contract, pinned identically across the decode paths (the
+Python scalar oracle, the JVM row and columnar readers) and between the
+JVM writer and the oracle encoder:
 
 - readers promote the CG array into 'cigar'/'n_cigar_ops'/'end_pos' and
   keep CG out of the tags map (samtools transparency);
@@ -14,7 +14,7 @@ writers:
   the cigar overflows uint16, with identical uncompressed bytes in both
   languages;
 - a user-supplied CG tag alongside an overflowing cigar is ambiguous and
-  rejected loudly by both writers.
+  rejected loudly by the writer.
 """
 
 from __future__ import annotations
@@ -34,8 +34,10 @@ from spark_bam_spark.bam.writer import (
     synth_records,
     write_bam,
 )
+from tests.bam_oracle import decode_file, encode_part, oracle_rows, scan_rows, to_row
 
 _HAS_JDK = jvmreader.javac_path() is not None
+needs_jdk = pytest.mark.skipif(not _HAS_JDK, reason="no JDK")
 _CONTIGS = ",".join(f"{n}:{ln}" for n, ln in zip(CONTIG_NAMES, CONTIG_LENGTHS))
 
 N_OPS = 70_000  # > 0xFFFF
@@ -99,11 +101,10 @@ def test_scalar_decode_pruned_tags_still_promotes():
     assert back.tags == {}
 
 
-@pytest.mark.parametrize(
-    "reader", ["py", pytest.param("jvm", marks=pytest.mark.skipif(not _HAS_JDK, reason="no JDK"))]
-)
-def test_readers_promote_cg_identically(spark, long_bam, reader):
-    df = read_bam(spark, long_bam, split_size=16384, reader=reader)
+@needs_jdk
+def test_readers_promote_cg_identically(spark, long_bam):
+    df = read_bam(spark, long_bam, split_size=16384)
+    assert scan_rows(df) == oracle_rows(long_bam)
     row = df.filter(df.qname == "longread").collect()[0]
     assert row["cigar"] == _EXPECT_CIGAR
     assert row["n_cigar_ops"] == N_OPS
@@ -115,7 +116,7 @@ def test_readers_promote_cg_identically(spark, long_bam, reader):
     assert c["cigar"] == _EXPECT_CIGAR
 
 
-@pytest.mark.skipif(not _HAS_JDK, reason="no JDK")
+@needs_jdk
 def test_jvm_row_reader_promotes_cg(spark, long_bam):
     """columnar=false pins the JVM ROW decode path (BamPartitionReader) —
     the default test above exercises the columnar twin."""
@@ -127,17 +128,17 @@ def test_jvm_row_reader_promotes_cg(spark, long_bam):
     assert dict(row["tags"]) == {"RG": "rg9"}
 
 
-@pytest.mark.parametrize(
-    "writer", ["py", pytest.param("jvm", marks=pytest.mark.skipif(not _HAS_JDK, reason="no JDK"))]
-)
-def test_writer_roundtrips_long_cigar(spark, long_bam, tmp_path, writer):
+@needs_jdk
+def test_writer_roundtrips_long_cigar(spark, long_bam, tmp_path):
     """A reads DataFrame whose 'cigar' column holds the promoted 70k-op
-    string round-trips through either writer: the part file stores the
+    string round-trips through the writer: the part file stores the
     placeholder + CG tag, and reading it back re-promotes."""
-    src = read_bam(spark, long_bam, split_size=1 << 30, reader="py")
-    out = str(tmp_path / f"rw_{writer}")
-    write_bam_df(src.coalesce(1), out, contigs=_CONTIGS, block_payload=4096, writer=writer)
-    back = read_bam(spark, out, reader="py")
+    src = read_bam(spark, long_bam, split_size=1 << 30)
+    out = str(tmp_path / "rw")
+    write_bam_df(src.coalesce(1), out, contigs=_CONTIGS, block_payload=4096)
+    (part,) = glob.glob(out + "/part-*.bam")
+    assert decode_file(part)[1][100][1].cigar == decode_file(long_bam)[1][100][1].cigar
+    back = read_bam(spark, out)
     row = back.filter(back.qname == "longread").collect()[0]
     assert row["cigar"] == _EXPECT_CIGAR
     assert row["n_cigar_ops"] == N_OPS
@@ -145,26 +146,25 @@ def test_writer_roundtrips_long_cigar(spark, long_bam, tmp_path, writer):
     assert back.count() == 201
 
 
-@pytest.mark.skipif(not _HAS_JDK, reason="no JDK")
+@needs_jdk
 def test_writers_byte_identical_on_long_cigar(spark, long_bam, tmp_path):
-    """The §4.2.2 placeholder + CG emission is part of the writers'
-    content contract: identical uncompressed bytes in identically framed
-    blocks (the deflate payloads differ when the JVM runs libdeflate)."""
+    """The §4.2.2 placeholder + CG emission is part of the writer's
+    content contract: the same uncompressed bytes, in identically framed
+    blocks, as the oracle encoder's (the deflate payloads differ when the
+    JVM runs libdeflate)."""
     from tests.test_jvm_writer import _assert_same_blocks
 
-    src = read_bam(spark, long_bam, split_size=1 << 30, reader="py").coalesce(1)
-    parts = {}
-    for writer in ("jvm", "py"):
-        out = str(tmp_path / writer)
-        write_bam_df(src, out, contigs=_CONTIGS, block_payload=4096, writer=writer)
-        (parts[writer],) = glob.glob(out + "/part-*.bam")
-    _assert_same_blocks(parts["jvm"], parts["py"])
+    recs = [r for _, r in decode_file(long_bam)[1]]
+    out = str(tmp_path / "jvm")
+    write_bam_df(spark.createDataFrame([to_row(r) for r in recs]).coalesce(1), out,
+                 contigs=_CONTIGS, block_payload=4096)
+    (part,) = glob.glob(out + "/part-*.bam")
+    oracle = encode_part(str(tmp_path / "oracle.bam"), recs, CONTIG_NAMES, CONTIG_LENGTHS, 4096)
+    _assert_same_blocks(part, oracle)
 
 
-@pytest.mark.parametrize(
-    "writer", ["py", pytest.param("jvm", marks=pytest.mark.skipif(not _HAS_JDK, reason="no JDK"))]
-)
-def test_writer_rejects_cg_conflict(spark, tmp_path, writer):
+@needs_jdk
+def test_writer_rejects_cg_conflict(spark, tmp_path):
     rows = [
         Row(
             qname="x",
@@ -177,9 +177,10 @@ def test_writer_rejects_cg_conflict(spark, tmp_path, writer):
     ]
     df = spark.createDataFrame(rows).coalesce(1)
     with pytest.raises(Exception, match="CG"):
-        write_bam_df(df, str(tmp_path / "c"), contigs=_CONTIGS, writer=writer)
+        write_bam_df(df, str(tmp_path / "c"), contigs=_CONTIGS)
 
 
+@needs_jdk
 def test_foreign_tag_types_skipped_not_fatal(spark, tmp_path):
     """A/c/C/s/S/i/I/f/H/B tags written by other tools are skipped
     structurally; Z tags AFTER them still surface (the pinned scanner
@@ -214,7 +215,7 @@ def test_foreign_tag_types_skipped_not_fatal(spark, tmp_path):
     back, consumed = decode_record(out, 0)
     assert consumed == len(out)
     assert back.tags == {"XZ": "after"}
-    # end-to-end through the vectorized Python source
+    # end-to-end through the JVM scan
     path = str(tmp_path / "foreign.bam")
     from spark_bam_spark.bam.bgzf import EOF_BLOCK, compress_block
     from spark_bam_spark.bam.writer import encode_header
@@ -222,7 +223,7 @@ def test_foreign_tag_types_skipped_not_fatal(spark, tmp_path):
     stream = encode_header(CONTIG_NAMES, CONTIG_LENGTHS) + out
     with open(path, "wb") as f:
         f.write(compress_block(stream) + EOF_BLOCK)
-    df = read_bam(spark, path, reader="py")
+    df = read_bam(spark, path)
     row = df.collect()[0]
     assert dict(row["tags"]) == {"XZ": "after"}
 
@@ -243,18 +244,16 @@ def test_b_tag_header_at_buffer_end_stops_politely():
     assert back.tags == {"AA": "keep"}
 
 
-@pytest.mark.parametrize(
-    "writer", ["py", pytest.param("jvm", marks=pytest.mark.skipif(not _HAS_JDK, reason="no JDK"))]
-)
-def test_placeholder_over_28bit_ref_consumed_fails_loudly(spark, tmp_path, writer):
+@needs_jdk
+def test_placeholder_over_28bit_ref_consumed_fails_loudly(spark, tmp_path):
     """A >uint16-op cigar whose reference-consumed length exceeds the
     28-bit cigar-op length field (2^28-1 = 268,435,455) cannot be
-    represented as a kSmN placeholder — both writers must throw (the
-    Python struct.pack bound and the JVM check are pinned identical),
-    never wrap the value into a corrupt placeholder."""
+    represented as a kSmN placeholder — the writer must throw (at the
+    same bound as the oracle encoder's struct.pack), never wrap the
+    value into a corrupt placeholder."""
     n_ops = 65_537
     cigar = "4100N" * n_ops  # ref consumed ≈ 268.7M > 2^28-1
     rows = [Row(qname="x", rname="1", pos=1, cigar=cigar, seq="")]
     df = spark.createDataFrame(rows).coalesce(1)
     with pytest.raises(Exception, match="28-bit|struct|out of.*range|requires"):
-        write_bam_df(df, str(tmp_path / "of"), contigs=_CONTIGS, writer=writer)
+        write_bam_df(df, str(tmp_path / "of"), contigs=_CONTIGS)

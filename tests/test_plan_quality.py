@@ -51,7 +51,7 @@ def test_hot_paths_have_no_python_eval(spark, sf_small, name):
 
 
 @pytest.mark.parametrize(
-    "name", ["bam_scan_reads", "bam_interval_pushdown", "bam_count_reads", "bam_blocks_metadata_jvm"]
+    "name", ["bam_scan_reads", "bam_interval_pushdown", "bam_count_reads", "bam_blocks_metadata"]
 )
 def test_default_bam_path_is_pure_jvm(spark, sf_small, name):
     """Since the r9 flip, the default BAM scan must execute entirely

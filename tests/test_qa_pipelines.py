@@ -8,7 +8,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from spark_bam_spark.bam.datasource import register
+from spark_bam_spark.bam import jvmreader
+from spark_bam_spark.bam.reader import read_bam
 from spark_bam_spark.bam.writer import make_fixture
 from spark_bam_spark.operators import qa
 
@@ -23,7 +24,7 @@ def bam(tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def spark_bam(spark):
-    register(spark)
+    jvmreader.ensure_session(spark)
     return spark
 
 
@@ -48,8 +49,8 @@ def test_full_check_flag_distribution(spark_bam, bam):
 
 
 def test_compute_splits_and_diff(spark_bam, bam):
-    reads16 = spark_bam.read.format("bam").option("split_size", 16384).load(bam.path)
-    reads64 = spark_bam.read.format("bam").option("split_size", 65536).load(bam.path)
+    reads16 = read_bam(spark_bam, bam.path, split_size=16384)
+    reads64 = read_bam(spark_bam, bam.path, split_size=65536)
     s16 = qa.splits_from_partitions(reads16)
     s64 = qa.splits_from_partitions(reads64)
     assert s16.count() > s64.count()
@@ -72,8 +73,8 @@ def test_check_blocks_first_reads(spark_bam, bam):
 
 
 def test_time_load_name_diff_empty(spark_bam, bam):
-    reads_a = spark_bam.read.format("bam").option("split_size", 16384).load(bam.path)
-    reads_b = spark_bam.read.format("bam").option("split_size", 65536).load(bam.path)
+    reads_a = read_bam(spark_bam, bam.path, split_size=16384)
+    reads_b = read_bam(spark_bam, bam.path, split_size=65536)
     a = qa.first_reads_per_partition(reads_a)
     b = qa.first_reads_per_partition(reads_b)
     only_a, only_b = qa.name_set_diff(reads_a.select("qname"), reads_b.select("qname"))
@@ -82,12 +83,12 @@ def test_time_load_name_diff_empty(spark_bam, bam):
 
 
 def test_count_reads_matches_ground_truth(spark_bam, bam):
-    n = spark_bam.read.format("bam").option("split_size", 16384).load(bam.path).count()
+    n = read_bam(spark_bam, bam.path, split_size=16384).count()
     assert n == N == len(bam.record_positions)
 
 
 def test_observed_reads_metrics(spark_bam, bam):
-    reads = spark_bam.read.format("bam").load(bam.path)
+    reads = read_bam(spark_bam, bam.path)
     observed, obs = qa.observed_reads(reads)
     assert observed.count() == N
     m = obs.get
@@ -100,7 +101,7 @@ def test_index_sidecar_sinks_roundtrip(spark_bam, bam, tmp_path):
     blocks_dir = str(tmp_path / "blocks_out")
     records_dir = str(tmp_path / "records_out")
     qa.index_blocks(spark_bam, bam.path, blocks_dir)
-    reads = spark_bam.read.format("bam").load(bam.path)
+    reads = read_bam(spark_bam, bam.path)
     qa.index_records(reads, records_dir)
 
     got_blocks = sorted(
@@ -268,7 +269,7 @@ def test_upstream_checker_is_strictly_weaker(spark_bam, bam):
 
 
 def test_sorted_range_repartition_disjoint_ordered(spark_bam, bam):
-    reads = spark_bam.read.format("bam").load(bam.path)
+    reads = read_bam(spark_bam, bam.path)
     parted = qa.sorted_range_repartition(reads, n=6)
     bounds = (
         parted.select(F.spark_partition_id().alias("pid"), "block_pos", "offset")

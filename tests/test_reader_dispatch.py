@@ -1,21 +1,25 @@
-"""The r9 default-flip: ``bam/reader.py`` routes the engine's BAM reads
-through the JVM DataSourceV2 reader when a JDK is available, with the
-Python Data Source as fallback (``SPARK_GRAFT_BAM_READER=py|jvm``
-overrides).  Plus the r9 hardening that shipped with the flip:
-per-file contig-dictionary resolution for pushdown pruning, split
-locality hints, applicationId-keyed session wiring, and the
-corrupt-record-layout salvage parity between both readers.
+"""``bam/reader.py`` runs every BAM read and write on the bamjvm
+DataSourceV2; nothing selects another implementation.  Plus the
+hardening that shipped with the JVM reader: per-file contig-dictionary
+resolution for pushdown pruning, split locality hints,
+applicationId-keyed session wiring, and the corrupt-record-layout
+salvage boundary — each checked against the pure-Python decoder where
+rows are compared.
 """
 
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import DataFrameWriter
 from pyspark.sql import functions as F
 
 from spark_bam_spark.bam import jvmreader
-from spark_bam_spark.bam.reader import read_bam, reader_choice
+from spark_bam_spark.bam.reader import read_bam, write_bam_df
+from tests.bam_oracle import oracle_rows, scan_rows
 
-_HAS_JDK = jvmreader.javac_path() is not None
+pytestmark = pytest.mark.skipif(
+    jvmreader.javac_path() is None, reason="no JDK compiler on this machine"
+)
 
 
 @pytest.fixture(scope="module")
@@ -25,19 +29,48 @@ def fixture_path() -> str:
     return _fixture_path()
 
 
-# --------------------------------------------------------------- dispatch
+# ------------------------------------------------------- one implementation
 
 
-def test_reader_choice_env_override(monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_BAM_READER", "py")
-    assert reader_choice() == "py"
-    monkeypatch.setenv("SPARK_GRAFT_BAM_READER", "jvm")
-    assert reader_choice() == "jvm"
-    monkeypatch.delenv("SPARK_GRAFT_BAM_READER")
-    assert reader_choice() == ("jvm" if _HAS_JDK else "py")
+def test_python_selectors_are_gone(spark, fixture_path, tmp_path, monkeypatch):
+    """The environment variables and the ``reader``/``writer`` arguments
+    that once selected the Python Data Source select nothing: the scan is
+    still planned on bamjvm, the write still goes through the bamjvm
+    sink, and the arguments are unknown."""
+    for side in ("READER", "WRITER"):
+        monkeypatch.setenv("SPARK_GRAFT_BAM_" + side, "py")
+    df = read_bam(spark, fixture_path, split_size=65536)
+    assert "bamjvm" in df._jdf.queryExecution().executedPlan().toString()
+
+    formats = []
+    real_format = DataFrameWriter.format
+    monkeypatch.setattr(
+        DataFrameWriter, "format", lambda self, f: formats.append(f) or real_format(self, f)
+    )
+    out = str(tmp_path / "out")
+    write_bam_df(df.limit(50), out, contigs="1:249250621,2:243199373,3:198022430")
+    assert formats == [jvmreader.FORMAT]
+    assert read_bam(spark, out).count() == 50
+
+    with pytest.raises(TypeError):
+        read_bam(spark, fixture_path, **{"reader": "py"})
+    with pytest.raises(TypeError):
+        write_bam_df(df, out, **{"writer": "py"})
 
 
-@pytest.mark.skipif(not _HAS_JDK, reason="no JDK compiler on this machine")
+def test_no_jdk_compiler_raises(spark, fixture_path, tmp_path, monkeypatch):
+    """Without a JDK compiler (and no jar built yet) reads and writes
+    raise jar_path's error; nothing falls back."""
+    monkeypatch.setattr(jvmreader, "javac_path", lambda: None)
+    monkeypatch.setattr(jvmreader, "_CACHE_DIR", str(tmp_path / "jar_cache"))
+    monkeypatch.setattr(jvmreader, "_WIRED", set())
+    with pytest.raises(RuntimeError, match="javac not found"):
+        read_bam(spark, fixture_path)
+    df = spark.createDataFrame([("q",)], "qname string")
+    with pytest.raises(RuntimeError, match="javac not found"):
+        write_bam_df(df, str(tmp_path / "out"))
+
+
 def test_default_path_is_jvm(spark, fixture_path):
     df = read_bam(spark, fixture_path, split_size=65536)
     plan = df._jdf.queryExecution().executedPlan().toString()
@@ -45,32 +78,14 @@ def test_default_path_is_jvm(spark, fixture_path):
     assert df.count() == 2500
 
 
-def test_env_py_forces_python_source(spark, fixture_path, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_BAM_READER", "py")
-    df = read_bam(spark, fixture_path, split_size=65536)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "bamjvm" not in plan
-    assert df.count() == 2500
-
-
-def test_py_only_option_falls_back(spark, fixture_path):
-    """Options only the Python source understands (batch_records) must
-    route to it even when the JVM reader is the default."""
-    df = read_bam(spark, fixture_path, split_size=65536, batch_records=1024)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "bamjvm" not in plan
-    assert df.count() == 2500
-
-
-@pytest.mark.skipif(not _HAS_JDK, reason="no JDK compiler on this machine")
 def test_dispatch_paths_row_identical(spark, fixture_path):
+    """The scan's rows at a 16 KiB split size equal the pure-Python
+    decoder's."""
     cols = ["qname", "flag", "rname", "pos", "block_pos", "offset"]
-    a = read_bam(spark, fixture_path, split_size=16384, reader="jvm").select(cols)
-    b = read_bam(spark, fixture_path, split_size=16384, reader="py").select(cols)
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
+    got = scan_rows(read_bam(spark, fixture_path, split_size=16384), cols)
+    assert got == oracle_rows(fixture_path, cols)
 
 
-@pytest.mark.skipif(not _HAS_JDK, reason="no JDK compiler on this machine")
 def test_columns_prune_on_jvm_path(spark, fixture_path):
     """The dispatcher's `columns` arg must reach the JVM scan as a pruned
     readSchema (Catalyst SupportsPushDownRequiredColumns), not a
@@ -85,7 +100,6 @@ def test_columns_prune_on_jvm_path(spark, fixture_path):
 # ------------------------------------------------- session wiring (ADD JAR)
 
 
-@pytest.mark.skipif(not _HAS_JDK, reason="no JDK compiler on this machine")
 def test_ensure_session_keys_on_application_id(spark):
     """_WIRED keys on applicationId (unique per context, never reused in
     a process) — not id(spark), whose value a garbage-collected session
@@ -108,7 +122,6 @@ def test_ensure_session_keys_on_application_id(spark):
 # ------------------------------------------------------- locality hints
 
 
-@pytest.mark.skipif(not _HAS_JDK, reason="no JDK compiler on this machine")
 def test_preferred_locations_populated(spark, fixture_path):
     """BamSplit.preferredLocations (the reference's
     SplitRDD.getPreferredLocations, check/.../spark/SplitRDD.scala:27-30)
@@ -117,7 +130,7 @@ def test_preferred_locations_populated(spark, fixture_path):
     schedules rack-remote.  Asserted on the scan RDD that Spark plans."""
     from tests.test_split_planner import scan_rdd
 
-    rdd = scan_rdd(read_bam(spark, fixture_path, split_size=65536, reader="jvm"))
+    rdd = scan_rdd(read_bam(spark, fixture_path, split_size=65536))
     hosts = [rdd.preferredLocations(p).mkString(",") for p in rdd.partitions()]
     assert len(hosts) >= 2
     assert all(h == "localhost" for h in hosts), hosts
@@ -143,14 +156,13 @@ def mixed_dict_dir(tmp_path_factory) -> str:
     return str(d)
 
 
-@pytest.mark.parametrize("reader", ["py"] + (["jvm"] if _HAS_JDK else []))
-def test_pushdown_resolves_contigs_per_file(spark, mixed_dict_dir, reader):
+def test_pushdown_resolves_contigs_per_file(spark, mixed_dict_dir):
     """rname='chrY' exists only in b.bam's dictionary.  Resolving names
     against the FIRST file's header (the pre-r9 behavior) finds no index
     for 'chrY' (or worse, prunes b.bam's blocks by a.bam's mapping) and
     silently drops rows; per-file resolution returns exactly b.bam's
     ref_idx=1 records."""
-    df = read_bam(spark, mixed_dict_dir, split_size=4096, reader=reader)
+    df = read_bam(spark, mixed_dict_dir, split_size=4096)
     got = df.filter(F.col("rname") == "chrY").count()
     # ground truth: both files carry the same synth records, so b.bam's
     # ref_idx=1 rows = half the directory's ref_idx=1 rows
@@ -159,23 +171,21 @@ def test_pushdown_resolves_contigs_per_file(spark, mixed_dict_dir, reader):
     assert got > 0, "vacuous: fixture has no ref_idx=1 records"
 
 
-@pytest.mark.parametrize("reader", ["py"] + (["jvm"] if _HAS_JDK else []))
-def test_pushdown_mixed_dicts_cross_file_filter(spark, mixed_dict_dir, reader):
+def test_pushdown_mixed_dicts_cross_file_filter(spark, mixed_dict_dir):
     """A filter naming one contig from EACH dictionary must return both
     files' matching rows — union-of-resolutions per file."""
-    df = read_bam(spark, mixed_dict_dir, split_size=4096, reader=reader)
+    df = read_bam(spark, mixed_dict_dir, split_size=4096)
     got = df.filter(F.col("rname").isin("1", "chrX")).count()
     n_ref0_total = df.filter(F.col("ref_idx") == 0).count()
     assert got == n_ref0_total
     assert got > 0
 
 
-@pytest.mark.parametrize("reader", ["py"] + (["jvm"] if _HAS_JDK else []))
-def test_pushdown_unknown_contig_everywhere(spark, mixed_dict_dir, reader):
+def test_pushdown_unknown_contig_everywhere(spark, mixed_dict_dir):
     """A name in NO file's dictionary matches nothing (rname is null or
     a dictionary name) — zero rows, no error, and pruning may skip
     everything."""
-    df = read_bam(spark, mixed_dict_dir, split_size=4096, reader=reader)
+    df = read_bam(spark, mixed_dict_dir, split_size=4096)
     assert df.filter(F.col("rname") == "chr99").count() == 0
 
 
@@ -196,12 +206,11 @@ def permuted_dict_dir(tmp_path_factory) -> str:
     return str(d)
 
 
-@pytest.mark.parametrize("reader", ["py"] + (["jvm"] if _HAS_JDK else []))
-def test_pushdown_permuted_dictionaries(spark, permuted_dict_dir, reader):
+def test_pushdown_permuted_dictionaries(spark, permuted_dict_dir):
     """rname='3' is ref_idx 2 in a.bam but ref_idx 0 in b.bam: per-file
     resolution must return BOTH files' '3'-rows.  (Pre-r9, the first
     file's mapping pruned b.bam's '3' blocks away.)"""
-    df = read_bam(spark, permuted_dict_dir, split_size=4096, reader=reader)
+    df = read_bam(spark, permuted_dict_dir, split_size=4096)
     n_pruned_path = df.filter(F.col("rname") == "3").count()
     # ground truth without any pushdown-prunable predicate: count by
     # qname membership of ref-idx groups per file is overkill — each
@@ -244,36 +253,37 @@ def corrupt_layout_bam(tmp_path_factory) -> tuple[str, int]:
     return path, 700
 
 
-@pytest.mark.parametrize("reader", ["py"] + (["jvm"] if _HAS_JDK else []))
-def test_permissive_corrupt_layout_salvage(spark, corrupt_layout_bam, reader):
+def test_permissive_corrupt_layout_salvage(spark, corrupt_layout_bam):
     """Permissive mode serves the records BEFORE the corrupt one (per
-    affected range) and never crashes the task; failfast raises.  Both
-    readers share the salvage boundary — the layout check runs in the
-    JVM walker (RecordWalker.step) and vectorized in the Python decoder
-    (datasource._decode_from)."""
+    affected range) and never crashes the task; failfast raises.  The
+    layout check runs in the JVM walker (RecordWalker.step)."""
     path, bad_idx = corrupt_layout_bam
     # single split: the salvage boundary is exactly the corrupt record
-    df = read_bam(spark, path, split_size=1 << 26, mode="permissive", reader=reader)
+    df = read_bam(spark, path, split_size=1 << 26, mode="permissive")
     rows = df.select("qname", "pos").orderBy("qname").collect()
     assert len(rows) == bad_idx
     with pytest.raises(Exception):
-        read_bam(spark, path, split_size=1 << 26, reader=reader).count()
+        read_bam(spark, path, split_size=1 << 26).count()
 
 
-@pytest.mark.skipif(not _HAS_JDK, reason="no JDK compiler on this machine")
 def test_permissive_corrupt_layout_cross_reader_parity(spark, corrupt_layout_bam):
-    path, _ = corrupt_layout_bam
+    """Over many splits, permissive mode salvages only real records: each
+    salvaged row equals the Python decoder's row for it, and the corrupt
+    record itself is never served."""
+    path, bad_idx = corrupt_layout_bam
     cols = ["qname", "flag", "rname", "pos", "block_pos", "offset"]
-    a = read_bam(spark, path, split_size=8192, mode="permissive", reader="jvm").select(cols)
-    b = read_bam(spark, path, split_size=8192, mode="permissive", reader="py").select(cols)
-    ra = sorted(map(tuple, a.collect()))
-    rb = sorted(map(tuple, b.collect()))
-    assert ra == rb
-    assert 0 < len(ra) < 1000
+    got = scan_rows(read_bam(spark, path, split_size=8192, mode="permissive"), cols)
+    assert set(got) <= set(oracle_rows(path, cols))
+    assert 0 < len(got) < 1000
+    from spark_bam_spark.bam.writer import synth_records
+
+    assert synth_records(1000, seed=9)[bad_idx].qname not in {t[0] for t in got}
 
 
 def test_read_bam_rejects_bad_mode_and_jvm_py_option_mix(spark, fixture_path):
+    """A bad mode is a ValueError; options of the removed Python source
+    (batch_records) are unknown arguments."""
     with pytest.raises(ValueError, match="failfast|permissive"):
         read_bam(spark, fixture_path, mode="bogus")
-    with pytest.raises(ValueError, match="Python-source-only"):
-        read_bam(spark, fixture_path, reader="jvm", batch_records=1024)
+    with pytest.raises(TypeError, match="batch_records"):
+        read_bam(spark, fixture_path, batch_records=1024)

@@ -6,7 +6,7 @@ for each split_size boundary, take the first block starting at-or-after
 it, then the first record starting at-or-after that block.  The golden
 fixture pins one instance; this test pins the ARITHMETIC itself across
 random fixtures — build a BAM with a fresh seed, plan it through the
-real datasource, and compare partition-first positions against the same
+real scan, and compare partition-first positions against the same
 derivation computed in plain Python from the generator's returned
 record positions and block starts (no decoder involvement).
 """
@@ -37,7 +37,7 @@ def _derive(blocks: list[int], records: list[tuple[int, int]]) -> list[tuple[int
 
 @pytest.mark.parametrize("n,payload,seed", [(900, 3000, 77), (2100, 4096, 5), (1500, 8192, 123)])
 def test_planner_matches_sidecar_derivation(spark, tmp_path, n, payload, seed):
-    from spark_bam_spark.bam.datasource import register as reg
+    from spark_bam_spark.bam.reader import read_bam
     from spark_bam_spark.bam.writer import make_fixture
 
     path = str(tmp_path / f"rand_{seed}.bam")
@@ -48,13 +48,7 @@ def test_planner_matches_sidecar_derivation(spark, tmp_path, n, payload, seed):
         [(p.block_pos, p.offset) for p in res.record_positions],
     )
 
-    reg(spark)
-    reads = (
-        spark.read.format("bam")
-        .option("split_size", SPLIT)
-        .option("columns", "block_pos,offset")
-        .load(path)
-    )
+    reads = read_bam(spark, path, split_size=SPLIT, columns="block_pos,offset")
     from pyspark.sql import functions as F
 
     firsts = sorted(

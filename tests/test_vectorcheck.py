@@ -16,7 +16,7 @@ from spark_bam_spark.bam.checker import (
     record_flags,
 )
 from spark_bam_spark.bam.header import parse_header
-from spark_bam_spark.bam.vectorcheck import full_flags, sweep_calls
+from spark_bam_spark.bam.vectorcheck import full_flags, ranges_concat, sweep_calls
 from spark_bam_spark.bam.writer import make_fixture
 
 
@@ -84,3 +84,10 @@ def test_sweep_speed_headroom(fx):
         check_record_start_upstream(flat, o, info)
     loop_eighth_t = time.perf_counter() - t0
     assert vec_t < loop_eighth_t * 8 / 2, (vec_t, loop_eighth_t * 8)
+
+
+def test_ranges_concat_zero_lengths():
+    idx = ranges_concat(np.array([5, 100, 7]), np.array([2, 0, 3]))
+    assert idx.tolist() == [5, 6, 7, 8, 9]
+    assert ranges_concat(np.array([], dtype=np.int64), np.array([], dtype=np.int64)).size == 0
+    assert ranges_concat(np.array([3]), np.array([0])).size == 0

@@ -7,7 +7,7 @@ expected scan output as parquet lets the oracle SQL hash-verify the entire
 decode path: generator → [BAM writer → BGZF → DataSource decode] on the
 Spark side vs this direct dump on the DuckDB side.  Rendering here
 (cigar string, end_pos, rname) is implemented independently of
-bam/vectordecode.py on purpose — same differential-oracle spirit as the
+the bamjvm decoder on purpose — same differential-oracle spirit as the
 reference's seqdoop cross-checks (SURVEY §5).
 
 Deterministic: same seed/params as queries/bam_qa.py's fixture
