@@ -17,7 +17,8 @@ Modules:
     checker     — record-boundary validity predicates (eager + full)
     writer      — BAM writer + sidecar ground truth + fixture generator
     jvmreader   — on-demand javac build + ADD JAR wiring for bamjvm
-    reader      — the entry points (read_bam / read_blocks / write_bam_df)
+    reader      — the entry points (read_bam / read_blocks / read_bam_stream /
+                  write_bam_df)
 """
 
 from spark_bam_spark.bam.bgzf import Pos  # noqa: F401

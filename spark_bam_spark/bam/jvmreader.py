@@ -1,8 +1,9 @@
 """On-demand build + session wiring for the JVM-native BAM DataSourceV2.
 
 The Java implementation under ``jvmsrc/bamjvm/`` is the engine's only BAM
-reader, writer, blocks source and stream (``bam/reader.py`` is the public
-entry point).  It decodes inside the executor JVM — the same execution
+reader, writer, blocks source and stream; ``bam/reader.py`` holds the
+functions that read and write through it, and this module only builds
+the jar and attaches it to a session.  It decodes inside the executor JVM — the same execution
 shape the reference uses (load/.../CanLoadBam.scala runs its codec
 JVM-side; cited as behavior, not copied).  The pure-Python codec in
 ``bam/`` (``records``, ``checker``, ``writer``, ...) is its independent
@@ -34,7 +35,7 @@ import tempfile
 import warnings
 import zipfile
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 FORMAT = "bamjvm.BamDataSource"
 FORMAT_BLOCKS = "bamjvm.BlocksSource"
@@ -150,104 +151,3 @@ def ensure_session(spark: SparkSession) -> None:
         return
     spark.sql(f"ADD JAR '{jar_path()}'")
     _WIRED.add(app_id)
-
-
-def read_bam_jvm(
-    spark: SparkSession,
-    path: str,
-    split_size: int | None = None,
-    reads_to_check: int | None = None,
-    max_read_size: int | None = None,
-    mode: str | None = None,
-    columnar: bool | None = None,
-    ranges: str | None = None,
-    compression_ratio: float | None = None,
-) -> DataFrame:
-    """DataFrame over a BAM file/directory via bamjvm.BamDataSource
-    (schema: ``reader.READS_DDL``)."""
-    ensure_session(spark)
-    reader = spark.read.format(FORMAT)
-    if split_size is not None:
-        reader = reader.option("split_size", str(split_size))
-    if reads_to_check is not None:
-        reader = reader.option("reads_to_check", str(reads_to_check))
-    if max_read_size is not None:
-        reader = reader.option("max_read_size", str(max_read_size))
-    if mode is not None:
-        reader = reader.option("mode", mode)
-    if columnar is not None:
-        reader = reader.option("columnar", "true" if columnar else "false")
-    if ranges is not None:
-        reader = reader.option("ranges", ranges)
-    if compression_ratio is not None:
-        reader = reader.option("compression_ratio", str(compression_ratio))
-    return reader.load(path)
-
-
-def read_bam_stream(
-    spark: SparkSession,
-    path: str,
-    split_size: int | None = None,
-    mode: str | None = None,
-    max_file_age_ms: int | None = None,
-    max_files_per_batch: int | None = None,
-    max_bytes_per_batch: int | None = None,
-) -> DataFrame:
-    """Structured Streaming DataFrame over a landing directory of BAM
-    files (bamjvm.BamMicroBatchStream): each micro-batch ingests the
-    .bam files that appeared since the last batch through the SAME
-    planner/pushdown/reader as the batch scan.  Use
-    ``trigger(availableNow=True)`` for a deterministic drain of whatever
-    has landed; offsets checkpoint as a monotonic batch id backed by a
-    compacted file-metadata log, so a restarted query only ingests new
-    files.  ``max_file_age_ms`` (FileStreamSource's maxFileAge
-    analogue, default off) ignores files older than the newest file
-    seen minus the age and bounds the in-memory seen map to the age
-    window — the knob a months-long ingest over an eternally-growing
-    landing zone needs; same documented caveat as Spark's file source
-    (a file whose mtime is bumped after eviction is re-ingested).
-    ``max_files_per_batch`` (FileStreamSource's maxFilesPerTrigger
-    analogue, default off) caps how many unseen files one micro-batch
-    plans — oldest mtime first — so a burst landing drains as
-    ceil(n/cap) individually-checkpointed batches instead of one giant
-    batch; under ``availableNow`` the source snapshots the backlog at
-    trigger time (SupportsTriggerAvailableNow) and still drains it
-    fully across that many batches.  ``max_bytes_per_batch``
-    (maxBytesPerTrigger analogue, default off) caps a micro-batch's
-    total input VOLUME instead — the knob for bursts of few huge files;
-    strict with a progress guarantee (only a single file that alone
-    exceeds the budget overshoots, riding alone).  Both caps compose
-    (min semantics), and both also surface through Spark's
-    SupportsAdmissionControl contract as the source's default
-    ReadLimit."""
-    ensure_session(spark)
-    reader = spark.readStream.format(FORMAT)
-    if split_size is not None:
-        reader = reader.option("split_size", str(split_size))
-    if mode is not None:
-        reader = reader.option("mode", mode)
-    if max_file_age_ms is not None:
-        reader = reader.option("max_file_age_ms", str(max_file_age_ms))
-    if max_files_per_batch is not None:
-        reader = reader.option("max_files_per_batch", str(max_files_per_batch))
-    if max_bytes_per_batch is not None:
-        reader = reader.option("max_bytes_per_batch", str(max_bytes_per_batch))
-    return reader.load(path)
-
-
-def read_blocks_jvm(
-    spark: SparkSession,
-    path: str,
-    split_size: int | None = None,
-    ranges: str | None = None,
-) -> DataFrame:
-    """BGZF blocks-metadata DataFrame via bamjvm.BlocksSource (S9):
-    header-only parallel block discovery, no inflater, no Python worker
-    boundary."""
-    ensure_session(spark)
-    reader = spark.read.format(FORMAT_BLOCKS)
-    if split_size is not None:
-        reader = reader.option("split_size", str(split_size))
-    if ranges is not None:
-        reader = reader.option("ranges", ranges)
-    return reader.load(path)

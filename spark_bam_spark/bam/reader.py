@@ -19,8 +19,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from spark_bam_spark.bam import jvmreader
-from spark_bam_spark.bam.jvmreader import read_bam_stream  # noqa: F401  (re-exported)
-from spark_bam_spark.bam.jvmreader import read_blocks_jvm as read_blocks  # noqa: F401
 
 # The logical read schema (bamjvm.BamDataSource.fullSchema), in column
 # order.  The SAM and CRAM loaders produce the same columns.
@@ -58,6 +56,14 @@ def writer_choice() -> str:
     return "jvm"
 
 
+def _options(reader, **opts):
+    """Set each option that is not None, as its string."""
+    for k, v in opts.items():
+        if v is not None:
+            reader = reader.option(k, str(v).lower() if isinstance(v, bool) else str(v))
+    return reader
+
+
 def read_bam(
     spark: SparkSession,
     path: str,
@@ -68,25 +74,91 @@ def read_bam(
     reads_to_check: int | None = None,
     max_read_size: int | None = None,
     compression_ratio: float | None = None,
+    columnar: bool | None = None,
 ) -> DataFrame:
-    """DataFrame of reads over a BAM file or directory.  ``columns`` is a
+    """DataFrame of reads (schema ``READS_DDL``) over a BAM file or
+    directory, through bamjvm.BamDataSource.  ``columns`` is a
     comma-separated projection; Catalyst prunes the scan to it
-    (SupportsPushDownRequiredColumns)."""
+    (SupportsPushDownRequiredColumns).  ``columnar`` forces the columnar
+    (True) or row (False) partition reader; the source picks by default."""
     if mode is not None and mode not in ("failfast", "permissive"):
         raise ValueError(f"mode must be failfast|permissive, got {mode!r}")
-    df = jvmreader.read_bam_jvm(
-        spark,
-        path,
+    jvmreader.ensure_session(spark)
+    df = _options(
+        spark.read.format(jvmreader.FORMAT),
         split_size=split_size,
         reads_to_check=reads_to_check,
         max_read_size=max_read_size,
         mode=mode,
+        columnar=columnar,
         ranges=ranges,
         compression_ratio=compression_ratio,
-    )
+    ).load(path)
     if columns:
         df = df.select(*[c.strip() for c in columns.split(",")])
     return df
+
+
+def read_blocks(
+    spark: SparkSession,
+    path: str,
+    split_size: int | None = None,
+    ranges: str | None = None,
+) -> DataFrame:
+    """BGZF blocks-metadata DataFrame via bamjvm.BlocksSource (S9):
+    header-only parallel block discovery, no inflater, no Python worker
+    boundary."""
+    jvmreader.ensure_session(spark)
+    return _options(
+        spark.read.format(jvmreader.FORMAT_BLOCKS), split_size=split_size, ranges=ranges
+    ).load(path)
+
+
+def read_bam_stream(
+    spark: SparkSession,
+    path: str,
+    split_size: int | None = None,
+    mode: str | None = None,
+    max_file_age_ms: int | None = None,
+    max_files_per_batch: int | None = None,
+    max_bytes_per_batch: int | None = None,
+) -> DataFrame:
+    """Structured Streaming DataFrame over a landing directory of BAM
+    files (bamjvm.BamMicroBatchStream): each micro-batch ingests the
+    .bam files that appeared since the last batch through the SAME
+    planner/pushdown/reader as the batch scan.  Use
+    ``trigger(availableNow=True)`` for a deterministic drain of whatever
+    has landed; offsets checkpoint as a monotonic batch id backed by a
+    compacted file-metadata log, so a restarted query only ingests new
+    files.  ``max_file_age_ms`` (FileStreamSource's maxFileAge
+    analogue, default off) ignores files older than the newest file
+    seen minus the age and bounds the in-memory seen map to the age
+    window — the knob a months-long ingest over an eternally-growing
+    landing zone needs; same documented caveat as Spark's file source
+    (a file whose mtime is bumped after eviction is re-ingested).
+    ``max_files_per_batch`` (FileStreamSource's maxFilesPerTrigger
+    analogue, default off) caps how many unseen files one micro-batch
+    plans — oldest mtime first — so a burst landing drains as
+    ceil(n/cap) individually-checkpointed batches instead of one giant
+    batch; under ``availableNow`` the source snapshots the backlog at
+    trigger time (SupportsTriggerAvailableNow) and still drains it
+    fully across that many batches.  ``max_bytes_per_batch``
+    (maxBytesPerTrigger analogue, default off) caps a micro-batch's
+    total input VOLUME instead — the knob for bursts of few huge files;
+    strict with a progress guarantee (only a single file that alone
+    exceeds the budget overshoots, riding alone).  Both caps compose
+    (min semantics), and both also surface through Spark's
+    SupportsAdmissionControl contract as the source's default
+    ReadLimit."""
+    jvmreader.ensure_session(spark)
+    return _options(
+        spark.readStream.format(jvmreader.FORMAT),
+        split_size=split_size,
+        mode=mode,
+        max_file_age_ms=max_file_age_ms,
+        max_files_per_batch=max_files_per_batch,
+        max_bytes_per_batch=max_bytes_per_batch,
+    ).load(path)
 
 
 def write_bam_df(
@@ -110,19 +182,17 @@ def write_bam_df(
     running side effect of the write — the writer owns every record's
     exact virtual offset — so interval queries over the rewritten output
     get indexed pushdown with no separate indexing pass.  Partitions that
-    are not coordinate-sorted are rejected."""
+    are not coordinate-sorted are rejected.
+
+    ``deflate_level`` is a throughput/size knob: level 1 trades ~15%
+    larger files for less CPU per block."""
     if mode not in ("append", "overwrite"):
         raise ValueError(f"mode must be append|overwrite, got {mode!r}")
     jvmreader.ensure_session(df.sparkSession)
-    w = df.write.format(jvmreader.FORMAT)
-    if bai:
-        w = w.option("bai", "true")
-    if contigs:
-        w = w.option("contigs", contigs)
-    if block_payload is not None:
-        w = w.option("block_payload", str(block_payload))
-    if deflate_level is not None:
-        # throughput/size knob; level 1 trades ~15% larger files for less
-        # CPU per block at scale
-        w = w.option("deflate_level", str(deflate_level))
-    w.mode(mode).save(path)
+    _options(
+        df.write.format(jvmreader.FORMAT),
+        bai=bai or None,
+        contigs=contigs or None,
+        block_payload=block_payload,
+        deflate_level=deflate_level,
+    ).mode(mode).save(path)

@@ -17,6 +17,7 @@ in tests/test_qa_pipelines.py against the sidecar ground truth.
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -425,18 +426,21 @@ _PACK_CAP = 16384  # split_size 49152 / EstimatedCompressionRatio 3.0
 def _jvm_pack_ranges(
     spark: SparkSession, ranges: list[tuple[int, int]], split_size: int, compression_ratio: float
 ) -> list[list[tuple[int, int]]]:
-    """bamjvm.BamDataSource.packRanges over ``ranges``, through py4j."""
+    """bamjvm.BamDataSource.packRanges over ``ranges``, through py4j.  The
+    ranges cross the gateway as JSON (Spark's Jackson), so a call costs a
+    few round trips rather than a few per range."""
     from spark_bam_spark.bam import jvmreader
 
     jvmreader.ensure_session(spark)
-    gw = spark.sparkContext._gateway
-    jranges = gw.jvm.java.util.ArrayList()
-    for lo, hi in ranges:
-        r = gw.new_array(gw.jvm.long, 2)
-        r[0], r[1] = lo, hi
-        jranges.add(r)
-    groups = gw.jvm.bamjvm.BamDataSource.packRanges(jranges, split_size, float(compression_ratio))
-    return [[(int(r[0]), int(r[1])) for r in g] for g in groups]
+    jvm = spark.sparkContext._jvm
+    mapper = jvm.com.fasterxml.jackson.databind.ObjectMapper()
+    cls = jvm.java.lang.Class.forName
+    list_of_pairs = mapper.getTypeFactory().constructCollectionType(
+        cls("java.util.ArrayList"), cls("[J")
+    )
+    jranges = mapper.readValue(json.dumps(ranges), list_of_pairs)
+    groups = jvm.bamjvm.BamDataSource.packRanges(jranges, split_size, float(compression_ratio))
+    return [[tuple(r) for r in g] for g in json.loads(mapper.writeValueAsString(groups))]
 
 
 @register(
@@ -1127,7 +1131,7 @@ def bam_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    from spark_bam_spark.bam.jvmreader import read_bam_stream
+    from spark_bam_spark.bam.reader import read_bam_stream
 
     land = _fresh_rewrite_dir()
     os.makedirs(land, exist_ok=True)  # the rewrite queries let the writer create it

@@ -70,12 +70,13 @@ def _read_tags(df):
 
 def test_jvm_decoder_stops_on_b_subtype_a(spark, tmp_path):
     from spark_bam_spark.bam import jvmreader
+    from spark_bam_spark.bam.reader import read_bam
 
     if jvmreader.javac_path() is None:
         pytest.skip("no JDK compiler on this machine")
     path = str(tmp_path / "badb.bam")
     _write_bad_b_bam(path)
-    df = jvmreader.read_bam_jvm(spark, path)
+    df = read_bam(spark, path)
     assert _read_tags(df) == {}  # JVM skipTag stops identically
 
 

@@ -6,9 +6,7 @@ indexed scan's range packer (BamDataSource.packRanges)."""
 
 from __future__ import annotations
 
-import os
 import random
-import subprocess
 
 import pytest
 from pyspark.sql import functions as F
@@ -162,68 +160,14 @@ def test_permissive_mode_salvages_corrupt_file(spark_bam, bam, tmp_path):
         read_bam(spark_bam, corrupt, split_size=4096).count()
 
 
-_HARNESS = r"""
-package bamjvm;
-
-import java.io.*;
-import java.util.*;
-
-/** stdin: one case per line, "splitSize ratio lo hi lo hi ...".
- *  stdout: one line per case, groups separated by '|', each group's
- *  ranges as "lo-hi" joined by ','. */
-public final class PackHarness {
-    public static void main(String[] args) throws Exception {
-        BufferedReader in = new BufferedReader(new InputStreamReader(System.in));
-        PrintStream out = new PrintStream(new BufferedOutputStream(System.out));
-        for (String line; (line = in.readLine()) != null; ) {
-            String[] t = line.trim().split(" ");
-            List<long[]> ranges = new ArrayList<>();
-            for (int i = 2; i + 1 < t.length; i += 2) {
-                ranges.add(new long[] {Long.parseLong(t[i]), Long.parseLong(t[i + 1])});
-            }
-            StringJoiner groups = new StringJoiner("|");
-            for (List<long[]> g : BamDataSource.packRanges(
-                    ranges, Long.parseLong(t[0]), Double.parseDouble(t[1]))) {
-                StringJoiner rs = new StringJoiner(",");
-                for (long[] r : g) rs.add(r[0] + "-" + r[1]);
-                groups.add(rs.toString());
-            }
-            out.println(groups);
-        }
-        out.flush();
-    }
-}
-"""
-
-
 @pytest.fixture(scope="module")
-def pack_ranges(tmp_path_factory):
-    """``pack_ranges(cases)`` → packRanges' groups for each
-    ``(ranges, split_size, ratio)``, from one ``java`` run of a harness
-    in package ``bamjvm`` compiled against the reader jar."""
-    jar = jvmreader.jar_path()
-    d = tmp_path_factory.mktemp("pack_harness")
-    src = d / "bamjvm" / "PackHarness.java"
-    src.parent.mkdir()
-    src.write_text(_HARNESS)
-    javac = jvmreader.javac_path()
-    cp = f"{jar}:{jvmreader._pyspark_jars_glob()}"  # BamDataSource links against Spark
-    subprocess.run([javac, "-cp", cp, "-d", str(d), str(src)], check=True)
-    java = os.path.join(os.path.dirname(os.path.realpath(javac)), "java")
+def pack_ranges(spark_bam):
+    """``pack_ranges(ranges, split_size, ratio)`` → the groups that
+    BamDataSource.packRanges, the indexed scan's packer, makes of
+    ``ranges``."""
+    from spark_bam_spark.queries.bam_qa import _jvm_pack_ranges
 
-    def run(cases):
-        lines = [" ".join([str(split), str(ratio), *(str(v) for r in ranges for v in r)])
-                 for ranges, split, ratio in cases]
-        proc = subprocess.run([java, "-cp", f"{cp}:{d}", "bamjvm.PackHarness"],
-                              input="\n".join(lines) + "\n", capture_output=True,
-                              text=True, check=True)
-        return [
-            [[tuple(int(v) for v in r.split("-")) for r in g.split(",")] for g in ln.split("|")]
-            if ln else []
-            for ln in proc.stdout.split("\n")[: len(cases)]
-        ]
-
-    return run
+    return lambda ranges, split_size, ratio: _jvm_pack_ranges(spark_bam, ranges, split_size, ratio)
 
 
 def test_pack_ranges_merge_and_cut_branches(pack_ranges):
@@ -236,13 +180,11 @@ def test_pack_ranges_merge_and_cut_branches(pack_ranges):
     # overlap (0,50)+(40,90) and adjacency (90,120) merge into (0,120),
     # which exceeds the cap and is cut at it; the 20-byte remainder then
     # packs with (200,260) under the cap, and (300,340) overflows out
-    got = pack_ranges([
-        ([(0, 50), (40, 90), (90, 120), (200, 260), (300, 340)], 300, 3.0),
-        # an oversize range mid-stream flushes the open group first
-        ([(0, 60), (100, 350), (400, 430)], 300, 3.0),
-    ])
-    assert got[0] == [[(0, 100)], [(100, 120), (200, 260)], [(300, 340)]]
-    assert got[1] == [[(0, 60)], [(100, 200)], [(200, 300)], [(300, 350), (400, 430)]]
+    got = pack_ranges([(0, 50), (40, 90), (90, 120), (200, 260), (300, 340)], 300, 3.0)
+    assert got == [[(0, 100)], [(100, 120), (200, 260)], [(300, 340)]]
+    # an oversize range mid-stream flushes the open group first
+    got = pack_ranges([(0, 60), (100, 350), (400, 430)], 300, 3.0)
+    assert got == [[(0, 60)], [(100, 200)], [(200, 300)], [(300, 350), (400, 430)]]
 
 
 def test_pack_ranges_randomized_invariants(pack_ranges):
@@ -254,8 +196,7 @@ def test_pack_ranges_randomized_invariants(pack_ranges):
     only closed when its successor's first range genuinely overflows the
     cap; solo cut pieces exempt)."""
     rng = random.Random(0xC0FFEE)
-    cases = []
-    for _ in range(300):
+    for trial in range(300):
         n = rng.randint(0, 40)
         ranges = []
         for _ in range(n):
@@ -263,9 +204,8 @@ def test_pack_ranges_randomized_invariants(pack_ranges):
             span = rng.choice([0, rng.randint(1, 120), rng.randint(1, 2_500)])
             ranges.append((lo, lo + span))
         rng.shuffle(ranges)
-        cases.append((ranges, rng.randint(3, 900), rng.choice([1.0, 3.0, 7.5])))
-
-    for trial, ((ranges, split_size, ratio), groups) in enumerate(zip(cases, pack_ranges(cases))):
+        split_size, ratio = rng.randint(3, 900), rng.choice([1.0, 3.0, 7.5])
+        groups = pack_ranges(ranges, split_size, ratio)
         cap = max(1, int(split_size / ratio))
         flat = [r for g in groups for r in g]
 
@@ -334,7 +274,10 @@ def test_cost_packed_indexed_partitions_balanced(spark_bam, tmp_path):
     df = read_bam(spark_bam, path, split_size=split_size).filter("rname = '1'")
     spans = [(lo, hi) for _, lo, hi in scan_splits(df)]
     cap = split_size / 3.0  # compressed cap = split_size / est ratio
-    assert max(hi - lo for lo, hi in spans) <= cap * 1.5 + 65536 / 4, (spans, cap)
+    # packed, not fixed-stride: each span is cut at the cap (+ the block
+    # its last chunk ends in), far under split_size
+    max_block = max(b.compressed_size for b in res.blocks)
+    assert max(hi - lo for lo, hi in spans) <= cap + max_block < split_size, (spans, cap)
     assert len(spans) >= 3, f"dense region should spread over partitions: {spans}"
     # indexed: the contig-2 tail is never planned
     first_contig2 = min(p.block_pos for p, r in zip(res.record_positions, recs) if r.ref_idx == 1)

@@ -16,6 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from spark_bam_spark.bam import jvmreader
+from spark_bam_spark.bam.reader import read_bam, read_bam_stream
 from spark_bam_spark.bam.writer import make_fixture
 
 _HAS_JDK = jvmreader.javac_path() is not None
@@ -25,7 +26,7 @@ needs_jdk = pytest.mark.skipif(not _HAS_JDK, reason="no JDK compiler on this mac
 
 def _drain(spark, land: str, ckpt: str, out: str, **opts) -> None:
     q = (
-        jvmreader.read_bam_stream(spark, land, **opts)
+        read_bam_stream(spark, land, **opts)
         .select("qname", "flag", "rname", "pos")
         .writeStream.format("parquet")
         .option("path", out)
@@ -66,8 +67,6 @@ def test_stream_rows_match_batch_scan(spark, tmp_path):
     got = sorted(
         map(tuple, spark.read.parquet(out).select("qname", "flag", "rname", "pos").collect())
     )
-    from spark_bam_spark.bam.reader import read_bam
-
     want = sorted(
         map(tuple, read_bam(spark, land).select("qname", "flag", "rname", "pos").collect())
     )
@@ -304,8 +303,6 @@ def test_max_files_per_batch_rows_match_batch_scan(spark, tmp_path):
     got = sorted(
         map(tuple, spark.read.parquet(out).select("qname", "flag", "rname", "pos").collect())
     )
-    from spark_bam_spark.bam.reader import read_bam
-
     want = sorted(
         map(tuple, read_bam(spark, land).select("qname", "flag", "rname", "pos").collect())
     )
@@ -353,7 +350,7 @@ def test_max_files_per_batch_caps_under_non_snapshot_trigger(spark, tmp_path):
 
     def once():
         q = (
-            jvmreader.read_bam_stream(spark, land, max_files_per_batch=2)
+            read_bam_stream(spark, land, max_files_per_batch=2)
             .select("qname", "flag", "rname", "pos")
             .writeStream.format("parquet")
             .option("path", out)

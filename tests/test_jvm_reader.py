@@ -14,7 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from spark_bam_spark.bam import bgzf, jvmreader
-from spark_bam_spark.bam.reader import READS_FIELDS
+from spark_bam_spark.bam.reader import READS_FIELDS, read_bam, read_blocks
 from tests.bam_oracle import COLUMNS, bam_files, oracle_rows, scan_rows
 
 pytestmark = pytest.mark.skipif(
@@ -56,7 +56,7 @@ def _parse_ranges(spec: str) -> list[tuple[int, int]]:
 
 
 def test_full_width_equality(spark, fixture_path, py_rows):
-    got = scan_rows(jvmreader.read_bam_jvm(spark, fixture_path, split_size=16384))
+    got = scan_rows(read_bam(spark, fixture_path, split_size=16384))
     assert got == py_rows
     assert len(got) == 2500
 
@@ -65,20 +65,20 @@ def test_full_width_equality(spark, fixture_path, py_rows):
 def test_split_invariance(spark, fixture_path, py_rows, split_size):
     """The record set must be independent of split geometry — every split
     boundary exercises find_block_start + the eager record checker."""
-    got = scan_rows(jvmreader.read_bam_jvm(spark, fixture_path, split_size=split_size))
+    got = scan_rows(read_bam(spark, fixture_path, split_size=split_size))
     assert got == py_rows
 
 
 def test_schema_matches_python_source(spark, fixture_path):
     """The scan's schema is the documented read schema, READS_DDL."""
-    jv = jvmreader.read_bam_jvm(spark, fixture_path)
+    jv = read_bam(spark, fixture_path)
     assert [(f.name, f.dataType.simpleString()) for f in jv.schema] == READS_FIELDS
 
 
 def test_column_pruning_pushes_to_scan(spark, fixture_path):
     """Catalyst prunes via SupportsPushDownRequiredColumns: the scan's
     readSchema must shrink to the projection."""
-    jv = jvmreader.read_bam_jvm(spark, fixture_path).select("pos", "rname")
+    jv = read_bam(spark, fixture_path).select("pos", "rname")
     plan = jv._jdf.queryExecution().executedPlan().toString()
     scan_line = next(line for line in plan.splitlines() if "BatchScan" in line)
     assert "pos" in scan_line and "rname" in scan_line
@@ -89,15 +89,15 @@ def test_column_pruning_pushes_to_scan(spark, fixture_path):
 
 
 def test_count_only_scan(spark, fixture_path):
-    assert jvmreader.read_bam_jvm(spark, fixture_path, split_size=4096).count() == 2500
+    assert read_bam(spark, fixture_path, split_size=4096).count() == 2500
 
 
 def test_columnar_equals_row_path(spark, fixture_path, py_rows):
     """The columnar reader (default) and the row-based reader must agree
     with each other and with the Python decoder — full width, incl. the
     map column's vector encoding."""
-    col = scan_rows(jvmreader.read_bam_jvm(spark, fixture_path, split_size=16384, columnar=True))
-    row = scan_rows(jvmreader.read_bam_jvm(spark, fixture_path, split_size=16384, columnar=False))
+    col = scan_rows(read_bam(spark, fixture_path, split_size=16384, columnar=True))
+    row = scan_rows(read_bam(spark, fixture_path, split_size=16384, columnar=False))
     assert col == row == py_rows
 
 
@@ -105,7 +105,7 @@ def test_columnar_batch_boundary(spark, fixture_path):
     """2500 records in one split crosses no 4096-row batch boundary; the
     doubled directory input (5000 rows, single-file splits) does — both
     batch shapes must count correctly under the columnar path."""
-    df = jvmreader.read_bam_jvm(spark, fixture_path, split_size=1 << 26, columnar=True)
+    df = read_bam(spark, fixture_path, split_size=1 << 26, columnar=True)
     assert df.count() == 2500
 
 
@@ -116,7 +116,7 @@ def test_directory_input(spark, fixture_path, tmp_path_factory):
     d = tmp_path_factory.mktemp("bams")
     shutil.copy(fixture_path, d / "a.bam")
     shutil.copy(fixture_path, d / "b.bam")
-    df = jvmreader.read_bam_jvm(spark, str(d))
+    df = read_bam(spark, str(d))
     assert df.count() == 5000
     # block_pos/offset identical per copy: each file decodes independently
     per = df.groupBy("block_pos", "offset").count().select("count").distinct().collect()
@@ -141,7 +141,7 @@ def test_filter_pushdown_equality(spark, fixture_path, py_rows, predicate, keep)
     """Indexed scans: the JVM reader's BAI / zone-map pruning must return
     exactly the decoder's rows for the same predicate — pruning can only
     skip, never corrupt."""
-    jv = jvmreader.read_bam_jvm(spark, fixture_path, split_size=16384)
+    jv = read_bam(spark, fixture_path, split_size=16384)
     cols = ["qname", "rname", "pos", "end_pos"]
     want = sorted(((r["qname"], r["rname"], r["pos"], r["end_pos"])
                    for r in map(_row, py_rows) if keep(r)), key=repr)
@@ -162,7 +162,7 @@ def test_pruning_source_isolated(spark, fixture_path, tmp_path_factory, sidecar)
 
     expect = sorted(((r["qname"], r["pos"]) for r in map(_row, oracle_rows(fixture_path))
                      if r["rname"] == "1" and 13000 <= r["pos"] < 1_000_000), key=repr)
-    jv = jvmreader.read_bam_jvm(spark, path, split_size=16384)
+    jv = read_bam(spark, path, split_size=16384)
     pruned = jv.filter((jv.rname == "1") & (jv.pos >= 13000) & (jv.pos < 1_000_000))
     assert scan_rows(pruned, ["qname", "pos"]) == expect
     assert pruned.select("pos").rdd.getNumPartitions() < jv.rdd.getNumPartitions()
@@ -171,7 +171,7 @@ def test_pruning_source_isolated(spark, fixture_path, tmp_path_factory, sidecar)
 def test_filter_pushdown_prunes_partitions(spark, fixture_path):
     """A selective interval must plan fewer tasks than the full scan —
     the zone map actually skips byte ranges, not just rows."""
-    full = jvmreader.read_bam_jvm(spark, fixture_path, split_size=16384)
+    full = read_bam(spark, fixture_path, split_size=16384)
     pruned = full.filter((full.rname == "1") & (full.pos >= 13000) & (full.pos < 50_000))
     n_full = full.rdd.getNumPartitions()
     n_pruned = pruned.select("pos").rdd.getNumPartitions()
@@ -194,7 +194,7 @@ def test_byte_ranges_option(spark, fixture_path, py_rows, spec):
         return any(a < hi and b > lo for a, b in ranges)
 
     a = [t for t in py_rows if planned(_row(t)["block_pos"])]
-    b = scan_rows(jvmreader.read_bam_jvm(spark, fixture_path, split_size=16384, ranges=spec))
+    b = scan_rows(read_bam(spark, fixture_path, split_size=16384, ranges=spec))
     assert a == b
     assert 0 < len(a) < 2500 or spec == "64k-"  # selective, not vacuous
 
@@ -237,7 +237,7 @@ def test_typed_tags_skip_and_stop(spark, tmp_path):
     with open(path, "wb") as f:
         f.write(bgzf.compress_block(encode_header(CONTIG_NAMES, CONTIG_LENGTHS) + bytes(raw))
                 + bgzf.EOF_BLOCK)
-    got = scan_rows(jvmreader.read_bam_jvm(spark, path))
+    got = scan_rows(read_bam(spark, path))
     assert got == oracle_rows(path)
     assert dict(_row(got[0])["tags"]) == {"RG": "rg0", "XZ": "a:b:c", "YZ": "reachable"}
 
@@ -257,7 +257,7 @@ def test_empty_and_unplaced_records(spark, tmp_path):
     ]
     path = str(tmp_path / "two.bam")
     write_bam(path, CONTIG_NAMES, CONTIG_LENGTHS, recs, block_payload=64)
-    got = scan_rows(jvmreader.read_bam_jvm(spark, path, split_size=64))
+    got = scan_rows(read_bam(spark, path, split_size=64))
     assert got == oracle_rows(path)
     rows = {r["qname"]: r for r in map(_row, got)}
     u, m = rows["u1"], rows["m1"]
@@ -278,7 +278,7 @@ def test_generated_fixture_parity(spark, tmp_path_factory, seed, block_payload, 
 
     path = str(tmp_path_factory.mktemp("gen") / f"g{seed}.bam")
     make_fixture(path, n=n, block_payload=block_payload, seed=seed)
-    jv = scan_rows(jvmreader.read_bam_jvm(spark, path, split_size=2048))
+    jv = scan_rows(read_bam(spark, path, split_size=2048))
     assert oracle_rows(path) == jv
     assert len(jv) == n
 
@@ -290,7 +290,7 @@ def test_empty_bam(spark, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("gen") / "empty.bam")
     make_fixture(path, n=0)
     assert oracle_rows(path) == []
-    assert jvmreader.read_bam_jvm(spark, path).count() == 0
+    assert read_bam(spark, path).count() == 0
 
 
 def test_permissive_salvage_parity(spark, tmp_path_factory):
@@ -314,7 +314,7 @@ def test_permissive_salvage_parity(spark, tmp_path_factory):
         f.write(b"\xde\xad\xbe\xef" * 8)
 
     want = oracle_rows(clean)
-    got = scan_rows(jvmreader.read_bam_jvm(spark, corrupt, split_size=4096, mode="permissive"))
+    got = scan_rows(read_bam(spark, corrupt, split_size=4096, mode="permissive"))
     assert 0 < len(got) < 1200
     assert set(got) <= set(want)
     resync = -(-(victim.start + victim.compressed_size) // 4096) * 4096
@@ -322,7 +322,7 @@ def test_permissive_salvage_parity(spark, tmp_path_factory):
     assert after and set(after) <= set(got)
 
     with pytest.raises(Exception):
-        jvmreader.read_bam_jvm(spark, corrupt, split_size=4096).count()
+        read_bam(spark, corrupt, split_size=4096).count()
 
 
 def test_scan_1m_aggregates(spark, sf_medium):
@@ -343,7 +343,7 @@ def test_scan_1m_aggregates(spark, sf_medium):
         ).collect()[0]
 
     tile = oracle_rows(bam_qa._big_fixture_path(), ["rname", "seq_len", "qual"])
-    jv = aggs(jvmreader.read_bam_jvm(spark, bam_qa._HUGE_FIXTURE))
+    jv = aggs(read_bam(spark, bam_qa._HUGE_FIXTURE))
     assert tuple(jv) == (
         20 * len(tile),
         20 * sum(seq_len for _, seq_len, _ in tile),
@@ -374,7 +374,7 @@ def test_blocks_source_parity(spark, fixture_path, split_size):
     """bamjvm.BlocksSource vs bgzf.metadata_stream: identical block
     metadata rows (incl. the path column downstream QA pipelines open
     directly) for every split geometry."""
-    jv = jvmreader.read_blocks_jvm(spark, fixture_path, split_size=split_size)
+    jv = read_blocks(spark, fixture_path, split_size=split_size)
     assert jv.columns == ["path", "start", "compressed_size", "uncompressed_size"]
     a = _oracle_blocks(fixture_path)
     assert sorted(map(tuple, jv.collect())) == a
@@ -387,14 +387,14 @@ def test_blocks_source_directory_and_ranges(spark, fixture_path, tmp_path_factor
     d = tmp_path_factory.mktemp("blocks_dir")
     shutil.copy(fixture_path, d / "a.bam")
     shutil.copy(fixture_path, d / "b.bam")
-    jv = jvmreader.read_blocks_jvm(spark, str(d), split_size=65536, ranges="0-100k")
+    jv = read_blocks(spark, str(d), split_size=65536, ranges="0-100k")
     a = _oracle_blocks(str(d), _parse_ranges("0-100k"))
     assert sorted(map(tuple, jv.collect())) == a
     assert 0 < len(a) < len(_oracle_blocks(str(d)))  # ranges actually selective
 
 
 def test_blocks_source_column_pruning(spark, fixture_path):
-    df = jvmreader.read_blocks_jvm(spark, fixture_path).select("start", "compressed_size")
+    df = read_blocks(spark, fixture_path).select("start", "compressed_size")
     plan = df._jdf.queryExecution().executedPlan().toString()
     scan_line = next(line for line in plan.splitlines() if "BatchScan" in line)
     assert "uncompressed_size" not in scan_line
@@ -442,7 +442,7 @@ def test_fuzz_geometry_parity(spark, tmp_path_factory):
         counter["i"] += 1
         path = str(base / f"f{counter['i']}.bam")
         make_fixture(path, n=n, block_payload=block_payload, seed=seed)
-        jv = scan_rows(jvmreader.read_bam_jvm(spark, path, split_size=split_size))
+        jv = scan_rows(read_bam(spark, path, split_size=split_size))
         assert oracle_rows(path) == jv
         assert len(jv) == n
 
@@ -462,11 +462,11 @@ def test_many_file_directory_parallel_planning(spark, tmp_path_factory):
         n = 50 + 40 * i
         make_fixture(str(d / f"f{i:02d}.bam"), n=n, block_payload=2048, seed=100 + i)
         total += n
-    jv = scan_rows(jvmreader.read_bam_jvm(spark, str(d), split_size=4096))
+    jv = scan_rows(read_bam(spark, str(d), split_size=4096))
     assert len(jv) == total
     assert oracle_rows(str(d)) == jv
     # blocks source over the same directory: same parallel-planning path
-    jvb = sorted(map(tuple, jvmreader.read_blocks_jvm(spark, str(d), split_size=4096).collect()))
+    jvb = sorted(map(tuple, read_blocks(spark, str(d), split_size=4096).collect()))
     assert _oracle_blocks(str(d)) == jvb and len(jvb) > 12
 
 

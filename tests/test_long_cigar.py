@@ -120,7 +120,7 @@ def test_readers_promote_cg_identically(spark, long_bam):
 def test_jvm_row_reader_promotes_cg(spark, long_bam):
     """columnar=false pins the JVM ROW decode path (BamPartitionReader) —
     the default test above exercises the columnar twin."""
-    df = jvmreader.read_bam_jvm(spark, long_bam, split_size=16384, columnar=False)
+    df = read_bam(spark, long_bam, split_size=16384, columnar=False)
     row = df.filter(df.qname == "longread").collect()[0]
     assert row["cigar"] == _EXPECT_CIGAR
     assert row["n_cigar_ops"] == N_OPS

@@ -267,17 +267,23 @@ def test_permissive_corrupt_layout_salvage(spark, corrupt_layout_bam):
 
 
 def test_permissive_corrupt_layout_cross_reader_parity(spark, corrupt_layout_bam):
-    """Over many splits, permissive mode salvages only real records: each
-    salvaged row equals the Python decoder's row for it, and the corrupt
-    record itself is never served."""
+    """Over many splits, permissive mode loses exactly the corrupt record
+    and the rest of its split: every other row is served and equals the
+    Python decoder's row for it."""
+    from tests.bam_oracle import decode_file
+    from tests.test_split_planner import scan_splits
+
     path, bad_idx = corrupt_layout_bam
     cols = ["qname", "flag", "rname", "pos", "block_pos", "offset"]
-    got = scan_rows(read_bam(spark, path, split_size=8192, mode="permissive"), cols)
-    assert set(got) <= set(oracle_rows(path, cols))
-    assert 0 < len(got) < 1000
-    from spark_bam_spark.bam.writer import synth_records
-
-    assert synth_records(1000, seed=9)[bad_idx].qname not in {t[0] for t in got}
+    df = read_bam(spark, path, split_size=8192, mode="permissive")
+    splits = scan_splits(df)
+    bad_pos = decode_file(path)[1][bad_idx][0]
+    bad = (bad_pos.block_pos, bad_pos.offset)
+    end = next(hi for _, lo, hi in splits if lo <= bad[0] < hi)
+    assert end < splits[-1][2], "vacuous: the corrupt record is in the last split"
+    want = [t for t in oracle_rows(path, cols) if (t[4], t[5]) < bad or t[4] >= end]
+    assert scan_rows(df, cols) == want
+    assert bad_idx < len(want) < 1000
 
 
 def test_read_bam_rejects_bad_mode_and_jvm_py_option_mix(spark, fixture_path):

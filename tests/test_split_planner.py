@@ -15,6 +15,7 @@ import re
 import pytest
 
 from spark_bam_spark.bam import jvmreader
+from spark_bam_spark.bam.reader import read_bam, read_bam_stream, read_blocks
 from spark_bam_spark.bam.records import encode_record
 from spark_bam_spark.bam.writer import CONTIG_LENGTHS, CONTIG_NAMES, synth_records, write_bam
 
@@ -80,26 +81,26 @@ def _assert_equal_ranges(splits, size):
 def test_single_file_plans_whole_waves(spark, unequal_dir, parallelism):
     path = os.path.join(unequal_dir, "a.bam")
     size = os.path.getsize(path)
-    splits = scan_splits(jvmreader.read_bam_jvm(spark, path))
+    splits = scan_splits(read_bam(spark, path))
     assert len(splits) == parallelism  # 1.5 MiB per split: one wave
     _assert_equal_ranges(splits, size)
-    assert scan_splits(jvmreader.read_blocks_jvm(spark, path)) == splits
+    assert scan_splits(read_blocks(spark, path)) == splits
     # an explicit split_size keeps its fixed stride
-    fixed = scan_splits(jvmreader.read_bam_jvm(spark, path, split_size=MiB))
+    fixed = scan_splits(read_bam(spark, path, split_size=MiB))
     assert [(s, e) for _, s, e in fixed] == [
         (s, min(s + MiB, size)) for s in range(0, size, MiB)
     ]
 
 
 def test_directory_apportions_splits_by_size(spark, unequal_dir, parallelism):
-    splits = scan_splits(jvmreader.read_bam_jvm(spark, unequal_dir))
+    splits = scan_splits(read_bam(spark, unequal_dir))
     sizes = {n: os.path.getsize(os.path.join(unequal_dir, n)) for n in ("a.bam", "b.bam")}
     total = sum(sizes.values())
     per_file = {n: [sp for sp in splits if sp[0] == n] for n in sizes}
     for name, size in sizes.items():
         assert abs(len(per_file[name]) - parallelism * size / total) < 1, per_file
         _assert_equal_ranges(per_file[name], size)
-    assert scan_splits(jvmreader.read_blocks_jvm(spark, unequal_dir)) == splits
+    assert scan_splits(read_blocks(spark, unequal_dir)) == splits
 
 
 def test_file_under_one_mib_plans_one_split(spark):
@@ -107,10 +108,10 @@ def test_file_under_one_mib_plans_one_split(spark):
 
     path = _fixture_path()
     assert os.path.getsize(path) < MiB
-    assert scan_splits(jvmreader.read_bam_jvm(spark, path)) == [
+    assert scan_splits(read_bam(spark, path)) == [
         (os.path.basename(path), 0, os.path.getsize(path))
     ]
-    assert len(scan_splits(jvmreader.read_blocks_jvm(spark, path))) == 1
+    assert len(scan_splits(read_blocks(spark, path))) == 1
 
 
 def test_stream_micro_batch_plans_by_the_same_rule(spark, unequal_dir, parallelism, tmp_path):
@@ -121,7 +122,7 @@ def test_stream_micro_batch_plans_by_the_same_rule(spark, unequal_dir, paralleli
     shutil.copy(os.path.join(unequal_dir, "a.bam"), land / "a.bam")
     planned = []
     q = (
-        jvmreader.read_bam_stream(spark, str(land))
+        read_bam_stream(spark, str(land))
         .select("qname")
         .writeStream.foreachBatch(lambda df, _id: planned.append(scan_splits(df)))
         .option("checkpointLocation", str(tmp_path / "ckpt"))
@@ -130,4 +131,4 @@ def test_stream_micro_batch_plans_by_the_same_rule(spark, unequal_dir, paralleli
     )
     q.awaitTermination(180)
     assert len(planned) == 1 and len(planned[0]) == parallelism
-    assert planned[0] == scan_splits(jvmreader.read_bam_jvm(spark, str(land)))
+    assert planned[0] == scan_splits(read_bam(spark, str(land)))
