@@ -5,7 +5,9 @@ computation + record-boundary validity checking, docs/motivation.md:3-52)
 as a JVM DataSourceV2 (``jvmsrc/bamjvm/``, built on demand by
 ``jvmreader``) behind ``reader.read_bam``: decode, the BGZF codec and the
 part-BAM writer run compiled in the executor JVM, the reference's own
-execution shape.  Split computation happens on executors.
+execution shape.  Split computation happens on executors.  The scan is a
+batch load, as the reference's loadBam is: one columnar decoder, no
+streaming source.
 
 The pure-Python modules are the independent oracle the JVM code is
 tested against, and the fixture and benchmark-input generator; no Spark
@@ -17,8 +19,7 @@ Modules:
     checker     — record-boundary validity predicates (eager + full)
     writer      — BAM writer + sidecar ground truth + fixture generator
     jvmreader   — on-demand javac build + ADD JAR wiring for bamjvm
-    reader      — the entry points (read_bam / read_blocks / read_bam_stream /
-                  write_bam_df)
+    reader      — the entry points (read_bam / read_blocks / write_bam_df)
 """
 
 from spark_bam_spark.bam.bgzf import Pos  # noqa: F401

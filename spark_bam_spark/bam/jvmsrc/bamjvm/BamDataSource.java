@@ -10,7 +10,6 @@ import java.util.HashSet;
 import java.util.List;
 import java.util.Map;
 import java.util.Set;
-import org.apache.hadoop.conf.Configuration;
 import org.apache.hadoop.fs.BlockLocation;
 import org.apache.hadoop.fs.FSDataInputStream;
 import org.apache.hadoop.fs.FileStatus;
@@ -41,7 +40,6 @@ import org.apache.spark.sql.sources.LessThan;
 import org.apache.spark.sql.sources.LessThanOrEqual;
 import org.apache.spark.sql.catalyst.InternalRow;
 import org.apache.spark.sql.types.DataTypes;
-import org.apache.spark.sql.types.StructField;
 import org.apache.spark.sql.types.StructType;
 import org.apache.spark.sql.util.CaseInsensitiveStringMap;
 
@@ -133,7 +131,6 @@ public class BamDataSource implements TableProvider {
             caps.add(TableCapability.BATCH_READ);
             caps.add(TableCapability.BATCH_WRITE);
             caps.add(TableCapability.TRUNCATE); // df.write.mode("overwrite")
-            caps.add(TableCapability.MICRO_BATCH_READ); // spark.readStream
             return caps;
         }
 
@@ -354,33 +351,14 @@ public class BamDataSource implements TableProvider {
             return required;
         }
 
-        /** Hadoop conf for the streaming twin (same package, nested class). */
-        Configuration sconfConf() {
-            return sconf.conf;
-        }
-
         @Override
         public Batch toBatch() {
             return this;
         }
 
-        /** Structured Streaming: ingest .bam files as they land (see
-         *  {@link BamMicroBatchStream}). */
-        @Override
-        public org.apache.spark.sql.connector.read.streaming.MicroBatchStream toMicroBatchStream(
-                String checkpointLocation) {
-            return new BamMicroBatchStream(this, checkpointLocation);
-        }
-
         private long optLong(String key, long dflt) {
             String v = options.get(key);
             return v == null ? dflt : Long.parseLong(v);
-        }
-
-        /** Raw option access for the streaming wrapper (e.g.
-         *  max_file_age_ms — a stream-only knob the batch scan ignores). */
-        String rawOption(String key) {
-            return options.get(key);
         }
 
         /**
@@ -424,10 +402,10 @@ public class BamDataSource implements TableProvider {
 
         /**
          * Stable .bam listing under root (name-sorted; a plain file lists
-         * as itself).  In-progress writer temp files (.bam.inprogress)
-         * never match the suffix, so a concurrently-writing job's torn
-         * files are invisible here — the property the streaming source
-         * relies on.
+         * as itself).  Only the root's own files count: in-progress writer
+         * temp files (.bam.inprogress), .bai/.records sidecars and
+         * subdirectories never match, so a concurrently-writing job's torn
+         * files are invisible to the reads and blocks scans.
          */
         static List<FileStatus> listBamFiles(FileSystem fs, Path root) throws IOException {
             List<FileStatus> files = new ArrayList<>();
@@ -456,8 +434,8 @@ public class BamDataSource implements TableProvider {
             }
         }
 
-        /** Split planning for an explicit file set (batch scan = the full
-         *  listing; streaming micro-batches = each batch's new files). */
+        /** Split planning for the listed files: one batch of BamSplits,
+         *  each read by a BamColumnarReader. */
         InputPartition[] planFiles(FileSystem fs, List<FileStatus> files) {
             int readsToCheck = (int) optLong("reads_to_check", Checker.DEFAULT_READS_TO_CHECK);
             long maxReadSize = optLong("max_read_size", Checker.DEFAULT_MAX_READ_SIZE);
@@ -624,8 +602,7 @@ public class BamDataSource implements TableProvider {
 
         @Override
         public PartitionReaderFactory createReaderFactory() {
-            boolean columnar = !"false".equals(options.getOrDefault("columnar", "true"));
-            return new BamReaderFactory(required, columnar, sconf);
+            return new BamReaderFactory(required, sconf);
         }
 
         /**
@@ -885,33 +862,28 @@ public class BamDataSource implements TableProvider {
     }
 
     static final class BamReaderFactory implements PartitionReaderFactory {
-        private static final long serialVersionUID = 2L;
+        private static final long serialVersionUID = 3L;
 
         private final StructType required;
-        private final boolean columnar;
         // session Hadoop conf, serialized once per stage (the factory
         // rides the broadcast task binary, not each split)
         private final SerializableConf sconf;
 
-        BamReaderFactory(StructType required, boolean columnar, SerializableConf sconf) {
+        BamReaderFactory(StructType required, SerializableConf sconf) {
             this.required = required;
-            this.columnar = columnar;
             this.sconf = sconf;
         }
 
         @Override
         public boolean supportColumnarReads(InputPartition partition) {
-            return columnar;
+            return true;
         }
 
+        /** Every split reads columnar, so Spark never asks for rows (a
+         *  plan with no partitions opens no reader at all). */
         @Override
         public PartitionReader<InternalRow> createReader(InputPartition partition) {
-            String[] fieldNames = new String[required.fields().length];
-            StructField[] fields = required.fields();
-            for (int i = 0; i < fields.length; i++) {
-                fieldNames[i] = fields[i].name();
-            }
-            return new BamPartitionReader((BamSplit) partition, fieldNames, sconf.conf);
+            throw new UnsupportedOperationException("bamjvm reads columnar batches only");
         }
 
         @Override

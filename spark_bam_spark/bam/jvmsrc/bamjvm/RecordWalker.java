@@ -7,12 +7,12 @@ import org.apache.hadoop.fs.FileSystem;
 import org.apache.hadoop.fs.Path;
 
 /**
- * The sequential record walk for one split, shared by the row-based and
- * columnar partition readers: for each of the split's byte ranges
+ * The sequential record walk for one split, under the columnar
+ * partition reader: for each of the split's byte ranges
  * (several for an indexed scan, one contiguous range otherwise), open
  * the window at the range's first block, re-sync on the first record
  * start (eager checker), then hop record starts via block_size under the
- * block-ownership rule.  See BamPartitionReader for the decode
+ * block-ownership rule.  See BamColumnarReader for the decode
  * contract.
  */
 final class RecordWalker {

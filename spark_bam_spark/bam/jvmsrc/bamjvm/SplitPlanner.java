@@ -9,8 +9,7 @@ import org.apache.hadoop.fs.FileStatus;
 import org.apache.hadoop.fs.Path;
 
 /**
- * The one split-sizing rule of the reads scan (and through it the
- * stream's micro-batches) and the blocks scan.
+ * The one split-sizing rule of the reads scan and the blocks scan.
  *
  * An explicit {@code split_size} cuts every file at that fixed stride.
  * Otherwise the plan fills whole waves of the session's parallelism

@@ -1,4 +1,4 @@
-"""The engine's BAM entry points: reads, blocks, streams and writes.
+"""The engine's BAM entry points: reads, blocks and writes.
 
 Every function here runs on the JVM DataSourceV2 in ``bam/jvmsrc/bamjvm/``
 (built and attached by ``jvmreader``): the record decode, the BGZF codec
@@ -74,13 +74,12 @@ def read_bam(
     reads_to_check: int | None = None,
     max_read_size: int | None = None,
     compression_ratio: float | None = None,
-    columnar: bool | None = None,
 ) -> DataFrame:
     """DataFrame of reads (schema ``READS_DDL``) over a BAM file or
     directory, through bamjvm.BamDataSource.  ``columns`` is a
     comma-separated projection; Catalyst prunes the scan to it
-    (SupportsPushDownRequiredColumns).  ``columnar`` forces the columnar
-    (True) or row (False) partition reader; the source picks by default."""
+    (SupportsPushDownRequiredColumns).  Each split decodes into columnar
+    batches (bamjvm.BamColumnarReader)."""
     if mode is not None and mode not in ("failfast", "permissive"):
         raise ValueError(f"mode must be failfast|permissive, got {mode!r}")
     jvmreader.ensure_session(spark)
@@ -90,7 +89,6 @@ def read_bam(
         reads_to_check=reads_to_check,
         max_read_size=max_read_size,
         mode=mode,
-        columnar=columnar,
         ranges=ranges,
         compression_ratio=compression_ratio,
     ).load(path)
@@ -111,53 +109,6 @@ def read_blocks(
     jvmreader.ensure_session(spark)
     return _options(
         spark.read.format(jvmreader.FORMAT_BLOCKS), split_size=split_size, ranges=ranges
-    ).load(path)
-
-
-def read_bam_stream(
-    spark: SparkSession,
-    path: str,
-    split_size: int | None = None,
-    mode: str | None = None,
-    max_file_age_ms: int | None = None,
-    max_files_per_batch: int | None = None,
-    max_bytes_per_batch: int | None = None,
-) -> DataFrame:
-    """Structured Streaming DataFrame over a landing directory of BAM
-    files (bamjvm.BamMicroBatchStream): each micro-batch ingests the
-    .bam files that appeared since the last batch through the SAME
-    planner/pushdown/reader as the batch scan.  Use
-    ``trigger(availableNow=True)`` for a deterministic drain of whatever
-    has landed; offsets checkpoint as a monotonic batch id backed by a
-    compacted file-metadata log, so a restarted query only ingests new
-    files.  ``max_file_age_ms`` (FileStreamSource's maxFileAge
-    analogue, default off) ignores files older than the newest file
-    seen minus the age and bounds the in-memory seen map to the age
-    window — the knob a months-long ingest over an eternally-growing
-    landing zone needs; same documented caveat as Spark's file source
-    (a file whose mtime is bumped after eviction is re-ingested).
-    ``max_files_per_batch`` (FileStreamSource's maxFilesPerTrigger
-    analogue, default off) caps how many unseen files one micro-batch
-    plans — oldest mtime first — so a burst landing drains as
-    ceil(n/cap) individually-checkpointed batches instead of one giant
-    batch; under ``availableNow`` the source snapshots the backlog at
-    trigger time (SupportsTriggerAvailableNow) and still drains it
-    fully across that many batches.  ``max_bytes_per_batch``
-    (maxBytesPerTrigger analogue, default off) caps a micro-batch's
-    total input VOLUME instead — the knob for bursts of few huge files;
-    strict with a progress guarantee (only a single file that alone
-    exceeds the budget overshoots, riding alone).  Both caps compose
-    (min semantics), and both also surface through Spark's
-    SupportsAdmissionControl contract as the source's default
-    ReadLimit."""
-    jvmreader.ensure_session(spark)
-    return _options(
-        spark.readStream.format(jvmreader.FORMAT),
-        split_size=split_size,
-        mode=mode,
-        max_file_age_ms=max_file_age_ms,
-        max_files_per_batch=max_files_per_batch,
-        max_bytes_per_batch=max_bytes_per_batch,
     ).load(path)
 
 

@@ -94,40 +94,6 @@ def build_parser() -> argparse.ArgumentParser:
         "(input must be coordinate-sorted) so the output serves indexed "
         "interval scans",
     )
-    p = sub.add_parser(
-        "stream-ingest",
-        help="drain a BAM landing directory into parquet via the Structured "
-        "Streaming source (availableNow trigger; incremental across runs "
-        "through the checkpoint)",
-    )
-    p.add_argument("path", help="landing directory of .bam files")
-    p.add_argument("--out", required=True, help="parquet output directory")
-    p.add_argument("--checkpoint", required=True, help="streaming checkpoint directory")
-    p.add_argument("--split-size", type=int, default=None)
-    p.add_argument(
-        "--max-file-age-ms",
-        type=int,
-        default=None,
-        help="ignore files older than the newest file minus this age and "
-        "bound the seen-file memory to the age window (Spark file-source "
-        "maxFileAge semantics; default: ingest regardless of age)",
-    )
-    p.add_argument(
-        "--max-files-per-batch",
-        type=int,
-        default=None,
-        help="cap how many unseen files one micro-batch plans, oldest "
-        "first (maxFilesPerTrigger semantics; a burst drains as several "
-        "checkpointed batches; default: unlimited)",
-    )
-    p.add_argument(
-        "--max-bytes-per-batch",
-        type=int,
-        default=None,
-        help="cap a micro-batch's total input bytes, oldest files first "
-        "(maxBytesPerTrigger semantics; a lone over-budget file still "
-        "rides alone so the stream advances; default: unlimited)",
-    )
     # generic registry access: every operator the engine claims is a named
     # query, and every named query is runnable from the CLI
     p = sub.add_parser("list-queries", help="list the operator/query registry")
@@ -207,34 +173,6 @@ def run(args: argparse.Namespace, spark: SparkSession) -> None:
         df = registry[args.name].fn(spark, args.sf_dir)
         mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(args.mode)
         print(df._jdf.queryExecution().explainString(mode))
-        return
-    if cmd == "stream-ingest":
-        from spark_bam_spark.bam.reader import read_bam_stream
-
-        stream = read_bam_stream(
-            spark,
-            args.path,
-            split_size=args.split_size,
-            max_file_age_ms=args.max_file_age_ms,
-            max_files_per_batch=args.max_files_per_batch,
-            max_bytes_per_batch=args.max_bytes_per_batch,
-        )
-        q = (
-            stream.drop("tags")  # parquet sink keeps the report columnar-simple
-            .writeStream.format("parquet")
-            .option("path", args.out)
-            .option("checkpointLocation", args.checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        try:
-            n = spark.read.parquet(args.out).count()
-        except Exception:
-            # a drain over an empty landing dir writes no parquet files —
-            # that is a successful no-op, not an error
-            n = 0
-        print(f"drained {args.path} -> {args.out} (total rows now {n})")
         return
     if cmd == "check-bam":
         df = qa.confusion_matrix(qa.calls(spark, args.path, stride=1))

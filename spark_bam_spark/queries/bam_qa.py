@@ -1105,59 +1105,6 @@ def bam_sort_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "bam_stream_ingest",
-    doc="Structured Streaming BAM landing-directory ingest (availableNow drain), JVM MicroBatchStream",
-    oracle=f"""
-    SELECT flag, CAST(COUNT(*) * 2 AS BIGINT) AS n_reads
-    FROM read_parquet('{_TRUTH_PQ}')
-    GROUP BY flag
-    """,
-)
-def bam_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming ingest of a BAM landing directory
-    (bamjvm.BamMicroBatchStream): two copies of the committed fixture
-    land in a scratch dir, ``readStream`` drains them with
-    ``trigger(availableNow=True)`` into parquet, and the result is the
-    per-flag read histogram over the drained output — hash-matched
-    against 2× the truth parquet's histogram, so the oracle pins that
-    the stream planned BOTH files through the same splitter/decoder as
-    the batch scan with no row lost or duplicated.  Offsets checkpoint
-    as a monotonic batch id over a compacted file-metadata log, so a
-    restarted query ingests only new files
-    (pinned incrementally in tests/test_bam_streaming.py).  The
-    reference has no streaming surface; this is the Spark-first
-    extension of its batch loadReads (CanLoadBam.scala, behavior
-    citation)."""
-    import os
-    import shutil
-
-    from spark_bam_spark.bam.reader import read_bam_stream
-
-    land = _fresh_rewrite_dir()
-    os.makedirs(land, exist_ok=True)  # the rewrite queries let the writer create it
-    ckpt = os.path.join(land, "_ckpt")
-    out = os.path.join(land, "_out")
-    fx = _fixture_path()
-    shutil.copy(fx, os.path.join(land, "a.bam"))
-    shutil.copy(fx, os.path.join(land, "b.bam"))
-    q = (
-        read_bam_stream(spark, land, split_size=16384)
-        .select("flag")
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return (
-        spark.read.parquet(out)
-        .groupBy("flag")
-        .agg(F.count("*").cast("bigint").alias("n_reads"))
-    )
-
-
-@register(
     "bam_idxstats_from_index",
     doc="samtools idxstats from the BAI metadata pseudo-bin alone — O(index), no data scan",
     oracle=f"""

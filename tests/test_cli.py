@@ -207,57 +207,17 @@ def test_flagstat_counters(spark, bam_path, capsys):
     assert int(got["with_itself_and_mate_mapped"]) == int(got["mapped"])
 
 
-def test_stream_ingest_cli_incremental(spark, tmp_path, capsys):
-    """The stream-ingest subcommand drains a landing dir into parquet;
-    a second run with the same checkpoint adds only new arrivals."""
+def test_cli_without_jdk_fails_loudly(spark, bam_path, tmp_path, capsys, monkeypatch):
+    """Without a JDK compiler (and no jar built yet) a BAM subcommand has
+    no source to read through: it raises jar_path's error instead of
+    falling back."""
     from spark_bam_spark.bam import jvmreader
-    from spark_bam_spark.bam.writer import make_fixture
-
-    if not jvmreader.javac_path():
-        import pytest as _pytest
-
-        _pytest.skip("no JDK")
-    land = str(tmp_path / "landing")
-    import os as _os
-
-    _os.makedirs(land)
-    make_fixture(_os.path.join(land, "a.bam"), n=120, block_payload=4096, seed=1)
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    lines = _run(spark, ["stream-ingest", land, "--out", out, "--checkpoint", ckpt], capsys)
-    assert "total rows now 120" in lines[-1]
-    make_fixture(_os.path.join(land, "b.bam"), n=30, block_payload=4096, seed=2)
-    lines = _run(spark, ["stream-ingest", land, "--out", out, "--checkpoint", ckpt], capsys)
-    assert "total rows now 150" in lines[-1]
-    # admission-control flags parse and thread through to the source
-    make_fixture(_os.path.join(land, "c.bam"), n=10, block_payload=4096, seed=3)
-    make_fixture(_os.path.join(land, "d.bam"), n=10, block_payload=4096, seed=4)
-    lines = _run(
-        spark,
-        ["stream-ingest", land, "--out", out, "--checkpoint", ckpt,
-         "--max-files-per-batch", "1", "--max-bytes-per-batch", str(1 << 30)],
-        capsys,
-    )
-    assert "total rows now 170" in lines[-1]
-
-
-def test_stream_ingest_cli_without_jdk_fails_loudly(spark, tmp_path, capsys, monkeypatch):
-    """Without a JDK compiler (and no jar built yet) the subcommand has
-    no BAM source to drain through: it raises jar_path's error instead
-    of falling back."""
-    import os as _os
-
-    from spark_bam_spark.bam import jvmreader
-    from spark_bam_spark.bam.writer import make_fixture
 
     monkeypatch.setattr(jvmreader, "javac_path", lambda: None)
     monkeypatch.setattr(jvmreader, "_CACHE_DIR", str(tmp_path / "jar_cache"))
     monkeypatch.setattr(jvmreader, "_WIRED", set())
-    land = str(tmp_path / "landing")
-    _os.makedirs(land)
-    make_fixture(_os.path.join(land, "a.bam"), n=60, block_payload=4096, seed=5)
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
     with pytest.raises(RuntimeError, match="javac not found"):
-        _run(spark, ["stream-ingest", land, "--out", out, "--checkpoint", ckpt], capsys)
+        _run(spark, ["count-reads", bam_path], capsys)
 
 
 def test_flagstat_excludes_secondary_from_paired_metrics(spark, tmp_path, capsys):
@@ -289,23 +249,6 @@ def test_flagstat_excludes_secondary_from_paired_metrics(spark, tmp_path, capsys
     assert got["read1"] == 1 and got["read2"] == 1
     assert got["properly_paired"] == 2
     assert got["with_itself_and_mate_mapped"] == 2
-
-
-def test_stream_ingest_empty_landing_dir_is_a_noop(spark, tmp_path, capsys):
-    """A drain over an empty landing directory succeeds and reports 0
-    rows instead of crashing on the schemaless parquet sink (review
-    r11)."""
-    from spark_bam_spark.bam import jvmreader
-
-    if not jvmreader.javac_path():
-        pytest.skip("no JDK")
-    import os as _os
-
-    land = str(tmp_path / "landing")
-    _os.makedirs(land)
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    lines = _run(spark, ["stream-ingest", land, "--out", out, "--checkpoint", ckpt], capsys)
-    assert "total rows now 0" in lines[-1]
 
 
 def test_write_rejects_zero_block_payload(spark, tmp_path):

@@ -92,35 +92,49 @@ def test_count_only_scan(spark, fixture_path):
     assert read_bam(spark, fixture_path, split_size=4096).count() == 2500
 
 
-def test_columnar_equals_row_path(spark, fixture_path, py_rows):
-    """The columnar reader (default) and the row-based reader must agree
-    with each other and with the Python decoder — full width, incl. the
-    map column's vector encoding."""
-    col = scan_rows(read_bam(spark, fixture_path, split_size=16384, columnar=True))
-    row = scan_rows(read_bam(spark, fixture_path, split_size=16384, columnar=False))
-    assert col == row == py_rows
-
-
 def test_columnar_batch_boundary(spark, fixture_path):
     """2500 records in one split crosses no 4096-row batch boundary; the
     doubled directory input (5000 rows, single-file splits) does — both
-    batch shapes must count correctly under the columnar path."""
-    df = read_bam(spark, fixture_path, split_size=1 << 26, columnar=True)
+    batch shapes must count correctly."""
+    df = read_bam(spark, fixture_path, split_size=1 << 26)
     assert df.count() == 2500
 
 
 def test_directory_input(spark, fixture_path, tmp_path_factory):
-    """Directory loads scan every *.bam in name order."""
+    """Directory loads scan every *.bam directly in the directory, in name
+    order.  A concurrent writer's temp file, the .bai/.records sidecars
+    and a subdirectory's .bam are invisible to the scan; an empty
+    directory plans no split and counts 0."""
     import shutil
 
     d = tmp_path_factory.mktemp("bams")
     shutil.copy(fixture_path, d / "a.bam")
     shutil.copy(fixture_path, d / "b.bam")
+    # decoys: a torn in-progress part, the sidecars, a nested .bam
+    (d / ".part-00001-7.bam.inprogress").write_bytes(b"torn")
+    for suffix in (".bai", ".records"):
+        shutil.copy(fixture_path + suffix, d / ("a.bam" + suffix))
+    (d / "nested").mkdir()
+    shutil.copy(fixture_path, d / "nested" / "c.bam")
     df = read_bam(spark, str(d))
     assert df.count() == 5000
     # block_pos/offset identical per copy: each file decodes independently
     per = df.groupBy("block_pos", "offset").count().select("count").distinct().collect()
     assert per == [pytest.approx(2)] or [r[0] for r in per] == [2]
+    assert read_bam(spark, str(tmp_path_factory.mktemp("empty"))).count() == 0
+
+
+def test_batch_scan_is_the_only_read_surface(spark, fixture_path, tmp_path):
+    """The source reads batches only: no streaming read, no row reader
+    switch."""
+    import shutil
+
+    shutil.copy(fixture_path, tmp_path / "a.bam")
+    jvmreader.ensure_session(spark)
+    with pytest.raises(Exception, match="does not support streamed reading"):
+        spark.readStream.format(jvmreader.FORMAT).load(str(tmp_path))
+    with pytest.raises(TypeError):
+        read_bam(spark, fixture_path, columnar=False)
 
 
 @pytest.mark.parametrize(

@@ -5,8 +5,8 @@ field (k = l_seq as S, m = reference-consumed as N) and the real ops in a
 CG:B,I tag, the htslib/samtools convention.
 
 The engine's contract, pinned identically across the decode paths (the
-Python scalar oracle, the JVM row and columnar readers) and between the
-JVM writer and the oracle encoder:
+Python scalar oracle and the JVM columnar reader) and between the JVM
+writer and the oracle encoder:
 
 - readers promote the CG array into 'cigar'/'n_cigar_ops'/'end_pos' and
   keep CG out of the tags map (samtools transparency);
@@ -114,18 +114,6 @@ def test_readers_promote_cg_identically(spark, long_bam):
     # pruned projection (cigar without tags) still promotes
     c = df.select("qname", "cigar").filter(df.qname == "longread").collect()[0]
     assert c["cigar"] == _EXPECT_CIGAR
-
-
-@needs_jdk
-def test_jvm_row_reader_promotes_cg(spark, long_bam):
-    """columnar=false pins the JVM ROW decode path (BamPartitionReader) —
-    the default test above exercises the columnar twin."""
-    df = read_bam(spark, long_bam, split_size=16384, columnar=False)
-    row = df.filter(df.qname == "longread").collect()[0]
-    assert row["cigar"] == _EXPECT_CIGAR
-    assert row["n_cigar_ops"] == N_OPS
-    assert row["end_pos"] == _EXPECT_END
-    assert dict(row["tags"]) == {"RG": "rg9"}
 
 
 @needs_jdk

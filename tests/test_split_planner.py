@@ -1,9 +1,9 @@
 """Default split planning (bamjvm.SplitPlanner).  With no ``split_size``
-the reads scan, the blocks scan and the stream's micro-batches plan
-whole waves of the session's ``defaultParallelism``: N splits (a multiple
-of it, none over 64 MiB, none under 1 MiB), shared out across files in
-proportion to size and cut into equal byte ranges per file.  An explicit
-``split_size`` keeps its fixed stride.
+the reads scan and the blocks scan plan whole waves of the session's
+``defaultParallelism``: N splits (a multiple of it, none over 64 MiB,
+none under 1 MiB), shared out across files in proportion to size and cut
+into equal byte ranges per file.  An explicit ``split_size`` keeps its
+fixed stride.
 """
 
 from __future__ import annotations
@@ -15,7 +15,7 @@ import re
 import pytest
 
 from spark_bam_spark.bam import jvmreader
-from spark_bam_spark.bam.reader import read_bam, read_bam_stream, read_blocks
+from spark_bam_spark.bam.reader import read_bam, read_blocks
 from spark_bam_spark.bam.records import encode_record
 from spark_bam_spark.bam.writer import CONTIG_LENGTHS, CONTIG_NAMES, synth_records, write_bam
 
@@ -112,23 +112,3 @@ def test_file_under_one_mib_plans_one_split(spark):
         (os.path.basename(path), 0, os.path.getsize(path))
     ]
     assert len(scan_splits(read_blocks(spark, path))) == 1
-
-
-def test_stream_micro_batch_plans_by_the_same_rule(spark, unequal_dir, parallelism, tmp_path):
-    import shutil
-
-    land = tmp_path / "landing"
-    land.mkdir()
-    shutil.copy(os.path.join(unequal_dir, "a.bam"), land / "a.bam")
-    planned = []
-    q = (
-        read_bam_stream(spark, str(land))
-        .select("qname")
-        .writeStream.foreachBatch(lambda df, _id: planned.append(scan_splits(df)))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    assert len(planned) == 1 and len(planned[0]) == parallelism
-    assert planned[0] == scan_splits(read_bam(spark, str(land)))

@@ -5,6 +5,8 @@ implementations; this script maintains the section between the GENERATED
 markers from the live registry so coverage claims stay machine-checkable
 as the registry grows (one row per registered query: verification mode,
 tags, driver-check rounds).
+Rows are sorted by (module, name), so adding or deleting a query adds or
+deletes only its own row.
 
 Usage: python tools/gen_coverage.py
 """
@@ -22,17 +24,22 @@ BEGIN = "<!-- BEGIN GENERATED REGISTRY SNAPSHOT (tools/gen_coverage.py) -->"
 END = "<!-- END GENERATED REGISTRY SNAPSHOT -->"
 
 
-def module_of(name: str) -> str:
+def modules_of(names) -> dict[str, str]:
+    """Query name -> the first query module whose source registers it."""
     import inspect
     import pkgutil
 
     from spark_bam_spark import queries as qpkg
 
-    for info in pkgutil.iter_modules(qpkg.__path__):
-        mod = __import__(f"{qpkg.__name__}.{info.name}", fromlist=["x"])
-        if f'"{name}"' in inspect.getsource(mod):
-            return info.name
-    return "?"
+    sources = {
+        info.name: inspect.getsource(
+            __import__(f"{qpkg.__name__}.{info.name}", fromlist=["x"])
+        )
+        for info in pkgutil.iter_modules(qpkg.__path__)
+    }
+    return {
+        n: next((m for m, src in sources.items() if f'"{n}"' in src), "?") for n in names
+    }
 
 
 def driver_rounds(name: str) -> str:
@@ -80,12 +87,14 @@ def main() -> None:
         "non-deterministic output (e.g. timing stats). "
         f"Classes: {n_derived} derived, {n_golden} golden, {n_inv} invariant.",
         "",
-        "| # | Query | Module | Oracle | Headline | Tags | Driver-checked |",
-        "|---|---|---|---|---|---|---|",
+        "| Query | Module | Oracle | Headline | Tags | Driver-checked |",
+        "|---|---|---|---|---|---|",
     ]
-    for i, (name, spec) in enumerate(reg.items(), 1):
+    module = modules_of(reg)
+    for name in sorted(reg, key=lambda n: (module[n], n)):
+        spec = reg[name]
         lines.append(
-            f"| {i} | `{name}` | {module_of(name)} | "
+            f"| `{name}` | {module[name]} | "
             f"{spec.oracle_kind if spec.oracle else 'rows-only'} | "
             f"{'yes' if spec.headline else ''} | "
             f"{' '.join(spec.tags)} | {driver_rounds(name)} |"
