@@ -1,7 +1,8 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-Thin adapter over ``spark_bam_spark.queries.REGISTRY`` — every implemented
-operator from SURVEY.md §2 is registered there with its DuckDB oracle SQL.
+Thin adapter over ``spark_bam_spark.queries.REGISTRY``: the BAM scan-layer
+and check-bam queries of ``queries/bam_qa.py``, each registered with its
+DuckDB oracle SQL over the generator's truth parquet.
 """
 
 from __future__ import annotations
@@ -18,12 +19,16 @@ from spark_bam_spark.queries import load_all  # noqa: E402
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
-    return load_all()["pricing_summary"].fn(spark, "/root/testdata/sf0.001")
+    """Flagship query: the qa2500 BAM fixture's read count through the
+    bamjvm scan next to its sidecar truth count (one row); the driver
+    checks rows>0."""
+    return load_all()["bam_count_reads"].fn(spark, "")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2."""
+    """One entry per registered query, in registration order. Each is called
+    as ``fn(spark, sf_dir)``; the BAM queries read their own fixtures and
+    ignore ``sf_dir``."""
     return {name: spec.fn for name, spec in load_all().items()}
 
 

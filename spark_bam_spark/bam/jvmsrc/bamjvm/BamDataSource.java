@@ -424,23 +424,16 @@ public class BamDataSource implements TableProvider {
             return files;
         }
 
+        /** Split planning: one batch of BamSplits over the root's listed
+         *  .bam files, each read by a BamColumnarReader. */
         @Override
         public InputPartition[] planInputPartitions() {
             try {
                 FileSystem fs = rootPath().getFileSystem(sconf.conf);
-                return planFiles(fs, listBamFiles(fs, rootPath()));
-            } catch (IOException e) {
-                throw new UncheckedIOException(e);
-            }
-        }
-
-        /** Split planning for the listed files: one batch of BamSplits,
-         *  each read by a BamColumnarReader. */
-        InputPartition[] planFiles(FileSystem fs, List<FileStatus> files) {
-            int readsToCheck = (int) optLong("reads_to_check", Checker.DEFAULT_READS_TO_CHECK);
-            long maxReadSize = optLong("max_read_size", Checker.DEFAULT_MAX_READ_SIZE);
-            boolean permissive = "permissive".equals(options.getOrDefault("mode", "failfast"));
-            try {
+                List<FileStatus> files = listBamFiles(fs, rootPath());
+                int readsToCheck = (int) optLong("reads_to_check", Checker.DEFAULT_READS_TO_CHECK);
+                long maxReadSize = optLong("max_read_size", Checker.DEFAULT_MAX_READ_SIZE);
+                boolean permissive = "permissive".equals(options.getOrDefault("mode", "failfast"));
                 // whole waves of the session's parallelism, or the fixed
                 // split_size stride (SplitPlanner has the rule)
                 SplitPlanner planner = SplitPlanner.of(files, optLong("split_size", -1));

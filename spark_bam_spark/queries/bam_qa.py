@@ -1,9 +1,8 @@
 """Format-layer + QA-pipeline queries for the driver's coverage check.
 
 These exercise the BAM DataSource and the §2.11 QA pipelines. They run on
-a deterministic fixture generated once under /tmp (the sf tables are
-relational; BAM is a file format — the fixture generator IS the engine's
-writer, so this is also a write-path test).
+a deterministic fixture generated once under /tmp (the fixture generator
+IS the engine's writer, so this is also a write-path test).
 
 DuckDB cannot read BAM, but the scan-shaped queries still carry oracle
 SQL: it reads the COMMITTED ground-truth parquet dumps
@@ -35,10 +34,10 @@ _SCAN_AGGS_PQ = f"{_FIXTURES_DIR}/qa_scan_aggs.parquet"
 # compare-splits fixture truth (generator-derived; tools/gen_bam_golden.py)
 _CMP_RECORDS_PQ = f"{_FIXTURES_DIR}/cmp_records.parquet"
 _CMP_BLOCKS_PQ = f"{_FIXTURES_DIR}/cmp_blocks.parquet"
-# golden regression pins for the checker diagnostics (reference parity:
-# the committed check-bam outputs, cli/src/test/resources/output/check-bam/
-# 1.bam:1-16): dumped once from a verified run (tools/gen_bam_golden.py),
-# value-level correctness pinned independently by tests/test_checker.py
+# committed outputs of the checker diagnostics (reference parity: the
+# committed check-bam outputs, cli/src/test/resources/output/check-bam/
+# 1.bam:1-16), derived by tools/gen_checker_truth.py from an independent
+# checker; value-level correctness pinned by tests/test_checker.py
 _G_FULL_CHECK_PQ = f"{_FIXTURES_DIR}/qa2500_golden_full_check.parquet"
 _G_FULL_CHECK_CDF_PQ = f"{_FIXTURES_DIR}/qa2500_golden_full_check_cdf.parquet"
 _G_CLOSE_CALLS_PQ = f"{_FIXTURES_DIR}/qa2500_golden_close_calls.parquet"
