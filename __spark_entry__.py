@@ -1,8 +1,7 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-Thin adapter over ``spark_bam_spark.queries.REGISTRY``: the BAM scan-layer
-and check-bam queries of ``queries/bam_qa.py``, each registered with its
-DuckDB oracle SQL over the generator's truth parquet.
+Thin adapter over ``spark_bam_spark.queries.REGISTRY`` — every implemented
+operator from SURVEY.md §2 is registered there with its DuckDB oracle SQL.
 """
 
 from __future__ import annotations
@@ -21,14 +20,14 @@ from spark_bam_spark.queries import load_all  # noqa: E402
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query: the qa2500 BAM fixture's read count through the
     bamjvm scan next to its sidecar truth count (one row); the driver
-    checks rows>0."""
+    checks rows>0. The BAM queries read their own fixtures and ignore
+    ``sf_dir``."""
     return load_all()["bam_count_reads"].fn(spark, "")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per registered query, in registration order. Each is called
-    as ``fn(spark, sf_dir)``; the BAM queries read their own fixtures and
-    ignore ``sf_dir``."""
+    """One entry per implemented operator from SURVEY.md §2, each called
+    as ``fn(spark, sf_dir)``."""
     return {name: spec.fn for name, spec in load_all().items()}
 
 

@@ -1,20 +1,25 @@
-"""spark_bam_spark — a PySpark-native BAM scan layer and check-bam harness.
+"""spark_bam_spark — a PySpark-native analytics engine.
 
-A from-scratch re-expression of hammerlab/spark-bam on top of the Spark
-DataFrame / SQL stack.
+A from-scratch re-expression of the capabilities of hammerlab/spark-bam
+(reference read-only at /root/reference/) on top of the Spark DataFrame /
+SQL / Structured Streaming stack, extended with large-scale
+training-data-pipeline operators (dedup, similarity search, text analysis,
+multimodal columns).
 
 Layout:
-    session     — SparkSession factory tuned for local[N]
+    session     — SparkSession factory tuned for the local[32] harness
+    tables      — parquet table loaders for the synthetic TPC-H-ish corpus
+    queries     — the operator registry: every operator from SURVEY.md §2
+                  exposed as (spark, sf_dir) -> DataFrame with a DuckDB
+                  oracle SQL string for differential testing
     bam/        — the format layer: BGZF blocks, record-boundary checkers,
                   the bamjvm DataSourceV2 reader and writer
                   (jvmsrc/bamjvm/, entered through bam/reader.py), and the
                   pure-Python codec, checker and writer that serve as the
                   independent oracle and the fixture generator
-    operators/  — the check-bam QA pipelines (operators/qa.py)
-    queries     — the query registry: the scan-layer and QA pipelines of
-                  queries/bam_qa.py exposed as (spark, sf_dir) -> DataFrame
-                  with a DuckDB oracle SQL string for differential testing
-    cli         — the check-bam command line over the same pipelines
+    operators/  — analytic operator implementations (relational, dedup,
+                  similarity, text, QA pipelines)
+    streaming/  — Structured Streaming pipelines over the events table
 """
 
 from spark_bam_spark.session import get_spark  # noqa: F401

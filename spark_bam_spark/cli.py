@@ -96,17 +96,21 @@ def build_parser() -> argparse.ArgumentParser:
     )
     # generic registry access: every operator the engine claims is a named
     # query, and every named query is runnable from the CLI
-    sub.add_parser("list-queries", help="list the operator/query registry")
-    p = sub.add_parser("query", help="run any registered query")
+    p = sub.add_parser("list-queries", help="list the operator/query registry")
+    p.add_argument("--tag", default=None, help="filter by tag (e.g. dedup, tpch, sketch)")
+    p = sub.add_parser("query", help="run any registered query over a testdata dir")
     p.add_argument("name", help="registry name (see list-queries)")
+    p.add_argument("--sf-dir", default="/root/testdata/sf0.001", help="parquet table directory")
     p.add_argument("--out", default=None, help="write CSV here instead of stdout")
     p.add_argument("--print-limit", type=int, default=DEFAULT_PRINT_LIMIT)
     p = sub.add_parser(
         "explain",
         help="print a registered query's physical plan without executing the "
-        "query (building it may still write its BAM fixture on first use)",
+        "query (queries built on eagerly-checkpointed iterations may still "
+        "run their preparatory jobs while the plan is constructed)",
     )
     p.add_argument("name", help="registry name (see list-queries)")
+    p.add_argument("--sf-dir", default="/root/testdata/sf0.001", help="parquet table directory")
     p.add_argument(
         "--mode",
         default="formatted",
@@ -132,13 +136,22 @@ def run(args: argparse.Namespace, spark: SparkSession) -> None:
         from spark_bam_spark.queries import load_all
 
         writer = csv.writer(sys.stdout, lineterminator="\n")
-        writer.writerow(["name", "oracle", "oracle_kind", "headline"])
+        writer.writerow(["name", "tags", "oracle", "oracle_kind", "headline", "headline2"])
         for name, spec in load_all().items():
+            if args.tag and args.tag not in spec.tags:
+                continue
             writer.writerow(
-                [name, bool(spec.oracle), spec.oracle_kind if spec.oracle else "", spec.headline]
+                [
+                    name,
+                    " ".join(spec.tags),
+                    bool(spec.oracle),
+                    spec.oracle_kind if spec.oracle else "",
+                    spec.headline,
+                    spec.headline2,
+                ]
             )
         return
-    if cmd in ("query", "explain"):
+    if cmd == "query":
         from spark_bam_spark.queries import load_all
 
         registry = load_all()
@@ -146,12 +159,18 @@ def run(args: argparse.Namespace, spark: SparkSession) -> None:
             raise SystemExit(
                 f"unknown query {args.name!r}; `list-queries` prints the registry"
             )
-        # every registered query reads its own BAM fixture and ignores the
-        # (spark, sf_dir) signature's table directory
-        df = registry[args.name].fn(spark, "")
-        if cmd == "query":
-            _df_to_out(df, args.out, print_limit=args.print_limit)
-            return
+        df = registry[args.name].fn(spark, args.sf_dir)
+        _df_to_out(df, args.out, print_limit=args.print_limit)
+        return
+    if cmd == "explain":
+        from spark_bam_spark.queries import load_all
+
+        registry = load_all()
+        if args.name not in registry:
+            raise SystemExit(
+                f"unknown query {args.name!r}; `list-queries` prints the registry"
+            )
+        df = registry[args.name].fn(spark, args.sf_dir)
         mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(args.mode)
         print(df._jdf.queryExecution().explainString(mode))
         return

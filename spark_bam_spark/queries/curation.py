@@ -120,7 +120,7 @@ def minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 16-long row per (doc, task), not the stream.
     # distinct=False (r17): collect_set already deduplicates doc ids per
     # shingle, so the posting frame is IDENTICAL (asserted row-for-row in
-    # tools/r17_minhash_post_micro.py) without the distinct pass — the
+    # a one-off r17 micro-benchmark) without the distinct pass — the
     # (doc, s) stream now crosses ONE exchange (the groupBy) instead of
     # two (distinct + groupBy).  Locally a wash (min 0.72 vs 0.78 s —
     # both shuffles partial-aggregate map-side and neither is the local
@@ -159,7 +159,7 @@ def minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # emit the IDENTICAL values and (k, sig) rows — md5(concat_ws(':',k,s))
     # per component, min per doc, k = component index — with the driver
     # chatter collapsed to three parsed expressions (measured −10% on the
-    # full query, tools/r17_minhash_sexpr_micro.py; result identity
+    # full query in a one-off r17 micro-benchmark; result identity
     # asserted at sf0.01 + sf0.1 in the same micro).
     comp_sql = [
         f"cast(conv(substring(md5(concat_ws(':', {k}, s)), 1, 15), 16, 10) as bigint) as h{k}"
@@ -485,7 +485,7 @@ def curation_pipeline_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a redundant full exchange of the gram stream — the contamination
     # branch flows straight into the broadcast join with no shuffle at
     # all.  Contaminated-doc set proven identical and the branch
-    # measured 1.49 → 1.00 s (tools/r17_funnel_distinct_micro.py,
+    # measured 1.49 → 1.00 s (one-off r17 micro-benchmark,
     # interleaved min-of-5).  Join multiplicity from intra-doc repeated
     # grams is absorbed by the final distinct on doc_id.
     grams = _grams(corpus)

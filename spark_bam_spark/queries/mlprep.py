@@ -182,7 +182,7 @@ def _centroid_update(assigned: DataFrame, *keys: str) -> DataFrame:
     r17: the previous shape built 64 ``F.sum(...)`` Columns, 64 division
     Columns and an ``F.array`` through INDIVIDUAL py4j calls — measured
     0.6-0.7 s of driver-side construction time PER CALL SITE at
-    EMB_DIM=64 (tools/r17_semdedup_micro.py; Catalyst analysis itself is
+    EMB_DIM=64 (one-off r17 micro-benchmark; Catalyst analysis itself is
     <50 ms — the cost was round-trip chatter), paid on every invocation.
     Semantics are unchanged: the same 64 DECIMAL(28,12) sums (exact, so
     order-independent), the same double division by the group count —
@@ -998,7 +998,7 @@ def _semdedup_corpus(spark: SparkSession, sf_dir: str):
     only adds the insurance exchange to every broadcast-build job that
     materializes those tiny frames (measured: the corpus
     scan→repartition re-executed inside 4+ broadcast subquery builds per
-    IVF invocation, tools/r18_ivf_jobs.py), and at 100 TB it puts a full
+    IVF invocation, read from the Spark UI's per-job timings), and at 100 TB it puts a full
     corpus shuffle under a scalar count that needs none."""
     emb0 = table(spark, sf_dir, "embeddings").select(
         "vec_id", F.expr("transform(embedding, x -> cast(x as double))").alias("v")
@@ -1249,7 +1249,7 @@ def _ivf_ckpt_mode() -> str:
     only, 'mem' = checkpoint with the vector, 'memw' = mem behind an
     explicit wide repartition (the default), 'cache' = diagnosis only.
 
-    Decision evidence (tools/run_ivf_ckpt_ab.py, fresh process per cell,
+    Decision evidence (one-off A/B script, fresh process per cell,
     idle box, min-of-3; VERIFICATION_r8.md §4a): off/pairs/mem/memw =
     4.46/4.05/4.16/4.64 s at sf0.1, 7.49/18.22/8.67/5.64 at 10x,
     22.11/11.88/23.74/11.33 at 30x.  memw wins 1.33x at 10x and 1.95x
@@ -1393,7 +1393,7 @@ def semdedup_prune_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     explicit wide repartition (_ivf_ckpt_mode 'memw'): the r7 plan
     re-evaluated the 2-distance-pass coarse subtree ~4x (52 exchanges);
     truncating it wins 1.33x at 10x and 1.95x at 30x and ties at sf0.1
-    (clean per-process A/B in tools/run_ivf_ckpt_ab.py; decision math
+    (clean per-process A/B, VERIFICATION_r8.md §4a; decision math
     and the AQE single-partition trap in _ivf_ckpt_mode's docstring)."""
     return _score_clusters_numpy(_semdedup_assign_ivf(spark, sf_dir))
 

@@ -587,7 +587,7 @@ def topk_revenue_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     building a 150k-key DECIMAL sum map); hash-distributing the pruned
     3-column scan on l_orderkey fuses with the aggregation's required
     distribution (still exactly one exchange) and runs both aggregate
-    phases parallel.  Measured 1.23 → 0.76 s (tools/r17_topk_micro.py);
+    phases parallel.  Measured 1.23 → 0.76 s (one-off r17 micro-benchmark);
     on a cluster the wrapper passes through and the default
     partial-first shape stands.  The DECIMAL sum is exact, so the
     result is order-independent — bit-identical (oracle re-verified)."""

@@ -512,7 +512,7 @@ def bm25_topk_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (dl, corpus stats, document frequency, the probe side), and their
     # diverging column pruning defeats Spark's exchange reuse — the
     # executed plan re-ran the scan+explode+groupBy subtree FOUR times
-    # (verified in plans/r17/bm25_topk_docs_before.txt: four separate
+    # (verified in the r17 plan dump of this query: four separate
     # `Scan parquet … Generate … Exchange` chains).  Materializing tf once
     # per run (fresh checkpoint per call — nothing survives across
     # invocations) replaces three re-explosions of the token stream with

@@ -44,13 +44,19 @@ def get_spark(app_name: str = "spark_bam_spark", shuffle_partitions: str | None 
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        # unqualified `timestamp` resolves to LTZ so epoch arithmetic
+        # (unix_micros over a cast) is conf-independent; NTZ→LTZ is exact
+        # under the pinned UTC timezone
+        .config("spark.sql.timestampType", "TIMESTAMP_LTZ")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # events.parquet carries TIMESTAMP(NANOS) which the vectorized reader
+        # rejects; read as long and convert in tables.table()
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # UI off by default (headless harness); SPARK_GRAFT_UI=1 turns it
         # on so measurement tools can read per-job timings from the REST
         # API (perfbench/tracing.py) — no effect on any query
         .config("spark.ui.enabled", "true" if os.environ.get("SPARK_GRAFT_UI") else "false")
-        # where Spark puts its own files; a deployment can keep them under
-        # its work directory
+        # saveAsTable target for bucketed tables (in-memory catalog)
         .config("spark.sql.warehouse.dir", os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/spark_bam_spark_warehouse"))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
     )
@@ -63,8 +69,8 @@ def get_spark(app_name: str = "spark_bam_spark", shuffle_partitions: str | None 
 
 
 def _ship_package(spark: SparkSession) -> None:
-    """Make spark_bam_spark importable on Python workers (check-bam's
-    mapInPandas closures unpickle there). addPyFile is the
+    """Make spark_bam_spark importable on Python workers (mapInPandas
+    and UDF closures unpickle there). addPyFile is the
     cluster-correct distribution path; local workers need it too whenever
     the driver's cwd isn't the repo root."""
     import tempfile

@@ -206,7 +206,7 @@ def fan_out(df: DataFrame, *keys: str, work_factor: float = 1.0) -> DataFrame:
     partial aggregation is the bottleneck and saves little shuffle
     volume: topk_revenue_orders (150k groups from 600k rows, ~4:1)
     measured 1.23 s serial-partial vs 0.76 s keyed vs 1.77 s round-robin
-    (tools/r17_topk_micro.py, interleaved min-of-7 — round-robin pays a
+    (a one-off r17 micro-benchmark, interleaved min-of-7 — round-robin pays a
     SECOND exchange, which is why pricing_summary's earlier fan_out A/B
     lost).  HIGH-combine-ratio aggregations (pricing_summary: 6 groups)
     should keep serial partial agg and no fan_out at all.  On a cluster

@@ -1,7 +1,7 @@
 """Local mirror of the driver's correctness gate.
 
-Runs a registered query on Spark and its oracle SQL on DuckDB (the SQL
-reads the committed truth parquet by absolute path); compares row count, column-name set, and the full
+Runs a registered query on Spark and its oracle SQL on DuckDB over the
+same parquet dir; compares row count, column-name set, and the full
 (order-insensitive) value multiset with EXACT equality — same bar as the
 driver's value hash.
 """
@@ -13,6 +13,15 @@ import math
 from decimal import Decimal
 
 import duckdb
+
+from spark_bam_spark.tables import TABLE_NAMES
+
+
+def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    con = duckdb.connect()
+    for name in TABLE_NAMES:
+        con.execute(f"CREATE VIEW {name} AS SELECT * FROM '{sf_dir}/{name}.parquet'")
+    return con
 
 
 def _norm(v):
@@ -40,7 +49,7 @@ def compare(spark, name: str, spec, sf_dir: str) -> None:
     s_cols = list(df.columns)
     s_rows = [tuple(r) for r in df.collect()]
 
-    con = duckdb.connect()
+    con = duck_con(sf_dir)
     res = con.sql(spec.oracle)
     d_cols = list(res.columns)
     d_rows = res.fetchall()

@@ -205,3 +205,38 @@ def test_bam_writer_bad_cigar_clear_error(spark, tmp_path):
         with pytest.raises(Exception, match="invalid cigar"):
             write_bam_df(df, str(tmp_path / f"bad{i}"), contigs=contigs)
 
+
+def test_classifier_score_empty_document_contract(spark, tmp_path):
+    """ADVICE r3 (datapipe.py): a zero-token document must not diverge the
+    engines — DuckDB's list_aggregate over an empty list yields NULL where
+    Spark's 0-initialized aggregate yields 0. Both sides now COALESCE the
+    sum and NULLIF the token count, so an empty/whitespace-only text row
+    keeps the oracle hash stable."""
+    import duckdb
+
+    from spark_bam_spark.queries import REGISTRY, load_all
+    from tests.oracle import _keyed_rows
+
+    load_all()
+    spec = REGISTRY["classifier_linear_score"]
+    docs = spark.createDataFrame(
+        [(1, "en", "src", "hello world"), (2, "en", "src", ""), (3, "de", "src", "   ")],
+        ["doc_id", "lang", "source", "text"],
+    )
+    sf = str(tmp_path / "sf_empty")
+    docs.coalesce(1).write.parquet(f"{sf}/documents.parquet")
+
+    df = spec.fn(spark, sf)
+    s_rows = [tuple(r) for r in df.collect()]
+
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{sf}/documents.parquet/*.parquet'")
+    res = con.sql(spec.oracle)
+    d_cols, d_rows = list(res.columns), res.fetchall()
+    con.close()
+
+    assert sorted(df.columns) == sorted(d_cols)
+    assert _keyed_rows(df.columns, s_rows) == _keyed_rows(d_cols, d_rows)
+    # the all-empty 'de' group: 0 raw_total, NULL mean (not a crash / NaN)
+    de = {r["lang"]: r for r in df.collect()}["de"]
+    assert de["raw_total"] == 0 and de["mean_score"] is None

@@ -1,7 +1,10 @@
 """Every registered query with an oracle must hash-match DuckDB (the same
-gate the driver runs)."""
+gate the driver runs at sf0.01; we run sf0.001 for speed and sf0.01 for a
+smoke subset)."""
 
 from __future__ import annotations
+
+import os
 
 import pytest
 
@@ -22,6 +25,25 @@ def test_headline_matches_oracle_sf001(spark, sf_medium, name):
     compare(spark, name, REGISTRY[name], sf_medium)
 
 
+# Full-registry sweeps at the driver's scale factor (sf0.01) and one decade
+# above (sf0.1), where tie-breaking/rounding/overflow behaviors can differ
+# from the fast sf0.001 gate.  Opt-in (SPARK_GRAFT_ORACLE_SWEEP=1) to keep
+# default CI time sane; run before every round ends.
+_SWEEP = os.environ.get("SPARK_GRAFT_ORACLE_SWEEP") == "1"
+
+
+@pytest.mark.skipif(not _SWEEP, reason="set SPARK_GRAFT_ORACLE_SWEEP=1 to run")
+@pytest.mark.parametrize("name", WITH_ORACLE)
+def test_query_matches_oracle_sf001_sweep(spark, sf_medium, name):
+    compare(spark, name, REGISTRY[name], sf_medium)
+
+
+@pytest.mark.skipif(not _SWEEP, reason="set SPARK_GRAFT_ORACLE_SWEEP=1 to run")
+@pytest.mark.parametrize("name", WITH_ORACLE)
+def test_query_matches_oracle_sf01_sweep(spark, name):
+    compare(spark, name, REGISTRY[name], "/root/testdata/sf0.1")
+
+
 def test_entry_smoke(spark):
     import __spark_entry__ as e
 
@@ -29,3 +51,116 @@ def test_entry_smoke(spark):
     assert df.count() > 0
     assert set(e.oracle_sql()) <= set(e.queries())
 
+
+def test_decontamination_direction_and_bounds(spark, sf_small):
+    """The decontamination report must be asymmetric and well-formed:
+    train docs are never benchmark docs, benchmark docs always are,
+    the contaminated fraction is a valid share of the train doc's gram
+    set, and the fixture yields a non-vacuous result (DECONTAM_MOD was
+    chosen so a 0-row trivial oracle match cannot hide wrongness)."""
+    from spark_bam_spark.queries.dedup import DECONTAM_MIN_SHARED, DECONTAM_MOD
+
+    rows = REGISTRY["decontamination_ngram_overlap"].fn(spark, sf_small).collect()
+    assert rows, "fixture must exercise at least one contaminated pair"
+    for r in rows:
+        assert r["train_doc"] % DECONTAM_MOD != 0
+        assert r["bench_doc"] % DECONTAM_MOD == 0
+        assert r["n_shared"] >= DECONTAM_MIN_SHARED
+        assert 0 < r["contamination"] <= 1.0
+        assert r["n_shared"] <= r["train_ngrams"]
+
+
+def test_dedup_exact_finds_reingested_groups(spark, sf_small):
+    df = REGISTRY["dedup_exact"].fn(spark, sf_small)
+    rows = df.collect()
+    assert len(rows) > 0
+    assert all(r["group_size"] == 2 for r in rows)
+    assert all(r["survivor_doc_id"] < 1_000_000 for r in rows)
+
+
+def test_embedding_cosine_nonempty_and_blocked(spark, sf_small):
+    rows = REGISTRY["dedup_embedding_cosine"].fn(spark, sf_small).collect()
+    assert len(rows) > 0
+    per_label = {}
+    for r in rows:
+        per_label.setdefault(r["label"], []).append(r["cosine"])
+    for label, cs in per_label.items():
+        assert len(cs) <= 5
+        assert cs == sorted(cs, reverse=True), f"label {label} not rank-ordered"
+
+
+def test_approx_count_distinct_within_tolerance(spark, sf_small):
+    rows = REGISTRY["approx_count_distinct"].fn(spark, sf_small).collect()
+    assert len(rows) > 0
+    assert all(r["within_2pct"] for r in rows)
+
+
+def test_ivf_pruned_scan_actually_prunes(spark, sf_small):
+    df = REGISTRY["cosine_topk_ivf_pruned"].fn(spark, sf_small)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "PartitionFilters" in plan
+    seg = plan.split("PartitionFilters", 1)[1][:200]
+    assert "label" in seg
+
+
+def test_boilerplate_strip_reconstructs_untouched_docs(spark, sf_small):
+    """A doc with n_removed == 0 must rebuild to EXACTLY its original
+    text (the 4-token segmentation partitions the token list), so its
+    clean_hash equals md5(text) — proves reassembly is lossless."""
+    from pyspark.sql import functions as F
+
+    from spark_bam_spark.tables import table
+
+    out = REGISTRY["boilerplate_strip"].fn(spark, sf_small)
+    docs = table(spark, sf_small, "documents").select(
+        "doc_id", F.md5("text").alias("orig_hash")
+    )
+    joined = out.filter(F.col("n_removed") == 0).join(docs, "doc_id")
+    rows = joined.collect()
+    assert len(rows) > 0
+    bad = [r for r in rows if r["clean_hash"] != r["orig_hash"]]
+    assert not bad, f"lossy reassembly for {len(bad)} docs, e.g. {bad[:3]}"
+
+
+def test_substring_spans_are_duplicated_and_maximal(spark, sf_small):
+    """Semantic contract of dedup_substring_spans beyond the oracle: every
+    reported span (a) is a true duplication witness — each of its 8-grams
+    occurs >= 2x corpus-wide — and (b) is maximal — the positions
+    immediately before and after the span are NOT duplicated grams (else
+    the island would have extended)."""
+    from pyspark.sql import functions as F
+
+    from spark_bam_spark.tables import table
+
+    spans = {
+        (r["doc_id"], r["span_start"], r["span_tokens"])
+        for r in REGISTRY["dedup_substring_spans"].fn(spark, sf_small).collect()
+    }
+    assert spans
+    toks = (
+        table(spark, sf_small, "documents")
+        .select("doc_id", F.split("text", " ").alias("w"))
+        .filter(F.size("w") >= 8)
+    )
+    pos = toks.select(
+        "doc_id",
+        F.explode(
+            F.expr(
+                "transform(sequence(1, size(w) - 7),"
+                " i -> struct(i AS i, array_join(slice(w, i, 8), ' ') AS gram))"
+            )
+        ).alias("p"),
+    ).select("doc_id", "p.i", "p.gram")
+    cnt = {r["gram"]: r["c"] for r in pos.groupBy("gram").agg(F.count("*").alias("c")).collect()}
+    by_doc = {}
+    for r in pos.collect():
+        by_doc.setdefault(r["doc_id"], {})[r["i"]] = r["gram"]
+    for doc_id, start, tokens in spans:
+        grams = by_doc[doc_id]
+        last_gram_pos = start + tokens - 8
+        for i in range(start, last_gram_pos + 1):
+            assert cnt[grams[i]] >= 2, f"non-duplicated gram inside span {doc_id}:{i}"
+        if start - 1 in grams:
+            assert cnt[grams[start - 1]] < 2, f"span {doc_id}:{start} not left-maximal"
+        if last_gram_pos + 1 in grams:
+            assert cnt[grams[last_gram_pos + 1]] < 2, f"span {doc_id}:{start} not right-maximal"

@@ -3,10 +3,10 @@
 The hand-written top half of COVERAGE.md maps SURVEY §2 operator IDs to
 implementations; this script maintains the section between the GENERATED
 markers from the live registry so coverage claims stay machine-checkable
-as the registry changes (one row per registered query: verification mode,
-driver-check rounds).
-Rows are sorted by name, so adding or deleting a query adds or deletes
-only its own row.
+as the registry grows (one row per registered query: verification mode,
+tags, driver-check rounds).
+Rows are sorted by (module, name), so adding or deleting a query adds or
+deletes only its own row.
 
 Usage: python tools/gen_coverage.py
 """
@@ -22,6 +22,24 @@ sys.path.insert(0, REPO)
 
 BEGIN = "<!-- BEGIN GENERATED REGISTRY SNAPSHOT (tools/gen_coverage.py) -->"
 END = "<!-- END GENERATED REGISTRY SNAPSHOT -->"
+
+
+def modules_of(names) -> dict[str, str]:
+    """Query name -> the first query module whose source registers it."""
+    import inspect
+    import pkgutil
+
+    from spark_bam_spark import queries as qpkg
+
+    sources = {
+        info.name: inspect.getsource(
+            __import__(f"{qpkg.__name__}.{info.name}", fromlist=["x"])
+        )
+        for info in pkgutil.iter_modules(qpkg.__path__)
+    }
+    return {
+        n: next((m for m, src in sources.items() if f'"{n}"' in src), "?") for n in names
+    }
 
 
 def driver_rounds(name: str) -> str:
@@ -57,7 +75,7 @@ def main() -> None:
         "",
         f"{len(reg)} registered queries, "
         f"{sum(1 for s in reg.values() if s.oracle)} with DuckDB oracle SQL, "
-        f"{sum(1 for s in reg.values() if s.headline)} headline. "
+        f"{sum(1 for s in reg.values() if s.headline)} headline (benched). "
         "Driver column: rounds in which the external driver verified the query "
         "(`hash` = full row/schema/value-hash oracle match, `rows` = rows-only). "
         "Oracle column grades the EVIDENTIARY CLASS, not just presence: "
@@ -69,15 +87,17 @@ def main() -> None:
         "non-deterministic output (e.g. timing stats). "
         f"Classes: {n_derived} derived, {n_golden} golden, {n_inv} invariant.",
         "",
-        "| Query | Oracle | Headline | Driver-checked |",
-        "|---|---|---|---|",
+        "| Query | Module | Oracle | Headline | Tags | Driver-checked |",
+        "|---|---|---|---|---|---|",
     ]
-    for name in sorted(reg):
+    module = modules_of(reg)
+    for name in sorted(reg, key=lambda n: (module[n], n)):
         spec = reg[name]
         lines.append(
-            f"| `{name}` | "
+            f"| `{name}` | {module[name]} | "
             f"{spec.oracle_kind if spec.oracle else 'rows-only'} | "
-            f"{'yes' if spec.headline else ''} | {driver_rounds(name)} |"
+            f"{'yes' if spec.headline else ''} | "
+            f"{' '.join(spec.tags)} | {driver_rounds(name)} |"
         )
     lines += ["", END]
 

@@ -1,18 +1,18 @@
 """Simulate the external driver's correctness gate locally.
 
 Loads ``__spark_entry__.py`` by file path from a foreign cwd (exactly as
-the driver does), runs every entry of ``queries()`` (or the ``--names``
-subset) against its ``oracle_sql()`` twin on DuckDB, and compares row
-count, column names, and the order-insensitive value multiset. The oracle
-SQL reads the committed truth parquet by absolute path, so DuckDB needs
-no views. Queries without oracle SQL get the driver's weaker rows-only
-check, which also demands >0 rows.
+the driver does), takes the FIRST N entries of ``queries()`` (the
+driver's verification window), runs each against its ``oracle_sql()``
+twin on DuckDB over the same parquet dir, and compares row count, column
+names, and the order-insensitive value multiset. Queries without oracle
+SQL get the driver's weaker rows-only check.
 
 Usage:
-    python tools/run_window_sim.py [--names a,b,c]
+    python tools/run_window_sim.py [--sf-dir /root/testdata/sf0.01]
+                                   [--window 50] [--names a,b,c]
 
-Exit status is non-zero if any query fails, so the script can gate a
-commit.
+Exit status is non-zero if any window entry fails, so the script can
+gate a round-end commit.
 """
 
 from __future__ import annotations
@@ -47,7 +47,9 @@ def _keyed(cols, rows):
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--names", default=None, help="comma list (default: the whole registry)")
+    ap.add_argument("--sf-dir", default="/root/testdata/sf0.01")
+    ap.add_argument("--window", type=int, default=50)
+    ap.add_argument("--names", default=None, help="comma list overriding the window")
     args = ap.parse_args()
 
     # foreign-cwd load, like the driver
@@ -61,16 +63,32 @@ def main() -> int:
     import duckdb
 
     from spark_bam_spark.session import get_spark
+    from spark_bam_spark.tables import TABLE_NAMES
 
     spark = get_spark("window-sim")
     qs, osql = mod.queries(), mod.oracle_sql()
-    names = args.names.split(",") if args.names else list(qs)
+    names = args.names.split(",") if args.names else list(qs)[: args.window]
+    if not args.names:
+        # rows-only queries fall out of the driver's window forever once they
+        # record a passing row, so a later regression (crash / empty result)
+        # would go unseen by the driver — always re-check them locally
+        names += [n for n in qs if n not in osql and n not in names]
+        # likewise always include the code-changed greens pinned for
+        # re-verification, even if the window ordering would already put
+        # them up front (belt and braces: the sim must never report green
+        # while a force-recheck name goes unexecuted)
+        from spark_bam_spark.queries import _FORCE_RECHECK
+
+        names += [n for n in _FORCE_RECHECK if n in qs and n not in names]
+
     con = duckdb.connect()
+    for t in TABLE_NAMES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{args.sf_dir}/{t}.parquet'")
 
     ok = bad = rows_only = 0
     for name in names:
         try:
-            df = qs[name](spark, "")
+            df = qs[name](spark, args.sf_dir)
             cols = list(df.columns)
             srows = [tuple(r) for r in df.collect()]
             if name not in osql:
@@ -96,7 +114,7 @@ def main() -> int:
             bad += 1
         print(("PASS" if status else "FAIL"), name, detail, flush=True)
     print(
-        f"green: {ok}/{len(names)}, bad: {bad}"
+        f"window green: {ok}/{len(names)}, bad: {bad}"
         f" (hash-verified: {ok - rows_only}, rows-only: {rows_only})"
     )
     return 1 if bad else 0
