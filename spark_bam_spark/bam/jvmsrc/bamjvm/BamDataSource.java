@@ -10,11 +10,15 @@ import java.util.HashSet;
 import java.util.List;
 import java.util.Map;
 import java.util.Set;
+import org.apache.hadoop.conf.Configuration;
 import org.apache.hadoop.fs.BlockLocation;
 import org.apache.hadoop.fs.FSDataInputStream;
 import org.apache.hadoop.fs.FileStatus;
 import org.apache.hadoop.fs.FileSystem;
 import org.apache.hadoop.fs.Path;
+import org.apache.spark.api.java.JavaSparkContext;
+import org.apache.spark.broadcast.Broadcast;
+import org.apache.spark.sql.SparkSession;
 import org.apache.spark.sql.connector.catalog.SupportsRead;
 import org.apache.spark.sql.connector.catalog.SupportsWrite;
 import org.apache.spark.sql.connector.catalog.Table;
@@ -42,6 +46,7 @@ import org.apache.spark.sql.catalyst.InternalRow;
 import org.apache.spark.sql.types.DataTypes;
 import org.apache.spark.sql.types.StructType;
 import org.apache.spark.sql.util.CaseInsensitiveStringMap;
+import org.apache.spark.util.SerializableConfiguration;
 
 /**
  * JVM-native splittable BAM DataSourceV2 — the engine's BAM scan and
@@ -57,6 +62,30 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap;
  * SupportsPushDownRequiredColumns: only requested columns are decoded.
  */
 public class BamDataSource implements TableProvider {
+
+    /**
+     * The session's Hadoop conf (spark.hadoop.*, object store
+     * credentials, defaultFS), read on the driver for listing, headers,
+     * BAI and mkdirs.
+     */
+    static Configuration sessionConf() {
+        return SparkSession.active().sparkContext().hadoopConfiguration();
+    }
+
+    /**
+     * The session's Hadoop conf as one broadcast per reader or writer
+     * factory, so tasks read it with {@code .value().value()} instead of
+     * each deserializing the whole conf from the task binary.  Spark's
+     * {@link SerializableConfiguration}, not a bamjvm class: the jar is
+     * loaded by different classloaders on the driver and in tasks, and in
+     * local mode a task receives the driver's object itself.  Spark's
+     * ContextCleaner releases the broadcast once the factory is
+     * unreachable.
+     */
+    static Broadcast<SerializableConfiguration> broadcastConf() {
+        JavaSparkContext jsc = JavaSparkContext.fromSparkContext(SparkSession.active().sparkContext());
+        return jsc.broadcast(new SerializableConfiguration(jsc.hadoopConfiguration()));
+    }
 
     static StructType fullSchema() {
         return new StructType()
@@ -212,11 +241,7 @@ public class BamDataSource implements TableProvider {
 
         @Override
         public Scan build() {
-            // capture the session's Hadoop conf (spark.hadoop.*, object
-            // store credentials, defaultFS) at driver plan time; it ships
-            // to executors inside the reader factory
-            return new BamScan(options, required, pushdown,
-                    new SerializableConf(SerializableConf.sessionHadoopConf()));
+            return new BamScan(options, required, pushdown);
         }
     }
 
@@ -336,14 +361,11 @@ public class BamDataSource implements TableProvider {
         private final Map<String, String> options;
         private final StructType required;
         private final Pushdown pushdown;
-        private final SerializableConf sconf;
 
-        BamScan(Map<String, String> options, StructType required, Pushdown pushdown,
-                SerializableConf sconf) {
+        BamScan(Map<String, String> options, StructType required, Pushdown pushdown) {
             this.options = options;
             this.required = required;
             this.pushdown = pushdown;
-            this.sconf = sconf;
         }
 
         @Override
@@ -429,7 +451,7 @@ public class BamDataSource implements TableProvider {
         @Override
         public InputPartition[] planInputPartitions() {
             try {
-                FileSystem fs = rootPath().getFileSystem(sconf.conf);
+                FileSystem fs = rootPath().getFileSystem(sessionConf());
                 List<FileStatus> files = listBamFiles(fs, rootPath());
                 int readsToCheck = (int) optLong("reads_to_check", Checker.DEFAULT_READS_TO_CHECK);
                 long maxReadSize = optLong("max_read_size", Checker.DEFAULT_MAX_READ_SIZE);
@@ -595,7 +617,7 @@ public class BamDataSource implements TableProvider {
 
         @Override
         public PartitionReaderFactory createReaderFactory() {
-            return new BamReaderFactory(required, sconf);
+            return new BamReaderFactory(required, broadcastConf());
         }
 
         /**
@@ -858,13 +880,11 @@ public class BamDataSource implements TableProvider {
         private static final long serialVersionUID = 3L;
 
         private final StructType required;
-        // session Hadoop conf, serialized once per stage (the factory
-        // rides the broadcast task binary, not each split)
-        private final SerializableConf sconf;
+        private final Broadcast<SerializableConfiguration> conf;
 
-        BamReaderFactory(StructType required, SerializableConf sconf) {
+        BamReaderFactory(StructType required, Broadcast<SerializableConfiguration> conf) {
             this.required = required;
-            this.sconf = sconf;
+            this.conf = conf;
         }
 
         @Override
@@ -882,7 +902,7 @@ public class BamDataSource implements TableProvider {
         @Override
         public PartitionReader<org.apache.spark.sql.vectorized.ColumnarBatch> createColumnarReader(
                 InputPartition partition) {
-            return new BamColumnarReader((BamSplit) partition, required, sconf.conf);
+            return new BamColumnarReader((BamSplit) partition, required, conf.value().value());
         }
     }
 }

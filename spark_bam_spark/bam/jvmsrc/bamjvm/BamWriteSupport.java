@@ -5,9 +5,11 @@ import java.io.Serializable;
 import java.util.Map;
 import java.util.TreeMap;
 import java.util.zip.CRC32;
+import org.apache.hadoop.conf.Configuration;
 import org.apache.hadoop.fs.FSDataOutputStream;
 import org.apache.hadoop.fs.FileSystem;
 import org.apache.hadoop.fs.Path;
+import org.apache.spark.broadcast.Broadcast;
 import org.apache.spark.sql.catalyst.InternalRow;
 import org.apache.spark.sql.catalyst.util.ArrayData;
 import org.apache.spark.sql.catalyst.util.MapData;
@@ -25,6 +27,7 @@ import org.apache.spark.sql.types.DataTypes;
 import org.apache.spark.sql.types.StructField;
 import org.apache.spark.sql.types.StructType;
 import org.apache.spark.unsafe.types.UTF8String;
+import org.apache.spark.util.SerializableConfiguration;
 
 /**
  * JVM-native distributed BAM sink (S18): one part-BAM per
@@ -222,7 +225,6 @@ final class BamWriteSupport {
         private final boolean bai;
         private final int deflateLevel;
         private final ColMap cols;
-        private final SerializableConf sconf;
         private final String jobToken;
         private boolean truncate;
 
@@ -261,7 +263,6 @@ final class BamWriteSupport {
                 throw new IllegalArgumentException("bam write: deflate_level must be in [0, 9]");
             }
             this.cols = new ColMap(info.schema());
-            this.sconf = new SerializableConf(SerializableConf.sessionHadoopConf());
         }
 
         @Override
@@ -281,7 +282,7 @@ final class BamWriteSupport {
         public DataWriterFactory createBatchWriterFactory(PhysicalWriteInfo info) {
             try {
                 Path dir = new Path(path);
-                FileSystem fs = dir.getFileSystem(sconf.conf);
+                FileSystem fs = dir.getFileSystem(BamDataSource.sessionConf());
                 if (truncate && fs.exists(dir)) {
                     fs.delete(dir, true);
                 }
@@ -289,7 +290,8 @@ final class BamWriteSupport {
             } catch (IOException e) {
                 throw new java.io.UncheckedIOException(e);
             }
-            return new BamWriterFactory(path, names, lengths, blockPayload, bai, deflateLevel, cols, sconf, jobToken);
+            return new BamWriterFactory(path, names, lengths, blockPayload, bai, deflateLevel, cols,
+                    BamDataSource.broadcastConf(), jobToken);
         }
 
         @Override
@@ -312,12 +314,12 @@ final class BamWriteSupport {
         private final boolean bai;
         private final int deflateLevel;
         private final ColMap cols;
-        private final SerializableConf sconf;
+        private final Broadcast<SerializableConfiguration> conf;
         private final String jobToken;
 
         BamWriterFactory(String path, String[] names, int[] lengths, int blockPayload,
-                         boolean bai, int deflateLevel, ColMap cols, SerializableConf sconf,
-                         String jobToken) {
+                         boolean bai, int deflateLevel, ColMap cols,
+                         Broadcast<SerializableConfiguration> conf, String jobToken) {
             this.path = path;
             this.names = names;
             this.lengths = lengths;
@@ -325,7 +327,7 @@ final class BamWriteSupport {
             this.bai = bai;
             this.deflateLevel = deflateLevel;
             this.cols = cols;
-            this.sconf = sconf;
+            this.conf = conf;
             this.jobToken = jobToken;
         }
 
@@ -333,7 +335,7 @@ final class BamWriteSupport {
         public DataWriter<InternalRow> createWriter(int partitionId, long taskId) {
             try {
                 return new BamDataWriter(path, names, lengths, blockPayload, bai, deflateLevel,
-                        cols, sconf, partitionId, taskId, jobToken);
+                        cols, conf.value().value(), partitionId, taskId, jobToken);
             } catch (IOException e) {
                 throw new java.io.UncheckedIOException(e);
             }
@@ -385,7 +387,7 @@ final class BamWriteSupport {
         private long baiNoCoor;
 
         BamDataWriter(String dir, String[] names, int[] lengths, int blockPayload,
-                      boolean bai, int deflateLevel, ColMap cols, SerializableConf sconf,
+                      boolean bai, int deflateLevel, ColMap cols, Configuration conf,
                       int partitionId, long taskId, String jobToken) throws IOException {
             this.blockPayload = blockPayload;
             this.bai = bai;
@@ -394,7 +396,7 @@ final class BamWriteSupport {
             this.block = new byte[blockPayload];
             for (int i = 0; i < names.length; i++) nameToIdx.put(names[i], i);
             Path base = new Path(dir);
-            this.fs = base.getFileSystem(sconf.conf);
+            this.fs = base.getFileSystem(conf);
             this.finalPath = new Path(base,
                     String.format("part-%05d-%s.bam", partitionId, jobToken));
             this.tmpPath = new Path(base,

@@ -9,11 +9,13 @@ import java.util.HashSet;
 import java.util.List;
 import java.util.Map;
 import java.util.Set;
+import org.apache.hadoop.conf.Configuration;
 import org.apache.hadoop.fs.BlockLocation;
 import org.apache.hadoop.fs.FSDataInputStream;
 import org.apache.hadoop.fs.FileStatus;
 import org.apache.hadoop.fs.FileSystem;
 import org.apache.hadoop.fs.Path;
+import org.apache.spark.broadcast.Broadcast;
 import org.apache.spark.sql.catalyst.InternalRow;
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow;
 import org.apache.spark.sql.connector.catalog.SupportsRead;
@@ -33,6 +35,7 @@ import org.apache.spark.sql.types.StructField;
 import org.apache.spark.sql.types.StructType;
 import org.apache.spark.sql.util.CaseInsensitiveStringMap;
 import org.apache.spark.unsafe.types.UTF8String;
+import org.apache.spark.util.SerializableConfiguration;
 
 /**
  * The engine's BGZF blocks-metadata source (S9, the reference's
@@ -113,20 +116,17 @@ public class BlocksSource implements TableProvider {
 
         @Override
         public Scan build() {
-            return new BlocksScan(options, required,
-                    new SerializableConf(SerializableConf.sessionHadoopConf()));
+            return new BlocksScan(options, required);
         }
     }
 
     static final class BlocksScan implements Scan, Batch {
         private final Map<String, String> options;
         private final StructType required;
-        private final SerializableConf sconf;
 
-        BlocksScan(Map<String, String> options, StructType required, SerializableConf sconf) {
+        BlocksScan(Map<String, String> options, StructType required) {
             this.options = options;
             this.required = required;
-            this.sconf = sconf;
         }
 
         @Override
@@ -147,7 +147,7 @@ public class BlocksSource implements TableProvider {
             }
             try {
                 Path root = new Path(pathOpt);
-                FileSystem fs = root.getFileSystem(sconf.conf);
+                FileSystem fs = root.getFileSystem(BamDataSource.sessionConf());
                 List<FileStatus> files = BamDataSource.BamScan.listBamFiles(fs, root);
                 String sizeOpt = options.get("split_size");
                 SplitPlanner planner =
@@ -191,7 +191,7 @@ public class BlocksSource implements TableProvider {
 
         @Override
         public PartitionReaderFactory createReaderFactory() {
-            return new BlocksReaderFactory(required, sconf);
+            return new BlocksReaderFactory(required, BamDataSource.broadcastConf());
         }
     }
 
@@ -227,16 +227,16 @@ public class BlocksSource implements TableProvider {
         private static final long serialVersionUID = 1L;
 
         private final StructType required;
-        private final SerializableConf sconf;
+        private final Broadcast<SerializableConfiguration> conf;
 
-        BlocksReaderFactory(StructType required, SerializableConf sconf) {
+        BlocksReaderFactory(StructType required, Broadcast<SerializableConfiguration> conf) {
             this.required = required;
-            this.sconf = sconf;
+            this.conf = conf;
         }
 
         @Override
         public PartitionReader<InternalRow> createReader(InputPartition partition) {
-            return new BlocksPartitionReader((BlockSplit) partition, required, sconf.conf);
+            return new BlocksPartitionReader((BlockSplit) partition, required, conf.value().value());
         }
     }
 
@@ -258,10 +258,9 @@ public class BlocksSource implements TableProvider {
         private final byte[] head = new byte[Bgzf.HEADER_LEN];
         private final byte[] foot = new byte[4];
         private InternalRow current;
-        private final org.apache.hadoop.conf.Configuration conf;
+        private final Configuration conf;
 
-        BlocksPartitionReader(BlockSplit split, StructType required,
-                org.apache.hadoop.conf.Configuration conf) {
+        BlocksPartitionReader(BlockSplit split, StructType required, Configuration conf) {
             this.split = split;
             this.fields = required.fields();
             this.pathStr = UTF8String.fromString(split.path);
@@ -271,7 +270,7 @@ public class BlocksSource implements TableProvider {
         private void open() throws IOException {
             opened = true;
             Path p = new Path(split.path);
-            FileSystem fs = p.getFileSystem(conf != null ? conf : new org.apache.hadoop.conf.Configuration());
+            FileSystem fs = p.getFileSystem(conf);
             in = fs.open(p);
             if (split.start == 0) {
                 cpos = 0;

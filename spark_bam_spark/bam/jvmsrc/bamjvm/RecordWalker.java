@@ -45,7 +45,7 @@ final class RecordWalker {
 
     RecordWalker(BamDataSource.BamSplit split, Configuration conf) {
         this.split = split;
-        this.conf = conf != null ? conf : new Configuration();
+        this.conf = conf;
         if (split.rangeLo != null) {
             this.los = split.rangeLo;
             this.his = split.rangeHi;

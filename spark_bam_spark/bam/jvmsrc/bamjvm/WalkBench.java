@@ -19,7 +19,8 @@ public final class WalkBench {
         int repeat = args.length > 2 ? Integer.parseInt(args[2]) : 3;
 
         Path p = new Path(path);
-        FileSystem fs = p.getFileSystem(new Configuration());
+        Configuration conf = new Configuration();
+        FileSystem fs = p.getFileSystem(conf);
         long size = fs.getFileStatus(p).getLen();
         HeaderData hdr;
         try (FSDataInputStream in = fs.open(p)) {
@@ -57,7 +58,7 @@ public final class WalkBench {
                         path, s, Math.min(s + splitSize, size), hdr,
                         Checker.DEFAULT_READS_TO_CHECK, Checker.DEFAULT_MAX_READ_SIZE, false,
                         null, null, null);
-                RecordWalker w = new RecordWalker(split, null);
+                RecordWalker w = new RecordWalker(split, conf);
                 while (w.advance()) {
                     n++;
                 }

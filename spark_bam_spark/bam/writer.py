@@ -25,7 +25,6 @@ import struct
 from dataclasses import dataclass
 
 from spark_bam_spark.bam.bgzf import EOF_BLOCK, BlockMetadata, Pos, compress_block
-from spark_bam_spark.bam.checker import HeaderInfo
 from spark_bam_spark.bam.records import BamRecord, encode_record
 
 BAM_MAGIC = b"BAM\x01"
@@ -346,7 +345,3 @@ def make_fixture(path: str, n: int = 2500, block_payload: int = 4096, seed: int 
     LoadBAMTest.scala:23-27) with full sidecar ground truth."""
     recs = synth_records(n, seed=seed)
     return write_bam(path, CONTIG_NAMES, CONTIG_LENGTHS, recs, block_payload=block_payload)
-
-
-def header_info() -> HeaderInfo:
-    return HeaderInfo(tuple(CONTIG_LENGTHS))
