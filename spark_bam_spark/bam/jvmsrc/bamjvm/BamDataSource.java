@@ -215,8 +215,8 @@ public class BamDataSource implements TableProvider {
 
         @Override
         public Filter[] pushFilters(Filter[] filters) {
-            // Collect rname/ref_idx equality and pos bounds for zone-map
-            // block pruning, but keep EVERY filter residual (return all):
+            // Collect rname/ref_idx equality and pos bounds for BAI
+            // pruning, but keep EVERY filter residual (return all):
             // pruning can only skip byte ranges, never substitute for the
             // predicate.  Contig
             // NAMES are absorbed as names and resolved against EACH file's
@@ -247,7 +247,7 @@ public class BamDataSource implements TableProvider {
 
     /**
      * Pushed predicate state: rname equality NAMES + raw ref_idx set +
-     * pos bounds — drives .zones sidecar block pruning at planning time.
+     * pos bounds — drives BAI chunk pruning at planning time.
      * Absorbing a filter never relaxes anything.  Names are stored
      * unresolved and mapped to ref indices per FILE ({@link #effectiveRefIdxs})
      * against that file's own dictionary; a pushed name absent from a
@@ -276,7 +276,7 @@ public class BamDataSource implements TableProvider {
 
         /**
          * The candidate ref_idx set for ONE file's dictionary, or null
-         * when no ref constraint was pushed (pos-only pruning).  May be
+         * when no ref constraint was pushed (a pos-only filter).  May be
          * empty: every pushed name missing from this file's dictionary
          * means no block of this file can satisfy the conjunction, so an
          * empty set correctly prunes the whole file.
@@ -509,7 +509,7 @@ public class BamDataSource implements TableProvider {
             } catch (IOException e) {
                 blockLocs = new BlockLocation[0];
             }
-            List<long[]> cand = candidateRanges(fs, f.getPath(), hdr);
+            List<long[]> cand = candidateRanges(fs, f, hdr);
             if (cand != null) {
                 // indexed scan: pack surviving block ranges into
                 // partitions by estimated uncompressed cost, so the
@@ -656,15 +656,19 @@ public class BamDataSource implements TableProvider {
         }
 
         /**
-         * Compressed-byte ranges surviving the index, or null = no
-         * pruning info.  Prefers the BAI (spec-standard bin/chunk lookup)
-         * and falls back to the engine's .zones block zone map.  A split
-         * is planned iff it
-         * intersects a surviving range; pruning can only skip, never
-         * corrupt, because Spark re-applies every filter.
+         * Compressed-byte ranges surviving the file's BAI, or null = no
+         * pruning info (no pushed filter, no trusted index, or a filter
+         * the index cannot answer), which plans the file unpruned.  A
+         * split is planned iff it intersects a surviving range; pruning
+         * can only skip, never corrupt, because Spark re-applies every
+         * filter.
+         *
+         * The BAI is organized per reference, so chunk lookup needs a
+         * concrete ref set.  A pos-only filter, an unplaced ref (-1) or
+         * a ref outside the dictionary cannot be answered by it (unplaced
+         * reads live in the tail, which the BAI has no chunks for).
          */
-        private List<long[]> candidateRanges(FileSystem fs, Path bam, HeaderData hdr)
-                throws IOException {
+        private List<long[]> candidateRanges(FileSystem fs, FileStatus bam, HeaderData hdr) {
             if (!pushdown.active()) {
                 return null;
             }
@@ -672,86 +676,17 @@ public class BamDataSource implements TableProvider {
             // a directory scan prunes each file by its own header, never
             // another file's (dictionaries may diverge across files)
             Set<Integer> refIdxs = pushdown.effectiveRefIdxs(hdr.names);
-            List<long[]> bai = candidateRangesBai(fs, bam, hdr, refIdxs);
-            if (bai != null) {
-                return bai;
-            }
-            Path zones = new Path(bam.toString() + ".zones");
-            if (!fs.exists(zones)) {
-                return null;
-            }
-            List<long[]> rows = new ArrayList<>();
-            try (java.io.BufferedReader rd = new java.io.BufferedReader(
-                    new java.io.InputStreamReader(fs.open(zones), java.nio.charset.StandardCharsets.US_ASCII))) {
-                String line;
-                while ((line = rd.readLine()) != null) {
-                    line = line.trim();
-                    if (line.isEmpty()) {
-                        continue;
-                    }
-                    String[] parts = line.split(",");
-                    rows.add(new long[] {
-                        Long.parseLong(parts[0]), Long.parseLong(parts[1]), Long.parseLong(parts[2]),
-                        Long.parseLong(parts[3]), Long.parseLong(parts[4]),
-                    });
-                }
-            }
-            List<long[]> keep = new ArrayList<>();
-            for (int i = 0; i < rows.size(); i++) {
-                long bstart = rows.get(i)[0];
-                long rmin = rows.get(i)[1];
-                long rmax = rows.get(i)[2];
-                long pmin = rows.get(i)[3];
-                long pmax = rows.get(i)[4];
-                if (refIdxs != null) {
-                    boolean any = false;
-                    for (int r : refIdxs) {
-                        if (rmin <= r && r <= rmax) {
-                            any = true;
-                            break;
-                        }
-                    }
-                    if (!any) {
-                        continue;
-                    }
-                }
-                if (pushdown.posLo != null && pmax < pushdown.posLo) {
-                    continue;
-                }
-                if (pushdown.posHi != null && pmin > pushdown.posHi) {
-                    continue;
-                }
-                // true block span: the next zone row's start bounds this
-                // block's compressed size, so adjacent kept blocks merge
-                long end = i + 1 < rows.size() ? rows.get(i + 1)[0] : bstart + Bgzf.MAX_BLOCK_SIZE;
-                keep.add(new long[] {bstart, Math.min(end, bstart + Bgzf.MAX_BLOCK_SIZE)});
-            }
-            return keep;
-        }
-
-        /**
-         * BAI chunk lookup for the pushed interval — needs a concrete ref
-         * set (the BAI is organized per reference).  A pushed ref outside
-         * the index's range (unplaced -1, or out of dictionary) cannot be
-         * answered by chunk lookup, so BAI pruning is disabled for it and
-         * the zone-map / full-scan path preserves "pruning can only
-         * skip" (unplaced reads live in the tail, which the BAI has no
-         * chunks for).
-         */
-        private List<long[]> candidateRangesBai(FileSystem fs, Path bam, HeaderData hdr,
-                Set<Integer> refIdxs) throws IOException {
             if (refIdxs == null) {
                 return null;
             }
-            Path baiPath = new Path(bam.toString() + ".bai");
-            if (!fs.exists(baiPath)) {
-                return null;
-            }
-            Bai idx = Bai.parse(fs, baiPath);
             for (int r : refIdxs) {
-                if (r < 0 || r >= idx.nRefs()) {
+                if (r < 0 || r >= hdr.nRefs()) {
                     return null;
                 }
+            }
+            Bai idx = Bai.forBam(fs, bam, hdr.nRefs());
+            if (idx == null) {
+                return null;
             }
             long beg = pushdown.posLo != null ? pushdown.posLo : 0;
             long end = pushdown.posHi != null ? pushdown.posHi + 1 : 1L << 29;
@@ -759,8 +694,7 @@ public class BamDataSource implements TableProvider {
             refs.sort(Integer::compare);
             List<long[]> keep = new ArrayList<>();
             for (int r : refs) {
-                long contigLen = r < hdr.lengths.length ? hdr.lengths[r] : 1L << 29;
-                for (long[] c : idx.queryChunks(r, beg, Math.min(end, contigLen))) {
+                for (long[] c : idx.queryChunks(r, beg, Math.min(end, hdr.lengths[r]))) {
                     keep.add(new long[] {c[0] >>> 16, (c[1] >>> 16) + 1});
                 }
             }

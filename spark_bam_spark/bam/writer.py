@@ -11,11 +11,6 @@ byte positions, so records span block boundaries (block-unaligned, the
 adversarial case the reference generates via htsjdk-rewrite). Because we
 write the bytes ourselves we get exact ground truth for free: the
 .records sidecar IS the differential-testing oracle.
-
-Additionally writes a ``.zones`` sidecar — per-block min/max of
-(ref_idx, pos), a parquet-style zone map the DataSource uses for
-predicate pushdown (the Spark-first replacement for BAI chunk lookup,
-Intervals.scala:171-207).
 """
 
 from __future__ import annotations
@@ -74,11 +69,8 @@ def write_bam(
     header = encode_header(names, lengths)
     stream = bytearray(header)
     rec_uoffsets: list[int] = []
-    zone_rows: list[tuple[int, int, int, int, int]] = []  # filled per block later
-    rec_meta: list[tuple[int, int, int]] = []  # (uoffset, ref_idx, pos)
     for r in records:
         rec_uoffsets.append(len(stream))
-        rec_meta.append((len(stream), r.ref_idx, r.pos))
         stream += encode_record(r)
 
     blocks: list[BlockMetadata] = []
@@ -113,18 +105,6 @@ def write_bam(
     positions = [to_pos(u) for u in rec_uoffsets]
     header_end = to_pos(len(header))
 
-    # block-level zone map over records *starting* in each block
-    per_block: dict[int, list[tuple[int, int]]] = {}
-    for uoff, ref_idx, rpos in rec_meta:
-        p = to_pos(uoff)
-        per_block.setdefault(p.block_pos, []).append((ref_idx, rpos))
-    for b in blocks:
-        vals = per_block.get(b.start)
-        if vals:
-            zone_rows.append(
-                (b.start, min(v[0] for v in vals), max(v[0] for v in vals), min(v[1] for v in vals), max(v[1] for v in vals))
-            )
-
     if bai if bai is not None else sidecars:
         # spec-standard BAI (writer owns exact positions → exact index)
         from spark_bam_spark.bam.bai import build_bai, write_bai
@@ -143,9 +123,6 @@ def write_bam(
         with open(path + ".records", "w") as f:
             for p in positions:
                 f.write(f"{p.block_pos},{p.offset}\n")
-        with open(path + ".zones", "w") as f:
-            for row in zone_rows:
-                f.write(",".join(map(str, row)) + "\n")
     return WriteResult(path, len(records), blocks, positions, header_end)
 
 

@@ -383,10 +383,12 @@ def find_starts(spark: SparkSession, bam_path: str, probes: list[int]) -> DataFr
 def bai_sidecar_pairs(path: str) -> list[tuple[str, str]]:
     """(bam, bai) pairs when EVERY data file under ``path`` carries a
     spec §5.2 ``.bai`` sidecar (a single indexed file, or a rewrite
-    directory written with ``bai=True``); ``[]`` otherwise.  All-or-
-    nothing on purpose: a partially indexed directory must fall back to
-    the scan path — serving idxstats from half an index would silently
-    undercount."""
+    directory written with ``bai=True``) that is not older than its
+    ``.bam``; ``[]`` otherwise.  All-or-nothing on purpose: a partially
+    indexed directory must fall back to the scan path — serving idxstats
+    from half an index would silently undercount.  An index older than
+    its data (the scan's ``Bai.forBam`` rule) describes some earlier
+    file, so it selects the scan path too."""
     import glob as _glob
     import os
 
@@ -395,7 +397,10 @@ def bai_sidecar_pairs(path: str) -> list[tuple[str, str]]:
     else:
         bams = [path] if os.path.exists(path) else []
     pairs = [(b, b + ".bai") for b in bams]
-    if pairs and all(os.path.exists(bai) for _, bai in pairs):
+    if pairs and all(
+        os.path.exists(bai) and os.stat(bai).st_mtime_ns >= os.stat(bam).st_mtime_ns
+        for bam, bai in pairs
+    ):
         return pairs
     return []
 

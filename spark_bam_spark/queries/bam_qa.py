@@ -738,7 +738,7 @@ def bam_scan_reads_jvm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "bam_interval_pushdown",
-    doc="S7 loadBamIntervals: indexed interval scan via zone-map pushdown",
+    doc="S7 loadBamIntervals: indexed interval scan via BAI pushdown",
     oracle=f"""
     SELECT qname, rname, pos, end_pos FROM read_parquet('{_TRUTH_PQ}')
     WHERE rname = '1' AND pos >= 13000 AND pos < 1000000

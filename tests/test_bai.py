@@ -92,23 +92,11 @@ def test_bai_pushdown_matches_full_scan(spark, bam):
         .filter((F.col("rname") == "1") & (F.col("pos") >= 100_000) & (F.col("pos") <= 500_000))
     )
     want = sorted((r["qname"], r["pos"]) for r in full.select("qname", "pos").collect())
-    # .zones removed → the BAI is the only pruning source
-    zones = bam.path + ".zones"
-    saved = None
-    if os.path.exists(zones):
-        with open(zones) as f:
-            saved = f.read()
-        os.remove(zones)
-    try:
-        pruned = (
-            read_bam(spark, bam.path, split_size=4096)
-            .filter((F.col("rname") == "1") & (F.col("pos") >= 100_000) & (F.col("pos") <= 500_000))
-        )
-        got = sorted((r["qname"], r["pos"]) for r in pruned.select("qname", "pos").collect())
-    finally:
-        if saved is not None:
-            with open(zones, "w") as f:
-                f.write(saved)
+    pruned = (
+        read_bam(spark, bam.path, split_size=4096)
+        .filter((F.col("rname") == "1") & (F.col("pos") >= 100_000) & (F.col("pos") <= 500_000))
+    )
+    got = sorted((r["qname"], r["pos"]) for r in pruned.select("qname", "pos").collect())
     assert got == want and len(got) > 0
 
 
@@ -119,6 +107,36 @@ def test_bai_pushdown_prunes_partitions(spark, bam):
     filtered = unfiltered.filter((F.col("rname") == "1") & (F.col("pos").between(100_000, 120_000)))
     assert 0 < len(scan_splits(filtered)) < len(scan_splits(unfiltered))
     assert filtered.count() > 0
+
+
+def test_stale_bai_after_rewrite_is_not_trusted(spark, tmp_path):
+    """A .bam rewritten in place without reindexing keeps the older .bai
+    of the file it replaced.  The scan must not prune with that index:
+    region, contig and pos-only filters return the rewritten file's true
+    counts."""
+    from spark_bam_spark.bam.writer import synth_records, write_bam
+
+    path = str(tmp_path / "r.bam")
+    make_fixture(path, n=3000, block_payload=2048, seed=1)
+    recs = synth_records(9000, seed=2)
+    write_bam(path, CONTIG_NAMES, CONTIG_LENGTHS, recs, block_payload=2048,
+              sidecars=False, bai=False)
+    t = os.stat(path).st_mtime_ns - 60 * 10**9
+    os.utime(path + ".bai", ns=(t, t))
+
+    df = read_bam(spark, path, split_size=4096)
+    one, two = CONTIG_NAMES.index("1"), CONTIG_NAMES.index("2")
+    cases = [
+        ((F.col("rname") == "1") & F.col("pos").between(100_000, 500_000),
+         lambda r: r.ref_idx == one and 100_000 <= r.pos <= 500_000),
+        (F.col("rname") == "2", lambda r: r.ref_idx == two),
+        (F.col("pos").between(100_000, 200_000), lambda r: 100_000 <= r.pos <= 200_000),
+    ]
+    for cond, keep in cases:
+        want = sum(1 for r in recs if keep(r))
+        assert want > 0
+        assert df.filter(cond).count() == want
+    assert df.count() == 9000
 
 
 def test_streaming_encoder_byte_identical_to_write_bam(tmp_path):

@@ -45,10 +45,12 @@ def test_idxstats_shape(spark, bam_path, capsys):
 def test_idxstats_index_path_matches_scan(spark, bam_path, tmp_path, capsys):
     """samtools semantics: idxstats serves from the BAI metadata
     pseudo-bin when every data file is indexed (O(index), no data scan)
-    and falls back to the rname/flag scan otherwise — both paths must
-    print the same report."""
+    and falls back to the rname/flag scan otherwise (a missing index, or
+    one older than its .bam) — both paths must print the same report."""
+    import os
     import shutil
 
+    from spark_bam_spark.bam.writer import make_fixture
     from spark_bam_spark.operators import qa
 
     assert qa.bai_sidecar_pairs(bam_path), "fixture should ship a .bai sidecar"
@@ -59,6 +61,16 @@ def test_idxstats_index_path_matches_scan(spark, bam_path, tmp_path, capsys):
     assert qa.bai_sidecar_pairs(noidx) == []  # no sidecar -> scan fallback
     scan_lines = _run(spark, ["idxstats", noidx], capsys)
     assert idx_lines == scan_lines
+
+    # another file's index, older than the .bam: stale -> scan fallback
+    stale = str(tmp_path / "stale.bam")
+    shutil.copyfile(bam_path, stale)
+    make_fixture(str(tmp_path / "other.bam"), n=300)
+    shutil.copyfile(str(tmp_path / "other.bam.bai"), stale + ".bai")
+    t = os.stat(stale).st_mtime_ns - 60 * 10**9
+    os.utime(stale + ".bai", ns=(t, t))
+    assert qa.bai_sidecar_pairs(stale) == []
+    assert _run(spark, ["idxstats", stale], capsys) == scan_lines
 
 
 def test_idxstats_path_parity_on_flag_rich_fixture(spark, tmp_path, capsys):

@@ -152,9 +152,9 @@ def test_batch_scan_is_the_only_read_surface(spark, fixture_path, tmp_path):
     ids=["interval", "rname-eq", "rname-in", "ref-idx", "pos-only", "unknown-contig"],
 )
 def test_filter_pushdown_equality(spark, fixture_path, py_rows, predicate, keep):
-    """Indexed scans: the JVM reader's BAI / zone-map pruning must return
-    exactly the decoder's rows for the same predicate — pruning can only
-    skip, never corrupt."""
+    """Indexed scans: the JVM reader's BAI pruning (or none, for the
+    filters the BAI cannot answer) must return exactly the decoder's rows
+    for the same predicate — pruning can only skip, never corrupt."""
     jv = read_bam(spark, fixture_path, split_size=16384)
     cols = ["qname", "rname", "pos", "end_pos"]
     want = sorted(((r["qname"], r["rname"], r["pos"], r["end_pos"])
@@ -162,29 +162,65 @@ def test_filter_pushdown_equality(spark, fixture_path, py_rows, predicate, keep)
     assert scan_rows(jv.filter(predicate(jv)), cols) == want
 
 
-@pytest.mark.parametrize("sidecar", ["bai", "zones"])
-def test_pruning_source_isolated(spark, fixture_path, tmp_path_factory, sidecar):
-    """Each pruning source must work alone: a fixture copy carrying ONLY
-    the .bai (or only the .zones) still prunes partitions and returns the
-    exact filtered row set."""
+def _put_index(state: str, fixture_path: str, path: str) -> None:
+    """Give ``path`` (a fresh copy of the fixture) a .bai in ``state``."""
     import shutil
 
-    d = tmp_path_factory.mktemp(f"only_{sidecar}")
+    from spark_bam_spark.bam.bai import parse_bai, write_bai
+    from spark_bam_spark.bam.writer import make_fixture
+
+    bai = path + ".bai"
+    if state == "truncated":
+        with open(fixture_path + ".bai", "rb") as f:
+            data = f.read()
+        with open(bai, "wb") as f:
+            f.write(data[: len(data) // 2])
+    elif state == "nref-mismatch":
+        idx = parse_bai(fixture_path + ".bai")
+        idx.bins.append({})
+        idx.linear.append([])
+        idx.stats.append(None)
+        write_bai(bai, idx)
+    elif state == "past-eof":
+        larger = os.path.join(os.path.dirname(path), "larger.bam")
+        make_fixture(larger, n=10_000, block_payload=4096)
+        shutil.copy(larger + ".bai", bai)
+        assert os.path.getsize(larger) > os.path.getsize(path)
+    else:
+        shutil.copy(fixture_path + ".bai", bai)
+    if state == "stale":
+        t = os.stat(path).st_mtime_ns - 60 * 10**9
+        os.utime(bai, ns=(t, t))
+
+
+@pytest.mark.parametrize("index", ["bai", "stale", "truncated", "nref-mismatch", "past-eof"])
+def test_pruning_source_isolated(spark, fixture_path, tmp_path_factory, index):
+    """A fixture copy carrying a fresh .bai prunes partitions and returns
+    the exact filtered row set.  An index that fails a check (older than
+    its .bam, cut short, a different reference count, offsets past the
+    .bam's end) is ignored: the same rows, and as many partitions as the
+    unfiltered scan, without an error."""
+    import shutil
+
+    d = tmp_path_factory.mktemp(f"idx_{index}")
     path = str(d / "f.bam")
     shutil.copy(fixture_path, path)
-    shutil.copy(f"{fixture_path}.{sidecar}", f"{path}.{sidecar}")
+    _put_index(index, fixture_path, path)
 
     expect = sorted(((r["qname"], r["pos"]) for r in map(_row, oracle_rows(fixture_path))
                      if r["rname"] == "1" and 13000 <= r["pos"] < 1_000_000), key=repr)
     jv = read_bam(spark, path, split_size=16384)
     pruned = jv.filter((jv.rname == "1") & (jv.pos >= 13000) & (jv.pos < 1_000_000))
     assert scan_rows(pruned, ["qname", "pos"]) == expect
-    assert pruned.select("pos").rdd.getNumPartitions() < jv.rdd.getNumPartitions()
+    if index == "bai":
+        assert pruned.select("pos").rdd.getNumPartitions() < jv.rdd.getNumPartitions()
+    else:
+        assert pruned.select("pos").rdd.getNumPartitions() == jv.rdd.getNumPartitions()
 
 
 def test_filter_pushdown_prunes_partitions(spark, fixture_path):
     """A selective interval must plan fewer tasks than the full scan —
-    the zone map actually skips byte ranges, not just rows."""
+    the BAI actually skips byte ranges, not just rows."""
     full = read_bam(spark, fixture_path, split_size=16384)
     pruned = full.filter((full.rname == "1") & (full.pos >= 13000) & (full.pos < 50_000))
     n_full = full.rdd.getNumPartitions()
