@@ -1,24 +1,27 @@
-"""spark_bam_spark — a PySpark-native analytics engine.
+"""spark_bam_spark — a PySpark re-expression of hammerlab/spark-bam.
 
-A from-scratch re-expression of the capabilities of hammerlab/spark-bam
-(reference read-only at /root/reference/) on top of the Spark DataFrame /
-SQL / Structured Streaming stack, extended with large-scale
-training-data-pipeline operators (dedup, similarity search, text analysis,
-multimodal columns).
+The BAM scan layer (split planning, record-boundary checking, the
+check-bam QA harness) on the Spark DataFrame / SQL stack, plus query
+families over a synthetic corpus (TPC-H-style relational, dedup,
+similarity, text, graph, ML-prep and data-pipeline queries).
 
 Layout:
-    session     — SparkSession factory tuned for the local[32] harness
+    session     — SparkSession factory: local[N] over the CPUs this
+                  process may use, AQE, Arrow, UTC session time
     tables      — parquet table loaders for the synthetic TPC-H-ish corpus
-    queries     — the operator registry: every operator from SURVEY.md §2
-                  exposed as (spark, sf_dir) -> DataFrame with a DuckDB
-                  oracle SQL string for differential testing
+    functions   — scalar Column functions (Pos packing, size formatting)
+    cli         — the CLI mirroring the reference's QA harness (check-bam,
+                  compute-splits, index-blocks, ...)
+    queries     — the query registry: each query exposed as
+                  (spark, sf_dir) -> DataFrame with a DuckDB oracle SQL
+                  string for differential testing
     bam/        — the format layer: BGZF blocks, record-boundary checkers,
                   the bamjvm DataSourceV2 reader and writer
                   (jvmsrc/bamjvm/, entered through bam/reader.py), and the
                   pure-Python codec, checker and writer that serve as the
                   independent oracle and the fixture generator
-    operators/  — analytic operator implementations (relational, dedup,
-                  similarity, text, QA pipelines)
+    operators/  — the check-bam QA pipelines (qa), Z-order layout and
+                  bucketed tables
     streaming/  — Structured Streaming pipelines over the events table
 """
 

@@ -361,6 +361,7 @@ public class BamDataSource implements TableProvider {
         private final Map<String, String> options;
         private final StructType required;
         private final Pushdown pushdown;
+        private InputPartition[] planned;
 
         BamScan(Map<String, String> options, StructType required, Pushdown pushdown) {
             this.options = options;
@@ -447,9 +448,19 @@ public class BamDataSource implements TableProvider {
         }
 
         /** Split planning: one batch of BamSplits over the root's listed
-         *  .bam files, each read by a BamColumnarReader. */
+         *  .bam files, each read by a BamColumnarReader.  Spark plans two
+         *  BatchScanExec nodes over one scan object per action, and each
+         *  asks for the partitions, so the first plan is kept: every
+         *  header and .bai is read once per action. */
         @Override
-        public InputPartition[] planInputPartitions() {
+        public synchronized InputPartition[] planInputPartitions() {
+            if (planned == null) {
+                planned = planSplits();
+            }
+            return planned;
+        }
+
+        private InputPartition[] planSplits() {
             try {
                 FileSystem fs = rootPath().getFileSystem(sessionConf());
                 List<FileStatus> files = listBamFiles(fs, rootPath());

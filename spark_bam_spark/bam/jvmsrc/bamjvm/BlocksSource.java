@@ -123,6 +123,7 @@ public class BlocksSource implements TableProvider {
     static final class BlocksScan implements Scan, Batch {
         private final Map<String, String> options;
         private final StructType required;
+        private InputPartition[] planned;
 
         BlocksScan(Map<String, String> options, StructType required) {
             this.options = options;
@@ -139,8 +140,16 @@ public class BlocksSource implements TableProvider {
             return this;
         }
 
+        /** Planned once per scan object, as BamScan.planInputPartitions. */
         @Override
-        public InputPartition[] planInputPartitions() {
+        public synchronized InputPartition[] planInputPartitions() {
+            if (planned == null) {
+                planned = planSplits();
+            }
+            return planned;
+        }
+
+        private InputPartition[] planSplits() {
             String pathOpt = options.get("path");
             if (pathOpt == null) {
                 throw new IllegalArgumentException("bamjvm blocks source requires a path");

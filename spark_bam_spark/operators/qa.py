@@ -55,18 +55,22 @@ def _cached_block(path: str, start: int) -> tuple[bytes, int]:
     return val
 
 
-def _open_window(path: str, block_start: int, n_blocks: int) -> bytes:
+def _window_with_bounds(path: str, block_start: int, n_blocks: int):
     """Decompress ``n_blocks`` blocks from ``block_start`` into one flat
-    buffer (the checker needs successor-record lookahead)."""
-    parts = []
-    s = block_start
+    buffer (the checker needs successor-record lookahead); returns (flat
+    bytes, block u-starts, block c-starts) for Pos mapping."""
+    parts, ustarts, bstarts = [], [], []
+    s, u = block_start, 0
     for _ in range(n_blocks):
         data, nxt = _cached_block(path, s)
         if not data:
             break
+        ustarts.append(u)
+        bstarts.append(s)
         parts.append(data)
+        u += len(data)
         s = nxt
-    return b"".join(parts)
+    return b"".join(parts), ustarts, bstarts
 
 
 def calls(spark: SparkSession, bam_path: str, stride: int = 1) -> DataFrame:
@@ -95,7 +99,7 @@ def calls(spark: SparkSession, bam_path: str, stride: int = 1) -> DataFrame:
                     with open(row.path, "rb") as f:
                         headers[row.path] = parse_header(f).info()
                 info = headers[row.path]
-                flat = _open_window(row.path, row.start, _LOOKAHEAD_BLOCKS)
+                flat = _window_with_bounds(row.path, row.start, _LOOKAHEAD_BLOCKS)[0]
                 count = row.uncompressed_size
                 eager, upstream = sweep_calls(flat, count, info)
                 offs = np.arange(0, count, stride, dtype=np.int32)
@@ -159,7 +163,7 @@ def flags_sweep(spark: SparkSession, bam_path: str, limit_blocks: int | None = N
                     with open(row.path, "rb") as f:
                         headers[row.path] = parse_header(f).info()
                 info = headers[row.path]
-                flat = _open_window(row.path, row.start, _LOOKAHEAD_BLOCKS)
+                flat = _window_with_bounds(row.path, row.start, _LOOKAHEAD_BLOCKS)[0]
                 flags = full_flags(flat, row.uncompressed_size, info)
                 num = np.zeros(row.uncompressed_size, dtype=np.int32)
                 for a in flags.values():
@@ -672,22 +676,6 @@ def fp_metadata(spark: SparkSession, bam_path: str) -> DataFrame:
 # compare-splits over a file list (CompareSplits.scala:40-110): per-file
 # Result (split counts, diffs, timings) + A9/A10 stats reduction
 # ---------------------------------------------------------------------------
-
-
-def _window_with_bounds(path: str, block_start: int, n_blocks: int):
-    """(flat bytes, block u-starts, block c-starts) for Pos mapping."""
-    parts, ustarts, bstarts = [], [], []
-    s, u = block_start, 0
-    for _ in range(n_blocks):
-        data, nxt = _cached_block(path, s)
-        if not data:
-            break
-        ustarts.append(u)
-        bstarts.append(s)
-        parts.append(data)
-        u += len(data)
-        s = nxt
-    return b"".join(parts), ustarts, bstarts
 
 
 def _compute_splits_one(path: str, split_size: int, upstream: bool) -> tuple[list, float]:

@@ -33,8 +33,7 @@ class QuerySpec:
     # Evidentiary class of the oracle — graded differently by COVERAGE.md:
     #   "derived":   the SQL recomputes the result independently from the
     #                input tables (full derivation grade — the default);
-    #   "golden":    the SQL replays a committed dump (tools/gen_bam_golden
-    #                or an independent renderer); regression-pin grade
+    #   "golden":    the SQL replays a committed dump; regression-pin grade
     #                unless the dump itself came from an independent
     #                implementation (see each query's docstring);
     #   "invariant": the SQL checks invariants of the result (e.g. timing
@@ -184,7 +183,7 @@ _DRIVER_CHECK_PRIORITY: tuple[str, ...] = (
     "tpch_q13_order_distribution",
     "tpch_q15_top_supplier",
     "tpch_q17_small_quantity_revenue",
-    # -- genuinely rows-only, never driver-checked (12) ---------------------
+    # -- genuinely rows-only, never driver-checked (9) ----------------------
     "bam_check_confusion",
     "bam_compute_splits",
     "bam_full_check",
@@ -194,9 +193,6 @@ _DRIVER_CHECK_PRIORITY: tuple[str, ...] = (
     "bam_close_calls",
     "bam_fp_metadata",
     "compare_splits_stats",
-    "multimodal_decode_features",
-    "multimodal_frame_sample",
-    "multimodal_ann_pipeline",
     # -- new in r4 (never driver-checked; the two §2.9 twins take the two
     # spare window slots; everything below plus the unpinned late-r4
     # additions — curation/PQ/count-min/funnel/substring-spans/Bloom/BM25/
@@ -330,7 +326,6 @@ def _import_query_modules() -> None:
         dedup,
         graph,
         mlprep,
-        multimodal_q,
         relational,
         scalar_fn,
         similarity,

@@ -994,9 +994,9 @@ CHUNK_IVF_K = 16  # coarse cells (centroid init: the K smallest hashes)
 CHUNK_NPROBE = 2  # cells searched per query
 CHUNK_TOPK = 10
 
-# deterministic 16-dim chunk embedding: md5 digest bytes scaled to [0, 1]
-# (the same hash-to-vector device as the multimodal fake codec, so the
-# oracle re-derives vectors straight from the fingerprint)
+# deterministic 16-dim chunk embedding: md5 digest bytes scaled to [0, 1],
+# a pure function of the fingerprint, so the oracle re-derives the vectors
+# straight from it
 _CHUNK_EMB = (
     "transform(sequence(1, 16), i -> "
     "cast(conv(substr(chunk_hash, 2*i - 1, 2), 16, 10) as double) / 255.0d)"

@@ -151,9 +151,7 @@ def test_list_queries_prints_registry(spark, capsys):
     assert {"pricing_summary", "dedup_minhash_lsh", "curation_pipeline_funnel"} <= names
     kinds = {ln.split(",")[0]: ln.split(",")[3] for ln in lines[1:]}
     assert kinds["pricing_summary"] == "derived"
-    # upgraded golden → derived in r8 (tools/gen_media_truth.py); the
-    # golden class is retired — nothing should report it anymore
-    assert kinds["multimodal_ppm_real_decode"] == "derived"
+    # the golden class is retired — nothing should report it anymore
     assert "golden" not in kinds.values()
     assert kinds["bam_time_load"] == "invariant"
 

@@ -18,11 +18,11 @@ from spark_bam_spark.queries import load_all
 REGISTRY = load_all()
 _SWEEP = os.environ.get("SPARK_GRAFT_EMPTY_SWEEP") == "1"
 
-# BAM/SAM/multimodal queries read committed binary fixtures, not the sf
+# BAM/SAM queries read committed binary fixtures, not the sf
 # tables — an empty *table* dir is not their degenerate case (an empty BAM
 # is covered by the format-layer tests).
 _TABLE_QUERIES = sorted(
-    n for n in REGISTRY if not n.startswith(("bam_", "sam_", "multimodal_", "compare_"))
+    n for n in REGISTRY if not n.startswith(("bam_", "sam_", "compare_"))
 )
 
 

@@ -229,6 +229,38 @@ def test_filter_pushdown_prunes_partitions(spark, fixture_path):
     assert pruned.count() > 0  # non-vacuous
 
 
+def _local_bytes_read(spark) -> int:
+    """Bytes read so far through every Hadoop filesystem of scheme file."""
+    stats = spark.sparkContext._jvm.org.apache.hadoop.fs.FileSystem.getAllStatistics()
+    return sum(s.getBytesRead() for s in stats if s.getScheme() == "file")
+
+
+def test_planning_reads_header_and_bai_once(spark, fixture_path, tmp_path):
+    """Planning a fresh one-file scan reads its header once and its .bai
+    at most once, although Spark asks the scan for its partitions from
+    two physical plan nodes.  The first getNumPartitions() of a
+    DataFrame plans; no job runs, so the driver does all the reading."""
+    import shutil
+
+    path = str(tmp_path / "f.bam")
+    shutil.copy(fixture_path, path)
+    shutil.copy(fixture_path + ".bai", path + ".bai")
+    bai_size = os.path.getsize(path + ".bai")
+    header_read = min(bgzf.MAX_BLOCK_SIZE, os.path.getsize(path))
+
+    full = read_bam(spark, path, split_size=16384)
+    before = _local_bytes_read(spark)
+    n_full = full.rdd.getNumPartitions()
+    assert 0 < _local_bytes_read(spark) - before <= header_read
+
+    pruned = full.filter(full.rname == "1")
+    before = _local_bytes_read(spark)
+    n_pruned = pruned.rdd.getNumPartitions()
+    grown = _local_bytes_read(spark) - before
+    assert bai_size < grown <= header_read + bai_size
+    assert n_pruned < n_full  # the index was used, not only read
+
+
 @pytest.mark.parametrize("spec", ["0-64k", "64k-", "0-50k,200k-", "100k-0.2m"])
 def test_byte_ranges_option(spark, fixture_path, py_rows, spec):
     """P3 byte-range selection: a split is planned iff it intersects a

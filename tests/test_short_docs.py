@@ -86,7 +86,7 @@ _TABLE_ORACLE_QUERIES = sorted(
     n
     for n, s in REGISTRY.items()
     if s.oracle is not None
-    and not n.startswith(("bam_", "sam_", "multimodal_", "compare_"))
+    and not n.startswith(("bam_", "sam_", "compare_"))
 )
 
 

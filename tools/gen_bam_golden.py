@@ -1,33 +1,16 @@
-"""Generate committed expected-output sidecars that upgrade the remaining
-rows-only registry queries to hash-grade driver checks.
+"""Generate the committed compare-splits truth sidecars.
 
-Two kinds of file, with different evidentiary weight:
+``cmp_records.parquet`` / ``cmp_blocks.parquet`` dump the record
+positions and block starts of the three compare-splits fixtures straight
+from the fixture generator's return value (generator-derived and
+decoder-independent, the same status as tools/gen_bam_truth.py), so the
+oracle can DERIVE split counts with the same arithmetic the planner uses
+(first record at-or-after the first block at-or-after each split_size
+boundary).  The qa2500 checker goldens are derived by
+tools/gen_checker_truth.py.
 
-1. TRUTH sidecars (generator-derived, decoder-independent — same status
-   as tools/gen_bam_truth.py): ``cmp_records.parquet`` /
-   ``cmp_blocks.parquet`` dump the record positions and block starts of
-   the three compare-splits fixtures straight from the fixture
-   generator's return value, so the oracle can DERIVE split counts with
-   the same arithmetic the planner uses (first record at-or-after the
-   first block at-or-after each split_size boundary).
-
-2. GOLDEN files (reference-style regression pins, the discipline of the
-   reference CLI's committed check-bam outputs,
-   cli/src/test/resources/output/check-bam/1.bam:1-16): the checker
-   diagnostics (full-check histogram/CDF, close calls, FP metadata,
-   three-way confusion) and the real-codec multimodal decodes are
-   dumped from one verified run of the engine itself.  They are NOT an
-   independent derivation — value-level correctness of those operators
-   is pinned by tests/test_checker.py's truth-table/property tests and
-   tests/test_multimodal.py's exact-value tests — but once committed
-   they let the external driver hash-detect any regression instead of
-   only counting rows.  The multimodal goldens are keyed by media_id
-   (payloads depend only on doc_id), dumped at sf0.1 whose doc_id set
-   is a superset of every smaller fixture, so the oracle JOINs them
-   against the sf-dir's documents table.
-
-Deterministic; rerun only if the fixture recipe or a pinned operator
-deliberately changes.  Outputs are committed under tests/fixtures/.
+Deterministic; rerun only if the fixture recipe deliberately changes.
+Outputs are committed under tests/fixtures/.
 """
 
 from __future__ import annotations
@@ -79,45 +62,5 @@ def write_cmp_truth() -> None:
     print(f"cmp truth: {len(rec_rows)} records, {len(blk_rows)} blocks")
 
 
-# NOTE (r7): every qa2500 checker golden (full_check, full_check_cdf,
-# three_way, close_calls, fp_metadata) is no longer dumped here —
-# tools/gen_checker_truth.py DERIVES all five from an independent checker
-# implementation + generator-side metadata rendering (derivation grade,
-# not regression-pin grade).
-# NOTE (r8): the multimodal real-codec sidecars moved the same way —
-# tools/gen_media_truth.py derives all three from the synthesis formulas
-# without importing operators/multimodal.py, so nothing golden-grade is
-# dumped from the engine anymore.  The engine-side dump below is kept
-# ONLY as a cross-check path (it must agree with the derivation; the
-# derivation is what gets committed).
-GOLDEN_QUERIES = {
-    "multimodal_ppm_real_decode": "multimodal_golden_ppm.parquet",
-    "multimodal_wav_real_decode": "multimodal_golden_wav.parquet",
-    "multimodal_y4m_frame_sample": "multimodal_golden_y4m.parquet",
-}
-
-GOLDEN_SF_DIR = "/root/testdata/sf0.1"  # superset doc_id range for the joins
-
-# Caveat: the registered multimodal queries now semi-join their media to
-# the committed golden's media_id set (so driver runs at sf > 0.1 cannot
-# false-red).  Regenerating VALUES for the same id range works through
-# the registry fns below; to EXPAND the id range, delete the golden files
-# first or call operators/multimodal.decode_features directly.
-
-
-def write_goldens() -> None:
-    from spark_bam_spark.queries import load_all
-    from spark_bam_spark.session import get_spark
-
-    registry = load_all()
-    spark = get_spark("gen-bam-golden", shuffle_partitions="8")
-    for name, fname in GOLDEN_QUERIES.items():
-        tbl = registry[name].fn(spark, GOLDEN_SF_DIR).toArrow()
-        pq.write_table(tbl, os.path.join(OUT, fname))
-        print(f"golden {name}: {tbl.num_rows} rows -> {fname}")
-    spark.stop()
-
-
 if __name__ == "__main__":
     write_cmp_truth()
-    write_goldens()
