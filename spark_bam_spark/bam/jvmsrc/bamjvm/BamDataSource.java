@@ -464,13 +464,10 @@ public class BamDataSource implements TableProvider {
             try {
                 FileSystem fs = rootPath().getFileSystem(sessionConf());
                 List<FileStatus> files = listBamFiles(fs, rootPath());
-                int readsToCheck = (int) optLong("reads_to_check", Checker.DEFAULT_READS_TO_CHECK);
-                long maxReadSize = optLong("max_read_size", Checker.DEFAULT_MAX_READ_SIZE);
                 boolean permissive = "permissive".equals(options.getOrDefault("mode", "failfast"));
                 // whole waves of the session's parallelism, or the fixed
                 // split_size stride (SplitPlanner has the rule)
                 SplitPlanner planner = SplitPlanner.of(files, optLong("split_size", -1));
-                double ratio = Double.parseDouble(options.getOrDefault("compression_ratio", "3.0"));
                 String rangesOpt = options.get("ranges");
                 List<long[]> byteRanges = rangesOpt == null ? null : parseByteRanges(rangesOpt);
                 // Per-file planning (header parse + locality RPC + index
@@ -481,8 +478,7 @@ public class BamDataSource implements TableProvider {
                 // file order, so the split list is byte-identical to the
                 // sequential plan.
                 List<List<InputPartition>> perFile =
-                        mapFiles(files, f -> planFile(fs, f, planner, ratio, byteRanges,
-                                readsToCheck, maxReadSize, permissive));
+                        mapFiles(files, f -> planFile(fs, f, planner, byteRanges, permissive));
                 List<InputPartition> splits = new ArrayList<>();
                 for (List<InputPartition> fileSplits : perFile) {
                     splits.addAll(fileSplits);
@@ -494,8 +490,7 @@ public class BamDataSource implements TableProvider {
         }
 
         private List<InputPartition> planFile(FileSystem fs, FileStatus f, SplitPlanner planner,
-                double ratio, List<long[]> byteRanges, int readsToCheck, long maxReadSize,
-                boolean permissive) throws IOException {
+                List<long[]> byteRanges, boolean permissive) throws IOException {
             List<InputPartition> splits = new ArrayList<>();
             String p = f.getPath().toString();
             HeaderData hdr;
@@ -539,7 +534,7 @@ public class BamDataSource implements TableProvider {
                         }
                     }
                 }
-                for (List<long[]> group : packRanges(clipped, planner.target, ratio)) {
+                for (List<long[]> group : packRanges(clipped, planner.target, COMPRESSION_RATIO)) {
                     long[] lows = new long[group.size()];
                     long[] highs = new long[group.size()];
                     for (int i = 0; i < group.size(); i++) {
@@ -547,7 +542,7 @@ public class BamDataSource implements TableProvider {
                         highs[i] = group.get(i)[1];
                     }
                     splits.add(new BamSplit(p, lows[0], highs[highs.length - 1], hdr,
-                            readsToCheck, maxReadSize, permissive, lows, highs,
+                            permissive, lows, highs,
                             hostsFor(blockLocs, lows[0], highs[highs.length - 1])));
                 }
                 return splits;
@@ -567,8 +562,8 @@ public class BamDataSource implements TableProvider {
                         continue;
                     }
                 }
-                splits.add(new BamSplit(p, s, e, hdr, readsToCheck, maxReadSize,
-                        permissive, null, null, hostsFor(blockLocs, s, e)));
+                splits.add(new BamSplit(p, s, e, hdr, permissive, null, null,
+                        hostsFor(blockLocs, s, e)));
             }
             return splits;
         }
@@ -713,14 +708,18 @@ public class BamDataSource implements TableProvider {
         }
     }
 
+    /** The reference's estimated BAM compression ratio, for packRanges. */
+    static final double COMPRESSION_RATIO = 3.0;
+
     /**
      * Greedy cost-capped grouping of candidate compressed-byte ranges —
      * the reference's cappedCostGroups with an estimated compression
-     * ratio (Intervals.scala:110-117; default ratio 3.0): each group's
-     * estimated uncompressed cost <= splitSize; oversized ranges are cut
-     * at the cap, so skewed interval queries get partitions proportional
-     * to data volume.  Public so that the bam_pack_ranges registry query
-     * can run this packer from the driver through py4j.
+     * ratio (Intervals.scala:110-117; the scan passes {@link
+     * #COMPRESSION_RATIO}): each group's estimated uncompressed cost <=
+     * splitSize; oversized ranges are cut at the cap, so skewed interval
+     * queries get partitions proportional to data volume.  Public so that
+     * the bam_pack_ranges registry query can run this packer from the
+     * driver through py4j.
      */
     public static List<List<long[]>> packRanges(List<long[]> ranges, long splitSize, double ratio) {
         long cap = Math.max(1, (long) (splitSize / ratio));
@@ -783,8 +782,6 @@ public class BamDataSource implements TableProvider {
         final long start;
         final long end;
         final HeaderData header;
-        final int readsToCheck;
-        final long maxReadSize;
         final boolean permissive;
         // indexed scans: multiple candidate byte ranges packed into one
         // partition by estimated uncompressed cost; null = the contiguous
@@ -795,15 +792,12 @@ public class BamDataSource implements TableProvider {
         // stores / local fs without block metadata
         final String[] hosts;
 
-        BamSplit(String path, long start, long end, HeaderData header, int readsToCheck,
-                long maxReadSize, boolean permissive, long[] rangeLo, long[] rangeHi,
-                String[] hosts) {
+        BamSplit(String path, long start, long end, HeaderData header, boolean permissive,
+                long[] rangeLo, long[] rangeHi, String[] hosts) {
             this.path = path;
             this.start = start;
             this.end = end;
             this.header = header;
-            this.readsToCheck = readsToCheck;
-            this.maxReadSize = maxReadSize;
             this.permissive = permissive;
             this.rangeLo = rangeLo;
             this.rangeHi = rangeHi;

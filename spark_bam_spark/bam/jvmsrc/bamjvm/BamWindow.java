@@ -9,23 +9,21 @@ import org.apache.hadoop.fs.FSDataInputStream;
  * reference's SeekableUncompressedBytes
  * (bgzf/.../block/UncompressedBytes.scala:13-81; cited, not copied).
  *
- * All reads are positioned reads on the Hadoop stream, so the window is
- * safe to use against any Hadoop-compatible filesystem.
+ * Blocks come from one {@link Bgzf.Reader}: the window reads its stream
+ * sequentially and each block once, so it works against any
+ * Hadoop-compatible filesystem.
  */
 final class BamWindow {
-    final FSDataInputStream in;
     byte[] buf = new byte[1 << 20];
     int len = 0;
     long[] blockStarts = new long[64];
     int[] blockUstarts = new int[64];
     int nBlocks = 0;
-    boolean empty = false;
+    final boolean empty;
 
-    private long nextCpos;
-    private boolean exhausted = false;
+    private final Bgzf.Reader blocks;
     private final BgzfCodec inflater;
     private final boolean ownsInflater;
-    private final byte[] cbuf = new byte[Bgzf.MAX_BLOCK_SIZE];
 
     /**
      * Open at the first BGZF block at/after {@code start} ({@code start
@@ -44,61 +42,23 @@ final class BamWindow {
      * many windows in turn.
      */
     BamWindow(FSDataInputStream in, long start, BgzfCodec inflater) throws IOException {
-        this.in = in;
+        this.blocks = new Bgzf.Reader(in, start);
         this.ownsInflater = inflater == null;
         this.inflater = ownsInflater ? BgzfCodec.decompressor() : inflater;
-        if (start == 0) {
-            nextCpos = 0;
-        } else {
-            byte[] probe = new byte[Bgzf.MAX_BLOCK_SIZE * 2];
-            int got = readAt(start, probe, probe.length);
-            int rel = got <= 0 ? -1 : Bgzf.findBlockStart(probe, got, 0);
-            if (rel < 0) {
-                empty = true;
-                return;
-            }
-            nextCpos = start + rel;
-        }
         loadBlock();
-        if (nBlocks == 0) {
-            empty = true;
-        }
-    }
-
-    private int readAt(long pos, byte[] dst, int want) throws IOException {
-        int total = 0;
-        while (total < want) {
-            int got = in.read(pos + total, dst, total, want - total);
-            if (got <= 0) {
-                break;
-            }
-            total += got;
-        }
-        return total;
+        empty = nBlocks == 0;
     }
 
     /** Decompress the next block onto the window; false at stream end. */
     boolean loadBlock() throws IOException {
-        if (exhausted) {
+        long at = blocks.pos;
+        int bsize = blocks.next();
+        if (bsize < 0) {
             return false;
         }
-        int got = readAt(nextCpos, cbuf, Bgzf.MAX_BLOCK_SIZE);
-        if (got < Bgzf.HEADER_LEN) {
-            exhausted = true;
-            return false;
-        }
-        int bsize = Bgzf.parseBlockHeader(cbuf, 0, got);
-        if (bsize < 0 || got < bsize) {
-            exhausted = true;
-            return false;
-        }
-        long isize = Bgzf.i32(cbuf, bsize - 4) & 0xFFFFFFFFL;
-        if (isize == 0) {
-            exhausted = true; // standard BGZF EOF block
-            return false;
-        }
+        long isize = Bgzf.i32(blocks.block, bsize - 4) & 0xFFFFFFFFL;
         grow(len + (int) isize);
-        int produced = Bgzf.inflateBlock(inflater, cbuf, bsize, buf, len);
+        int produced = Bgzf.inflateBlock(inflater, blocks.block, bsize, buf, len);
         if (nBlocks == blockStarts.length) {
             long[] ns = new long[nBlocks * 2];
             int[] nu = new int[nBlocks * 2];
@@ -107,11 +67,10 @@ final class BamWindow {
             blockStarts = ns;
             blockUstarts = nu;
         }
-        blockStarts[nBlocks] = nextCpos;
+        blockStarts[nBlocks] = at;
         blockUstarts[nBlocks] = len;
         nBlocks++;
         len += produced;
-        nextCpos += bsize;
         return true;
     }
 
@@ -180,7 +139,7 @@ final class BamWindow {
      * must not be used afterwards.
      */
     void release() {
-        exhausted = true;
+        blocks.done = true;
         if (ownsInflater) {
             inflater.close();
         }

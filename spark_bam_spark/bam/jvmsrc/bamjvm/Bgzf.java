@@ -2,6 +2,7 @@ package bamjvm;
 
 import java.io.IOException;
 import java.util.zip.DataFormatException;
+import org.apache.hadoop.fs.FSDataInputStream;
 
 /**
  * BGZF block layer, JVM side — same behavior contract as the engine's
@@ -10,6 +11,7 @@ import java.util.zip.DataFormatException;
  * compressed block size.  The payloads are inflated by {@link BgzfCodec}:
  * libdeflate when its JNI shim loads, else {@code java.util.zip}.  The
  * Python module stays on zlib and serves as the independent decoder.
+ * {@link Reader} is the only code in the jar that reads BGZF bytes.
  * Reference behavior parity (cited, not copied): header parse
  * bgzf/.../block/Header.scala:48-83, block-start search
  * FindBlockStart.scala:8-37.
@@ -142,5 +144,83 @@ final class Bgzf {
             throw new IOException("BGZF CRC32 mismatch: corrupt block payload");
         }
         return produced;
+    }
+
+    /**
+     * Sequential block reader over one open stream — the reference's
+     * block Stream (bgzf/.../block/Stream.scala; cited, not copied).  It
+     * starts at the first block at/after an offset and reads each next
+     * block exactly once: its 18-byte header (plus any extra subfields),
+     * then the rest of its {@code bsize} bytes.  A short read, a header
+     * that does not parse, or the ISIZE-0 EOF block ends the stream
+     * quietly, so trailing garbage and a cut last block are tolerated.
+     * The caller keeps ownership of the stream.
+     */
+    static final class Reader {
+        private final FSDataInputStream in;
+        /** The block last returned by {@link #next}, in [0, bsize). */
+        final byte[] block = new byte[MAX_BLOCK_SIZE];
+        /** Compressed offset of the block the next {@link #next} reads. */
+        long pos;
+        /** Set at the end of the stream, and by {@link BamWindow#release}. */
+        boolean done = false;
+
+        /**
+         * Position on the first block at/after {@code start}: {@code
+         * start == 0} is trusted; otherwise a 128 KiB probe finds the
+         * next block boundary, and none within 64 KiB means no blocks.
+         */
+        Reader(FSDataInputStream in, long start) throws IOException {
+            this.in = in;
+            in.seek(start);
+            if (start != 0) {
+                byte[] probe = new byte[MAX_BLOCK_SIZE * 2];
+                int got = read(probe, 0, probe.length);
+                int rel = got <= 0 ? -1 : findBlockStart(probe, got, 0);
+                if (rel < 0) {
+                    done = true;
+                    return;
+                }
+                start += rel;
+                in.seek(start);
+            }
+            pos = start;
+        }
+
+        /**
+         * Read the block at {@link #pos} into {@link #block} and return
+         * its compressed size, or -1 at the end of the stream.  A
+         * returned block's ISIZE is never 0.
+         */
+        int next() throws IOException {
+            if (done) {
+                return -1;
+            }
+            int got = read(block, 0, HEADER_LEN);
+            int hlen = 12 + u16(block, 10);
+            if (got == HEADER_LEN && hlen > HEADER_LEN && hlen <= MAX_BLOCK_SIZE) {
+                got += read(block, got, hlen - got); // extra subfields besides BC
+            }
+            int bsize = parseBlockHeader(block, 0, got);
+            if (bsize < 0 || read(block, got, bsize - got) < bsize - got
+                    || i32(block, bsize - 4) == 0) {
+                done = true;
+                return -1;
+            }
+            pos += bsize;
+            return bsize;
+        }
+
+        private int read(byte[] dst, int off, int want) throws IOException {
+            int total = 0;
+            while (total < want) {
+                int got = in.read(dst, off + total, want - total);
+                if (got <= 0) {
+                    break;
+                }
+                total += got;
+            }
+            return total;
+        }
     }
 }

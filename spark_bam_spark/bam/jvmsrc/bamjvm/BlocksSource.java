@@ -41,8 +41,8 @@ import org.apache.spark.util.SerializableConfiguration;
  * The engine's BGZF blocks-metadata source (S9, the reference's
  * Blocks.scala:47-208 as behavior; oracle: bgzf.py metadata_stream):
  * parallel in-file block
- * discovery — one partition per byte split, header-only walk (payloads
- * skipped), no sidecar required.  Same split-ownership rule as the
+ * discovery — one partition per byte split, each block read once and
+ * never inflated, no sidecar required.  Same split-ownership rule as the
  * record reader: a split emits the blocks whose header starts in
  * [start, end), re-syncing on the first block boundary at/after start.
  *
@@ -250,22 +250,18 @@ public class BlocksSource implements TableProvider {
     }
 
     /**
-     * Header-only block walk: positioned reads of the 18-byte BGZF
-     * header plus the 4-byte ISIZE footer per block — no payload bytes
-     * touched, no inflater.  Stops at split end (next split owns the
-     * block starting there), at the standard ISIZE=0 EOF block, or at a
+     * The split's block walk: one {@link Bgzf.Reader} reads the blocks
+     * sequentially, each once, and their metadata is emitted without
+     * inflating them.  Stops at split end (next split owns the block
+     * starting there), at the standard ISIZE=0 EOF block, or at a
      * non-BGZF header (trailing garbage tolerated).
      */
     static final class BlocksPartitionReader implements PartitionReader<InternalRow> {
         private final BlockSplit split;
         private final StructField[] fields;
         private FSDataInputStream in;
+        private Bgzf.Reader blocks;
         private final UTF8String pathStr;
-        private long cpos;
-        private boolean opened = false;
-        private boolean done = false;
-        private final byte[] head = new byte[Bgzf.HEADER_LEN];
-        private final byte[] foot = new byte[4];
         private InternalRow current;
         private final Configuration conf;
 
@@ -276,63 +272,20 @@ public class BlocksSource implements TableProvider {
             this.conf = conf;
         }
 
-        private void open() throws IOException {
-            opened = true;
-            Path p = new Path(split.path);
-            FileSystem fs = p.getFileSystem(conf);
-            in = fs.open(p);
-            if (split.start == 0) {
-                cpos = 0;
-                return;
-            }
-            byte[] probe = new byte[Bgzf.MAX_BLOCK_SIZE * 2];
-            int got = readAt(split.start, probe, probe.length);
-            int rel = got <= 0 ? -1 : Bgzf.findBlockStart(probe, got, 0);
-            if (rel < 0) {
-                done = true;
-                return;
-            }
-            cpos = split.start + rel;
-        }
-
-        private int readAt(long pos, byte[] dst, int want) throws IOException {
-            int total = 0;
-            while (total < want) {
-                int got = in.read(pos + total, dst, total, want - total);
-                if (got <= 0) {
-                    break;
-                }
-                total += got;
-            }
-            return total;
-        }
-
         @Override
         public boolean next() throws IOException {
-            if (!opened) {
-                open();
+            if (blocks == null) {
+                Path p = new Path(split.path);
+                in = p.getFileSystem(conf).open(p);
+                blocks = new Bgzf.Reader(in, split.start);
             }
-            while (!done && cpos < split.end) {
-                if (readAt(cpos, head, Bgzf.HEADER_LEN) < Bgzf.HEADER_LEN) {
-                    done = true;
-                    return false;
-                }
-                int bsize = Bgzf.parseBlockHeader(head, 0, Bgzf.HEADER_LEN);
+            while (blocks.pos < split.end) {
+                long at = blocks.pos;
+                int bsize = blocks.next();
                 if (bsize < 0) {
-                    done = true;
                     return false;
                 }
-                if (readAt(cpos + bsize - 4, foot, 4) < 4) {
-                    done = true;
-                    return false;
-                }
-                long isize = Bgzf.i32(foot, 0) & 0xFFFFFFFFL;
-                if (isize == 0) {
-                    done = true; // standard BGZF EOF block
-                    return false;
-                }
-                long at = cpos;
-                cpos += bsize;
+                long isize = Bgzf.i32(blocks.block, bsize - 4) & 0xFFFFFFFFL;
                 if (split.byteRanges != null) {
                     boolean hit = false;
                     for (long[] br : split.byteRanges) {

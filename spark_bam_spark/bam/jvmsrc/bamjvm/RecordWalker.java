@@ -78,7 +78,8 @@ final class RecordWalker {
             u = win.offsetOf(split.header.endBlockPos, split.header.endOffset);
         } else {
             win.ensure(4L * Bgzf.MAX_BLOCK_SIZE); // lookahead for successor checks
-            u = Checker.findRecordStart(win, 0, split.header, split.readsToCheck, split.maxReadSize);
+            u = Checker.findRecordStart(win, 0, split.header,
+                    Checker.DEFAULT_READS_TO_CHECK, Checker.DEFAULT_MAX_READ_SIZE);
             if (u < 0) {
                 rangeDone = true;
                 return;

@@ -55,9 +55,7 @@ public final class WalkBench {
             long n = 0;
             for (long s = 0; s < size; s += splitSize) {
                 BamDataSource.BamSplit split = new BamDataSource.BamSplit(
-                        path, s, Math.min(s + splitSize, size), hdr,
-                        Checker.DEFAULT_READS_TO_CHECK, Checker.DEFAULT_MAX_READ_SIZE, false,
-                        null, null, null);
+                        path, s, Math.min(s + splitSize, size), hdr, false, null, null, null);
                 RecordWalker w = new RecordWalker(split, conf);
                 while (w.advance()) {
                     n++;

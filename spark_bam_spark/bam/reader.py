@@ -71,9 +71,6 @@ def read_bam(
     columns: str | None = None,
     mode: str | None = None,
     ranges: str | None = None,
-    reads_to_check: int | None = None,
-    max_read_size: int | None = None,
-    compression_ratio: float | None = None,
 ) -> DataFrame:
     """DataFrame of reads (schema ``READS_DDL``) over a BAM file or
     directory, through bamjvm.BamDataSource.  ``columns`` is a
@@ -86,11 +83,8 @@ def read_bam(
     df = _options(
         spark.read.format(jvmreader.FORMAT),
         split_size=split_size,
-        reads_to_check=reads_to_check,
-        max_read_size=max_read_size,
         mode=mode,
         ranges=ranges,
-        compression_ratio=compression_ratio,
     ).load(path)
     if columns:
         df = df.select(*[c.strip() for c in columns.split(",")])
@@ -104,8 +98,8 @@ def read_blocks(
     ranges: str | None = None,
 ) -> DataFrame:
     """BGZF blocks-metadata DataFrame via bamjvm.BlocksSource (S9):
-    header-only parallel block discovery, no inflater, no Python worker
-    boundary."""
+    parallel block discovery, each block read once and never inflated,
+    no Python worker boundary."""
     jvmreader.ensure_session(spark)
     return _options(
         spark.read.format(jvmreader.FORMAT_BLOCKS), split_size=split_size, ranges=ranges

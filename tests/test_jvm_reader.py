@@ -261,6 +261,20 @@ def test_planning_reads_header_and_bai_once(spark, fixture_path, tmp_path):
     assert n_pruned < n_full  # the index was used, not only read
 
 
+def test_scan_reads_each_block_once(spark, fixture_path, tmp_path):
+    """A fresh one-file scan at default splits, planning included, reads
+    about the file once: every block is read once, whole, from one
+    sequential stream per split (plus the planner's header window)."""
+    import shutil
+
+    path = str(tmp_path / "f.bam")
+    shutil.copy(fixture_path, path)
+    df = read_bam(spark, path)
+    before = _local_bytes_read(spark)
+    assert df.count() == 2500
+    assert _local_bytes_read(spark) - before <= 1.5 * os.path.getsize(path)
+
+
 @pytest.mark.parametrize("spec", ["0-64k", "64k-", "0-50k,200k-", "100k-0.2m"])
 def test_byte_ranges_option(spark, fixture_path, py_rows, spec):
     """P3 byte-range selection: a split is planned iff it intersects a
@@ -473,6 +487,107 @@ def test_blocks_source_directory_and_ranges(spark, fixture_path, tmp_path_factor
     a = _oracle_blocks(str(d), _parse_ranges("0-100k"))
     assert sorted(map(tuple, jv.collect())) == a
     assert 0 < len(a) < len(_oracle_blocks(str(d)))  # ranges actually selective
+
+
+@pytest.fixture(scope="module")
+def tail_variants(tmp_path_factory):
+    """A 4 KiB-payload file and three copies with a damaged tail: no EOF
+    block, 100 bytes of garbage after the EOF block, and the last data
+    block cut short with no EOF block.  Also returns the intact file's
+    .blocks sidecar rows and the oracle rows of the records that end
+    before the last data block."""
+    from spark_bam_spark.bam.writer import (
+        CONTIG_LENGTHS, CONTIG_NAMES, synth_records, write_bam)
+
+    d = tmp_path_factory.mktemp("tails")
+    intact = str(d / "intact.bam")
+    res = write_bam(intact, CONTIG_NAMES, CONTIG_LENGTHS, synth_records(1200, seed=21),
+                    block_payload=4096)
+    with open(intact, "rb") as f:
+        data = f.read()
+    last = res.blocks[-1]
+    assert data[last.start + last.compressed_size:] == bgzf.EOF_BLOCK
+    tails = {
+        "no_eof": data[:-len(bgzf.EOF_BLOCK)],
+        "garbage": data + bytes(range(100)),
+        "cut": data[:last.start + last.compressed_size // 2],
+    }
+    paths = {}
+    for name, body in tails.items():
+        paths[name] = str(d / f"{name}.bam")
+        with open(paths[name], "wb") as f:
+            f.write(body)
+    with open(intact + ".blocks") as f:
+        sidecar = [tuple(map(int, line.split(","))) for line in f]
+    # a record ends before the last block iff the next one starts there
+    # or earlier (block payloads are exact 4 KiB slices of the stream)
+    index = {b.start: i for i, b in enumerate(res.blocks)}
+    ustarts = [index[p.block_pos] * 4096 + p.offset for p in res.record_positions]
+    cut_u = (len(res.blocks) - 1) * 4096
+    ends = ustarts[1:] + [cut_u + last.uncompressed_size]
+    kept = {(p.block_pos, p.offset) for p, e in zip(res.record_positions, ends) if e <= cut_u}
+    assert cut_u not in ustarts  # a record runs from the kept blocks into the cut one
+    want = oracle_rows(intact)
+    before_cut = [t for t in want if (_row(t)["block_pos"], _row(t)["offset"]) in kept]
+    assert 0 < len(before_cut) < len(want)
+    return paths, want, sidecar, before_cut
+
+
+def _block_rows(df) -> list[tuple]:
+    return sorted((r.start, r.compressed_size, r.uncompressed_size) for r in df.collect())
+
+
+def _starved_blocks(starts: list[int], size: int, split_size: int | None) -> set[int]:
+    """Starts of the data blocks that no split reads when garbage follows
+    the EOF block.  A split past offset 0 opens at the first offset where
+    5 consecutive block headers parse, or fewer that reach the end of the
+    probed bytes.  From any of the last three data blocks the chain meets
+    the garbage after the EOF block short of 5, so a split whose first
+    block is one of them finds no block and its blocks are not read."""
+    if split_size is None:
+        return set()  # one split, opened at offset 0
+    lost = set()
+    for s in range(split_size, size, split_size):
+        mine = [b for b in starts if s <= b < s + split_size]
+        first = next((i for i, b in enumerate(starts) if b >= s), len(starts))
+        if first >= len(starts) - 3:
+            lost.update(mine)
+    return lost
+
+
+@pytest.mark.parametrize("split_size", [4096, None])
+@pytest.mark.parametrize("tail", ["no_eof", "garbage"])
+def test_missing_eof_or_trailing_garbage_ends_quietly(spark, tail_variants, tail, split_size):
+    """A file without its EOF block, or with garbage after it, scans
+    without error: the block stream ends at the end of the bytes or at the
+    first header that does not parse.  Without the EOF block the scan
+    equals the intact file's.  Garbage after it starves the splits that
+    open in the last three data blocks (see _starved_blocks)."""
+    paths, want, sidecar, _ = tail_variants
+    path = paths[tail]
+    lost = set()
+    if tail == "garbage":
+        lost = _starved_blocks([b[0] for b in sidecar], os.path.getsize(path), split_size)
+        assert bool(lost) == (split_size is not None)
+    assert scan_rows(read_bam(spark, path, split_size=split_size)) == [
+        t for t in want if _row(t)["block_pos"] not in lost]
+    assert _block_rows(read_blocks(spark, path, split_size=split_size)) == [
+        b for b in sidecar if b[0] not in lost]
+
+
+@pytest.mark.parametrize("split_size", [4096, None])
+def test_cut_last_block(spark, tail_variants, split_size):
+    """A last data block cut short ends the block stream before it: the
+    blocks scan returns the blocks before the cut, failfast raises on the
+    record that runs into it, and permissive returns exactly the records
+    that end before the cut block."""
+    paths, _, sidecar, before_cut = tail_variants
+    cut = paths["cut"]
+    assert _block_rows(read_blocks(spark, cut, split_size=split_size)) == sidecar[:-1]
+    with pytest.raises(Exception, match="truncated/invalid record"):
+        read_bam(spark, cut, split_size=split_size).count()
+    got = scan_rows(read_bam(spark, cut, split_size=split_size, mode="permissive"))
+    assert got == before_cut
 
 
 def test_blocks_source_column_pruning(spark, fixture_path):
