@@ -3,13 +3,12 @@
 The BAM scan layer (split planning, record-boundary checking, the
 check-bam QA harness) on the Spark DataFrame / SQL stack, plus query
 families over a synthetic corpus (TPC-H-style relational, dedup,
-similarity, text, graph, ML-prep and data-pipeline queries).
+similarity, text, ML-prep and data-pipeline queries).
 
 Layout:
     session     — SparkSession factory: local[N] over the CPUs this
                   process may use, AQE, Arrow, UTC session time
     tables      — parquet table loaders for the synthetic TPC-H-ish corpus
-    functions   — scalar Column functions (Pos packing, size formatting)
     cli         — the CLI mirroring the reference's QA harness (check-bam,
                   compute-splits, index-blocks, ...)
     queries     — the query registry: each query exposed as
@@ -20,8 +19,8 @@ Layout:
                   (jvmsrc/bamjvm/, entered through bam/reader.py), and the
                   pure-Python codec, checker and writer that serve as the
                   independent oracle and the fixture generator
-    operators/  — the check-bam QA pipelines (qa), Z-order layout and
-                  bucketed tables
+    operators/  — the check-bam QA pipelines (qa) and Z-order layout
+                  (layout)
     streaming/  — Structured Streaming pipelines over the events table
 """
 

@@ -165,8 +165,9 @@ def find_block_start(
 ) -> int | None:
     """Scan forward ≤64 KiB for an offset where ``blocks_to_check``
     consecutive block headers parse (FindBlockStart.scala:8-37). Fewer
-    consecutive checks are accepted when the buffer ends first (a real
-    EOF behaves the same way)."""
+    consecutive checks are accepted when the buffer ends first or the
+    chain reaches an ISIZE-0 (EOF) block, so bytes after the EOF block
+    are never parsed."""
     limit = min(len(buf), search_from + MAX_BLOCK_SIZE)
     # candidates are only offsets bearing the 4-byte gzip+FEXTRA magic —
     # bytes.find is a C-speed scan, so we parse headers at ~1 offset per
@@ -186,6 +187,8 @@ def find_block_start(
                 ok = -1
                 break
             ok += 1
+            if p + bsize <= len(buf) and struct.unpack_from("<I", buf, p + bsize - 4)[0] == 0:
+                break  # the EOF block ends the stream
             p += bsize
         if ok >= 1 and ok != -1:
             return cand

@@ -77,7 +77,9 @@ final class Bgzf {
     /**
      * Scan forward at most 64 KiB for an offset where BLOCKS_TO_CHECK
      * consecutive block headers parse; fewer consecutive checks are
-     * accepted when the buffer ends first.  Returns -1 if none found.
+     * accepted when the buffer ends first or the chain reaches an ISIZE-0
+     * (EOF) block, so bytes after the EOF block are never parsed.
+     * Returns -1 if none found.
      */
     static int findBlockStart(byte[] buf, int n, int searchFrom) {
         int limit = Math.min(n, searchFrom + MAX_BLOCK_SIZE);
@@ -103,6 +105,9 @@ final class Bgzf {
                     break;
                 }
                 ok++;
+                if (p + bsize <= n && i32(buf, p + bsize - 4) == 0) {
+                    break; // the EOF block ends the stream
+                }
                 p += bsize;
             }
             if (ok >= 1) {

@@ -139,17 +139,7 @@ def register(
 # debt (the r4 backlog); upgraded/new names not in it simply sort by
 # registration order within the never-green group.
 _DRIVER_CHECK_PRIORITY: tuple[str, ...] = (
-    # -- oracle-bearing, never driver-checked (36) --------------------------
-    # scalar functions (SURVEY §2.8 — zero driver-green rows ever)
-    "pos_codec_roundtrip",
-    "interval_parse",
-    "date_monthly_orders",
-    "json_extract_events",
-    "array_map_functions",
-    # UDF surface (SURVEY §2.10 — zero driver-green rows ever)
-    "pandas_udaf_geomean",
-    "udtf_explode_intervals",
-    "grouped_map_gap_stats",
+    # -- oracle-bearing, never driver-checked (27) --------------------------
     # similarity tail (r3 window overflow)
     "cosine_topk_ivf",
     "cosine_topk_ivf_pruned",
@@ -166,9 +156,8 @@ _DRIVER_CHECK_PRIORITY: tuple[str, ...] = (
     "bam_count_reads",
     "bam_compression_ratio",
     "bam_idxstats",
-    # r2 hash-fix confirmations + late oracle upgrade
+    # r2 hash-fix confirmation + late oracle upgrade
     "boilerplate_segments",
-    "pagerank_bipartite",
     "approx_count_distinct",
     # datapipe (PII / classifier / caps / sketches)
     "pii_redact_stats",
@@ -215,9 +204,7 @@ _DRIVER_CHECK_PRIORITY: tuple[str, ...] = (
 # Queries whose CODE changed after their last driver-green row — force them
 # back into the verification window ahead of untouched greens so the driver
 # re-hashes the new behavior.  Maintained per round; clear entries once the
-# next CORRECTNESS file records their fresh pass.  (r6's two entries —
-# lsh_quality_eval, triangle_count_candidates — went green in r6 and are
-# cleared.)
+# next CORRECTNESS file records their fresh pass.
 _FORCE_RECHECK: tuple[str, ...] = (
     # r18: all 9 r17 entries (minhash_jaccard_estimate, kmeans_lloyd,
     # semdedup_prune, semdedup_prune_fast, semdedup_prune_ivf,
@@ -324,15 +311,12 @@ def _import_query_modules() -> None:
         curation,
         datapipe,
         dedup,
-        graph,
         mlprep,
         relational,
-        scalar_fn,
         similarity,
         streaming_batch,
         text,
         tpch,
-        udf_surface,
     )
 
 

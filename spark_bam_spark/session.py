@@ -56,7 +56,8 @@ def get_spark(app_name: str = "spark_bam_spark", shuffle_partitions: str | None 
         # on so measurement tools can read per-job timings from the REST
         # API (perfbench/tracing.py) — no effect on any query
         .config("spark.ui.enabled", "true" if os.environ.get("SPARK_GRAFT_UI") else "false")
-        # saveAsTable target for bucketed tables (in-memory catalog)
+        # perfbench sets SPARK_GRAFT_WAREHOUSE so that Spark's files stay
+        # under .perfbench/
         .config("spark.sql.warehouse.dir", os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/spark_bam_spark_warehouse"))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
     )

@@ -73,6 +73,16 @@ def test_find_block_start_from_arbitrary_offsets(fixture):
         assert found == expected, f"probe={probe}"
 
 
+def test_find_block_start_stops_at_eof_block_before_garbage(fixture):
+    """A block-start chain ends at the EOF block, so garbage after it does
+    not reject the chains that start in the last data blocks."""
+    raw = open(fixture.path, "rb").read() + bytes(range(100))
+    eof = len(raw) - 100 - len(EOF_BLOCK)
+    for s in [b.start for b in fixture.blocks[-6:]] + [eof]:
+        assert find_block_start(raw, s) == s, f"start={s}"
+        assert find_block_start(raw, s - 1) == s, f"start={s}"
+
+
 def test_find_block_start_rejects_garbage():
     assert find_block_start(b"\x00" * 70000, 0) is None
 

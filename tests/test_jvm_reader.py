@@ -537,42 +537,18 @@ def _block_rows(df) -> list[tuple]:
     return sorted((r.start, r.compressed_size, r.uncompressed_size) for r in df.collect())
 
 
-def _starved_blocks(starts: list[int], size: int, split_size: int | None) -> set[int]:
-    """Starts of the data blocks that no split reads when garbage follows
-    the EOF block.  A split past offset 0 opens at the first offset where
-    5 consecutive block headers parse, or fewer that reach the end of the
-    probed bytes.  From any of the last three data blocks the chain meets
-    the garbage after the EOF block short of 5, so a split whose first
-    block is one of them finds no block and its blocks are not read."""
-    if split_size is None:
-        return set()  # one split, opened at offset 0
-    lost = set()
-    for s in range(split_size, size, split_size):
-        mine = [b for b in starts if s <= b < s + split_size]
-        first = next((i for i, b in enumerate(starts) if b >= s), len(starts))
-        if first >= len(starts) - 3:
-            lost.update(mine)
-    return lost
-
-
 @pytest.mark.parametrize("split_size", [4096, None])
 @pytest.mark.parametrize("tail", ["no_eof", "garbage"])
 def test_missing_eof_or_trailing_garbage_ends_quietly(spark, tail_variants, tail, split_size):
     """A file without its EOF block, or with garbage after it, scans
-    without error: the block stream ends at the end of the bytes or at the
-    first header that does not parse.  Without the EOF block the scan
-    equals the intact file's.  Garbage after it starves the splits that
-    open in the last three data blocks (see _starved_blocks)."""
+    without error and equals the intact file: the block stream ends at the
+    end of the bytes or at the EOF block, and a split's block-start search
+    stops at the EOF block, so the splits that open in the last data
+    blocks find their blocks."""
     paths, want, sidecar, _ = tail_variants
     path = paths[tail]
-    lost = set()
-    if tail == "garbage":
-        lost = _starved_blocks([b[0] for b in sidecar], os.path.getsize(path), split_size)
-        assert bool(lost) == (split_size is not None)
-    assert scan_rows(read_bam(spark, path, split_size=split_size)) == [
-        t for t in want if _row(t)["block_pos"] not in lost]
-    assert _block_rows(read_blocks(spark, path, split_size=split_size)) == [
-        b for b in sidecar if b[0] not in lost]
+    assert scan_rows(read_bam(spark, path, split_size=split_size)) == want
+    assert _block_rows(read_blocks(spark, path, split_size=split_size)) == sidecar
 
 
 @pytest.mark.parametrize("split_size", [4096, None])

@@ -84,7 +84,7 @@ def test_window_ordering_invariants():
 # Oracle-side type contract: the driver's value hash is type-sensitive, and
 # DuckDB promotes SUM() over integer columns to HUGEINT (int128), which
 # hashes differently from Spark's BIGINT even when every value is equal —
-# exactly the r2 failures (`boilerplate_segments`, `pagerank_bipartite`).
+# exactly the r2 failure of `boilerplate_segments`.
 # DESCRIBE every oracle and reject HUGEINT/UHUGEINT columns (the oracle SQL
 # must CAST(... AS BIGINT) explicitly).
 # ---------------------------------------------------------------------------

@@ -871,100 +871,3 @@ def test_min_label_propagation_matches_union_find(spark, raw):
     )
     got = {r["doc"]: r["lbl"] for r in _propagate_min_labels(edges).collect()}
     assert got == _union_find_py(raw)
-
-
-# ---------------------------------------------------------------------------
-# Independent reference for the triangle audit: the three-equi-join triangle
-# enumeration and the degree-formula wedge count (_triangle_stats) must agree
-# with brute-force combinatorial enumeration on arbitrary small graphs.
-# ---------------------------------------------------------------------------
-
-
-def _triangles_py(pairs):
-    """pairs: set of (a, b) with a < b -> (nodes, edges, wedges, triangles)."""
-    from itertools import combinations
-
-    adj = {}
-    for a, b in pairs:
-        adj.setdefault(a, set()).add(b)
-        adj.setdefault(b, set()).add(a)
-    wedges = sum(len(ns) * (len(ns) - 1) // 2 for ns in adj.values())
-    tris = sum(
-        1
-        for a, b, c in combinations(sorted(adj), 3)
-        if b in adj[a] and c in adj[a] and c in adj[b]
-    )
-    return (len(adj), len(pairs), wedges, tris)
-
-
-@settings(max_examples=6, deadline=None)
-@given(
-    st.lists(
-        st.tuples(
-            st.integers(min_value=1, max_value=10),
-            st.integers(min_value=1, max_value=10),
-        ).filter(lambda p: p[0] != p[1]),
-        min_size=1,
-        max_size=25,
-    )
-)
-def test_triangle_stats_match_bruteforce(spark, raw):
-    from spark_bam_spark.queries.graph import _triangle_stats
-
-    pairs = sorted({(min(a, b), max(a, b)) for a, b in raw})
-    df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
-    row = _triangle_stats(df).collect()[0]
-    n, e, w, t = _triangles_py(set(pairs))
-    assert (row["n_nodes"], row["n_edges"], row["n_wedges"], row["n_triangles"]) == (n, e, w, t)
-    if w > 0:
-        assert abs(row["clustering_coeff"] - round(3.0 * t / w, 6)) <= 1e-9
-    else:
-        assert row["clustering_coeff"] is None
-
-
-# ---------------------------------------------------------------------------
-# Independent reference for fixed-point PageRank: the unrolled join-per-
-# iteration pipeline (_pagerank_ranks) must agree BIT-FOR-BIT with a pure-
-# Python integer implementation of the same recurrence — the test that the
-# truncating-integer formulation really is accumulation-order independent.
-# ---------------------------------------------------------------------------
-
-
-def _pagerank_py(directed_edges, iterations, one, teleport):
-    deg = {}
-    for s, _ in directed_edges:
-        deg[s] = deg.get(s, 0) + 1
-    ranks = {n: one for n in deg}
-    for _ in range(iterations):
-        m = {}
-        for s, d in directed_edges:
-            m[d] = m.get(d, 0) + ranks[s] // deg[s]
-        ranks = {n: teleport + (85 * v) // 100 for n, v in m.items()}
-    return ranks
-
-
-@settings(max_examples=6, deadline=None)
-@given(
-    st.lists(
-        st.tuples(
-            st.integers(min_value=1, max_value=8),
-            st.integers(min_value=1, max_value=8),
-        ).filter(lambda p: p[0] != p[1]),
-        min_size=1,
-        max_size=20,
-    ),
-    st.integers(min_value=1, max_value=3),
-)
-def test_pagerank_fixed_point_matches_python_reference(spark, raw, iters):
-    from pyspark.sql import functions as F
-
-    from spark_bam_spark.queries.graph import _ONE, _TELEPORT, _pagerank_ranks
-
-    undirected = sorted({(min(a, b), max(a, b)) for a, b in raw})
-    directed = sorted({(a, b) for a, b in undirected} | {(b, a) for a, b in undirected})
-    pdf = spark.createDataFrame(undirected, "a long, b long")
-    edges = pdf.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionAll(
-        pdf.select(F.col("b").alias("src"), F.col("a").alias("dst"))
-    )
-    got = {r["node"]: r["r"] for r in _pagerank_ranks(edges, iterations=iters).collect()}
-    assert got == _pagerank_py(directed, iters, _ONE, _TELEPORT)
